@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import distance as D
-from .functions.distance import METRIC_IS_DESCENDING, canonical_metric, distance_expr
+from .functions.distance import METRIC_IS_DESCENDING, bound_vec, canonical_metric, distance_expr
 from .index.catalog import IndexCatalog
 from .operators.knn import knn_join_flat, knn_join_flat_indexed, knn_match
 from .operators.topk import _by_k
@@ -160,15 +160,22 @@ class VSSEngine:
         where: str | None = None,
         score_col: str = "score",
         tiebreak: str | None = None,
+        columns: list | None = None,
     ) -> DataFrame:
-        df, plan = self._plan_topk(table, vec_col, query, k, metric, where, score_col, tiebreak)
+        """Top-``k`` rows of ``table`` by ``metric`` distance to ``query``,
+        with the score in ``score_col``. ``columns`` names the only columns
+        the caller will read; when they are all the index's id column or
+        ``score_col`` (and there is no ``where``), an index-routed query
+        answers from the index alone and returns just those two columns —
+        ids the index holds but the table lacks then still come back."""
+        df, plan = self._plan_topk(table, vec_col, query, k, metric, where, score_col, tiebreak, columns)
         return df
 
     def explain_topk(self, table, vec_col, query, k, metric="l2sq", where=None) -> str:
         _, plan = self._plan_topk(table, vec_col, query, k, metric, where, "score", None)
         return plan
 
-    def _plan_topk(self, table, vec_col, query, k, metric, where, score_col, tiebreak):
+    def _plan_topk(self, table, vec_col, query, k, metric, where, score_col, tiebreak, columns=None):
         m = canonical_metric(metric)
         df = self.table(table)
         spec = TopKSpec(self._table_name(table) or "<df>", vec_col, list(query), k, m, where)
@@ -176,24 +183,36 @@ class VSSEngine:
         decision = self._decide(spec, idx)
         extra = {}
         if decision.strategy == "HNSW_INDEX_SCAN":
+            id_col = idx.manifest.get("id_column", "id")
+            # the index's own (id, score) order is (score, id): it serves an
+            # id tiebreak, and any order when none is asked for
+            covered = (
+                columns is not None
+                and not where
+                and tiebreak in (None, id_col)
+                and {c.lower() for c in columns} <= {id_col.lower(), score_col.lower()}
+            )
             extra = {"nprobe": idx.nprobe_for(decision.ef_search), "nlist": idx.nlist,
                      "pq_m": idx.manifest.get("pq_m"),
-                     "backend": "graph" if getattr(idx, "is_graph", False) else "ivf"}
-            # candidate ids from the index; exact score; fetch full rows by id
-            # (rowid-fetch becomes a broadcast semi-join, SURVEY §1.1)
+                     "backend": "graph" if getattr(idx, "is_graph", False) else "ivf",
+                     "fetch": "none (covered)" if covered else "broadcast id-join"}
             hits = idx.search(self.spark, list(query), k, decision.ef_search)
-            id_col = idx.manifest.get("id_column", "id")
-            fetched = df.join(F.broadcast(hits.withColumnRenamed("id", id_col).select(id_col)), id_col)
-            out = fetched.withColumn(score_col, distance_expr(vec_col, list(query), m))
-            if where:
-                # post-filter: applied AFTER the k candidates -> may yield < k
-                # rows (reference: test/sql/hnsw/where_clause_segfault.test:24-35)
-                out = out.filter(where)
-            desc = METRIC_IS_DESCENDING[m]
-            order = [F.col(score_col).desc() if desc else F.col(score_col).asc()]
-            if tiebreak:
-                order.append(F.col(tiebreak))
-            out = out.orderBy(*order).limit(k)
+            if covered:
+                out = hits.select(F.col("id").alias(id_col), F.col("score").alias(score_col))
+            else:
+                # fetch full rows by id (rowid-fetch becomes a broadcast
+                # semi-join, SURVEY §1.1) and score them exactly again
+                fetched = df.join(F.broadcast(hits.select(F.col("id").alias(id_col))), id_col)
+                out = fetched.withColumn(score_col, distance_expr(vec_col, bound_vec(query), m))
+                if where:
+                    # post-filter: applied AFTER the k candidates -> may yield < k
+                    # rows (reference: test/sql/hnsw/where_clause_segfault.test:24-35)
+                    out = out.filter(where)
+                desc = METRIC_IS_DESCENDING[m]
+                order = [F.col(score_col).desc() if desc else F.col(score_col).asc()]
+                if tiebreak:
+                    order.append(F.col(tiebreak))
+                out = out.orderBy(*order).limit(k)
         else:
             src = df.filter(where) if where else df
             out = exact_topk(src, vec_col, list(query), k, m, score_col=score_col, tiebreak=tiebreak)
@@ -265,7 +284,6 @@ class VSSEngine:
         spec = TopKAggSpec(self._table_name(table) or "<df>", value_col, vec_col, list(query), k, idx_metric)
         idx = self._find_index(self._table_name(table), vec_col, idx_metric) if routable else None
         decision = self._decide(spec, idx)
-        score = score_fn(vec_col, list(query))
         if decision.strategy == "HNSW_INDEX_SCAN":
             hits = idx.search(self.spark, list(query), k, decision.ef_search)
             id_col = idx.manifest.get("id_column", "id")
@@ -273,9 +291,11 @@ class VSSEngine:
             # agg FILTER applies to the k scanned candidates (may yield < k
             # values — reference carries the clause through the rewrite,
             # src/hnsw/hnsw_optimize_topk.cpp:191-193)
+            score = score_fn(vec_col, bound_vec(query))
             out = _by_k(fetched, value_col, score, k, descending=descending, tiebreak=None, filter=where)
         else:
-            out = _by_k(df, value_col, score, k, descending=descending, tiebreak=None, filter=where)
+            out = _by_k(df, value_col, score_fn(vec_col, list(query)), k, descending=descending, tiebreak=None,
+                        filter=where)
         plan = explain_text(spec, decision)
         self.last_plan = plan
         return out, plan
@@ -373,7 +393,7 @@ class VSSEngine:
         # first so a bad name raises the macro's error, not a KeyError
         higher_is_better = METRIC_IS_DESCENDING[canonical_metric(metric)]
         vec = self.topk(
-            table, vec_col, query_vec, pool, metric, tiebreak=id_col
+            table, vec_col, query_vec, pool, metric, tiebreak=id_col, columns=[id_col, "score"]
         ).select(
             F.col(id_col),
             (F.col("score") if higher_is_better else -F.col("score"))

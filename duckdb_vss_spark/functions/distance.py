@@ -45,6 +45,7 @@ __all__ = [
     "array_cosine_distance",
     "array_inner_product",
     "array_negative_inner_product",
+    "bound_vec",
     "distance_expr",
     "METRICS",
     "METRIC_IS_DESCENDING",
@@ -118,10 +119,29 @@ def _const_vec(v):
     bare dot at 1M rows). Terms are summed left-to-right so the float
     accumulation order matches the HOF fold and duckdb's sequential scan —
     a balanced add tree would be ~3x faster still (ILP) but would change
-    low-order bits and break bit-exact oracle comparisons."""
+    low-order bits and break bit-exact oracle comparisons.
+
+    Index paths do NOT unroll: they pass the query through
+    :func:`bound_vec`. The unroll writes the vector's values into the
+    generated Java, so every new query vector is new code — a Janino
+    compile per query (~40-50 ms a stage) plus a C2 JIT of a huge method
+    that only pays off over a full-table scan. An index query scores a few
+    thousand probed rows, where the HOF fold costs ~1 ms, so it binds the
+    vector as a value instead and the generated code is the same for every
+    query (the codegen cache hits; bit-identical doubles, see
+    ``test_unrolled_matches_hof_bitwise``)."""
     if isinstance(v, (list, tuple)) and 0 < len(v) <= _UNROLL_MAX_DIM:
         return [float(x) for x in v]
     return None
+
+
+def bound_vec(v) -> Column:
+    """A constant query vector as ONE array value, for the index paths:
+    the builders score a Column operand with the HOF fold, which keeps the
+    vector out of the generated code (see :func:`_const_vec`). Built from
+    one ``expr()`` string so it is a single Py4J call; the exact double
+    literals make it bit-identical to ``F.array(*map(F.lit, v))``."""
+    return F.expr(f"array({', '.join(_dlit(float(x)) for x in v)})")
 
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"

@@ -87,7 +87,7 @@ from pyspark.sql import functions as F
 from . import fs
 from .ivf import FIRST_VERSION, IVFIndex
 from ..broadcasts import tracked_broadcast
-from ..functions.distance import METRIC_IS_DESCENDING, canonical_metric, distance_expr
+from ..functions.distance import METRIC_IS_DESCENDING, bound_vec, canonical_metric, distance_expr
 
 __all__ = ["GraphIndex", "build_graph", "GRAPH_FORMAT"]
 
@@ -365,10 +365,7 @@ class GraphIndex(IVFIndex):
         # probe_lists/probe_lists_batch read self.centroids + self.metric)
         self.centroids = fs.read_npy(self.spark, fs.join(self.vpath, "centroids.npy"))
         self.pq_books = None
-        self._tail_exists: Optional[bool] = None
-        self._deleted_exists: Optional[bool] = None
-        self._data_df = None
-        self._list_ids_on_disk: Optional[set] = None
+        self._init_read_caches()
 
     def compact_incremental(self, spark: SparkSession) -> "GraphIndex":
         """The graph backend cannot fold a tail in O(|tail|): new rows must
@@ -442,17 +439,18 @@ class GraphIndex(IVFIndex):
         data = self.data_df(spark, parts)
         # kernel selects candidates; the authoritative score is the JVM
         # double-precision expression (same discipline as the IVF paths)
+        qcol = bound_vec(query)
         local = (
             data.groupBy("part_id")
             .applyInPandas(shard_topk, schema=f"id {id_t}, vec array<float>")
-            .select("id", distance_expr("vec", list(query), metric).alias("score"))
+            .select("id", distance_expr("vec", qcol, metric).alias("score"))
         )
         deleted = self.deleted_df(spark)
         if deleted is not None:
             local = local.join(deleted, "id", "left_anti")
         tail = self.tail_df(spark)
         if tail is not None:
-            tail_scored = tail.select("id", distance_expr("vec", list(query), metric).alias("score"))
+            tail_scored = tail.select("id", distance_expr("vec", qcol, metric).alias("score"))
             if deleted is not None:
                 tail_scored = tail_scored.join(deleted, "id", "left_anti")
             local = local.unionByName(tail_scored)

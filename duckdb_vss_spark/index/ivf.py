@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 from . import fs
 from . import pq as pqmod
 from ..broadcasts import tracked_broadcast
-from ..functions.distance import METRIC_IS_DESCENDING, canonical_metric, distance_expr
+from ..functions.distance import METRIC_IS_DESCENDING, bound_vec, canonical_metric, distance_expr
 
 __all__ = ["IVFIndex", "build_ivf", "kmeans", "kmeans_distributed"]
 
@@ -590,6 +590,12 @@ def build_ivf(
     return IVFIndex(path, spark)
 
 
+def _ddl(df: DataFrame) -> str:
+    """``df``'s schema as a DDL string (every field nullable, as a parquet
+    read sees it)."""
+    return ", ".join(f"`{n}` {t}" for n, t in df.dtypes)
+
+
 class IVFIndex:
     """Handle to an on-disk IVF artifact; all search methods return lazy
     DataFrames so they compose with further relational ops."""
@@ -620,6 +626,18 @@ class IVFIndex:
             if _qz == "b1"
             else None
         )
+        self._init_read_caches()
+        # incremental-compact crash repair: a manifest committed with
+        # pending_tail_delete means the tail's rows are already live in the
+        # newest delta — delete the stale tail (double-count otherwise) and
+        # clear the flag (see compact_incremental)
+        if self.manifest.get("pending_tail_delete"):
+            if fs.exists(self.spark, fs.join(self.vpath, "tail")):
+                fs.delete(self.spark, fs.join(self.vpath, "tail"))
+            self.manifest.pop("pending_tail_delete", None)
+            fs.write_json(self.spark, fs.join(path, "manifest.json"), self.manifest)
+
+    def _init_read_caches(self) -> None:
         # lazily-resolved existence of the mutable side dirs, so steady-state
         # searches don't pay two control-plane round trips (an object-store
         # LIST each) per query; maintenance through THIS handle updates the
@@ -634,15 +652,28 @@ class IVFIndex:
         # relation removes that fixed cost from the steady-state search path.
         self._data_df = None
         self._list_ids_on_disk: Optional[dict] = None
-        # incremental-compact crash repair: a manifest committed with
-        # pending_tail_delete means the tail's rows are already live in the
-        # newest delta — delete the stale tail (double-count otherwise) and
-        # clear the flag (see compact_incremental)
-        if self.manifest.get("pending_tail_delete"):
-            if fs.exists(self.spark, fs.join(self.vpath, "tail")):
-                fs.delete(self.spark, fs.join(self.vpath, "tail"))
-            self.manifest.pop("pending_tail_delete", None)
-            fs.write_json(self.spark, fs.join(path, "manifest.json"), self.manifest)
+        # read schemas bound once per handle: a parquet read without one
+        # runs a footer-inference Spark job, which would otherwise be one
+        # extra job per probed-list read, tail read and tombstone read on
+        # every query. Base and delta dirs share one layout.
+        self._data_schema = None
+        self._tail_schema: Optional[str] = None
+
+    def _read(self, spark: SparkSession, schema, *paths, **options) -> DataFrame:
+        """``spark.read.parquet`` with ``schema`` bound when known (no
+        inference job)."""
+        reader = spark.read.options(**options)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*paths)
+
+    def _read_data(self, spark: SparkSession, *paths, **options) -> DataFrame:
+        """Read data-layout parquet (base or delta), inferring the schema
+        on this handle's first read only."""
+        df = self._read(spark, self._data_schema, *paths, **options)
+        if self._data_schema is None:
+            self._data_schema = df.schema
+        return df
 
     # -- properties -------------------------------------------------------
     @property
@@ -714,7 +745,7 @@ class IVFIndex:
                     sel = sorted(want & ids)
                     if sel:
                         paths = [fs.join(d, f"{self._PART_COL}={l}") for l in sel]
-                        parts.append(spark.read.option("basePath", d).parquet(*paths))
+                        parts.append(self._read_data(spark, *paths, basePath=d))
                 if not parts:
                     return self.data_df(spark).filter(F.lit(False))
                 out = parts[0]
@@ -722,9 +753,9 @@ class IVFIndex:
                     out = out.unionByName(p)
                 return out
         if self._data_df is None:
-            base = spark.read.parquet(self.data_path())
+            base = self._read_data(spark, self.data_path())
             for d in self._delta_dirs():
-                base = base.unionByName(spark.read.parquet(d))
+                base = base.unionByName(self._read_data(spark, d))
             self._data_df = base
         out = self._data_df
         if lists is not None:
@@ -741,14 +772,18 @@ class IVFIndex:
         if self._tail_exists is None:
             self._tail_exists = fs.exists(spark, self._tail_path())
         if self._tail_exists:
-            return spark.read.parquet(self._tail_path()).select("id", "vec")
+            df = self._read(spark, self._tail_schema, self._tail_path())
+            self._tail_schema = self._tail_schema or _ddl(df)
+            return df.select("id", "vec")
         return None
 
     def deleted_df(self, spark: SparkSession) -> Optional[DataFrame]:
         if self._deleted_exists is None:
             self._deleted_exists = fs.exists(spark, self._deleted_path())
         if self._deleted_exists:
-            return spark.read.parquet(self._deleted_path()).select("id").distinct()
+            # tombstones are always written with this schema (see delete)
+            schema = f"id {self.manifest.get('id_type', 'bigint')}"
+            return self._read(spark, schema, self._deleted_path()).select("id").distinct()
         return None
 
     def counts(self, spark: SparkSession) -> dict:
@@ -820,7 +855,7 @@ class IVFIndex:
             return self._b1_search(spark, query, k, ef_search)
         cand = self.candidates(spark, query, ef_search)
         desc = METRIC_IS_DESCENDING[self.metric]
-        scored = cand.select("id", distance_expr("vec", query, self.metric).alias("score"))
+        scored = cand.select("id", distance_expr("vec", bound_vec(query), self.metric).alias("score"))
         order = [F.col("score").desc() if desc else F.col("score").asc(), F.col("id").asc()]
         return scored.orderBy(*order).limit(k)
 
@@ -938,7 +973,7 @@ class IVFIndex:
             if deleted is not None:
                 tail = tail.join(deleted, "id", "left_anti")
             fetched = fetched.unionByName(tail)
-        scored = fetched.select("id", distance_expr("vec", query, self.metric).alias("score"))
+        scored = fetched.select("id", distance_expr("vec", bound_vec(query), self.metric).alias("score"))
         return scored.orderBy(*order).limit(k)
 
     # -- maintenance ------------------------------------------------------
@@ -954,18 +989,20 @@ class IVFIndex:
         adopted in-place), the default ``'warn'`` policy emits a warning so
         the unbounded-tail drift at streaming ingest rates is at least
         visible (round-4 verdict item 8)."""
-        (
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-            .filter(F.col(vec_col).isNotNull())
-            .write.mode("append")
-            .parquet(self._tail_path())
+        rows = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).filter(
+            F.col(vec_col).isNotNull()
         )
+        rows.write.mode("append").parquet(self._tail_path())
+        # the tail's read schema is what was written, when this handle knows
+        # it wrote the tail's first rows or rows of the same schema
+        written = _ddl(rows)
+        self._tail_schema = written if self._tail_exists is False or self._tail_schema == written else None
         self._tail_exists = True
         opts = self.manifest.get("options") or {}
         limit = opts.get("tail_max_rows")
         if limit:
             spark = df.sparkSession
-            tail_rows = spark.read.parquet(self._tail_path()).count()
+            tail_rows = self.tail_df(spark).count()
             if tail_rows > int(limit):
                 if opts.get("tail_policy", "warn") == "compact":
                     # incremental: the auto-fold fires at ingest cadence, so
@@ -1075,6 +1112,7 @@ class IVFIndex:
         self.manifest.pop("pending_tail_delete", None)
         fs.write_json(spark, fs.join(self.path, "manifest.json"), self.manifest)
         self._tail_exists = False
+        self._tail_schema = None
         self._data_df = None
         self._list_ids_on_disk = None
         return self

@@ -114,7 +114,12 @@ def explain_text(spec, decision: Decision, extra: dict | None = None) -> str:
         if decision.strategy == "HNSW_INDEX_SCAN":
             if spec.residual_filter:
                 lines.append(f"FILTER [{spec.residual_filter}]  (post-filter: may return < k rows)")
-            lines.append(f"PROJECTION [score := {spec.metric}(vec, <const>)] (exact recompute)")
+            if ex.get("fetch") == "none (covered)":
+                lines.append("PROJECTION [id, score := index score]  (fetch: none (covered))")
+            else:
+                lines.append(
+                    f"PROJECTION [score := {spec.metric}(vec, <const>)]  (fetch: broadcast id-join, exact recompute)"
+                )
             pq = f", pq_m={ex['pq_m']} (ADC+rerank)" if ex.get("pq_m") else ""
             backend = f", backend={ex['backend']}" if ex.get("backend") else ""
             lines.append(

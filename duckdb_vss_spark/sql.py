@@ -485,13 +485,18 @@ class SQLFrontend:
         if not dtypes.get(m.group("col"), "").startswith("array"):
             return None
         vec = _parse_vec(re.match(_ARRAY, m.group("vec")).group("elems"))
+        proj = m.group("proj").strip()
+        items = [] if proj == "*" else _split_top_level(proj)
+        # bare column names let the engine answer from the index alone
+        # when they are all the id column or the score
+        names = [c.strip("`") for c in items]
+        columns = names if items and all(re.fullmatch(r"\w+", n) for n in names) else None
         out = self.engine.topk(
             m.group("table"), m.group("col"), vec, int(m.group("k")), metric,
-            where=m.group("where"), tiebreak=None,
+            where=m.group("where"), tiebreak=None, columns=columns,
         )
-        proj = m.group("proj").strip()
-        if proj != "*":
-            out = out.selectExpr(*[_sparkify_arrays(c) for c in _split_top_level(proj)])
+        if items:
+            out = out.selectExpr(*[_sparkify_arrays(c) for c in items])
         return out
 
     # -- Q3: lateral per-probe top-k (the decorrelated-join SQL spelling,

@@ -117,6 +117,41 @@ def test_ivf_candidate_scan_prunes_partitions(spark, tmp_path):
     assert "list_id" in pf
 
 
+
+def test_covered_point_query_one_job_no_recompile(spark, tmp_path):
+    """A covered index point query (id and score only) is ONE Spark job
+    once the handle has read its data schema, and a query with a new
+    vector compiles no new code: the index paths bind the query vector as
+    an array value instead of inlining it into generated code (compile
+    count read from CodegenMetrics, jobs from the job group's
+    statusTracker entry)."""
+    from duckdb_vss_spark import SQLFrontend, VSSEngine
+
+    sc = spark.sparkContext
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    eng = VSSEngine(spark, index_root=str(tmp_path))
+    eng.register_table("emb_cov", spark.read.parquet(f"{SF}/embeddings.parquet"))
+    fe = SQLFrontend(eng)
+    fe.sql("CREATE INDEX cov_idx ON emb_cov USING HNSW (embedding)")
+    fe.sql("SET hnsw_ef_search = 16")  # probes explicit list dirs, as served
+
+    def run(i):
+        q = "[" + ", ".join(repr(((j * (i + 3)) % 11) / 11.0) for j in range(64)) + "]"
+        group = f"covered-point-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            before = compiles.getCount()
+            rows = fe.sql(f"SELECT vec_id FROM emb_cov ORDER BY array_distance(embedding, {q}) LIMIT 10").collect()
+            new_code = compiles.getCount() - before
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == 10 and "fetch: none (covered)" in eng.last_plan
+        return len(sc.statusTracker().getJobIdsForGroup(group)), new_code
+
+    run(0)  # warm: schema read + first compile
+    assert run(1)[0] == 1
+    assert run(2) == (1, 0)
+
 def test_aggregate_is_partial_then_final(spark):
     """groupBy aggregates must map-side combine (partial_ functions before
     the exchange) — the difference between shuffling rows and shuffling

@@ -560,3 +560,91 @@ def test_macro_fragments_in_arbitrary_sql(spark, tmp_path):
     assert not [t for t in eng.tables if t.startswith("__vss_macro")]
     # and the simple whole-statement forms still take the dedicated handlers
     assert fe.sql("SELECT * FROM vss_join(mfq, mfi, embedding, embedding, 2)").count() == 10
+
+
+# -- covered projections: answered from the index alone -------------------
+_COV_DIM = 8
+_COV_FN = {"l2sq": "array_distance", "cosine": "array_cosine_distance", "ip": "array_negative_inner_product"}
+
+
+def _cov_rows(spark, lo, hi):
+    import numpy as np
+
+    rng = np.random.default_rng(lo)
+    vecs = rng.standard_normal((hi - lo, _COV_DIM)).astype(np.float32)
+    return spark.createDataFrame(
+        [(lo + i, [float(x) for x in v]) for i, v in enumerate(vecs)], "vec_id long, embedding array<float>"
+    )
+
+
+def _cov_sql(metric, proj, q, k=10):
+    lit = "[" + ", ".join(repr(x) for x in q) + f"]::FLOAT[{len(q)}]"
+    return f"SELECT {proj} FROM cov ORDER BY {_COV_FN[metric]}(embedding, {lit}) LIMIT {k}"
+
+
+def _id_score(df):
+    return sorted(((r["vec_id"], r["score"]) for r in df.collect()), key=lambda t: (t[1], t[0]))
+
+
+@pytest.mark.parametrize("metric", ["l2sq", "cosine", "ip"])
+def test_covered_projection_equals_fetched_rows(spark, tmp_path, metric):
+    """On consistent data a covered projection (id and score only: no fetch)
+    returns the same ids and scores as the non-covered one (broadcast
+    id-join + exact recompute), also over tail rows and tombstones; at full
+    probe both equal the exact plan."""
+    eng = VSSEngine(spark, index_root=str(tmp_path / metric))
+    fe = SQLFrontend(eng)
+    table = _cov_rows(spark, 0, 600)
+    eng.register_table("cov", table)
+    fe.sql(f"CREATE INDEX cov_{metric} ON cov USING HNSW (embedding) WITH (metric = '{metric}')")
+    q = [((i * 5) % 7) / 7.0 - 0.4 for i in range(_COV_DIM)]
+    covered, fetched = _cov_sql(metric, "vec_id, score", q), _cov_sql(metric, "vec_id, score, embedding", q)
+
+    def check():
+        got = _id_score(fe.sql(covered))
+        assert "fetch: none (covered)" in eng.last_plan
+        assert got == _id_score(fe.sql(fetched))
+        assert "fetch: broadcast id-join" in eng.last_plan
+        return got
+
+    fe.sql("SET hnsw_ef_search = 16")
+    check()
+    # insert (tail rows) and delete (tombstones) on table and index alike
+    new = _cov_rows(spark, 600, 640)
+    eng.register_table("cov", table.unionByName(new))
+    eng.insert(f"cov_{metric}", new)
+    gone = [i for i, _ in check()[:3]]
+    eng.delete(f"cov_{metric}", gone)
+    eng.register_table("cov", table.unionByName(new).filter(~F.col("vec_id").isin(gone)))
+    got = check()
+    assert not set(gone) & {i for i, _ in got}
+    fe.sql("SET hnsw_ef_search = 1000000")  # full probe
+    full = check()
+    fe.sql("PRAGMA disable_optimizer")
+    try:
+        assert _id_score(fe.sql(covered)) == full
+        assert "EXACT" in eng.last_plan
+    finally:
+        fe.sql("PRAGMA enable_optimizer")
+
+
+def test_covered_projection_when_table_and_index_disagree(spark, tmp_path):
+    """The contract when the table lost a row the index still holds: a
+    covered projection answers from the index alone and still returns that
+    id; a projection that needs table columns fetches by id and drops it."""
+    eng = VSSEngine(spark, index_root=str(tmp_path / "dis"))
+    fe = SQLFrontend(eng)
+    table = _cov_rows(spark, 0, 600)
+    eng.register_table("cov", table)
+    fe.sql("CREATE INDEX cov_dis ON cov USING HNSW (embedding)")
+    fe.sql("SET hnsw_ef_search = 1000000")
+    q = [0.25] * _COV_DIM
+    before = [i for i, _ in _id_score(fe.sql(_cov_sql("l2sq", "vec_id, score", q, k=5)))]
+    lost = before[0]
+    eng.register_table("cov", table.filter(F.col("vec_id") != lost))  # index not told
+    covered = [r["vec_id"] for r in fe.sql(_cov_sql("l2sq", "vec_id", q, k=5)).collect()]
+    assert "fetch: none (covered)" in eng.last_plan
+    assert covered == before
+    fetched = fe.sql(_cov_sql("l2sq", "vec_id, embedding", q, k=5)).collect()
+    assert lost not in {r["vec_id"] for r in fetched}
+    assert {r["vec_id"] for r in fetched} == set(before[1:])
