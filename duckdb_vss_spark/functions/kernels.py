@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["pairwise_scores", "as_matrix", "local_topk", "nearest_cells"]
+__all__ = ["pairwise_scores", "paired_exact_scores", "as_matrix", "local_topk", "nearest_cells"]
 
 
 def as_matrix(series) -> np.ndarray:
@@ -35,6 +35,48 @@ def pairwise_scores(items: np.ndarray, probes: np.ndarray, metric: str) -> np.nd
         return (items @ probes.T) / np.outer(ni, npr)
     if metric == "ip":
         return items @ probes.T
+    raise ValueError("Unknown metric")
+
+
+def paired_exact_scores(probes: np.ndarray, items: np.ndarray, metric: str) -> np.ndarray:
+    """Authoritative scores of paired ``(probe, item)`` vectors, folding the
+    last axis; the leading axes broadcast, so ``(n, d)`` with ``(n, d)``
+    gives ``(n,)`` and ``(nq, d)`` with ``(k, nq, d)`` gives ``(k, nq)``
+    without gathering copies. Bit-identical to
+    :func:`..distance.distance_expr` with the probe as its first operand:
+    the same left-to-right float64 fold from 0.0, one IEEE multiply and one
+    add per dimension (numpy never fuses them), so the doubles equal the
+    JVM's. ``pairwise_scores``' GEMM reassociates the sums (and expands
+    l2), so its low bits differ: fine for choosing candidates, never
+    emitted. l2sq: ``sqrt(sum((q_j - v_j)^2))``; cosine:
+    ``dot / (sqrt(sum q^2) * sqrt(sum v^2))``; ip: ``sum(q_j * v_j)``.
+    A zero vector makes cosine NaN here; the JVM's divide gives NULL with
+    ANSI mode off and raises with it on. The join kernels never get that
+    far: a NaN kernel score drops the pair before the exact scoring."""
+    shape = np.broadcast_shapes(probes.shape[:-1], items.shape[:-1])
+    acc = np.zeros(shape)
+    # one dimension at a time, widened exactly (f32 -> f64)
+    cols = (
+        (probes[..., j].astype(np.float64), items[..., j].astype(np.float64))
+        for j in range(probes.shape[-1])
+    )
+    if metric in ("l2sq", "l2"):
+        for qj, vj in cols:
+            diff = qj - vj
+            acc += diff * diff
+        return np.sqrt(acc)
+    if metric == "ip":
+        for qj, vj in cols:
+            acc += qj * vj
+        return acc
+    if metric in ("cosine", "cos"):
+        qn, vn = np.zeros(shape), np.zeros(shape)
+        for qj, vj in cols:
+            acc += qj * vj
+            qn += qj * qj
+            vn += vj * vj
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return acc / (np.sqrt(qn) * np.sqrt(vn))
     raise ValueError("Unknown metric")
 
 

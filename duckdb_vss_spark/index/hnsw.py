@@ -88,6 +88,7 @@ from . import fs
 from .ivf import FIRST_VERSION, IVFIndex
 from ..broadcasts import tracked_broadcast
 from ..functions.distance import METRIC_IS_DESCENDING, bound_vec, canonical_metric, distance_expr
+from ..functions.kernels import paired_exact_scores
 
 __all__ = ["GraphIndex", "build_graph", "GRAPH_FORMAT"]
 
@@ -471,10 +472,11 @@ class GraphIndex(IVFIndex):
         probed by AT LEAST one probe are read, and inside each shard's
         kernel only the probes that probed that shard's cell run (mask
         broadcast, same shape as the IVF join's probe mask). Emits k
-        candidate rows ``(qid, id, vec)`` per (probe, shard); the kernel's
-        float64-GEMM score is navigation-only — the caller recomputes the
-        authoritative score with the JVM expression, then deletion-filters
-        and rank-windows."""
+        candidate rows ``(qid, id, score)`` per (probe, shard). The
+        float64-GEMM score only navigates; the emitted score is the
+        authoritative one, from ``paired_exact_scores`` on the hits in hand
+        (bit-identical to the JVM ``distance_expr``). The caller
+        deletion-filters and rank-windows."""
         metric = self.metric
         ef = self._ef(ef_search, k)
         qmat = np.vstack(probes_pdf["v"].to_numpy()).astype(np.float64)
@@ -489,13 +491,15 @@ class GraphIndex(IVFIndex):
         id_t = self.manifest.get("id_type", "bigint")
         qid_t = qid_type
 
+        empty = pd.DataFrame({"qid": [], "id": [], "score": []})
+
         def shard_join(pdf: pd.DataFrame) -> pd.DataFrame:
             if len(pdf) == 0:
-                return pd.DataFrame({"qid": [], "id": [], "vec": []})
+                return empty
             ids_q, qm, mask_l = bc.value
             sel_q = np.nonzero(mask_l[int(pdf["part_id"].iloc[0])])[0]
             if sel_q.size == 0:
-                return pd.DataFrame({"qid": [], "id": [], "vec": []})
+                return empty
             pdf = pdf.sort_values("li").reset_index(drop=True)
             mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
             nbrs = np.vstack(pdf["nbrs"].to_numpy()).astype(np.int32)
@@ -509,24 +513,24 @@ class GraphIndex(IVFIndex):
                 )
                 for row, qi in enumerate(sel_q):
                     sel = part[row][:take]
-                    out_q.extend([ids_q[qi]] * len(sel))
+                    out_q.extend([qi] * len(sel))
                     out_sel.extend(sel.tolist())
             else:
                 for qi in sel_q:
                     idx, _ = _beam_search(mat, nbrs, qm[qi], k, ef, metric)
-                    out_q.extend([ids_q[qi]] * len(idx))
+                    out_q.extend([qi] * len(idx))
                     out_sel.extend(idx.tolist())
             return pd.DataFrame(
                 {
-                    "qid": out_q,
+                    "qid": ids_q[out_q],
                     "id": pdf["id"].iloc[out_sel].to_numpy(),
-                    "vec": pdf["vec"].iloc[out_sel].to_numpy(),
+                    "score": paired_exact_scores(qm[out_q], mat[out_sel], metric),
                 }
             )
 
         data = self.data_df(spark, parts)
         return data.groupBy("part_id").applyInPandas(
-            shard_join, schema=f"qid {qid_t}, id {id_t}, vec array<float>"
+            shard_join, schema=f"qid {qid_t}, id {id_t}, score double"
         )
 
     # -- maintenance ------------------------------------------------------

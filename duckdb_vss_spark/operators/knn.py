@@ -21,9 +21,16 @@ probes at a time, reference: src/hnsw/hnsw_optimize_join.cpp:135):
   2. ``mapInPandas`` over the items side: each partition folds its Arrow
      batches into a running per-probe top-k with one GEMM per batch —
      items never shuffle, partitions never exchange data;
-  3. the surviving ``num_partitions * Q * k`` candidate rows (tiny relative
-     to the input) are exactly re-ranked with a window on probe id;
-  4. full rows are joined back by id only if struct output is requested.
+  3. at the end of each partition the kernel scores its surviving
+     (probe, item) pairs with ``kernels.paired_exact_scores`` — the same
+     left-to-right float64 fold as the JVM ``distance_expr``, so the doubles
+     are bit-identical — and emits ``(qid, rid, score)``. That score is the
+     authoritative one: nothing re-reads the probe side to re-score, so the
+     probes are read exactly once (step 1), as the reference's operator
+     scores each probe in the same search that finds its matches;
+  4. a window on probe id ranks the ``num_partitions * Q * k`` candidates
+     (tiny relative to the input) and cuts to k; full rows are joined back
+     by id only if struct output is requested.
   Unlike the reference's operator, which is declared non-parallel
   (reference: src/hnsw/hnsw_optimize_join.cpp:65-67), every stage here
   parallelizes across item partitions.
@@ -43,7 +50,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.distance import METRIC_IS_DESCENDING, canonical_metric, distance_expr
-from ..functions.kernels import as_matrix, local_topk, pairwise_scores
+from ..functions.kernels import as_matrix, local_topk, paired_exact_scores, pairwise_scores
 from ..broadcasts import tracked_broadcast
 
 __all__ = ["knn_join_flat", "knn_join", "knn_match"]
@@ -144,8 +151,7 @@ def _candidates_broadcast(
         nq = len(qids_l)
         # Running per-probe top-k fold across this partition's Arrow batches.
         # best_scores/best_rids are (k, nq); best_vecs (k, nq, d) f32 keeps the
-        # candidate vectors so the exact score can be recomputed JVM-side
-        # without a second scan of the items table.
+        # candidate vectors for the exact score at the end of the partition.
         best_scores = best_rids = best_vecs = None
         for pdf in batches:
             if excl_l is not None and len(pdf):
@@ -183,12 +189,17 @@ def _candidates_broadcast(
                 best_vecs[: keep.shape[0], q0:q1, :] = merged_v[keep, cols, :]
         if best_scores is None:
             return
-        # drop fill slots and masked-out entries (both carry +-inf scores)
+        # every (slot, probe) scored exactly against its own probe, then fill
+        # slots and masked-out entries dropped (both carry +-inf kernel scores)
+        exact = paired_exact_scores(qmat_l, best_vecs, metric)  # (k, nq)
         valid = np.isfinite(best_scores.ravel(order="F"))
-        out_q = np.repeat(qids_l, k)[valid]
-        out_r = best_rids.ravel(order="F")[valid]
-        out_v = best_vecs.transpose(1, 0, 2).reshape(k * nq, -1)[valid]
-        yield pd.DataFrame({"qid": out_q, "rid": out_r, "v": list(out_v)})
+        yield pd.DataFrame(
+            {
+                "qid": np.repeat(qids_l, k)[valid],
+                "rid": best_rids.ravel(order="F")[valid],
+                "score": exact.ravel(order="F")[valid],
+            }
+        )
 
     item_cols = [F.col(right_id).alias("rid"), F.col(right_on).alias("v")]
     if right_list_col is not None:
@@ -196,15 +207,11 @@ def _candidates_broadcast(
     items = right.select(*item_cols).filter(F.col(right_on).isNotNull())
     qid_t = dict(left.dtypes)[left_id]
     rid_t = dict(right.dtypes)[right_id]
-    cand = items.mapInPandas(gen, schema=f"qid {qid_t}, rid {rid_t}, v array<float>")
-    # Exact-score recompute: the GEMM kernel selects candidates ~1e-8-accurately;
-    # the authoritative score is the JVM double-precision expression, which
-    # matches DuckDB's DOUBLE[] computation bit-for-bit after an f32 round-trip.
-    probes_small = left.select(F.col(left_id).alias("qid"), F.col(left_on).alias("__qv"))
-    return (
-        cand.join(F.broadcast(probes_small), "qid")
-        .select("qid", "rid", distance_expr("__qv", "v", metric).alias("score"))
-    )
+    # The GEMM picks candidates; their authoritative score comes from
+    # ``paired_exact_scores`` in the same task, bit-identical to the JVM
+    # ``distance_expr`` (which matches DuckDB's DOUBLE[] computation after
+    # an f32 round-trip), so the probe side is read once, by the collect.
+    return items.mapInPandas(gen, schema=f"qid {qid_t}, rid {rid_t}, score double")
 
 
 def _quantized_candidates(
@@ -440,18 +447,22 @@ def knn_join_flat(
     right_id: str = None,
     method: str = "auto",
     broadcast_probe_limit: int = DEFAULT_BROADCAST_PROBE_LIMIT,
+    *,
+    _probes_pdf: "pd.DataFrame | None" = None,
 ) -> DataFrame:
     """Flat k-NN join: ``(qid, rid, rnk, score)`` — for each left row the k
     best right rows by ``metric``, ``rnk`` 1-indexed like the reference's
     match-rank column (reference: src/hnsw/hnsw_optimize_join.cpp:146).
 
-    Ties broken by ``rid`` so results are deterministic.
+    Ties broken by ``rid`` so results are deterministic. ``_probes_pdf``:
+    probes a caller already collected with :func:`_collect_probes`, so the
+    probe side is not read a second time.
     """
     m = canonical_metric(metric)
     if left_id is None or right_id is None:
         raise ValueError("knn_join requires explicit left_id/right_id columns")
-    probes_pdf = None
-    if method == "auto":
+    probes_pdf = _probes_pdf
+    if method == "auto" and probes_pdf is None:
         # guard folded into the probe collection itself: limit(n+1) rows come
         # back in ONE job and double as the broadcast probe matrix — no
         # separate count() pre-pass
@@ -463,7 +474,13 @@ def knn_join_flat(
         )
     else:
         cand = _candidates_crossjoin(left, right, left_on, right_on, left_id, right_id, m)
-    desc = METRIC_IS_DESCENDING[m]
+    return _rank_topk(cand, k, m)
+
+
+def _rank_topk(cand: DataFrame, k: int, metric: str) -> DataFrame:
+    """The final per-probe cut over ``(qid, rid, score)`` candidates:
+    ``rnk`` 1-indexed by score polarity, ties broken by ``rid``."""
+    desc = METRIC_IS_DESCENDING[metric]
     order = [F.col("score").desc() if desc else F.col("score").asc(), F.col("rid").asc()]
     w = Window.partitionBy("qid").orderBy(*order)
     return (
@@ -543,15 +560,11 @@ def knn_join_flat_indexed(
         # graph backend: probes ride a broadcast into every shard's beam-
         # search kernel (index/hnsw.py); deletions filtered before the
         # global per-probe rank window, tail competes brute-force — the
-        # same contract as the IVF kernel path below
-        raw = index.search_join(
+        # same contract as the IVF kernel path below. The shard hits arrive
+        # with their exact scores.
+        cand = index.search_join(
             spark, probes_pdf, k, ef_search, qid_type=dict(left.dtypes)[left_id]
         ).withColumnRenamed("id", "rid")
-        # exact-score recompute in the JVM (kernel scores are ~1e-8 GEMM)
-        probes_small = left.select(F.col(left_id).alias("qid"), F.col(left_on).alias("__qv"))
-        cand = raw.join(F.broadcast(probes_small), "qid").select(
-            "qid", "rid", distance_expr("__qv", "vec", metric).alias("score")
-        )
         excl, del_df, del_small = _deleted_exclusion(index, spark)
         cand = _anti_join_deleted(cand, del_df, del_small, id_col="rid")
         tail = index.tail_df(spark)
@@ -564,14 +577,7 @@ def knn_join_flat_indexed(
                     excluded_ids=excl, probes_pdf=probes_pdf,
                 )
             )
-        desc = METRIC_IS_DESCENDING[metric]
-        order = [F.col("score").desc() if desc else F.col("score").asc(), F.col("rid").asc()]
-        w = Window.partitionBy("qid").orderBy(*order)
-        return (
-            cand.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("qid", "rid", "rnk", "score")
-        )
+        return _rank_topk(cand, k, metric)
     if (
         probes_pdf is not None
         and len(probes_pdf) >= DISTRIBUTED_MIN_PROBES
@@ -628,7 +634,9 @@ def knn_join_flat_indexed(
         if deleted is not None:
             # no forced broadcast hint (unbounded set; AQE decides)
             full = full.join(deleted, "id", "left_anti")
-        return knn_join_flat(left, full, left_on, "vec", k, metric, left_id, "id")
+        return knn_join_flat(
+            left, full, left_on, "vec", k, metric, left_id, "id", _probes_pdf=probes_pdf
+        )
     # deleted ids ride into the kernel (so live rows keep all k slots) only
     # while the tombstone set fits DELETED_IDS_KERNEL_CAP — the reference's
     # in-RAM free list (usearch/index_dense.hpp:1228-1248) has no such
@@ -669,8 +677,14 @@ def knn_join_flat_indexed(
         rvec = data.select(F.col("id").alias("rid"), F.col("vec").alias("__rv")).join(
             F.broadcast(cand_ids), "rid"
         )
-        probes_small = left.select(F.col(left_id).alias("qid"), F.col(left_on).alias("__qv"))
-        cand = rvec.join(F.broadcast(probes_small), "qid").select(
+        # the collected probes as an Arrow local relation: the exact re-score
+        # reads no part of ``left`` again and starts no Python worker
+        ltypes = dict(left.dtypes)
+        probes_local = spark.createDataFrame(
+            probes_pdf.rename(columns={"v": "__qv"}),
+            f"qid {ltypes[left_id]}, __qv {ltypes[left_on]}",
+        )
+        cand = rvec.join(F.broadcast(probes_local), "qid").select(
             "qid", "rid", distance_expr("__qv", "__rv", metric).alias("score")
         )
     else:
@@ -690,14 +704,7 @@ def knn_join_flat_indexed(
                 excluded_ids=excl, probes_pdf=probes_pdf,
             )
         )
-    desc = METRIC_IS_DESCENDING[metric]
-    order = [F.col("score").desc() if desc else F.col("score").asc(), F.col("rid").asc()]
-    w = Window.partitionBy("qid").orderBy(*order)
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rid", "rnk", "score")
-    )
+    return _rank_topk(cand, k, metric)
 
 
 def knn_join_flat_indexed_distributed(
@@ -889,13 +896,7 @@ def knn_join_flat_indexed_distributed(
         .join(probes.withColumnRenamed("qv", "__qv"), "qid")
         .select("qid", "rid", distance_expr("__qv", "__rv", metric).alias("score"))
     )
-    order = [F.col("score").desc() if desc else F.col("score").asc(), F.col("rid").asc()]
-    w = Window.partitionBy("qid").orderBy(*order)
-    return (
-        rescored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rid", "rnk", "score")
-    )
+    return _rank_topk(rescored, k, metric)
 
 
 def knn_match(

@@ -122,6 +122,46 @@ def test_unrolled_matches_hof_bitwise(spark):
     assert [tuple(r) for r in fast] == [tuple(r) for r in slow]
 
 
+def test_paired_exact_scores_match_distance_expr_bitwise(spark, emb):
+    """The join kernels emit ``paired_exact_scores`` as the final score, so
+    its doubles must equal the JVM ``distance_expr`` (probe first) bit for
+    bit — over real embeddings, probes with negative components, and an
+    all-zero probe, whose cosine is NaN here and NULL in the JVM (ANSI
+    off; with ANSI on the JVM divide raises)."""
+    import numpy as np
+
+    from duckdb_vss_spark.functions.distance import distance_expr
+    from duckdb_vss_spark.functions.kernels import paired_exact_scores
+
+    probes = [
+        [0.1 * i - 3.0 for i in range(64)],
+        [(-1.0) ** i * (i % 7) / 3.0 for i in range(64)],
+        [0.0] * 64,
+    ]
+    pairs = spark.createDataFrame([(p,) for p in probes], "qv array<float>").crossJoin(
+        emb.select("embedding")
+    )
+    metrics = ("l2sq", "cosine", "ip")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        rows = pairs.select(
+            "qv", "embedding", *[distance_expr("qv", "embedding", m).alias(m) for m in metrics]
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    q = np.array([r["qv"] for r in rows], dtype=np.float32).astype(np.float64)
+    v = np.array([r["embedding"] for r in rows], dtype=np.float32).astype(np.float64)
+    for m in metrics:
+        jvm = np.array([np.nan if r[m] is None else r[m] for r in rows], dtype=np.float64)
+        with np.errstate(all="raise"):  # the scorer owns its 0/0
+            ours = paired_exact_scores(q, v, m)
+        nan = np.isnan(jvm)
+        assert np.array_equal(nan, np.isnan(ours)), m
+        assert (m == "cosine") == bool(nan.any()), m  # only the zero probe's cosine
+        assert np.array_equal(ours[~nan].view(np.int64), jvm[~nan].view(np.int64)), m
+
+
 def test_high_dim_no_codegen_crash(spark):
     """512-dim constant-vector queries must not crash Catalyst: beyond
     _UNROLL_MAX_DIM (=256, the largest dim whose unrolled sequential chain

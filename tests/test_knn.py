@@ -131,7 +131,8 @@ def test_indexed_join_distributed_matches_broadcast(spark, tmp_path):
     """The fully distributed cell-cogroup indexed join (probe side too big
     to broadcast) must return byte-for-byte what the broadcast-kernel path
     returns at the same ef — same probe sets (shared nearest_cells rule),
-    same exact JVM rescore, same rid tiebreak. Exercised with a tail insert
+    bit-identical exact scores (the JVM rescore there, the kernel's
+    paired_exact_scores here), same rid tiebreak. Exercised with a tail insert
     and a deletion so every side channel is covered."""
     from duckdb_vss_spark import VSSEngine
     from duckdb_vss_spark.operators.knn import knn_join_flat_indexed

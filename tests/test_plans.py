@@ -152,6 +152,75 @@ def test_covered_point_query_one_job_no_recompile(spark, tmp_path):
     assert run(1)[0] == 1
     assert run(2) == (1, 0)
 
+
+def test_kernel_joins_read_probe_side_once(spark, tmp_path):
+    """Every broadcast-kernel join reads its probe side exactly once: the
+    collect that feeds the kernel. The kernel emits the exact scores, so
+    nothing re-reads the probes to re-score candidates. Covers the flat
+    kernel join, the IVF masked join, the coverage reroute to the flat
+    kernel, the graph join and the SQ8 re-rank (whose exact re-score joins
+    a local relation of the collected probes); the probe side counts its
+    own rows through an accumulator. The IVF masked join is at most 3
+    Spark jobs."""
+    import numpy as np
+
+    from duckdb_vss_spark import VSSEngine, knn_join_flat
+    from duckdb_vss_spark.operators.knn import knn_join_flat_indexed
+
+    sc = spark.sparkContext
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
+    eng = VSSEngine(spark, index_root=str(tmp_path))
+    eng.register_table("emb_once", emb)
+    eng.register_table("emb_once_g", emb)
+    eng.register_table("emb_once_q", emb)
+    eng.create_index("ivf_once", "emb_once", "embedding", "vec_id")
+    eng.create_index(
+        "g_once", "emb_once_g", "embedding", "vec_id",
+        options={"index_type": "hnsw", "graph_part_rows": 128},
+    )
+    eng.create_index("q_once", "emb_once_q", "embedding", "vec_id", options={"quantization": "i8"})
+    ivf, graph, sq8 = (eng.catalog.get(n) for n in ("ivf_once", "g_once", "q_once"))
+
+    nq, ef_masked = 3, 8
+    reads = sc.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            reads.add(len(pdf))
+            yield pdf
+
+    probes = emb.filter(F.col("vec_id") < nq).mapInPandas(counted, emb.schema)
+    qmat = np.array([r["embedding"] for r in emb.filter(F.col("vec_id") < nq).collect()])
+    lists = {int(l) for s in ivf.probe_lists_batch(qmat, ivf.nprobe_for(ef_masked)) for l in s}
+    assert len(lists) < 0.5 * ivf.nlist  # the masked path, not the reroute
+
+    def run(name, join):
+        group = f"probe-reads-{name}"
+        before = reads.value
+        sc.setJobGroup(group, group)
+        try:
+            rows = join().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert {r["qid"] for r in rows} == set(range(nq)), name
+        return reads.value - before, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    cases = {
+        "flat": lambda: knn_join_flat(
+            probes, emb, "embedding", "embedding", 3, "l2sq", left_id="vec_id", right_id="vec_id"
+        ),
+        "ivf_masked": lambda: knn_join_flat_indexed(probes, ivf, "embedding", 3, "vec_id", ef_search=ef_masked),
+        "ivf_reroute": lambda: knn_join_flat_indexed(probes, ivf, "embedding", 3, "vec_id", ef_search=10**6),
+        "graph": lambda: knn_join_flat_indexed(probes, graph, "embedding", 3, "vec_id", ef_search=64),
+        "sq8": lambda: knn_join_flat_indexed(probes, sq8, "embedding", 3, "vec_id", ef_search=ef_masked),
+    }
+    for name, join in cases.items():
+        assert run(name, join)[0] == nq, name
+    # warm now: a handle's first read infers its data schema (one job)
+    n_read, n_jobs = run("ivf_masked_warm", cases["ivf_masked"])
+    assert n_read == nq and n_jobs <= 3, (n_read, n_jobs)
+
+
 def test_aggregate_is_partial_then_final(spark):
     """groupBy aggregates must map-side combine (partial_ functions before
     the exchange) — the difference between shuffling rows and shuffling
