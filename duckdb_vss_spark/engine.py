@@ -197,6 +197,7 @@ class VSSEngine:
                      "backend": "graph" if getattr(idx, "is_graph", False) else "ivf",
                      "fetch": "none (covered)" if covered else "broadcast id-join"}
             hits = idx.search(self.spark, list(query), k, decision.ef_search)
+            extra["source"] = idx.last_source
             if covered:
                 out = hits.select(F.col("id").alias(id_col), F.col("score").alias(score_col))
             else:
@@ -284,6 +285,7 @@ class VSSEngine:
         spec = TopKAggSpec(self._table_name(table) or "<df>", value_col, vec_col, list(query), k, idx_metric)
         idx = self._find_index(self._table_name(table), vec_col, idx_metric) if routable else None
         decision = self._decide(spec, idx)
+        extra = None
         if decision.strategy == "HNSW_INDEX_SCAN":
             hits = idx.search(self.spark, list(query), k, decision.ef_search)
             id_col = idx.manifest.get("id_column", "id")
@@ -293,10 +295,11 @@ class VSSEngine:
             # src/hnsw/hnsw_optimize_topk.cpp:191-193)
             score = score_fn(vec_col, bound_vec(query))
             out = _by_k(fetched, value_col, score, k, descending=descending, tiebreak=None, filter=where)
+            extra = {"source": idx.last_source}
         else:
             out = _by_k(df, value_col, score_fn(vec_col, list(query)), k, descending=descending, tiebreak=None,
                         filter=where)
-        plan = explain_text(spec, decision)
+        plan = explain_text(spec, decision, extra)
         self.last_plan = plan
         return out, plan
 
@@ -328,8 +331,10 @@ class VSSEngine:
         )
         idx = self._find_index(self._table_name(right), right_col, m)
         decision = self._decide(spec, idx)
+        extra = None
         if decision.strategy == "HNSW_INDEX_JOIN":
             out = knn_join_flat_indexed(ldf, idx, left_col, k, left_id, decision.ef_search)
+            extra = {"source": idx.last_source}
         else:
             out = knn_join_flat(ldf, rdf, left_col, right_col, k, m, left_id, right_id)
         if not flat:
@@ -340,7 +345,7 @@ class VSSEngine:
                 .join(lstruct, out["qid"] == lstruct["__qid"])
                 .select(F.col("score").cast("float").alias("score"), "left_tbl", "right_tbl")
             )
-        plan = explain_text(spec, decision)
+        plan = explain_text(spec, decision, extra)
         self.last_plan = plan
         return out, plan
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["pairwise_scores", "paired_exact_scores", "as_matrix", "local_topk", "nearest_cells"]
+__all__ = ["pairwise_scores", "paired_exact_scores", "as_matrix", "local_topk", "nearest_cells", "sort_key"]
 
 
 def as_matrix(series) -> np.ndarray:
@@ -111,3 +111,12 @@ def local_topk(scores: np.ndarray, k: int, descending: bool) -> np.ndarray:
     if kk >= n:
         return np.argsort(s, axis=0)[:kk, :]
     return np.argpartition(s, kk - 1, axis=0)[:kk, :]
+
+
+def sort_key(a: np.ndarray) -> np.ndarray:
+    """``a`` as a ``np.lexsort`` key ordered like a Spark sort of the
+    column: numbers as they are, anything else (string ids) by the rank of
+    its value (code point order, which is UTF-8 byte order)."""
+    if np.issubdtype(a.dtype, np.number):
+        return a
+    return np.unique(a, return_inverse=True)[1]

@@ -596,9 +596,40 @@ def _ddl(df: DataFrame) -> str:
     return ", ".join(f"`{n}` {t}" for n, t in df.dtypes)
 
 
+class _Resident:
+    """An index's rows held on the driver: ``ids`` and f32 ``vec`` sorted by
+    inverted list, so ``offsets[l]:offsets[l + 1]`` are the rows of list
+    ``l``. ``dirs`` names the data dirs (base, then deltas) they came from;
+    those are immutable once the manifest names them."""
+
+    def __init__(self, dirs: tuple, ids: np.ndarray, vec: np.ndarray, list_ids: np.ndarray, nlist: int):
+        order = np.argsort(list_ids, kind="stable")
+        self.dirs = dirs
+        self.ids, self.vec = ids[order], vec[order]
+        self.offsets = np.r_[0, np.cumsum(np.bincount(list_ids, minlength=nlist))]
+        self.label = f"resident ({len(ids)} rows)"
+
+    def list_ids(self) -> np.ndarray:
+        """The inverted list of each row."""
+        return np.repeat(np.arange(len(self.offsets) - 1), np.diff(self.offsets))
+
+    def rows(self, lists=None) -> np.ndarray:
+        """Row positions of ``lists``, in that order (every row when None)."""
+        if lists is None:
+            return np.arange(len(self.ids))
+        spans = [np.arange(self.offsets[l], self.offsets[l + 1]) for l in lists]
+        return np.concatenate(spans) if spans else np.empty(0, dtype=np.int64)
+
+
 class IVFIndex:
-    """Handle to an on-disk IVF artifact; all search methods return lazy
-    DataFrames so they compose with further relational ops."""
+    """Handle to an on-disk IVF artifact. Search methods return DataFrames
+    that compose with further relational ops: lazy parquet plans, or local
+    relations when the handle serves a small index from its resident copy
+    (:meth:`_resident`)."""
+
+    # where the last search or index join read its rows: "parquet", or the
+    # resident copy's label
+    last_source = "parquet"
 
     def __init__(self, path: str, spark: Optional[SparkSession] = None):
         self.path = path
@@ -658,6 +689,7 @@ class IVFIndex:
         # every query. Base and delta dirs share one layout.
         self._data_schema = None
         self._tail_schema: Optional[str] = None
+        self._resident_copy: Optional[_Resident] = None
 
     def _read(self, spark: SparkSession, schema, *paths, **options) -> DataFrame:
         """``spark.read.parquet`` with ``schema`` bound when known (no
@@ -768,19 +800,25 @@ class IVFIndex:
     def _deleted_path(self) -> str:
         return fs.join(self.vpath, "deleted")
 
-    def tail_df(self, spark: SparkSession) -> Optional[DataFrame]:
+    def _has_tail(self, spark: SparkSession) -> bool:
         if self._tail_exists is None:
             self._tail_exists = fs.exists(spark, self._tail_path())
-        if self._tail_exists:
+        return self._tail_exists
+
+    def _has_deleted(self, spark: SparkSession) -> bool:
+        if self._deleted_exists is None:
+            self._deleted_exists = fs.exists(spark, self._deleted_path())
+        return self._deleted_exists
+
+    def tail_df(self, spark: SparkSession) -> Optional[DataFrame]:
+        if self._has_tail(spark):
             df = self._read(spark, self._tail_schema, self._tail_path())
             self._tail_schema = self._tail_schema or _ddl(df)
             return df.select("id", "vec")
         return None
 
     def deleted_df(self, spark: SparkSession) -> Optional[DataFrame]:
-        if self._deleted_exists is None:
-            self._deleted_exists = fs.exists(spark, self._deleted_path())
-        if self._deleted_exists:
+        if self._has_deleted(spark):
             # tombstones are always written with this schema (see delete)
             schema = f"id {self.manifest.get('id_type', 'bigint')}"
             return self._read(spark, schema, self._deleted_path()).select("id").distinct()
@@ -842,17 +880,81 @@ class IVFIndex:
             cand = cand.join(deleted, "id", "left_anti")
         return cand
 
+    def _resident(self, spark: SparkSession) -> Optional[_Resident]:
+        """The handle's resident copy of the base and delta rows, or None
+        when this index reads parquet: quantized and graph artifacts, more
+        rows than ``knn.RESIDENT_BYTES_BUDGET`` holds, or a tail or
+        tombstones (so the copy never serves data the parquet path would
+        not). Filled by one Spark collect on first use; a delta committed
+        since then is read alone and merged in, since committed data dirs
+        never change."""
+        from ..operators import knn
+
+        if (
+            getattr(self, "is_graph", False)
+            or any(x is not None for x in (self.pq_books, self.sq_scale, self.b1_thresholds))
+            or int(self.manifest["count"]) * (8 + 4 * self.dim) > knn.RESIDENT_BYTES_BUDGET
+            or self._has_tail(spark)
+            or self._has_deleted(spark)
+        ):
+            return None
+        dirs = (self.data_path(), *self._delta_dirs())
+        res = self._resident_copy
+        if res is not None and not set(res.dirs) <= set(dirs):
+            res = None  # another version: start over
+        if res is None or res.dirs != dirs:
+            new = [d for d in dirs if res is None or d not in res.dirs]
+            frame = self._read_data(spark, new[0])
+            for d in new[1:]:
+                frame = frame.unionByName(self._read_data(spark, d))
+            pdf = frame.select("id", "vec", self._PART_COL).toPandas()
+            ids, lists = pdf["id"].to_numpy(), pdf[self._PART_COL].to_numpy(np.int64)
+            vec = np.vstack([np.empty((0, self.dim), np.float32), *pdf["vec"]]).astype(np.float32, copy=False)
+            if res is not None:
+                ids, vec, lists = np.r_[res.ids, ids], np.vstack([res.vec, vec]), np.r_[res.list_ids(), lists]
+            res = self._resident_copy = _Resident(dirs, ids, vec, lists, self.nlist)
+        return res
+
+    def _resident_search(self, spark: SparkSession, res: _Resident, query, k: int, lists) -> Optional[DataFrame]:
+        """:meth:`search` over the resident rows of ``lists``, as a local
+        relation with the parquet path's exact doubles and (score, id)
+        order. None when a score is NaN — a zero-norm cosine row, NULL in
+        the JVM (an error under ANSI), or a NaN component — so the caller
+        takes the parquet path and keeps Spark's semantics."""
+        from ..functions.kernels import paired_exact_scores, sort_key
+
+        rows = res.rows(lists)
+        scores = paired_exact_scores(np.asarray(query, dtype=np.float64), res.vec[rows], self.metric)
+        if np.isnan(scores).any():
+            return None
+        ids = res.ids[rows]
+        top = np.lexsort((sort_key(ids), -scores if METRIC_IS_DESCENDING[self.metric] else scores))[:k]
+        return spark.createDataFrame(
+            pd.DataFrame({"id": ids[top], "score": scores[top]}),
+            f"id {self.manifest.get('id_type', 'bigint')}, score double",
+        )
+
     def search(self, spark: SparkSession, query: list[float], k: int, ef_search: int | None = None) -> DataFrame:
         """Top-k (id, score) for one query vector; score polarity follows the
         metric. Exact within the probed lists (PQ artifacts re-rank a code-
         selected shortlist with the exact expression, so reported scores stay
-        exact there too — only membership is approximate)."""
+        exact there too — only membership is approximate). A resident copy
+        answers without a Spark job, with the same rows and doubles."""
+        self.last_source = "parquet"
         if self.pq_books is not None:
             return self._pq_search(spark, query, k, ef_search)
         if self.sq_scale is not None:
             return self._sq_search(spark, query, k, ef_search)
         if self.b1_thresholds is not None:
             return self._b1_search(spark, query, k, ef_search)
+        res = self._resident(spark)
+        if res is not None:
+            if len(query) != self.dim:
+                raise ValueError(f"query dimension {len(query)} != index dimension {self.dim}")
+            hits = self._resident_search(spark, res, query, k, self.probe_lists(query, self.nprobe_for(ef_search)))
+            if hits is not None:
+                self.last_source = res.label
+                return hits
         cand = self.candidates(spark, query, ef_search)
         desc = METRIC_IS_DESCENDING[self.metric]
         scored = cand.select("id", distance_expr("vec", bound_vec(query), self.metric).alias("score"))
@@ -1155,8 +1257,11 @@ class IVFIndex:
                         fs.delete(spark, fs.join(self.path, leaf))
         finally:
             data.unpersist()
+        self._resident_copy = None  # the new version's handle reads its own
         return IVFIndex(self.path, spark)
 
     def drop(self) -> None:
-        """DROP INDEX: free the artifact (reference: src/hnsw/hnsw_index.cpp:410-419)."""
+        """DROP INDEX: free the artifact (reference: src/hnsw/hnsw_index.cpp:410-419)
+        and the handle's resident copy."""
         fs.delete(self.spark, self.path)
+        self._resident_copy = None

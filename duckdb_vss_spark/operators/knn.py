@@ -33,7 +33,10 @@ probes at a time, reference: src/hnsw/hnsw_optimize_join.cpp:135):
      by id only if struct output is requested.
   Unlike the reference's operator, which is declared non-parallel
   (reference: src/hnsw/hnsw_optimize_join.cpp:65-67), every stage here
-  parallelizes across item partitions.
+  parallelizes across item partitions. An index join against an index
+  resident on its handle (``RESIDENT_BYTES_BUDGET``) runs steps 2-4 on the
+  driver instead: the same fold (:func:`fold_topk`) over the resident rows,
+  then the rank in numpy, so the probe collect is its only Spark job.
 
 ``crossjoin``: pure DataFrame fallback (cross join + window top-k) when the
 probe side is itself huge; correct at any size but O(|L|*|R|) compute —
@@ -50,7 +53,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.distance import METRIC_IS_DESCENDING, canonical_metric, distance_expr
-from ..functions.kernels import as_matrix, local_topk, paired_exact_scores, pairwise_scores
+from ..functions.kernels import as_matrix, local_topk, paired_exact_scores, pairwise_scores, sort_key
 from ..broadcasts import tracked_broadcast
 
 __all__ = ["knn_join_flat", "knn_join", "knn_match"]
@@ -74,6 +77,16 @@ DISTRIBUTED_MIN_PROBES = 1024
 # routes through a distributed anti-join on the item side BEFORE the
 # kernels instead, so live rows still keep all k slots.
 DELETED_IDS_KERNEL_CAP = 1_000_000
+# An unquantized IVF index whose base and delta rows take at most this many
+# bytes (8-byte id + f32 vector per row) is served from a copy resident on
+# its handle: point queries run no Spark job and joins only the probe
+# collect (the reference keeps its whole index in process memory,
+# src/hnsw/hnsw_index.cpp:223-239). Larger indexes, and any index with a
+# tail or tombstones, read parquet.
+RESIDENT_BYTES_BUDGET = 64 << 20
+# rows per batch the driver feeds the fold from a resident copy, as an
+# Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``) does
+_RESIDENT_BATCH_ROWS = 10_000
 
 
 def _deleted_exclusion(index, spark):
@@ -99,6 +112,67 @@ def _anti_join_deleted(df: DataFrame, deleted_df, small: bool, id_col: str = "id
         return df
     d = deleted_df.withColumnRenamed("id", id_col) if id_col != "id" else deleted_df
     return df.join(F.broadcast(d) if small else d, id_col, "left_anti")
+
+
+def fold_topk(items, qids, qmat, k: int, metric: str, mask=None) -> "pd.DataFrame | None":
+    """The broadcast kernel's per-probe top-k fold (module docstring, steps
+    2-3) over ``items``, an iterable of ``(rids, vecs, lists)`` batches:
+    one GEMM per batch picks each probe's running top-k, then the survivors
+    are scored with ``paired_exact_scores``. ``mask`` (nlist, nq) bool lets
+    a row compete only for the probes whose probe set holds its inverted
+    list (``lists``, one id per row; None without a mask). Returns the
+    ``(qid, rid, score)`` survivors, or None when no row arrived. The Spark
+    kernel runs it once per partition, an index's resident copy once on the
+    driver, so both score alike."""
+    import numpy as np
+
+    desc = METRIC_IS_DESCENDING[metric]
+    nq = len(qids)
+    # Running per-probe top-k fold across the batches. best_scores/best_rids
+    # are (k, nq); best_vecs (k, nq, d) f32 keeps the candidate vectors for
+    # the exact score at the end.
+    best_scores = best_rids = best_vecs = None
+    for rids, vecs, lists in items:
+        vecs32 = vecs.astype(np.float32, copy=False)
+        imat = np.ascontiguousarray(vecs32, dtype=np.float64)
+        if best_scores is None:
+            d = imat.shape[1]
+            best_scores = np.full((k, nq), -np.inf if desc else np.inf)
+            # object dtype + None sentinel: rid columns may be strings,
+            # where an int64 fill would crash the vstack with a cast error
+            rid_numeric = np.issubdtype(rids.dtype, np.number)
+            best_rids = (
+                np.full((k, nq), -1, dtype=np.int64) if rid_numeric else np.full((k, nq), None, dtype=object)
+            )
+            best_vecs = np.zeros((k, nq, d), dtype=np.float32)
+        for q0 in range(0, nq, _PROBE_CHUNK):
+            q1 = min(q0 + _PROBE_CHUNK, nq)
+            scores = pairwise_scores(imat, qmat[q0:q1], metric)  # (n_items, chunk)
+            if mask is not None:
+                allowed = mask[lists][:, q0:q1]  # (n_items, chunk)
+                scores = np.where(allowed, scores, -np.inf if desc else np.inf)
+            idx = local_topk(scores, k, desc)  # (k', chunk)
+            cols = np.arange(q1 - q0)[None, :]
+            merged_s = np.vstack([best_scores[:, q0:q1], scores[idx, cols]])
+            merged_r = np.vstack([best_rids[:, q0:q1], rids[idx]])
+            merged_v = np.concatenate([best_vecs[:, q0:q1, :], vecs32[idx]], axis=0)
+            keep = local_topk(merged_s, k, desc)
+            best_scores[: keep.shape[0], q0:q1] = merged_s[keep, cols]
+            best_rids[: keep.shape[0], q0:q1] = merged_r[keep, cols]
+            best_vecs[: keep.shape[0], q0:q1, :] = merged_v[keep, cols, :]
+    if best_scores is None:
+        return None
+    # every (slot, probe) scored exactly against its own probe, then fill
+    # slots and masked-out entries dropped (both carry +-inf kernel scores)
+    exact = paired_exact_scores(qmat, best_vecs, metric)  # (k, nq)
+    valid = np.isfinite(best_scores.ravel(order="F"))
+    return pd.DataFrame(
+        {
+            "qid": np.repeat(qids, k)[valid],
+            "rid": best_rids.ravel(order="F")[valid],
+            "score": exact.ravel(order="F")[valid],
+        }
+    )
 
 
 def _candidates_broadcast(
@@ -140,7 +214,6 @@ def _candidates_broadcast(
     qmat = as_matrix(probes_pdf["v"]) if len(probes_pdf) else None
     excl = np.asarray(list(excluded_ids)) if excluded_ids is not None and len(excluded_ids) else None
     bc = tracked_broadcast(spark.sparkContext, (qids, qmat, probe_mask, excl))
-    desc = METRIC_IS_DESCENDING[metric]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -148,58 +221,18 @@ def _candidates_broadcast(
         qids_l, qmat_l, mask_l, excl_l = bc.value
         if qmat_l is None:
             return
-        nq = len(qids_l)
-        # Running per-probe top-k fold across this partition's Arrow batches.
-        # best_scores/best_rids are (k, nq); best_vecs (k, nq, d) f32 keeps the
-        # candidate vectors for the exact score at the end of the partition.
-        best_scores = best_rids = best_vecs = None
-        for pdf in batches:
-            if excl_l is not None and len(pdf):
-                pdf = pdf[~pdf["rid"].isin(excl_l)]
-            if len(pdf) == 0:
-                continue
-            rids = pdf["rid"].to_numpy()
-            vecs32 = np.vstack(pdf["v"].to_numpy()).astype(np.float32, copy=False)
-            imat = np.ascontiguousarray(vecs32, dtype=np.float64)
-            if best_scores is None:
-                d = imat.shape[1]
-                best_scores = np.full((k, nq), -np.inf if desc else np.inf)
-                # object dtype + None sentinel: rid columns may be strings,
-                # where an int64 fill would crash the vstack with a cast error
-                rid_numeric = np.issubdtype(rids.dtype, np.number)
-                best_rids = (
-                    np.full((k, nq), -1, dtype=np.int64) if rid_numeric else np.full((k, nq), None, dtype=object)
-                )
-                best_vecs = np.zeros((k, nq, d), dtype=np.float32)
-            lists = pdf["__lst"].to_numpy() if mask_l is not None else None
-            for q0 in range(0, nq, _PROBE_CHUNK):
-                q1 = min(q0 + _PROBE_CHUNK, nq)
-                scores = pairwise_scores(imat, qmat_l[q0:q1], metric)  # (n_items, chunk)
-                if mask_l is not None:
-                    allowed = mask_l[lists][:, q0:q1]  # (n_items, chunk)
-                    scores = np.where(allowed, scores, -np.inf if desc else np.inf)
-                idx = local_topk(scores, k, desc)  # (k', chunk)
-                cols = np.arange(q1 - q0)[None, :]
-                merged_s = np.vstack([best_scores[:, q0:q1], scores[idx, cols]])
-                merged_r = np.vstack([best_rids[:, q0:q1], rids[idx]])
-                merged_v = np.concatenate([best_vecs[:, q0:q1, :], vecs32[idx]], axis=0)
-                keep = local_topk(merged_s, k, desc)
-                best_scores[: keep.shape[0], q0:q1] = merged_s[keep, cols]
-                best_rids[: keep.shape[0], q0:q1] = merged_r[keep, cols]
-                best_vecs[: keep.shape[0], q0:q1, :] = merged_v[keep, cols, :]
-        if best_scores is None:
-            return
-        # every (slot, probe) scored exactly against its own probe, then fill
-        # slots and masked-out entries dropped (both carry +-inf kernel scores)
-        exact = paired_exact_scores(qmat_l, best_vecs, metric)  # (k, nq)
-        valid = np.isfinite(best_scores.ravel(order="F"))
-        yield pd.DataFrame(
-            {
-                "qid": np.repeat(qids_l, k)[valid],
-                "rid": best_rids.ravel(order="F")[valid],
-                "score": exact.ravel(order="F")[valid],
-            }
-        )
+
+        def items():
+            for pdf in batches:
+                if excl_l is not None and len(pdf):
+                    pdf = pdf[~pdf["rid"].isin(excl_l)]
+                if len(pdf):
+                    lists = pdf["__lst"].to_numpy() if mask_l is not None else None
+                    yield pdf["rid"].to_numpy(), np.vstack(pdf["v"].to_numpy()), lists
+
+        out = fold_topk(items(), qids_l, qmat_l, k, metric, mask_l)
+        if out is not None:
+            yield out
 
     item_cols = [F.col(right_id).alias("rid"), F.col(right_on).alias("v")]
     if right_list_col is not None:
@@ -490,6 +523,42 @@ def _rank_topk(cand: DataFrame, k: int, metric: str) -> DataFrame:
     )
 
 
+def _rank_local(cand: pd.DataFrame, k: int, metric: str) -> pd.DataFrame:
+    """:func:`_rank_topk` in numpy, for candidates already on the driver:
+    per ``qid`` by score polarity, then ``rid``, ``rnk`` 1-indexed."""
+    import numpy as np
+
+    score = cand["score"].to_numpy()
+    qid = sort_key(cand["qid"].to_numpy())
+    order = np.lexsort(
+        (sort_key(cand["rid"].to_numpy()), -score if METRIC_IS_DESCENDING[metric] else score, qid)
+    )
+    out = cand.iloc[order].reset_index(drop=True)
+    q, pos = qid[order], np.arange(len(out))
+    group_start = np.maximum.accumulate(np.where(np.r_[True, q[1:] != q[:-1]], pos, 0))
+    out["rnk"] = (pos - group_start + 1).astype(np.int32)
+    return out[out["rnk"] <= k][["qid", "rid", "rnk", "score"]]
+
+
+def _resident_join(spark, res, probes_pdf, qmat, k: int, metric: str, schema: str, mask=None, lists=None) -> DataFrame:
+    """The broadcast kernel's join answered on the driver from an index's
+    resident copy ``res``: :func:`fold_topk` over the rows of ``lists``
+    (every row when None) with ``mask``, ranked by :func:`_rank_local`, as
+    a local relation of ``(qid, rid, rnk, score)``."""
+    rows = res.rows(lists)
+    row_lists = res.list_ids()[rows] if mask is not None else None
+
+    def items():
+        for lo in range(0, len(rows), _RESIDENT_BATCH_ROWS):
+            sel = slice(lo, lo + _RESIDENT_BATCH_ROWS)
+            yield res.ids[rows[sel]], res.vec[rows[sel]], None if row_lists is None else row_lists[sel]
+
+    cand = fold_topk(items(), probes_pdf["qid"].to_numpy(), qmat, k, metric, mask)
+    if cand is None:
+        return spark.createDataFrame([], schema)
+    return spark.createDataFrame(_rank_local(cand, k, metric), schema)
+
+
 def _collect_probes(left: DataFrame, left_on: str, left_id: str, limit: int):
     """Collect the probe (id, vector) pairs, at most ``limit`` of them.
     Returns None when the probe side exceeds the limit (caller falls back to
@@ -555,6 +624,7 @@ def knn_join_flat_indexed(
 
     spark = left.sparkSession
     metric = index.metric
+    index.last_source = "parquet"
     probes_pdf = _collect_probes(left, left_on, left_id, broadcast_probe_limit)
     if probes_pdf is not None and len(probes_pdf) > 0 and getattr(index, "is_graph", False):
         # graph backend: probes ride a broadcast into every shard's beam-
@@ -605,8 +675,9 @@ def knn_join_flat_indexed(
             # principle; AQE broadcasts it while it actually fits
             full = full.join(deleted, "id", "left_anti")
         return knn_join_flat(left, full, left_on, "vec", k, metric, left_id, "id", method="crossjoin")
+    schema = f"qid {dict(left.dtypes)[left_id]}, rid {index.manifest.get('id_type', 'bigint')}, rnk int, score double"
     if len(probes_pdf) == 0:
-        return spark.createDataFrame([], f"qid {dict(left.dtypes)[left_id]}, rid {index.manifest.get('id_type', 'bigint')}, rnk int, score double")
+        return spark.createDataFrame([], schema)
     qmat = as_matrix(probes_pdf["v"])
     nprobe = index.nprobe_for(ef_search)
     # (nq, nlist) centroid scores -> per-probe probe sets -> (nlist, nq) mask
@@ -620,7 +691,16 @@ def knn_join_flat_indexed(
         or getattr(index, "sq_scale", None) is not None
         or getattr(index, "b1_thresholds", None) is not None
     )
-    if len(needed) >= 0.5 * index.nlist and not quantized:
+    covered = len(needed) >= 0.5 * index.nlist
+    res = index._resident(spark)
+    if res is not None:
+        # a resident copy (no tail, no tombstones) runs the same fold on the
+        # driver: the masked path, or over every row for the reroute below
+        index.last_source = res.label
+        if covered:
+            return _resident_join(spark, res, probes_pdf, qmat, k, metric, schema)
+        return _resident_join(spark, res, probes_pdf, qmat, k, metric, schema, mask=mask, lists=needed)
+    if covered and not quantized:
         # the probes' combined lists cover most of the index: the masked
         # kernel would scan nearly everything AND pay per-row mask checks.
         # The exact flat GEMM join over the live rows is then both faster

@@ -110,6 +110,8 @@ def explain_text(spec, decision: Decision, extra: dict | None = None) -> str:
     src/hnsw/hnsw_index_scan.cpp:158-165)."""
     lines = []
     ex = extra or {}
+    # where the index operator read its rows (see IVFIndex.last_source)
+    source = f", source: {ex['source']}" if ex.get("source") else ""
     if isinstance(spec, TopKSpec):
         if decision.strategy == "HNSW_INDEX_SCAN":
             if spec.residual_filter:
@@ -124,7 +126,8 @@ def explain_text(spec, decision: Decision, extra: dict | None = None) -> str:
             backend = f", backend={ex['backend']}" if ex.get("backend") else ""
             lines.append(
                 f"HNSW_INDEX_SCAN (index={decision.index_name}, k={spec.k}, "
-                f"ef_search={decision.ef_search}, nprobe={ex.get('nprobe', '?')}/{ex.get('nlist', '?')}{pq}{backend})"
+                f"ef_search={decision.ef_search}, nprobe={ex.get('nprobe', '?')}/{ex.get('nlist', '?')}{pq}{backend}"
+                f"{source})"
             )
         else:
             lines.append(f"TOP_N (k={spec.k}, metric={spec.metric})  [TakeOrderedAndProject]")
@@ -136,7 +139,7 @@ def explain_text(spec, decision: Decision, extra: dict | None = None) -> str:
         if decision.strategy == "HNSW_INDEX_SCAN":
             lines.append(f"AGGREGATE [list({spec.value_col} ORDER BY score ASC)]")
             lines.append(
-                f"HNSW_INDEX_SCAN (index={decision.index_name}, k={spec.k}, ef_search={decision.ef_search})"
+                f"HNSW_INDEX_SCAN (index={decision.index_name}, k={spec.k}, ef_search={decision.ef_search}{source})"
             )
         else:
             lines.append(f"AGGREGATE [min_by({spec.value_col}, score, {spec.k})]")
@@ -146,7 +149,7 @@ def explain_text(spec, decision: Decision, extra: dict | None = None) -> str:
         if decision.strategy == "HNSW_INDEX_JOIN":
             lines.append(
                 f"HNSW_INDEX_JOIN (index={decision.index_name}, k={spec.k}, "
-                f"ef_search={decision.ef_search}) [parallel over index partitions]"
+                f"ef_search={decision.ef_search}{source}) [parallel over index partitions]"
             )
             lines.append(f"SEQ_SCAN ({spec.left_table}) [probe side, broadcast]")
         else:

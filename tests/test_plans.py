@@ -118,15 +118,27 @@ def test_ivf_candidate_scan_prunes_partitions(spark, tmp_path):
 
 
 
-def test_covered_point_query_one_job_no_recompile(spark, tmp_path):
+def _in_job_group(sc, group, fn):
+    """``fn()``'s result and the number of Spark jobs it started."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_covered_point_query_one_job_no_recompile(spark, tmp_path, monkeypatch):
     """A covered index point query (id and score only) is ONE Spark job
     once the handle has read its data schema, and a query with a new
     vector compiles no new code: the index paths bind the query vector as
     an array value instead of inlining it into generated code (compile
     count read from CodegenMetrics, jobs from the job group's
-    statusTracker entry)."""
+    statusTracker entry). Pins the parquet path: resident serving is off."""
     from duckdb_vss_spark import SQLFrontend, VSSEngine
+    from duckdb_vss_spark.operators import knn
 
+    monkeypatch.setattr(knn, "RESIDENT_BYTES_BUDGET", 0)
     sc = spark.sparkContext
     compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     eng = VSSEngine(spark, index_root=str(tmp_path))
@@ -153,7 +165,34 @@ def test_covered_point_query_one_job_no_recompile(spark, tmp_path):
     assert run(2) == (1, 0)
 
 
-def test_kernel_joins_read_probe_side_once(spark, tmp_path):
+def test_resident_covered_point_query_runs_no_job(spark, tmp_path):
+    """Served from the handle's resident copy, a warm covered point query
+    starts no Spark job and compiles nothing: the hits come back as a local
+    relation, and the plan names the source."""
+    from duckdb_vss_spark import SQLFrontend, VSSEngine
+
+    sc = spark.sparkContext
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    eng = VSSEngine(spark, index_root=str(tmp_path))
+    eng.register_table("emb_res", spark.read.parquet(f"{SF}/embeddings.parquet"))
+    fe = SQLFrontend(eng)
+    fe.sql("CREATE INDEX res_idx ON emb_res USING HNSW (embedding)")
+    fe.sql("SET hnsw_ef_search = 16")
+
+    def run(i):
+        q = "[" + ", ".join(repr(((j * (i + 5)) % 13) / 13.0) for j in range(64)) + "]"
+        sql = f"SELECT vec_id FROM emb_res ORDER BY array_distance(embedding, {q}) LIMIT 10"
+        before = compiles.getCount()
+        rows, jobs = _in_job_group(sc, f"resident-point-{i}", lambda: fe.sql(sql).collect())
+        assert len(rows) == 10 and "source: resident (500 rows)" in eng.last_plan, eng.last_plan
+        return jobs, compiles.getCount() - before
+
+    run(0)  # warm: loads the copy
+    assert run(1) == (0, 0)
+    assert run(2) == (0, 0)
+
+
+def test_kernel_joins_read_probe_side_once(spark, tmp_path, monkeypatch):
     """Every broadcast-kernel join reads its probe side exactly once: the
     collect that feeds the kernel. The kernel emits the exact scores, so
     nothing re-reads the probes to re-score candidates. Covers the flat
@@ -161,12 +200,14 @@ def test_kernel_joins_read_probe_side_once(spark, tmp_path):
     kernel, the graph join and the SQ8 re-rank (whose exact re-score joins
     a local relation of the collected probes); the probe side counts its
     own rows through an accumulator. The IVF masked join is at most 3
-    Spark jobs."""
+    Spark jobs. Pins the Spark-kernel paths: resident serving is off."""
     import numpy as np
 
     from duckdb_vss_spark import VSSEngine, knn_join_flat
+    from duckdb_vss_spark.operators import knn
     from duckdb_vss_spark.operators.knn import knn_join_flat_indexed
 
+    monkeypatch.setattr(knn, "RESIDENT_BYTES_BUDGET", 0)
     sc = spark.sparkContext
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
     eng = VSSEngine(spark, index_root=str(tmp_path))
@@ -219,6 +260,41 @@ def test_kernel_joins_read_probe_side_once(spark, tmp_path):
     # warm now: a handle's first read infers its data schema (one job)
     n_read, n_jobs = run("ivf_masked_warm", cases["ivf_masked"])
     assert n_read == nq and n_jobs <= 3, (n_read, n_jobs)
+
+
+def test_resident_masked_join_one_job_one_probe_read(spark, tmp_path):
+    """A masked index join served from the resident copy is exactly ONE
+    Spark job, the probe collect, which reads the probe side once; the
+    fold and the rank run on the driver."""
+    import numpy as np
+
+    from duckdb_vss_spark import VSSEngine
+
+    sc = spark.sparkContext
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
+    eng = VSSEngine(spark, index_root=str(tmp_path))
+    eng.register_table("emb_rj", emb)
+    eng.create_index("rj_idx", "emb_rj", "embedding", "vec_id", options={"ef_search": 8})
+    idx = eng.catalog.get("rj_idx")
+    nq = 3
+    qmat = np.array([r["embedding"] for r in emb.filter(F.col("vec_id") < nq).collect()])
+    lists = {int(l) for s in idx.probe_lists_batch(qmat, idx.nprobe_for(8)) for l in s}
+    assert len(lists) < 0.5 * idx.nlist  # the masked path, not the reroute
+    reads = sc.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            reads.add(len(pdf))
+            yield pdf
+
+    probes = emb.filter(F.col("vec_id") < nq).mapInPandas(counted, emb.schema)
+    join = lambda: eng.knn_join(probes, "emb_rj", "embedding", "embedding", 3, left_id="vec_id", right_id="vec_id")
+    join().collect()  # warm: loads the copy
+    before = reads.value
+    rows, jobs = _in_job_group(sc, "resident-join", lambda: join().collect())
+    assert {r["qid"] for r in rows} == set(range(nq)) and len(rows) == 3 * nq
+    assert "source: resident (500 rows)" in eng.last_plan, eng.last_plan
+    assert (reads.value - before, jobs) == (nq, 1)
 
 
 def test_aggregate_is_partial_then_final(spark):
