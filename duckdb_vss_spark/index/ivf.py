@@ -51,6 +51,9 @@ Artifact layout::
 from __future__ import annotations
 
 import math
+import sys
+import threading
+import weakref
 from typing import Iterator, Optional
 
 import numpy as np
@@ -600,7 +603,8 @@ class _Resident:
     """An index's rows held on the driver: ``ids`` and f32 ``vec`` sorted by
     inverted list, so ``offsets[l]:offsets[l + 1]`` are the rows of list
     ``l``. ``dirs`` names the data dirs (base, then deltas) they came from;
-    those are immutable once the manifest names them."""
+    those are immutable once the manifest names them. ``nbytes`` counts the
+    arrays, and the strings of string ids."""
 
     def __init__(self, dirs: tuple, ids: np.ndarray, vec: np.ndarray, list_ids: np.ndarray, nlist: int):
         order = np.argsort(list_ids, kind="stable")
@@ -608,6 +612,10 @@ class _Resident:
         self.ids, self.vec = ids[order], vec[order]
         self.offsets = np.r_[0, np.cumsum(np.bincount(list_ids, minlength=nlist))]
         self.label = f"resident ({len(ids)} rows)"
+        self.nbytes = self.ids.nbytes + self.vec.nbytes + self.offsets.nbytes
+        if self.ids.dtype == object:
+            self.nbytes += sum(map(sys.getsizeof, self.ids))
+        _RESIDENT_LIVE.add(self)
 
     def list_ids(self) -> np.ndarray:
         """The inverted list of each row."""
@@ -619,6 +627,20 @@ class _Resident:
             return np.arange(len(self.ids))
         spans = [np.arange(self.offsets[l], self.offsets[l + 1]) for l in lists]
         return np.concatenate(spans) if spans else np.empty(0, dtype=np.int64)
+
+
+# Every resident copy alive in this process: knn.RESIDENT_BYTES_BUDGET bounds
+# the sum of their nbytes, not each one. A copy leaves the set when its
+# handle lets go of it (delete, compact, drop) or is garbage collected.
+_RESIDENT_LIVE: "weakref.WeakSet[_Resident]" = weakref.WeakSet()
+# one load at a time, so the budget check and the load that follows it are
+# not interleaved with another handle's
+_RESIDENT_LOAD_LOCK = threading.Lock()
+
+
+def resident_bytes() -> int:
+    """Bytes held by every resident copy in this process."""
+    return sum(r.nbytes for r in list(_RESIDENT_LIVE))
 
 
 class IVFIndex:
@@ -690,6 +712,9 @@ class IVFIndex:
         self._data_schema = None
         self._tail_schema: Optional[str] = None
         self._resident_copy: Optional[_Resident] = None
+        # bytes per row of a resident copy: ids and f32 vectors until a load
+        # measures it (string ids weigh more)
+        self._resident_row_bytes = 8 + 4 * self.dim
 
     def _read(self, spark: SparkSession, schema, *paths, **options) -> DataFrame:
         """``spark.read.parquet`` with ``schema`` bound when known (no
@@ -882,27 +907,36 @@ class IVFIndex:
 
     def _resident(self, spark: SparkSession) -> Optional[_Resident]:
         """The handle's resident copy of the base and delta rows, or None
-        when this index reads parquet: quantized and graph artifacts, more
-        rows than ``knn.RESIDENT_BYTES_BUDGET`` holds, or a tail or
-        tombstones (so the copy never serves data the parquet path would
-        not). Filled by one Spark collect on first use; a delta committed
-        since then is read alone and merged in, since committed data dirs
-        never change."""
+        when this index reads parquet: quantized and graph artifacts, a
+        copy that would take the process's copies past
+        ``knn.RESIDENT_BYTES_BUDGET``, or a tail or tombstones (so the copy
+        never serves data the parquet path would not). Filled by one Spark
+        collect on first use; a delta committed since then is read alone and
+        merged in, since committed data dirs never change. A copy that
+        cannot serve is released, except behind a tail, which
+        ``compact_incremental`` folds into a delta the copy can read alone."""
         from ..operators import knn
 
-        if (
-            getattr(self, "is_graph", False)
-            or any(x is not None for x in (self.pq_books, self.sq_scale, self.b1_thresholds))
-            or int(self.manifest["count"]) * (8 + 4 * self.dim) > knn.RESIDENT_BYTES_BUDGET
-            or self._has_tail(spark)
-            or self._has_deleted(spark)
+        if getattr(self, "is_graph", False) or any(
+            x is not None for x in (self.pq_books, self.sq_scale, self.b1_thresholds)
         ):
+            return None
+        budget, need = knn.RESIDENT_BYTES_BUDGET, int(self.manifest["count"]) * self._resident_row_bytes
+        if need > budget or self._has_deleted(spark):
+            self._resident_copy = None
+            return None
+        if self._has_tail(spark):
             return None
         dirs = (self.data_path(), *self._delta_dirs())
         res = self._resident_copy
-        if res is not None and not set(res.dirs) <= set(dirs):
-            res = None  # another version: start over
-        if res is None or res.dirs != dirs:
+        if res is not None and res.dirs == dirs:
+            return res
+        with _RESIDENT_LOAD_LOCK:
+            if res is not None and not set(res.dirs) <= set(dirs):
+                res = None  # another version: start over
+            self._resident_copy = None  # the copy below replaces it
+            if resident_bytes() - (0 if res is None else res.nbytes) + need > budget:
+                return None
             new = [d for d in dirs if res is None or d not in res.dirs]
             frame = self._read_data(spark, new[0])
             for d in new[1:]:
@@ -910,9 +944,14 @@ class IVFIndex:
             pdf = frame.select("id", "vec", self._PART_COL).toPandas()
             ids, lists = pdf["id"].to_numpy(), pdf[self._PART_COL].to_numpy(np.int64)
             vec = np.vstack([np.empty((0, self.dim), np.float32), *pdf["vec"]]).astype(np.float32, copy=False)
+            del pdf
             if res is not None:
                 ids, vec, lists = np.r_[res.ids, ids], np.vstack([res.vec, vec]), np.r_[res.list_ids(), lists]
-            res = self._resident_copy = _Resident(dirs, ids, vec, lists, self.nlist)
+            res = _Resident(dirs, ids, vec, lists, self.nlist)
+            self._resident_row_bytes = max(self._resident_row_bytes, res.nbytes / max(len(res.ids), 1))
+            if resident_bytes() > budget:
+                return None  # heavier than estimated: dropped with ``res``
+            self._resident_copy = res
         return res
 
     def _resident_search(self, spark: SparkSession, res: _Resident, query, k: int, lists) -> Optional[DataFrame]:
@@ -1130,6 +1169,7 @@ class IVFIndex:
         id_t = self.manifest.get("id_type", "bigint")
         spark.createDataFrame([(i,) for i in ids], f"id {id_t}").write.mode("append").parquet(self._deleted_path())
         self._deleted_exists = True
+        self._resident_copy = None  # only a full compact's new handle serves again
 
     def compact_incremental(self, spark: SparkSession) -> "IVFIndex":
         """Fold the tail into the live version as a committed DELTA —

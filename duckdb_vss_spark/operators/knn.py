@@ -77,12 +77,17 @@ DISTRIBUTED_MIN_PROBES = 1024
 # routes through a distributed anti-join on the item side BEFORE the
 # kernels instead, so live rows still keep all k slots.
 DELETED_IDS_KERNEL_CAP = 1_000_000
-# An unquantized IVF index whose base and delta rows take at most this many
-# bytes (8-byte id + f32 vector per row) is served from a copy resident on
-# its handle: point queries run no Spark job and joins only the probe
+# An unquantized IVF index with no tail or tombstones is served from a copy
+# of its base and delta rows (8-byte id + f32 vector per row) resident on
+# its handle while every such copy in the process fits this many bytes
+# together: point queries run no Spark job and joins only the probe
 # collect (the reference keeps its whole index in process memory,
-# src/hnsw/hnsw_index.cpp:223-239). Larger indexes, and any index with a
-# tail or tombstones, read parquet.
+# src/hnsw/hnsw_index.cpp:223-239). Any other index reads parquet. Set from
+# /proc CPU on a 4-core VM, resident vs parquet: point queries cost 6-22x
+# less at every size tried; a 256-probe join costs 1.9x less at 5 MB,
+# 1.3x less at 63 MB (250k x 64) and 1.7x less at 62 MB (21k x 768), and
+# breaks even at 126 MB (500k x 64), where one driver process folding the
+# whole index no longer beats four executor cores.
 RESIDENT_BYTES_BUDGET = 64 << 20
 # rows per batch the driver feeds the fold from a resident copy, as an
 # Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``) does
@@ -544,7 +549,13 @@ def _resident_join(spark, res, probes_pdf, qmat, k: int, metric: str, schema: st
     """The broadcast kernel's join answered on the driver from an index's
     resident copy ``res``: :func:`fold_topk` over the rows of ``lists``
     (every row when None) with ``mask``, ranked by :func:`_rank_local`, as
-    a local relation of ``(qid, rid, rnk, score)``."""
+    a local relation of ``(qid, rid, rnk, score)``.
+
+    The fold keeps ``2 * k`` survivors per probe, chosen by GEMM score with
+    ties broken arbitrarily, and the exact rank then keeps ``k``. Rows that
+    tie at rank ``k``, or that the GEMM and exact scores order differently
+    there, therefore resolve by exact score and then ``rid``, as in the
+    exact plan, as long as at most ``k`` extra rows crowd the boundary."""
     rows = res.rows(lists)
     row_lists = res.list_ids()[rows] if mask is not None else None
 
@@ -553,7 +564,7 @@ def _resident_join(spark, res, probes_pdf, qmat, k: int, metric: str, schema: st
             sel = slice(lo, lo + _RESIDENT_BATCH_ROWS)
             yield res.ids[rows[sel]], res.vec[rows[sel]], None if row_lists is None else row_lists[sel]
 
-    cand = fold_topk(items(), probes_pdf["qid"].to_numpy(), qmat, k, metric, mask)
+    cand = fold_topk(items(), probes_pdf["qid"].to_numpy(), qmat, 2 * k, metric, mask)
     if cand is None:
         return spark.createDataFrame([], schema)
     return spark.createDataFrame(_rank_local(cand, k, metric), schema)

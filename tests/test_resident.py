@@ -168,3 +168,99 @@ def test_resident_handle_contract(spark, emb, tmp_path, monkeypatch):
     assert new.last_source == f"resident ({n - 3} rows)" and not set(gone) & {r[0] for r in got}
     eng.drop_index("hc_idx")
     assert new._resident_copy is None
+
+
+def test_resident_ties_at_rank_k_resolve_by_id(spark, emb, tmp_path, monkeypatch):
+    """Copies of one vector that tie across rank k: resident search and
+    join keep the lowest ids among them, as the exact plan does (the
+    resident fold keeps a margin of survivors before the exact rank)."""
+    from duckdb_vss_spark.operators.knn import knn_join_flat
+
+    base = emb.select("vec_id", "embedding")
+    p = base.filter(F.col("vec_id") == 250).first()["embedding"]
+    dups = spark.createDataFrame([(i, p) for i in (1_002, -2, 1_001, -1)], "vec_id long, embedding array<float>")
+    table = base.unionByName(dups)
+    eng = VSSEngine(spark, index_root=str(tmp_path))
+    eng.register_table("emb_tie", table)
+    eng.create_index("tie_idx", "emb_tie", "embedding", "vec_id")
+    idx = eng.catalog.get("tie_idx")
+    want_ids = [-2, -1, 250]  # five rows at score 0, k = 3
+
+    got = idx.search(spark, p, 3).collect()
+    assert idx.last_source.startswith("resident") and [r["id"] for r in got] == want_ids
+    assert _bits(got, "id", "score") == _bits(_parquet(monkeypatch, lambda: idx.search(spark, p, 3).collect()), "id", "score")
+
+    probes = base.filter(F.col("vec_id").isin(250, 3, 77))
+    cols = ("qid", "rnk", "rid", "score")
+    exact = _bits(knn_join_flat(probes, table, "embedding", "embedding", 3, "l2sq", "vec_id", "vec_id", method="crossjoin").collect(), *cols)
+    assert [r[2] for r in exact if r[0] == 250] == want_ids
+    for ef in (8, FULL_PROBE):
+        got = knn_join_flat_indexed(probes, idx, "embedding", 3, "vec_id", ef_search=ef).collect()
+        assert idx.last_source.startswith("resident")
+        assert sorted(r["rid"] for r in got if r["qid"] == 250) == want_ids, ef
+        if ef == FULL_PROBE:
+            assert _bits(got, *cols) == exact
+
+
+def test_resident_string_ids_order_as_spark(spark, emb, tmp_path, monkeypatch):
+    """String ids rank as Spark sorts strings ('10' < '9'): with ids '9'
+    and '10' on one vector, resident and parquet search and join rows are
+    equal bit for bit, and '10' ranks first."""
+    sid = F.col("vec_id").cast("string")
+    p = emb.filter(F.col("vec_id") == 10).first()["embedding"]
+    vec = F.when(F.col("vec_id") == 9, F.array(*[F.lit(float(x)).cast("float") for x in p])).otherwise(F.col("embedding"))
+    table = emb.select(sid.alias("vec_id"), vec.alias("embedding"))
+    eng = VSSEngine(spark, index_root=str(tmp_path))
+    eng.register_table("emb_str", table)
+    eng.create_index("str_idx", "emb_str", "embedding", "vec_id")
+    idx = eng.catalog.get("str_idx")
+
+    for ef in (16, FULL_PROBE):
+        got = idx.search(spark, p, 10, ef).collect()
+        assert idx.last_source.startswith("resident") and [r["id"] for r in got[:2]] == ["10", "9"]
+        want = _parquet(monkeypatch, lambda: idx.search(spark, p, 10, ef).collect())
+        assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+    probes = table.filter(F.col("vec_id").isin("9", "10", "100", "11", "2"))
+    cols = ("qid", "rnk", "rid", "score")
+    for ef in (8, FULL_PROBE):
+        got = knn_join_flat_indexed(probes, idx, "embedding", 5, "vec_id", ef_search=ef).collect()
+        assert idx.last_source.startswith("resident")
+        assert [r["rid"] for r in sorted(got, key=lambda r: r["rnk"]) if r["qid"] == "9"][:2] == ["10", "9"]
+        want = _parquet(
+            monkeypatch, lambda: knn_join_flat_indexed(probes, idx, "embedding", 5, "vec_id", ef_search=ef).collect()
+        )
+        assert len(got) == 25 and _bits(got, *cols) == _bits(want, *cols), ef
+
+
+def test_resident_budget_bounds_all_copies(spark, emb, tmp_path, monkeypatch):
+    """The budget bounds the sum of every resident copy in the process: an
+    index whose copy would go over it reads parquet until another copy is
+    released, which a delete and a drop both do."""
+    import gc
+
+    from duckdb_vss_spark.index import ivf
+
+    gc.collect()  # copies of handles other tests left behind
+    eng = VSSEngine(spark, index_root=str(tmp_path))
+    eng.register_table("emb_bud", emb.select("vec_id", "embedding"))
+    for name in ("bud_a", "bud_b"):
+        eng.create_index(name, "emb_bud", "embedding", "vec_id")
+    a, b = eng.catalog.get("bud_a"), eng.catalog.get("bud_b")
+    q = _queries()[0]
+    one = a.manifest["count"] * (8 + 4 * a.dim)
+    monkeypatch.setattr(knn, "RESIDENT_BYTES_BUDGET", ivf.resident_bytes() + one * 3 // 2)
+
+    a.search(spark, q, 10).collect()
+    assert a.last_source.startswith("resident") and a._resident_copy is not None
+    b.search(spark, q, 10).collect()
+    assert b.last_source == "parquet" and b._resident_copy is None
+    eng.delete("bud_a", [1])
+    assert a._resident_copy is None
+    b.search(spark, q, 10).collect()
+    assert b.last_source.startswith("resident")
+    a.search(spark, q, 10).collect()
+    assert a.last_source == "parquet" and a._resident_copy is None
+    before = ivf.resident_bytes()
+    eng.drop_index("bud_b")
+    assert ivf.resident_bytes() == before - one - 8 * (b.nlist + 1)
