@@ -12,13 +12,11 @@ sample rate, so matching a new batch costs one key join of the batch's
 fingerprint table against the stored one: the historical AUDIO is never
 re-read.
 
-Artifact discipline is identical to the MinHash store (and the vector
-index): an append-only versioned parquet directory, JSON manifest as
-the atomic commit point, orphan ``snap-*`` dirs ignored by readers,
-``drop_snapshot`` + ``vacuum`` retention, any Hadoop filesystem via
-:mod:`.fs`. The fingerprint parameters (frame, blocks, key_frames) live
-in the manifest — keys are only comparable between identically-framed
-fingerprints, so the store owns the configuration.
+The artifact lifecycle is :class:`~.snapshot_store.SnapshotStore`,
+shared with the sibling stores. The fingerprint parameters (frame,
+blocks, key_frames) live in the manifest — keys are only comparable
+between identically-framed fingerprints, so the store owns the
+configuration.
 
 Matching is the offset-consistent vote of
 :func:`~duckdb_vss_spark.operators.audio.audio_neardup_pairs`: candidate
@@ -30,29 +28,27 @@ frequency cap computed over store+batch BEFORE the join.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import fs
+from .snapshot_store import SnapshotStore
 
 __all__ = ["AudioFingerprintStore"]
 
-_MANIFEST = "manifest.json"
 _KB = 64  # key-bucket partitions (layout symmetry with band partitioning)
 
 
-class AudioFingerprintStore:
+class AudioFingerprintStore(SnapshotStore):
     """Handle on a persisted audio-fingerprint dedup artifact. Use
     :meth:`create` / :meth:`open`, not the constructor."""
 
-    def __init__(self, spark: SparkSession, root: str, manifest: dict):
-        self.spark = spark
-        self.root = root
-        self.manifest = manifest
-
-    # -- lifecycle ---------------------------------------------------------
+    FORMAT = "audio-fp-store"
+    COUNT_KEY = "n_clips"
+    PART_COL = "kb"
+    COLUMNS = ("kb", "key", "t", "id")
+    # fingerprint_keys posexplodes key positions, so every clip with >= 1
+    # key emits exactly one t == 0 row
+    COUNT_T0 = True
 
     @classmethod
     def create(
@@ -66,30 +62,10 @@ class AudioFingerprintStore:
     ) -> "AudioFingerprintStore":
         if frame % blocks != 0:
             raise ValueError(f"frame ({frame}) must be a multiple of blocks ({blocks})")
-        if fs.exists(spark, fs.join(root, _MANIFEST)):
-            if not overwrite:
-                raise ValueError(f"AudioFingerprintStore already exists at {root}")
-            fs.delete(spark, root)
-        fs.mkdirs(spark, root)
-        manifest = {
-            "format": "audio-fp-store",
-            "version": 1,
-            "frame": int(frame),
-            "blocks": int(blocks),
-            "key_frames": int(key_frames),
-            "snapshots": [],
-            "n_clips": 0,
-            "next_snap_id": 0,
-        }
-        fs.write_json(spark, fs.join(root, _MANIFEST), manifest)
-        return cls(spark, root, manifest)
-
-    @classmethod
-    def open(cls, spark: SparkSession, root: str) -> "AudioFingerprintStore":
-        manifest = fs.read_json(spark, fs.join(root, _MANIFEST))
-        if manifest.get("format") != "audio-fp-store":
-            raise ValueError(f"not an AudioFingerprintStore: {root}")
-        return cls(spark, root, manifest)
+        return cls._create(
+            spark, root, overwrite,
+            frame=int(frame), blocks=int(blocks), key_frames=int(key_frames),
+        )
 
     # -- fingerprint plumbing ------------------------------------------------
 
@@ -114,28 +90,6 @@ class AudioFingerprintStore:
             F.col(id_col).alias("id"),
         )
 
-    def _store_df(self) -> Optional[DataFrame]:
-        snaps = self.manifest["snapshots"]
-        key = tuple(s["dir"] for s in snaps if s.get("n_clips") != 0)
-        if not key:
-            return None
-        # memoized lazy union on the immutable snapshot-dir tuple, with
-        # append-only extension — same steady-state-loop discipline as
-        # MinHashStore._store_df (round 9)
-        cached = getattr(self, "_store_df_memo", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        out, todo = None, key
-        if cached is not None and key[: len(cached[0])] == cached[0]:
-            out, todo = cached[1], key[len(cached[0]):]
-        for dirname in todo:
-            df = self.spark.read.parquet(fs.join(self.root, dirname)).select(
-                "kb", "key", "t", "id", "snapshot"
-            )
-            out = df if out is None else out.unionByName(df)
-        self._store_df_memo = (key, out)
-        return out
-
     # -- operations --------------------------------------------------------
 
     def append_snapshot(
@@ -144,65 +98,7 @@ class AudioFingerprintStore:
         """Fingerprint ``df``'s clips and commit them as ``snapshot``
         (typically the batch's KEPT rows). Write partitioned by key
         bucket; manifest overwrite is the atomic commit point."""
-        if any(s["name"] == snapshot for s in self.manifest["snapshots"]):
-            raise ValueError(f"snapshot {snapshot!r} already in store")
-        dirname = fs.alloc_snap_dir(self.spark, self.root, self.manifest)
-        out = fs.join(self.root, dirname)
-        rows = self.key_rows(df, content_col, id_col).withColumn(
-            "snapshot", F.lit(snapshot)
-        )
-        # The clip count folds into the WRITE job via the Observation API
-        # (the MinHashStore discipline): fingerprint_keys posexplodes key
-        # positions, so every clip with >= 1 key emits EXACTLY ONE t == 0
-        # row — count_if(t = 0) IS the committed distinct-clip count, and
-        # the per-commit read-back (one extra driver action + a full file
-        # listing, a cluster barrier per commit at streaming scale) goes.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        rows = rows.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.count_if(F.col("t") == 0).alias("clips"),
-        )
-        # cluster by (key bucket, id-hash) before the write (the
-        # MinHashStore discipline: fewer small files per batch-scale
-        # snapshot via AQE coalescing, cluster-width spread for corpus-
-        # scale initial builds instead of the distinct-bucket ceiling)
-        par = max(1, int(self.spark.sparkContext.defaultParallelism))
-        rows = rows.repartition(
-            F.col("kb"), F.pmod(F.xxhash64(F.col("id")), F.lit(par))
-        )
-        rows.write.partitionBy("kb").parquet(out, mode="overwrite")
-        try:
-            got = obs.get
-            n = int(got["clips"])
-            if n == 0 and int(got["rows"]) > 0:
-                # defensive: key rows without the t==0 marker cannot come
-                # from fingerprint_keys, but prove the count from the
-                # written snapshot rather than silently committing 0
-                n = self.spark.read.parquet(out).select("id").distinct().count()
-        except Exception:
-            # an EMPTY batch: AQE's empty-relation propagation can
-            # eliminate the CollectMetrics node with the rest of the
-            # plan, so no metrics row exists — prove emptiness (or not)
-            # from the directory listing, as the pre-Observation code did
-            names = fs.listdir(self.spark, out)
-            has_data = any(
-                nm.startswith("kb=")
-                or (nm.startswith("part-") and not nm.endswith(".crc"))
-                for nm in names
-            )
-            n = (
-                self.spark.read.parquet(out).select("id").distinct().count()
-                if has_data
-                else 0
-            )
-        entry = {"name": snapshot, "dir": dirname, "n_clips": n}
-        self.manifest["snapshots"].append(entry)
-        self.manifest["n_clips"] += n
-        fs.write_json(self.spark, fs.join(self.root, _MANIFEST), self.manifest)
-        return entry
+        return self._commit(snapshot, self.key_rows(df, content_col, id_col))
 
     def match_against(
         self,
@@ -344,39 +240,5 @@ class AudioFingerprintStore:
     ) -> DataFrame:
         """``df`` plus boolean ``flag_col``: True when the clip near-dups
         ANY stored clip (flag-don't-drop)."""
-        hits = (
-            self.match_against(df, content_col, id_col, min_matches)
-            .select(F.col("id").alias("__mid"))
-            .distinct()
-        )
-        return (
-            df.join(hits, F.col(id_col) == F.col("__mid"), "left")
-            .withColumn(flag_col, F.col("__mid").isNotNull())
-            .drop("__mid")
-        )
-
-    def drop_snapshot(self, snapshot: str) -> None:
-        """Retire a snapshot: manifest overwrite commits; the data dir
-        becomes a vacuum-able orphan."""
-        snaps = self.manifest["snapshots"]
-        entry = next((s for s in snaps if s["name"] == snapshot), None)
-        if entry is None:
-            raise ValueError(f"snapshot {snapshot!r} not in store")
-        self.manifest["snapshots"] = [s for s in snaps if s["name"] != snapshot]
-        self.manifest["n_clips"] -= entry["n_clips"]
-        fs.write_json(self.spark, fs.join(self.root, _MANIFEST), self.manifest)
-
-    def vacuum(self) -> list:
-        """Delete data dirs not referenced by the manifest."""
-        live = {s["dir"] for s in self.manifest["snapshots"]}
-        deleted = []
-        for name in fs.listdir(self.spark, self.root):
-            base = name.rstrip("/").split("/")[-1]
-            if base.startswith("snap-") and base not in live:
-                fs.delete(self.spark, fs.join(self.root, base))
-                deleted.append(base)
-        return deleted
-
-    def info(self) -> dict:
-        """Manifest snapshot (copy) for pragma-style introspection."""
-        return dict(self.manifest)
+        hits = self.match_against(df, content_col, id_col, min_matches)
+        return self._flag(df, id_col, hits, flag_col)

@@ -8,13 +8,10 @@ signatures and their LSH band buckets, ~100 bytes/doc regardless of
 document size — so matching a new batch costs one join of the batch's band
 rows against the stored band rows: the historical TEXT is never re-read.
 
-This is the dedup analog of the vector-index artifact (`ivf.py`): an
-append-only versioned parquet directory with a JSON manifest as the atomic
-commit point (data dirs written first, manifest overwrite commits;
-orphaned ``snap-*`` dirs from a crash are ignored because reads use the
-manifest's explicit snapshot list). Works on any Hadoop filesystem
-(``file:// s3a:// abfss:// hdfs://``) via the same control plane
-(:mod:`.fs`).
+The artifact lifecycle (versioned ``snap-*`` parquet dirs, the JSON
+manifest as the atomic commit point, drop, vacuum, the handle contract)
+is :class:`~.snapshot_store.SnapshotStore`, shared with the audio, image
+and video stores; this module keeps the MinHash band rows and matcher.
 
 Matching verifies candidates with the signature-agreement estimate
 (matching components / num_perm — the unbiased MinHash estimator of
@@ -34,28 +31,22 @@ so a probe that only needs band-b candidates prunes 1/bands of the scan.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import fs
+from .snapshot_store import SnapshotStore
 
 __all__ = ["MinHashStore"]
 
-_MANIFEST = "manifest.json"
 
-
-class MinHashStore:
+class MinHashStore(SnapshotStore):
     """Handle on a persisted MinHash LSH dedup artifact. Use
     :meth:`create` / :meth:`open`, not the constructor."""
 
-    def __init__(self, spark: SparkSession, root: str, manifest: dict):
-        self.spark = spark
-        self.root = root
-        self.manifest = manifest
-
-    # -- lifecycle ---------------------------------------------------------
+    FORMAT = "minhash-store"
+    COUNT_KEY = "n_docs"
+    PART_COL = "band"
+    COLUMNS = ("band", "bucket", "id", "sig")
 
     @classmethod
     def create(
@@ -69,30 +60,10 @@ class MinHashStore:
     ) -> "MinHashStore":
         if num_perm % bands != 0:
             raise ValueError("num_perm must divide into equal bands")
-        if fs.exists(spark, fs.join(root, _MANIFEST)):
-            if not overwrite:
-                raise ValueError(f"MinHashStore already exists at {root}")
-            fs.delete(spark, root)
-        fs.mkdirs(spark, root)
-        manifest = {
-            "format": "minhash-store",
-            "version": 1,
-            "shingle_n": int(shingle_n),
-            "num_perm": int(num_perm),
-            "bands": int(bands),
-            "snapshots": [],
-            "n_docs": 0,
-            "next_snap_id": 0,
-        }
-        fs.write_json(spark, fs.join(root, _MANIFEST), manifest)
-        return cls(spark, root, manifest)
-
-    @classmethod
-    def open(cls, spark: SparkSession, root: str) -> "MinHashStore":
-        manifest = fs.read_json(spark, fs.join(root, _MANIFEST))
-        if manifest.get("format") != "minhash-store":
-            raise ValueError(f"not a MinHashStore: {root}")
-        return cls(spark, root, manifest)
+        return cls._create(
+            spark, root, overwrite,
+            shingle_n=int(shingle_n), num_perm=int(num_perm), bands=int(bands),
+        )
 
     # -- signature plumbing ------------------------------------------------
 
@@ -117,38 +88,6 @@ class MinHashStore:
             ).alias("band", "bucket"),
         ).select("band", "bucket", "id", "sig")
 
-    def _store_df(self) -> Optional[DataFrame]:
-        snaps = self.manifest["snapshots"]
-        if not snaps:
-            return None
-        # one read per snapshot dir (each is its own band-partitioned root),
-        # unioned lazily — snapshot count is the manifest list's length
-        # (dozens), not a scale dimension. The union is MEMOIZED on the
-        # live snapshot-dir tuple (round 9): committed snapshot dirs are
-        # immutable, so a steady-state loop (stream_curate: one
-        # match_against per micro-batch) reuses the analyzed DataFrame —
-        # and its file index — instead of re-listing and re-footer-reading
-        # every snapshot dir per batch. Data is NOT persisted (the
-        # signature store can be TBs); only the lazy plan is reused.
-        key = tuple(s["dir"] for s in snaps if s.get("n_docs") != 0)
-        if not key:
-            return None
-        cached = getattr(self, "_store_df_memo", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        out, todo = None, key
-        if cached is not None and key[: len(cached[0])] == cached[0]:
-            # append-only steady state: extend the memo with just the new
-            # snapshot dirs instead of re-analyzing every old one
-            out, todo = cached[1], key[len(cached[0]):]
-        for dirname in todo:
-            df = self.spark.read.parquet(fs.join(self.root, dirname)).select(
-                "band", "bucket", "id", "sig", "snapshot"
-            )
-            out = df if out is None else out.unionByName(df)
-        self._store_df_memo = (key, out)
-        return out
-
     # -- operations --------------------------------------------------------
 
     def append_snapshot(
@@ -159,67 +98,10 @@ class MinHashStore:
         :meth:`match_against` flagged dupes). One shuffle (the signature
         groupBy); the write is partitioned by band. Returns the updated
         manifest entry."""
-        if any(s["name"] == snapshot for s in self.manifest["snapshots"]):
-            raise ValueError(f"snapshot {snapshot!r} already in store")
-        dirname = fs.alloc_snap_dir(self.spark, self.root, self.manifest)
-        out = fs.join(self.root, dirname)
-        rows = self.band_rows(df, text_col, id_col).withColumn(
-            "snapshot", F.lit(snapshot)
-        )
-        # The doc count folds into the WRITE job via the Observation API:
         # band_rows emits exactly ``bands`` rows per signed document
-        # (minhash_per_doc groups by id), so rows/bands IS the committed
-        # doc count. The previous shape re-read the just-written parquet
-        # for a distinct count — one extra driver action + file listing
-        # per commit, and a window where a transient read error after a
-        # good write had to be special-cased (it cannot exist now: the
-        # count comes from the write itself, and an EMPTY snapshot —
-        # legitimate steady state — observes 0 rows).
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        rows = rows.observe(obs, F.count(F.lit(1)).alias("rows"))
-        # cluster by the partition column before the write: without it
-        # every task writes one file per band it holds (tasks x bands
-        # small files + their commit overhead, measured 0.53 s -> 0.34 s
-        # per snapshot at the bench scale). The key is COMPOSITE
-        # (band, pmod(xxhash64(id), defaultParallelism)): clustering on
-        # band alone capped write parallelism at the distinct-band count
-        # (~16 tasks for a 100 TB initial build); the deterministic id
-        # sub-key keeps bands x parallelism distinct keys so a
-        # corpus-scale commit spreads to cluster width, while AQE's
-        # coalescing (REPARTITION_BY_COL origin) still folds a batch-
-        # scale commit into the same few files per band as before.
-        par = max(1, int(self.spark.sparkContext.defaultParallelism))
-        rows = rows.repartition(
-            F.col("band"), F.pmod(F.xxhash64(F.col("id")), F.lit(par))
-        )
-        rows.write.partitionBy("band").parquet(out, mode="overwrite")
-        try:
-            n = int(obs.get["rows"]) // int(self.manifest["bands"])
-        except Exception:
-            # an EMPTY batch: AQE's empty-relation propagation can
-            # eliminate the CollectMetrics node with the rest of the
-            # plan, so no metrics row exists — prove emptiness (or not)
-            # from the directory listing, as the pre-Observation code did
-            names = fs.listdir(self.spark, out)
-            has_data = any(
-                nm.startswith("band=")
-                or (nm.startswith("part-") and not nm.endswith(".crc"))
-                for nm in names
-            )
-            n = (
-                self.spark.read.parquet(out).select("id").distinct().count()
-                if has_data
-                else 0
-            )
-        entry = {"name": snapshot, "dir": dirname, "n_docs": n}
-        self.manifest["snapshots"].append(entry)
-        self.manifest["n_docs"] += n
-        # manifest overwrite is the atomic commit point (crash before this
-        # line leaves an orphan snap dir that reads never touch)
-        fs.write_json(self.spark, fs.join(self.root, _MANIFEST), self.manifest)
-        return entry
+        # (minhash_per_doc groups by id), so rows / bands is the committed
+        # doc count
+        return self._commit(snapshot, self.band_rows(df, text_col, id_col))
 
     def match_against(
         self,
@@ -287,45 +169,5 @@ class MinHashStore:
         ANY stored document (flag-don't-drop, like the pipeline recipes).
         The match ids are aggregated away; use :meth:`match_against` when
         the pairs themselves are needed."""
-        hits = (
-            self.match_against(df, text_col, id_col, threshold)
-            .select(F.col("id").alias("__mid"))
-            .distinct()
-        )
-        return (
-            df.join(hits, F.col(id_col) == F.col("__mid"), "left")
-            .withColumn(flag_col, F.col("__mid").isNotNull())
-            .drop("__mid")
-        )
-
-    def drop_snapshot(self, snapshot: str) -> None:
-        """Retire a snapshot (retention policy / GDPR-style source removal):
-        remove it from the manifest so no future match sees it. The
-        manifest overwrite is the atomic commit; the data directory becomes
-        an orphan that :meth:`vacuum` reclaims — same
-        commit-then-collect discipline as the vector index's versioned
-        artifacts (a reader holding the old manifest can finish its scan)."""
-        snaps = self.manifest["snapshots"]
-        entry = next((s for s in snaps if s["name"] == snapshot), None)
-        if entry is None:
-            raise ValueError(f"snapshot {snapshot!r} not in store")
-        self.manifest["snapshots"] = [s for s in snaps if s["name"] != snapshot]
-        self.manifest["n_docs"] -= entry["n_docs"]
-        fs.write_json(self.spark, fs.join(self.root, _MANIFEST), self.manifest)
-
-    def vacuum(self) -> list:
-        """Delete data directories no longer referenced by the manifest
-        (dropped snapshots, crash orphans). Returns the deleted dir names.
-        Run when no reader still holds a pre-drop manifest."""
-        live = {s["dir"] for s in self.manifest["snapshots"]}
-        deleted = []
-        for name in fs.listdir(self.spark, self.root):
-            base = name.rstrip("/").split("/")[-1]
-            if base.startswith("snap-") and base not in live:
-                fs.delete(self.spark, fs.join(self.root, base))
-                deleted.append(base)
-        return deleted
-
-    def info(self) -> dict:
-        """Manifest snapshot (copy) for pragma-style introspection."""
-        return dict(self.manifest)
+        hits = self.match_against(df, text_col, id_col, threshold)
+        return self._flag(df, id_col, hits, flag_col)

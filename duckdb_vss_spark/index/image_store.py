@@ -11,14 +11,10 @@ per image regardless of pixel count — so matching a new batch costs one
 band-bucket join of the batch's hash table against the stored one: the
 historical IMAGE BYTES are never re-read.
 
-Artifact discipline is identical to the sibling stores: append-only
-versioned parquet directory, JSON manifest as the atomic commit point,
-monotonic ``next_snap_id`` dir allocation (:func:`.fs.alloc_snap_dir` —
-dir names are never reused after ``drop_snapshot``), orphan ``snap-*``
-dirs ignored by readers, ``vacuum`` retention, any Hadoop filesystem.
-The banding parameters live in the manifest — band buckets are only
-comparable between identically-banded hashes, so the store owns the
-configuration.
+The artifact lifecycle is :class:`~.snapshot_store.SnapshotStore`,
+shared with the sibling stores. The banding parameters live in the
+manifest — band buckets are only comparable between identically-banded
+hashes, so the store owns the configuration.
 
 Matching is the banded-Hamming contract of
 :func:`~duckdb_vss_spark.operators.dedup.hamming_pairs`: candidates
@@ -46,23 +42,19 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import fs
+from .snapshot_store import SnapshotStore
 
 __all__ = ["ImageHashStore"]
 
-_MANIFEST = "manifest.json"
 
-
-class ImageHashStore:
+class ImageHashStore(SnapshotStore):
     """Handle on a persisted perceptual-hash dedup artifact. Use
     :meth:`create` / :meth:`open`, not the constructor."""
 
-    def __init__(self, spark: SparkSession, root: str, manifest: dict):
-        self.spark = spark
-        self.root = root
-        self.manifest = manifest
-
-    # -- lifecycle ---------------------------------------------------------
+    FORMAT = "image-hash-store"
+    COUNT_KEY = "n_images"
+    PART_COL = "band"
+    COLUMNS = ("band", "bucket", "id", "h")
 
     @classmethod
     def create(
@@ -77,29 +69,9 @@ class ImageHashStore:
             raise ValueError("completeness requires max_hamming < bands (pigeonhole)")
         if 64 % bands != 0:
             raise ValueError(f"bands ({bands}) must divide 64")
-        if fs.exists(spark, fs.join(root, _MANIFEST)):
-            if not overwrite:
-                raise ValueError(f"ImageHashStore already exists at {root}")
-            fs.delete(spark, root)
-        fs.mkdirs(spark, root)
-        manifest = {
-            "format": "image-hash-store",
-            "version": 1,
-            "bands": int(bands),
-            "max_hamming": int(max_hamming),
-            "snapshots": [],
-            "n_images": 0,
-            "next_snap_id": 0,
-        }
-        fs.write_json(spark, fs.join(root, _MANIFEST), manifest)
-        return cls(spark, root, manifest)
-
-    @classmethod
-    def open(cls, spark: SparkSession, root: str) -> "ImageHashStore":
-        manifest = fs.read_json(spark, fs.join(root, _MANIFEST))
-        if manifest.get("format") != "image-hash-store":
-            raise ValueError(f"not an ImageHashStore: {root}")
-        return cls(spark, root, manifest)
+        return cls._create(
+            spark, root, overwrite, bands=int(bands), max_hamming=int(max_hamming)
+        )
 
     # -- hash plumbing -------------------------------------------------------
 
@@ -147,28 +119,6 @@ class ImageHashStore:
             F.col("__h").alias("h"),
         )
 
-    def _store_df(self) -> Optional[DataFrame]:
-        snaps = self.manifest["snapshots"]
-        key = tuple(s["dir"] for s in snaps if s.get("n_images") != 0)
-        if not key:
-            return None
-        # memoized lazy union on the immutable snapshot-dir tuple with
-        # append-only extension — same steady-state-loop discipline as the
-        # sibling stores
-        cached = getattr(self, "_store_df_memo", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        out, todo = None, key
-        if cached is not None and key[: len(cached[0])] == cached[0]:
-            out, todo = cached[1], key[len(cached[0]):]
-        for dirname in todo:
-            df = self.spark.read.parquet(fs.join(self.root, dirname)).select(
-                "band", "bucket", "id", "h", "snapshot"
-            )
-            out = df if out is None else out.unionByName(df)
-        self._store_df_memo = (key, out)
-        return out
-
     # -- operations --------------------------------------------------------
 
     def append_snapshot(
@@ -182,54 +132,11 @@ class ImageHashStore:
         """Hash ``df``'s images (or take ``hash_col`` verbatim) and commit
         them as ``snapshot`` (typically the batch's KEPT rows). Written
         partitioned by band; manifest overwrite is the atomic commit."""
-        if any(s["name"] == snapshot for s in self.manifest["snapshots"]):
-            raise ValueError(f"snapshot {snapshot!r} already in store")
-        dirname = fs.alloc_snap_dir(self.spark, self.root, self.manifest)
-        out = fs.join(self.root, dirname)
-        rows = self.band_rows(df, id_col, content_col, hash_col).withColumn(
-            "snapshot", F.lit(snapshot)
-        )
-        # image count folded into the write job (the MinHashStore
-        # discipline): band_rows emits exactly ``bands`` rows per input
-        # image, so rows/bands is the committed image count — no
-        # read-back action. Callers commit one row per image id (the
-        # recipes' kept frames / the streaming sink read-back).
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        rows = rows.observe(obs, F.count(F.lit(1)).alias("rows"))
-        # cluster by (band, id-hash) before the write (see MinHashStore:
-        # fewer small files per batch-scale snapshot via AQE coalescing,
-        # cluster-width spread for corpus-scale initial builds instead
-        # of the distinct-band task ceiling)
-        par = max(1, int(self.spark.sparkContext.defaultParallelism))
-        rows = rows.repartition(
-            F.col("band"), F.pmod(F.xxhash64(F.col("id")), F.lit(par))
-        )
-        rows.write.partitionBy("band").parquet(out, mode="overwrite")
-        try:
-            n = int(obs.get["rows"]) // int(self.manifest["bands"])
-        except Exception:
-            # an EMPTY batch: AQE's empty-relation propagation can
-            # eliminate the CollectMetrics node with the rest of the
-            # plan, so no metrics row exists — prove emptiness (or not)
-            # from the directory listing, as the pre-Observation code did
-            names = fs.listdir(self.spark, out)
-            has_data = any(
-                nm.startswith("band=")
-                or (nm.startswith("part-") and not nm.endswith(".crc"))
-                for nm in names
-            )
-            n = (
-                self.spark.read.parquet(out).select("id").distinct().count()
-                if has_data
-                else 0
-            )
-        entry = {"name": snapshot, "dir": dirname, "n_images": n}
-        self.manifest["snapshots"].append(entry)
-        self.manifest["n_images"] += n
-        fs.write_json(self.spark, fs.join(self.root, _MANIFEST), self.manifest)
-        return entry
+        # band_rows emits exactly ``bands`` rows per input image, so
+        # rows / bands is the committed image count. Callers commit one
+        # row per image id (the recipes' kept frames, the streaming sink
+        # read-back).
+        return self._commit(snapshot, self.band_rows(df, id_col, content_col, hash_col))
 
     def match_against(
         self,
@@ -264,7 +171,6 @@ class ImageHashStore:
           ``RuntimeWarning`` with the dropped fraction (no silent caps).
         """
         bands = self.manifest["bands"]
-        width = 64 // bands
         bound = self.manifest["max_hamming"] if max_hamming is None else int(max_hamming)
         if bound >= bands:
             raise ValueError(
@@ -275,7 +181,7 @@ class ImageHashStore:
             id_t = dict(df.dtypes)[id_col]
             schema = f"id {id_t}, store_id {id_t}, snapshot string, hamming int"
             return self.spark.createDataFrame([], schema)
-        from ..operators.dedup import _auto_banding, _chunk_keys, _shared
+        from ..operators.dedup import _near_hash_pairs, _shared
 
         bh = _shared(self._hashes(df, id_col, content_col, hash_col))
         sh = store.select(
@@ -286,67 +192,9 @@ class ImageHashStore:
         )
         if bound == 0:
             return exact
-        from ..operators.dedup import _escalate_banding
-
-        bd = _shared(bh.select("__h").distinct().withColumnRenamed("__h", "h"))
-        sd = _shared(sh.select("h").distinct())
-        nd = bd.count() + sd.count()
-        # cheapest complete banding for THIS call's bound (may re-band to
-        # wider chunks — see _auto_banding; the stored band/bucket layout
-        # is irrelevant here because `h` rides every row)
-        bands_eff, combo = _auto_banding(64, bound, nd, max_bucket)
-
-        def band(dfh, keys):
-            return dfh.select("h", F.posexplode(F.array(*keys)).alias("b", "bucket"))
-
-        keys = _chunk_keys("h", bands_eff, 64 // bands_eff, combo)
-        bb, sb = band(bd, keys), band(sd, keys)
-        if nd > max_bucket:
-            from ..operators.dedup import _banded_hot_stats
-
-            sizes, hot = _banded_hot_stats(bb.unionByName(sb), max_bucket)
-            if hot["hb"] > 0:
-                # observed skew beat the average-load choice: escalate
-                # ONCE to packed pair keys over the same chunks before
-                # accepting any drop — loss-monotone (see
-                # _escalate_banding); diverse hot-bucket members spread
-                # cold under the pair key (the round-12 image-text loop
-                # measured exactly this: 135k+ distinct pHashes,
-                # unsaturated by the average, a few skewed buckets over
-                # the cap)
-                esc = _escalate_banding(64, bound, bands_eff, combo)
-                if esc is not None:
-                    bands_eff, combo = esc
-                    keys = _chunk_keys("h", bands_eff, 64 // bands_eff, combo)
-                    bb, sb = band(bd, keys), band(sd, keys)
-                    sizes, hot = _banded_hot_stats(bb.unionByName(sb), max_bucket)
-            if hot["hb"] > 0:
-                import warnings
-
-                total = nd * len(keys)
-                warnings.warn(
-                    f"ImageHashStore.match_against: {hot['hb']} hot (band, "
-                    f"bucket) groups over max_bucket={max_bucket} dropped "
-                    f"{hot['hr']}/{total} banded rows "
-                    f"({hot['hr'] / total:.1%}) at the final banding "
-                    f"({bands_eff} bands, combo={combo}); near-matches "
-                    f"(hamming >= 1) whose every agreeing chunk is hot "
-                    f"are lost — exact matches are unaffected. Raise "
-                    f"max_bucket.",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                ok = sizes.filter(F.col("__n") <= max_bucket).select("b", "bucket")
-                bb, sb = bb.join(ok, ["b", "bucket"]), sb.join(ok, ["b", "bucket"])
-        near_h = (
-            bb.join(sb.withColumnRenamed("h", "hs"), ["b", "bucket"])
-            .select(F.col("h").alias("hb"), "hs")
-            .withColumn(
-                "hamming",
-                F.bit_count(F.col("hb").bitwiseXOR(F.col("hs"))).cast("int"),
-            )
-            .filter((F.col("hamming") >= 1) & (F.col("hamming") <= bound))
-            .dropDuplicates(["hb", "hs"])
+        near_h = _near_hash_pairs(
+            bh.select(F.col("__h").alias("h")), sh, bound, max_bucket,
+            "ImageHashStore.match_against",
         )
         near = (
             near_h.join(bh.withColumnRenamed("__h", "hb"), "hb")
@@ -366,39 +214,5 @@ class ImageHashStore:
     ) -> DataFrame:
         """``df`` plus boolean ``flag_col``: True when the image near-dups
         ANY stored image (flag-don't-drop)."""
-        hits = (
-            self.match_against(df, id_col, content_col, hash_col, max_hamming)
-            .select(F.col("id").alias("__mid"))
-            .distinct()
-        )
-        return (
-            df.join(hits, F.col(id_col) == F.col("__mid"), "left")
-            .withColumn(flag_col, F.col("__mid").isNotNull())
-            .drop("__mid")
-        )
-
-    def drop_snapshot(self, snapshot: str) -> None:
-        """Retire a snapshot: manifest overwrite commits; the data dir
-        becomes a vacuum-able orphan (its name is never reallocated)."""
-        snaps = self.manifest["snapshots"]
-        entry = next((s for s in snaps if s["name"] == snapshot), None)
-        if entry is None:
-            raise ValueError(f"snapshot {snapshot!r} not in store")
-        self.manifest["snapshots"] = [s for s in snaps if s["name"] != snapshot]
-        self.manifest["n_images"] -= entry["n_images"]
-        fs.write_json(self.spark, fs.join(self.root, _MANIFEST), self.manifest)
-
-    def vacuum(self) -> list:
-        """Delete data dirs not referenced by the manifest."""
-        live = {s["dir"] for s in self.manifest["snapshots"]}
-        deleted = []
-        for name in fs.listdir(self.spark, self.root):
-            base = name.rstrip("/").split("/")[-1]
-            if base.startswith("snap-") and base not in live:
-                fs.delete(self.spark, fs.join(self.root, base))
-                deleted.append(base)
-        return deleted
-
-    def info(self) -> dict:
-        """Manifest snapshot (copy) for pragma-style introspection."""
-        return dict(self.manifest)
+        hits = self.match_against(df, id_col, content_col, hash_col, max_hamming)
+        return self._flag(df, id_col, hits, flag_col)

@@ -14,15 +14,13 @@ align at ONE temporal offset — re-encoded, re-containered, or
 time-shifted copies all collide). Historical video bytes are never
 re-decoded.
 
-Artifact discipline is identical to the sibling stores: append-only
-versioned parquet directory, JSON manifest as the atomic commit point,
-monotonic ``next_snap_id`` dir allocation (never reuses a dir after
-``drop_snapshot``), orphans ignored by readers, ``vacuum`` retention.
-The matching parameters (bands / max_hamming / frame ``every_nth``)
-live in the manifest: hashes are only comparable between identically
-sampled frame grids, so the store owns the configuration. Banding
-happens at MATCH time (the stored rows are raw ``(kb, id, t, h)``), so
-a store can tighten ``max_hamming`` per call without rewriting state.
+The artifact lifecycle is :class:`~.snapshot_store.SnapshotStore`,
+shared with the sibling stores. The matching parameters (bands /
+max_hamming / frame ``every_nth``) live in the manifest: hashes are only
+comparable between identically sampled frame grids, so the store owns
+the configuration. Banding happens at MATCH time (the stored rows are
+raw ``(kb, id, t, h)``), so a store can tighten ``max_hamming`` per call
+without rewriting state.
 
 Hot-bucket discipline (round 11): exact frame matches bypass banding via
 an equi-join on the hash value (cap-immune), the near band join runs over
@@ -42,24 +40,25 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import fs
+from .snapshot_store import SnapshotStore
 
 __all__ = ["VideoFingerprintStore"]
 
-_MANIFEST = "manifest.json"
 _KB = 64  # layout-bucket partitions (symmetry with the audio store)
 
 
-class VideoFingerprintStore:
+class VideoFingerprintStore(SnapshotStore):
     """Handle on a persisted video-fingerprint dedup artifact. Use
     :meth:`create` / :meth:`open`, not the constructor."""
 
-    def __init__(self, spark: SparkSession, root: str, manifest: dict):
-        self.spark = spark
-        self.root = root
-        self.manifest = manifest
-
-    # -- lifecycle ---------------------------------------------------------
+    FORMAT = "video-fp-store"
+    COUNT_KEY = "n_clips"
+    PART_COL = "kb"
+    COLUMNS = ("kb", "id", "t", "h")
+    # frame grids always sample frame 0 (fi % every_nth == 0 at fi = 0),
+    # so every decodable clip emits exactly one t == 0 row; a
+    # caller-shaped ``keys_df`` without that row falls back to a read-back
+    COUNT_T0 = True
 
     @classmethod
     def create(
@@ -75,30 +74,10 @@ class VideoFingerprintStore:
             raise ValueError("completeness requires max_hamming < bands (pigeonhole)")
         if 64 % bands != 0:
             raise ValueError(f"bands ({bands}) must divide 64")
-        if fs.exists(spark, fs.join(root, _MANIFEST)):
-            if not overwrite:
-                raise ValueError(f"VideoFingerprintStore already exists at {root}")
-            fs.delete(spark, root)
-        fs.mkdirs(spark, root)
-        manifest = {
-            "format": "video-fp-store",
-            "version": 1,
-            "bands": int(bands),
-            "max_hamming": int(max_hamming),
-            "every_nth": int(every_nth),
-            "snapshots": [],
-            "n_clips": 0,
-            "next_snap_id": 0,
-        }
-        fs.write_json(spark, fs.join(root, _MANIFEST), manifest)
-        return cls(spark, root, manifest)
-
-    @classmethod
-    def open(cls, spark: SparkSession, root: str) -> "VideoFingerprintStore":
-        manifest = fs.read_json(spark, fs.join(root, _MANIFEST))
-        if manifest.get("format") != "video-fp-store":
-            raise ValueError(f"not a VideoFingerprintStore: {root}")
-        return cls(spark, root, manifest)
+        return cls._create(
+            spark, root, overwrite,
+            bands=int(bands), max_hamming=int(max_hamming), every_nth=int(every_nth),
+        )
 
     # -- fingerprint plumbing ------------------------------------------------
 
@@ -142,38 +121,6 @@ class VideoFingerprintStore:
             F.pmod(F.col("h"), F.lit(_KB)).cast("int").alias("kb"), "id", "t", "h"
         )
 
-    def _banded(self, rows: DataFrame) -> DataFrame:
-        """Explode stored/batch rows into (band, bucket, id, t, h[, ...])
-        with the manifest's banding — shared by both match sides."""
-        bands = self.manifest["bands"]
-        width = 64 // bands
-        mask = F.lit((1 << width) - 1)
-        chunks = F.array(*[
-            F.shiftrightunsigned(F.col("h"), b * width).bitwiseAND(mask)
-            for b in range(bands)
-        ])
-        keep = [c for c in rows.columns if c != "kb"]
-        return rows.select(*keep, F.posexplode(chunks).alias("band", "bucket"))
-
-    def _store_df(self) -> Optional[DataFrame]:
-        snaps = self.manifest["snapshots"]
-        key = tuple(s["dir"] for s in snaps if s.get("n_clips") != 0)
-        if not key:
-            return None
-        cached = getattr(self, "_store_df_memo", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        out, todo = None, key
-        if cached is not None and key[: len(cached[0])] == cached[0]:
-            out, todo = cached[1], key[len(cached[0]):]
-        for dirname in todo:
-            df = self.spark.read.parquet(fs.join(self.root, dirname)).select(
-                "kb", "id", "t", "h", "snapshot"
-            )
-            out = df if out is None else out.unionByName(df)
-        self._store_df_memo = (key, out)
-        return out
-
     # -- operations --------------------------------------------------------
 
     def append_snapshot(
@@ -186,66 +133,7 @@ class VideoFingerprintStore:
     ) -> dict:
         """Fingerprint ``df``'s clips (or take ``keys_df`` verbatim) and
         commit them as ``snapshot`` (typically the batch's KEPT rows)."""
-        if any(s["name"] == snapshot for s in self.manifest["snapshots"]):
-            raise ValueError(f"snapshot {snapshot!r} already in store")
-        dirname = fs.alloc_snap_dir(self.spark, self.root, self.manifest)
-        out = fs.join(self.root, dirname)
-        rows = self.key_rows(df, id_col, content_col, keys_df).withColumn(
-            "snapshot", F.lit(snapshot)
-        )
-        # The clip count folds into the WRITE job via the Observation API
-        # (the MinHashStore discipline): frame grids always sample frame 0
-        # (fi % every_nth == 0 at fi = 0), so every decodable clip emits
-        # EXACTLY ONE t == 0 row — count_if(t = 0) IS the committed
-        # distinct-clip count, and the per-commit read-back (one extra
-        # driver action + a full file listing, a cluster barrier per
-        # commit at streaming scale) goes. A caller-shaped ``keys_df``
-        # without a t == 0 marker row falls back to the proven read-back.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        rows = rows.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.count_if(F.col("t") == 0).alias("clips"),
-        )
-        # cluster by (key bucket, id-hash) before the write (the
-        # MinHashStore discipline: fewer small files per batch-scale
-        # snapshot via AQE coalescing, cluster-width spread for corpus-
-        # scale initial builds instead of the distinct-bucket ceiling)
-        par = max(1, int(self.spark.sparkContext.defaultParallelism))
-        rows = rows.repartition(
-            F.col("kb"), F.pmod(F.xxhash64(F.col("id")), F.lit(par))
-        )
-        rows.write.partitionBy("kb").parquet(out, mode="overwrite")
-        try:
-            got = obs.get
-            n = int(got["clips"])
-            if n == 0 and int(got["rows"]) > 0:
-                # keys_df without a frame-0 marker row (not a frame_phash
-                # grid): prove the count from the written snapshot
-                n = self.spark.read.parquet(out).select("id").distinct().count()
-        except Exception:
-            # an EMPTY batch: AQE's empty-relation propagation can
-            # eliminate the CollectMetrics node with the rest of the
-            # plan, so no metrics row exists — prove emptiness (or not)
-            # from the directory listing, as the pre-Observation code did
-            names = fs.listdir(self.spark, out)
-            has_data = any(
-                nm.startswith("kb=")
-                or (nm.startswith("part-") and not nm.endswith(".crc"))
-                for nm in names
-            )
-            n = (
-                self.spark.read.parquet(out).select("id").distinct().count()
-                if has_data
-                else 0
-            )
-        entry = {"name": snapshot, "dir": dirname, "n_clips": n}
-        self.manifest["snapshots"].append(entry)
-        self.manifest["n_clips"] += n
-        fs.write_json(self.spark, fs.join(self.root, _MANIFEST), self.manifest)
-        return entry
+        return self._commit(snapshot, self.key_rows(df, id_col, content_col, keys_df))
 
     def match_against(
         self,
@@ -279,7 +167,7 @@ class VideoFingerprintStore:
                 "offset long, n_matches long"
             )
             return self.spark.createDataFrame([], schema)
-        from ..operators.dedup import _auto_banding, _chunk_keys, _shared
+        from ..operators.dedup import _near_hash_pairs, _shared
 
         # Round-11 shape (the image store's steady-state measurement
         # showed the old store+batch frequency cap silently dropping
@@ -298,71 +186,8 @@ class VideoFingerprintStore:
         )
         near_pairs = None
         if bound >= 1:
-            from ..operators.dedup import _escalate_banding
-
-            bd = _shared(batch.select("h").distinct())
-            sd = _shared(skeys.select("h").distinct())
-            nd = bd.count() + sd.count()
-            # cheapest complete banding for THIS call's bound (may re-band
-            # to wider chunks — see _auto_banding)
-            bands_eff, combo = _auto_banding(64, bound, nd, max_bucket)
-
-            def band(dfh, keys):
-                return dfh.select(
-                    "h", F.posexplode(F.array(*keys)).alias("b", "bucket")
-                )
-
-            keys = _chunk_keys("h", bands_eff, 64 // bands_eff, combo)
-            bb, sb = band(bd, keys), band(sd, keys)
-            if nd > max_bucket:
-                from ..operators.dedup import _banded_hot_stats
-
-                sizes, hot = _banded_hot_stats(bb.unionByName(sb), max_bucket)
-                if hot["hb"] > 0:
-                    # observed skew beat the average-load choice: escalate
-                    # ONCE to packed pair keys over the same chunks —
-                    # loss-monotone (see _escalate_banding; the image
-                    # store twin and the round-12 image-text loop)
-                    esc = _escalate_banding(64, bound, bands_eff, combo)
-                    if esc is not None:
-                        bands_eff, combo = esc
-                        keys = _chunk_keys(
-                            "h", bands_eff, 64 // bands_eff, combo
-                        )
-                        bb, sb = band(bd, keys), band(sd, keys)
-                        sizes, hot = _banded_hot_stats(bb.unionByName(sb), max_bucket)
-                if hot["hb"] > 0:
-                    import warnings
-
-                    total = nd * len(keys)
-                    warnings.warn(
-                        f"VideoFingerprintStore.match_against: {hot['hb']} "
-                        f"hot (band, bucket) groups over "
-                        f"max_bucket={max_bucket} dropped {hot['hr']}/{total} "
-                        f"banded rows ({hot['hr'] / total:.1%}) at the final "
-                        f"banding ({bands_eff} bands, combo={combo}); near "
-                        f"frame matches (hamming >= 1) whose every agreeing "
-                        f"chunk is hot are lost — exact matches are "
-                        f"unaffected. Raise max_bucket.",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
-                    ok = sizes.filter(F.col("__n") <= max_bucket).select(
-                        "b", "bucket"
-                    )
-                    bb, sb = (
-                        bb.join(ok, ["b", "bucket"]),
-                        sb.join(ok, ["b", "bucket"]),
-                    )
-            near_h = (
-                bb.join(sb.withColumnRenamed("h", "hs"), ["b", "bucket"])
-                .select(F.col("h").alias("hb"), "hs")
-                .withColumn(
-                    "hamming",
-                    F.bit_count(F.col("hb").bitwiseXOR(F.col("hs"))).cast("int"),
-                )
-                .filter((F.col("hamming") >= 1) & (F.col("hamming") <= bound))
-                .dropDuplicates(["hb", "hs"])
+            near_h = _near_hash_pairs(
+                batch, skeys, bound, max_bucket, "VideoFingerprintStore.match_against"
             )
             near_pairs = (
                 near_h.join(batch.withColumnRenamed("h", "hb"), "hb")
@@ -402,39 +227,5 @@ class VideoFingerprintStore:
     ) -> DataFrame:
         """``df`` plus boolean ``flag_col``: True when the clip near-dups
         ANY stored clip (flag-don't-drop)."""
-        hits = (
-            self.match_against(df, id_col, content_col, keys_df, min_matches)
-            .select(F.col("id").alias("__mid"))
-            .distinct()
-        )
-        return (
-            df.join(hits, F.col(id_col) == F.col("__mid"), "left")
-            .withColumn(flag_col, F.col("__mid").isNotNull())
-            .drop("__mid")
-        )
-
-    def drop_snapshot(self, snapshot: str) -> None:
-        """Retire a snapshot: manifest overwrite commits; the data dir
-        becomes a vacuum-able orphan (its name is never reallocated)."""
-        snaps = self.manifest["snapshots"]
-        entry = next((s for s in snaps if s["name"] == snapshot), None)
-        if entry is None:
-            raise ValueError(f"snapshot {snapshot!r} not in store")
-        self.manifest["snapshots"] = [s for s in snaps if s["name"] != snapshot]
-        self.manifest["n_clips"] -= entry["n_clips"]
-        fs.write_json(self.spark, fs.join(self.root, _MANIFEST), self.manifest)
-
-    def vacuum(self) -> list:
-        """Delete data dirs not referenced by the manifest."""
-        live = {s["dir"] for s in self.manifest["snapshots"]}
-        deleted = []
-        for name in fs.listdir(self.spark, self.root):
-            base = name.rstrip("/").split("/")[-1]
-            if base.startswith("snap-") and base not in live:
-                fs.delete(self.spark, fs.join(self.root, base))
-                deleted.append(base)
-        return deleted
-
-    def info(self) -> dict:
-        """Manifest snapshot (copy) for pragma-style introspection."""
-        return dict(self.manifest)
+        hits = self.match_against(df, id_col, content_col, keys_df, min_matches)
+        return self._flag(df, id_col, hits, flag_col)

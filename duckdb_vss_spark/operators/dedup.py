@@ -681,8 +681,8 @@ def _banded_hot_stats(banded_union: DataFrame, max_bucket: int):
     """Per-(band, bucket) sizes over a banded frame plus the hot-bucket
     scalar stats in one action: ``(sizes_df, row)`` with ``row['hb']``
     the count of buckets over ``max_bucket`` and ``row['hr']`` the
-    banded rows they hold. The shared cap pass of the store matchers
-    (their two banded sides union into one frame first)."""
+    banded rows they hold. The cap pass of :func:`_near_hash_pairs`
+    (its two banded sides union into one frame first)."""
     sizes = _shared(
         banded_union.groupBy("b", "bucket").agg(F.count(F.lit(1)).alias("__n"))
     )
@@ -698,9 +698,9 @@ def _chunk_keys(hcol, bands: int, width: int, combo: int) -> list:
     chunks of ``width`` bits: ``combo=1`` → the chunk values themselves;
     ``combo>=2`` → every combo-subset of chunks packed into one long
     (each chunk < 2^width, so the packed key fits for any combination the
-    fan-out guards admit). Shared by :func:`hamming_pairs` and the
-    banded-Hamming store match paths (ImageHashStore /
-    VideoFingerprintStore), which must band identically to stay
+    fan-out guards admit). Shared by :func:`hamming_pairs` and
+    :func:`_near_hash_pairs` (the ImageHashStore / VideoFingerprintStore
+    match paths), which must band identically to stay
     pigeonhole-complete. String column names get the session Column
     memo (combo=2 builds C(bands, combo) packed keys — hundreds of py4j
     roundtrips per call otherwise)."""
@@ -728,6 +728,69 @@ def _chunk_keys(hcol, bands: int, width: int, combo: int) -> list:
             k = F.shiftleft(k, width) + chunk(b).cast("long")
         keys.append(k)
     return keys
+
+
+def _near_hash_pairs(
+    batch: DataFrame, store: DataFrame, bound: int, max_bucket: int, who: str
+) -> DataFrame:
+    """Near pairs ``(hb, hs, hamming INT)`` with ``1 <= hamming <= bound``
+    between the DISTINCT 64-bit hashes of ``batch`` and ``store`` (each
+    has an ``h`` column) — the banded-Hamming block of the store matchers
+    (ImageHashStore / VideoFingerprintStore), whose exact (hamming-0)
+    matches bypass banding with an equi-join on the hash value.
+
+    The banding is the cheapest complete one for ``bound`` at the
+    distinct count (:func:`_auto_banding`; it may re-band to wider chunks
+    — the stored layout is irrelevant because ``h`` rides every row).
+    When the count can fill a bucket, a hot pass runs; if it finds hot
+    buckets, the banding escalates ONCE to packed pair keys over the same
+    chunks (:func:`_escalate_banding`, loss-monotone: diverse hot-bucket
+    members spread cold under the pair key) before any drop is accepted.
+    Buckets still over ``max_bucket`` are dropped with a
+    ``RuntimeWarning`` naming ``who`` and the dropped fraction (no silent
+    caps)."""
+    bd = _shared(batch.select("h").distinct())
+    sd = _shared(store.select("h").distinct())
+    nd = bd.count() + sd.count()
+    bands, combo = _auto_banding(64, bound, nd, max_bucket)
+
+    def band(dfh, keys):
+        return dfh.select("h", F.posexplode(F.array(*keys)).alias("b", "bucket"))
+
+    keys = _chunk_keys("h", bands, 64 // bands, combo)
+    bb, sb = band(bd, keys), band(sd, keys)
+    if nd > max_bucket:
+        sizes, hot = _banded_hot_stats(bb.unionByName(sb), max_bucket)
+        if hot["hb"] > 0:
+            esc = _escalate_banding(64, bound, bands, combo)
+            if esc is not None:
+                bands, combo = esc
+                keys = _chunk_keys("h", bands, 64 // bands, combo)
+                bb, sb = band(bd, keys), band(sd, keys)
+                sizes, hot = _banded_hot_stats(bb.unionByName(sb), max_bucket)
+        if hot["hb"] > 0:
+            import warnings
+
+            total = nd * len(keys)
+            warnings.warn(
+                f"{who}: {hot['hb']} hot (band, bucket) groups over "
+                f"max_bucket={max_bucket} dropped {hot['hr']}/{total} banded "
+                f"rows ({hot['hr'] / total:.1%}) at the final banding "
+                f"({bands} bands, combo={combo}); near matches (hamming >= 1) "
+                f"whose every agreeing chunk is hot are lost — exact matches "
+                f"are unaffected. Raise max_bucket.",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+            ok = sizes.filter(F.col("__n") <= max_bucket).select("b", "bucket")
+            bb, sb = bb.join(ok, ["b", "bucket"]), sb.join(ok, ["b", "bucket"])
+    return (
+        bb.join(sb.withColumnRenamed("h", "hs"), ["b", "bucket"])
+        .select(F.col("h").alias("hb"), "hs")
+        .withColumn("hamming", F.bit_count(F.col("hb").bitwiseXOR(F.col("hs"))).cast("int"))
+        .filter((F.col("hamming") >= 1) & (F.col("hamming") <= bound))
+        .dropDuplicates(["hb", "hs"])
+    )
 
 
 def hamming_pairs(

@@ -402,7 +402,7 @@ def _crawl_ingest_batch(
     from ..pipelines import crawl_ingest
 
     name = f"{snapshot_prefix}-{bid:06d}"
-    if any(s["name"] == name for s in store.manifest["snapshots"]):
+    if store.has_snapshot(name):
         return  # replayed after full commit: sink + store already hold batch
     out = crawl_ingest(
         bdf, store, url_col=url_col, text_col=text_col, id_col=id_col,
@@ -488,7 +488,7 @@ def _curate_batch(
     from ..pipelines import curate_corpus
 
     name = f"{snapshot_prefix}-{bid:06d}"
-    if any(s["name"] == name for s in store.manifest["snapshots"]):
+    if store.has_snapshot(name):
         return
     # a micro-batch inherits the arrival files' partition count — a
     # narrow drop (1-4 files) would run the recipe's map-only stages at
@@ -627,7 +627,7 @@ def _audio_curate_batch(
     from ..pipelines import audio_curate
 
     name = f"{snapshot_prefix}-{bid:06d}"
-    if any(s["name"] == name for s in store.manifest["snapshots"]):
+    if store.has_snapshot(name):
         return
     out = audio_curate(
         _fan_out(bdf), content_col=content_col, id_col=id_col,
@@ -709,7 +709,7 @@ def _image_curate_batch(
     from ..pipelines import image_curate
 
     name = f"{snapshot_prefix}-{bid:06d}"
-    if any(s["name"] == name for s in store.manifest["snapshots"]):
+    if store.has_snapshot(name):
         return
     out = image_curate(
         _fan_out(bdf), content_col=content_col, id_col=id_col,
@@ -792,7 +792,7 @@ def _video_curate_batch(
     from ..pipelines import video_curate
 
     name = f"{snapshot_prefix}-{bid:06d}"
-    if any(s["name"] == name for s in store.manifest["snapshots"]):
+    if store.has_snapshot(name):
         return
     out = video_curate(
         _fan_out(bdf), content_col=content_col, id_col=id_col,
@@ -883,7 +883,7 @@ def _image_text_curate_batch(
     from ..pipelines import image_text_curate, image_text_pairs
 
     name = f"{snapshot_prefix}-{bid:06d}"
-    if any(s["name"] == name for s in store.manifest["snapshots"]):
+    if store.has_snapshot(name):
         return
     pairs = _shared(image_text_pairs(
         _fan_out(bdf), html_col=html_col, id_col=id_col, **prefetch_kwargs

@@ -56,6 +56,8 @@ def test_append_accumulates_and_name_collision(spark, store_root):
     st.append_snapshot(_mk(spark, BASE), "text", "doc_id", "s1")
     st.append_snapshot(_mk(spark, [(10, BASE[2][1])]), "text", "doc_id", "s2")
     assert st.info()["n_docs"] == 4
+    st.info()["snapshots"].clear()  # info() is a copy: the store is untouched
+    assert len(st.info()["snapshots"]) == 2
     with pytest.raises(ValueError, match="already in store"):
         st.append_snapshot(_mk(spark, BASE), "text", "doc_id", "s1")
     # doc 3's copy now matches across snapshots
@@ -312,23 +314,143 @@ def test_legacy_manifest_without_counter_migrates_from_disk(spark, store_root):
     assert st3.info()["next_snap_id"] == 3
 
 
-def test_audio_store_drop_then_append_never_reuses_dir(spark, tmp_path):
-    from duckdb_vss_spark.index.audio_store import AudioFingerprintStore
+def _one_row_kinds(spark):
+    """Per store kind: the class, one-row append/match helpers keyed by an
+    item id (1-3, each a distinct item), and an empty-batch append. Image
+    and video take precomputed hashes (no decode)."""
+    import numpy as np
 
-    st = AudioFingerprintStore.create(spark, str(tmp_path / "astore3"))
-    st.append_snapshot(_awavs(spark, [(1, _aclip(1))]), "content", "clip_id", "s1")
-    st.append_snapshot(_awavs(spark, [(2, _aclip(2))]), "content", "clip_id", "s2")
+    from duckdb_vss_spark import (
+        AudioFingerprintStore, ImageHashStore, VideoFingerprintStore,
+    )
+
+    def img(rows):
+        return spark.createDataFrame(rows, "img_id long, phash long")
+
+    def phash(i):
+        return int(np.random.default_rng(500 + i).integers(-(2**62), 2**62))
+
+    def frames(rows):
+        return spark.createDataFrame(rows, "clip_id long, t long, key long")
+
+    def clip_frames(clip_id, i):
+        rng = np.random.default_rng(600 + i)
+        return [(clip_id, t, int(v)) for t, v in
+                enumerate(rng.integers(-(2**62), 2**62, size=8))]
+
+    return {
+        "minhash": (
+            MinHashStore,
+            lambda st, i, s: st.append_snapshot(
+                _mk(spark, [(i, BASE[i - 1][1])]), "text", "doc_id", s),
+            lambda st, i: st.match_against(
+                _mk(spark, [(90, BASE[i - 1][1])]), "text", "doc_id"),
+            lambda st, s: st.append_snapshot(_mk(spark, []), "text", "doc_id", s),
+        ),
+        "audio": (
+            AudioFingerprintStore,
+            lambda st, i, s: st.append_snapshot(
+                _awavs(spark, [(i, _aclip(i))]), "content", "clip_id", s),
+            lambda st, i: st.match_against(
+                _awavs(spark, [(90, _aclip(i))]), "content", "clip_id", min_matches=5),
+            lambda st, s: st.append_snapshot(
+                spark.createDataFrame([], "clip_id long, content binary"),
+                "content", "clip_id", s),
+        ),
+        "image": (
+            ImageHashStore,
+            lambda st, i, s: st.append_snapshot(
+                img([(i, phash(i))]), "img_id", s, hash_col="phash"),
+            lambda st, i: st.match_against(
+                img([(90, phash(i))]), "img_id", hash_col="phash"),
+            lambda st, s: st.append_snapshot(img([]), "img_id", s, hash_col="phash"),
+        ),
+        "video": (
+            VideoFingerprintStore,
+            lambda st, i, s: st.append_snapshot(
+                None, "clip_id", s, keys_df=frames(clip_frames(i, i))),
+            lambda st, i: st.match_against(
+                None, "clip_id", keys_df=frames(clip_frames(90, i)), min_matches=5),
+            lambda st, s: st.append_snapshot(None, "clip_id", s, keys_df=frames([])),
+        ),
+    }
+
+
+@pytest.mark.parametrize("kind", ["minhash", "audio", "image", "video"])
+def test_store_lifecycle_contract(spark, tmp_path, kind):
+    """The snapshot lifecycle every store shares, on one-row batches:
+    create guard and overwrite, the open format guard, name collision,
+    dropping a missing snapshot, drop-then-append never reusing a dir
+    (mode='overwrite' would destroy a LIVE snapshot's data), an empty
+    batch committing a count of 0, and vacuum deleting exactly the
+    orphans."""
+    from duckdb_vss_spark.index import fs
+
+    kinds = _one_row_kinds(spark)
+    cls, append, match, append_empty = kinds[kind]
+    root = str(tmp_path / kind)
+    count_key = cls.COUNT_KEY
+
+    st = cls.create(spark, root)
+    with pytest.raises(ValueError, match="already exists"):
+        cls.create(spark, root)
+    append(st, 1, "s1")
+    st = cls.create(spark, root, overwrite=True)
+    assert st.info()["snapshots"] == [] and st.info()[count_key] == 0
+    assert not [n for n in fs.listdir(spark, root) if n.startswith("snap-")]
+
+    other_kind = "image" if kind == "minhash" else "minhash"
+    other = kinds[other_kind][0].create(spark, str(tmp_path / "other"))
+    with pytest.raises(ValueError, match=f"not an? {cls.__name__}"):
+        cls.open(spark, other.root)
+
+    append(st, 1, "s1")
+    append(st, 2, "s2")
+    with pytest.raises(ValueError, match="already in store"):
+        append(st, 3, "s1")
+    with pytest.raises(ValueError, match="not in store"):
+        st.drop_snapshot("missing")
     st.drop_snapshot("s1")
-    st.append_snapshot(_awavs(spark, [(3, _aclip(3))]), "content", "clip_id", "s3")
+    append(st, 3, "s3")
     assert [s["dir"] for s in st.info()["snapshots"]] == [
         "snap-000001", "snap-000002"
+    ]  # s2 untouched, s3 fresh
+    assert st.info()[count_key] == 2
+    # s2's fingerprints survived: a copy of item 2 still matches s2 only
+    hits = {(r["store_id"], r["snapshot"]) for r in match(st, 2).collect()}
+    assert hits == {(2, "s2")}
+
+    entry = append_empty(st, "s4")
+    assert entry[count_key] == 0 and st.info()[count_key] == 2
+    fs.mkdirs(spark, fs.join(root, "snap-000099"))  # a crash orphan
+    assert sorted(st.vacuum()) == ["snap-000000", "snap-000099"]
+    assert sorted(n for n in fs.listdir(spark, root) if n.startswith("snap-")) == [
+        "snap-000001", "snap-000002", "snap-000003"
     ]
-    # s2's fingerprints intact: an exact copy of clip 2 still matches s2
-    m = st.match_against(
-        _awavs(spark, [(90, _aclip(2))]), "content", "clip_id", min_matches=5
-    )
-    assert {(r["store_id"], r["snapshot"]) for r in m.collect()} == {(2, "s2")}
-    assert st.info()["n_clips"] == 2
+
+
+def test_stale_handle_keeps_other_handles_commits(spark, store_root):
+    """Two handles on one store: every write re-reads the manifest, so a
+    handle that missed another handle's commits neither reuses its dir,
+    nor drops its manifest entry, nor vacuums its data as an orphan."""
+    a = MinHashStore.create(spark, store_root)
+    b = MinHashStore.open(spark, store_root)
+    a.append_snapshot(_mk(spark, [(1, BASE[0][1])]), "text", "doc_id", "s1")
+    entry = b.append_snapshot(_mk(spark, [(2, BASE[1][1])]), "text", "doc_id", "s2")
+    assert entry["dir"] == "snap-000001"  # not a's snap-000000 again
+    b.append_snapshot(_mk(spark, [(3, BASE[2][1])]), "text", "doc_id", "s3")
+    # `a` has not seen s2 or s3
+    a.drop_snapshot("s3")
+    assert a.vacuum() == ["snap-000002"]
+    reopened = MinHashStore.open(spark, store_root)
+    assert [(s["name"], s["dir"]) for s in reopened.info()["snapshots"]] == [
+        ("s1", "snap-000000"), ("s2", "snap-000001")
+    ]
+    assert reopened.info()["n_docs"] == 2
+    for st in (a, b, reopened):
+        for i in (1, 2):
+            m = st.match_against(_mk(spark, [(90, BASE[i - 1][1])]), "text", "doc_id")
+            assert {(r["store_id"], r["snapshot"]) for r in m.collect()} == {(i, f"s{i}")}
 
 
 def test_empty_store_schema_tracks_string_ids(spark, store_root, tmp_path):
