@@ -143,21 +143,43 @@ class SnapshotStore:
 
     # -- operations --------------------------------------------------------
 
-    def _commit(self, snapshot: str, rows: DataFrame) -> dict:
+    def _commit(self, snapshot: str, rows: DataFrame, n: Optional[int] = None) -> dict:
         """Write the fingerprint ``rows`` (the store's ``COLUMNS``) as
         snapshot ``snapshot`` and commit it. Returns the new manifest
-        entry."""
+        entry.
+
+        ``n`` is the item count when the caller already knows it: rows
+        built on the driver (a local relation) go out in one write task,
+        with no Observation and no repartition shuffle. Without it the
+        write itself counts the items (:meth:`_write_counted`)."""
         self._refresh()
         if self.has_snapshot(snapshot):
             raise ValueError(f"snapshot {snapshot!r} already in store")
         dirname = fs.alloc_snap_dir(self.spark, self.root, self.manifest)
         out = fs.join(self.root, dirname)
         rows = rows.withColumn("snapshot", F.lit(snapshot))
-        # The item count folds into the WRITE job via the Observation API
-        # (see COUNT_T0), so a commit needs no read-back of the written
-        # snapshot: no extra driver action or file listing per commit, and
-        # no window where a transient read error after a good write could
-        # commit a wrong count.
+        if n is None:
+            n = self._write_counted(rows, out)
+        else:
+            # one task writes one file per partition value; an empty frame
+            # still leaves the dir (and its _SUCCESS) for the manifest entry
+            rows.coalesce(1).write.partitionBy(self.PART_COL).parquet(out, mode="overwrite")
+        entry = {"name": snapshot, "dir": dirname, self.COUNT_KEY: n}
+        self.manifest["snapshots"].append(entry)
+        self.manifest[self.COUNT_KEY] += n
+        self._write_manifest()
+        return entry
+
+    def _write_counted(self, rows: DataFrame, out: str) -> int:
+        """Write distributed ``rows`` to ``out``, partitioned by the
+        store's partition column, and return their item count."""
+        # This is the path of rows whose count the driver does not know
+        # (every audio, image and video commit, and a MinHash batch over
+        # its driver limit). The item count folds into the WRITE job via
+        # the Observation API (see COUNT_T0), so a commit needs no
+        # read-back of the written snapshot: no extra driver action or
+        # file listing per commit, and no window where a transient read
+        # error after a good write could commit a wrong count.
         obs = Observation()
         aggs = [F.count(F.lit(1)).alias("rows")]
         if self.COUNT_T0:
@@ -185,8 +207,8 @@ class SnapshotStore:
                     # rows without the t == 0 marker (a caller-shaped key
                     # table): prove the count from the written snapshot
                     n = self.spark.read.parquet(out).select("id").distinct().count()
-            else:
-                n = int(got["rows"]) // int(self.manifest["bands"])
+                return n
+            return int(got["rows"]) // int(self.manifest["bands"])
         except Exception:
             # an EMPTY batch: AQE's empty-relation propagation can
             # eliminate the CollectMetrics node with the rest of the plan,
@@ -197,16 +219,11 @@ class SnapshotStore:
                 or (nm.startswith("part-") and not nm.endswith(".crc"))
                 for nm in fs.listdir(self.spark, out)
             )
-            n = (
+            return (
                 self.spark.read.parquet(out).select("id").distinct().count()
                 if has_data
                 else 0
             )
-        entry = {"name": snapshot, "dir": dirname, self.COUNT_KEY: n}
-        self.manifest["snapshots"].append(entry)
-        self.manifest[self.COUNT_KEY] += n
-        self._write_manifest()
-        return entry
 
     def _flag(
         self, df: DataFrame, id_col: str, matches: DataFrame, flag_col: str

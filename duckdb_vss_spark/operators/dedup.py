@@ -14,6 +14,8 @@ Scale design notes (the part that matters at 100 TB):
 
 from __future__ import annotations
 
+import hashlib
+import re
 from collections import OrderedDict
 
 from pyspark import StorageLevel
@@ -34,6 +36,7 @@ __all__ = [
     "exact_dedup",
     "minhash_per_doc",
     "band_buckets_expr",
+    "minhash_bands_local",
     "minhash_lsh_pairs",
     "simhash_pairs",
     "ngram_jaccard_pairs",
@@ -427,6 +430,62 @@ def band_buckets_expr(sig, num_perm: int, bands: int):
             10,
         ).cast("long"),
     )
+
+
+# Java's ``\s`` (no UNICODE_CHARACTER_CLASS flag): the whitespace class of
+# the tokenizer's ``split(trim(text), '\s+')``. U+00A0, U+2003 and the like
+# stay inside tokens.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def minhash_bands_local(ids, texts, shingle_n: int, num_perm: int, bands: int):
+    """:func:`minhash_per_doc` + :func:`band_buckets_expr` on the driver,
+    for a batch already collected: ``(ids, sig, buckets)`` with one entry
+    per distinct id that has text, ``sig`` int64 ``[n, num_perm]`` and
+    ``buckets`` int64 ``[n, bands]``, bit-identical to the Spark rows.
+
+    The hashing follows the Spark expressions step by step: ``trim`` strips
+    only U+0020, the text splits on Java ``\\s+``, shingles are the distinct
+    word n-grams (a document shorter than ``shingle_n`` words is one
+    partial shingle), each shingle's md5 halves feed the mod-2^40 double
+    hashing, and a band's bucket is the md5 of its comma-joined decimal
+    slice, first 15 hex digits. Rows sharing an id sign the union of their
+    shingles, as the ``groupBy(id)`` does; a null text signs nothing."""
+    import numpy as np
+
+    from ..functions.text import MINHASH_MOD
+
+    shingles: dict = {}
+    for i, text in zip(ids, texts):
+        if text is None:
+            continue
+        t = _JAVA_WS.split(text.strip(" "))
+        shingles.setdefault(i, set()).update(
+            " ".join(t[j : j + shingle_n]) for j in range(max(1, len(t) - shingle_n + 1))
+        )
+    out_ids = list(shingles)
+    n = len(out_ids)
+    sig = np.empty((n, num_perm), dtype=np.int64)
+    buckets = np.empty((n, bands), dtype=np.int64)
+    if n == 0:
+        return out_ids, sig, buckets
+    sets = shingles.values()
+    digests = np.frombuffer(
+        b"".join(hashlib.md5(s.encode()).digest() for ss in sets for s in ss), dtype=np.uint8
+    ).reshape(-1, 16).astype(np.int64)
+    # the first 10 and next 10 hex digits: bytes 0-4 and 5-9, big-endian
+    weights = np.int64(1) << np.arange(32, -1, -8, dtype=np.int64)
+    h1, h2 = digests[:, 0:5] @ weights, digests[:, 5:10] @ weights
+    # every signed id has at least one shingle, so the starts strictly rise
+    starts = np.cumsum([0] + [len(ss) for ss in sets][:-1])
+    for p in range(num_perm):
+        sig[:, p] = np.minimum.reduceat((h1 + p * h2) % MINHASH_MOD, starts)
+    rows = num_perm // bands
+    for d, row in enumerate(sig.tolist()):
+        for b in range(bands):
+            band = ",".join(map(str, row[b * rows : (b + 1) * rows]))
+            buckets[d, b] = int(hashlib.md5(band.encode()).hexdigest()[:15], 16)
+    return out_ids, sig, buckets
 
 
 def minhash_lsh_pairs(

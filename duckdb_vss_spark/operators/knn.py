@@ -36,7 +36,8 @@ probes at a time, reference: src/hnsw/hnsw_optimize_join.cpp:135):
   parallelizes across item partitions. An index join against an index
   resident on its handle (``RESIDENT_BYTES_BUDGET``) runs steps 2-4 on the
   driver instead: the same fold (:func:`fold_topk`) over the resident rows,
-  then the rank in numpy, so the probe collect is its only Spark job.
+  then the rank in numpy, so the probe collect (a bounded collect: two
+  small jobs and no shuffle) is its only Spark work.
 
 ``crossjoin``: pure DataFrame fallback (cross join + window top-k) when the
 probe side is itself huge; correct at any size but O(|L|*|R|) compute —
@@ -55,6 +56,7 @@ from pyspark.sql import functions as F
 from ..functions.distance import METRIC_IS_DESCENDING, canonical_metric, distance_expr
 from ..functions.kernels import as_matrix, local_topk, paired_exact_scores, pairwise_scores, sort_key
 from ..broadcasts import tracked_broadcast
+from ..session import collect_at_most
 
 __all__ = ["knn_join_flat", "knn_join", "knn_match"]
 
@@ -104,8 +106,8 @@ def _deleted_exclusion(index, spark):
     deleted = index.deleted_df(spark)
     if deleted is None:
         return None, None, True
-    head = deleted.limit(DELETED_IDS_KERNEL_CAP + 1).collect()
-    if len(head) > DELETED_IDS_KERNEL_CAP:
+    head = collect_at_most(deleted, DELETED_IDS_KERNEL_CAP)
+    if head is None:
         return None, deleted, False
     return [r["id"] for r in head], deleted, True
 
@@ -502,7 +504,7 @@ def knn_join_flat(
     probes_pdf = _probes_pdf
     if method == "auto" and probes_pdf is None:
         # guard folded into the probe collection itself: limit(n+1) rows come
-        # back in ONE job and double as the broadcast probe matrix — no
+        # back in one collect and double as the broadcast probe matrix — no
         # separate count() pre-pass
         probes_pdf = _collect_probes(left, left_on, left_id, broadcast_probe_limit)
     use_kernel = method == "kernel" or (method == "auto" and probes_pdf is not None)
@@ -571,17 +573,19 @@ def _resident_join(spark, res, probes_pdf, qmat, k: int, metric: str, schema: st
 
 
 def _collect_probes(left: DataFrame, left_on: str, left_id: str, limit: int):
-    """Collect the probe (id, vector) pairs, at most ``limit`` of them.
-    Returns None when the probe side exceeds the limit (caller falls back to
-    a distributed plan) — the limit+1 cap bounds driver memory, so the guard
-    and the collection are one job instead of a count() pre-pass."""
-    pdf = (
-        left.select(F.col(left_id).alias("qid"), F.col(left_on).alias("v"))
-        .filter(F.col(left_on).isNotNull())
-        .limit(limit + 1)
-        .toPandas()
+    """Collect the probe (id, vector) pairs, at most ``limit`` of them, as
+    pandas ``(qid, v)``. Returns None when the probe side exceeds the limit
+    (caller falls back to a distributed plan); see
+    :func:`~duckdb_vss_spark.session.collect_at_most`."""
+    rows = collect_at_most(
+        left.select(F.col(left_id).alias("qid"), F.col(left_on).alias("v")).filter(
+            F.col(left_on).isNotNull()
+        ),
+        limit,
     )
-    return None if len(pdf) > limit else pdf
+    if rows is None:
+        return None
+    return pd.DataFrame({"qid": [r[0] for r in rows], "v": [r[1] for r in rows]})
 
 
 def knn_join(

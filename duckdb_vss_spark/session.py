@@ -63,3 +63,15 @@ def get_spark(app_name: str = "duckdb-vss-spark", shuffle_partitions: int | None
 
     ensure_shipped(spark)
     return spark
+
+
+def collect_at_most(df, n: int):
+    """``df``'s rows on the driver, or None when it has more than ``n``.
+
+    ``limit(n + 1).collect()`` bounds driver memory to n + 1 rows, and the
+    guard and the collection are one action, with no ``count()`` pre-pass.
+    It plans no exchange (an Arrow collect, ``toPandas``, of the same limit
+    adds a single-partition one), and a local relation such as a
+    pandas-built frame comes back without a Spark job."""
+    rows = df.limit(n + 1).collect()
+    return None if len(rows) > n else rows

@@ -8,7 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_vss_spark import oracle as O
+from duckdb_vss_spark.index import dedup_store
 from duckdb_vss_spark.index.dedup_store import MinHashStore
+
+from .conftest import SF_DIR
 
 
 @pytest.fixture()
@@ -376,16 +379,20 @@ def _one_row_kinds(spark):
     }
 
 
-@pytest.mark.parametrize("kind", ["minhash", "audio", "image", "video"])
-def test_store_lifecycle_contract(spark, tmp_path, kind):
+@pytest.mark.parametrize("kind", ["minhash", "minhash-spark", "audio", "image", "video"])
+def test_store_lifecycle_contract(spark, tmp_path, monkeypatch, kind):
     """The snapshot lifecycle every store shares, on one-row batches:
     create guard and overwrite, the open format guard, name collision,
     dropping a missing snapshot, drop-then-append never reusing a dir
     (mode='overwrite' would destroy a LIVE snapshot's data), an empty
     batch committing a count of 0, and vacuum deleting exactly the
-    orphans."""
+    orphans. ``minhash-spark`` runs the MinHash case with every batch
+    over the driver limit."""
     from duckdb_vss_spark.index import fs
 
+    if kind == "minhash-spark":
+        monkeypatch.setattr(dedup_store, "DRIVER_BATCH_DOCS", 0)
+        kind = "minhash"
     kinds = _one_row_kinds(spark)
     cls, append, match, append_empty = kinds[kind]
     root = str(tmp_path / kind)
@@ -483,6 +490,215 @@ def test_empty_store_schema_tracks_string_ids(spark, store_root, tmp_path):
     assert ast.flag_batch(sclips, "content", "clip_id").collect()[0][
         "dup_of_store"
     ] is False
+
+
+# ------------------------------------------------ driver path vs Spark path
+
+
+class TestSparkPath:
+    """The MinHash contracts above, with ``DRIVER_BATCH_DOCS`` forced to 0
+    so every batch takes the Spark signature pipeline. The module-level
+    tests run them at the default limit, on the driver path."""
+
+    @pytest.fixture(autouse=True)
+    def _spark_path(self):
+        # not the test's own monkeypatch: some of these tests undo theirs
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup_store, "DRIVER_BATCH_DOCS", 0)
+            yield
+
+    test_lifecycle_and_matching = staticmethod(test_lifecycle_and_matching)
+    test_empty_snapshot_commits = staticmethod(test_empty_snapshot_commits)
+    test_empty_store_schema_tracks_string_ids = staticmethod(test_empty_store_schema_tracks_string_ids)
+    test_append_snapshot_needs_no_read_back = staticmethod(test_append_snapshot_needs_no_read_back)
+    test_stale_handle_keeps_other_handles_commits = staticmethod(
+        test_stale_handle_keeps_other_handles_commits
+    )
+
+
+def _both_paths(monkeypatch, fn):
+    """``fn()`` at the default limit (driver path), then with the limit
+    at 0 (Spark path)."""
+    out = [fn()]
+    monkeypatch.setattr(dedup_store, "DRIVER_BATCH_DOCS", 0)
+    out.append(fn())
+    monkeypatch.undo()
+    return out
+
+
+@pytest.mark.parametrize("id_t", ["bigint", "string"])
+def test_driver_and_spark_paths_agree(spark, tmp_path, monkeypatch, id_t):
+    """The same flags, pairs, est_jaccard, manifest counts and snapshot
+    parquet schema from both paths. The store is written by the Spark
+    path, as by the previous release, so an old store opens and flags
+    identically under the driver path."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        F.col("doc_id").cast(id_t).alias("doc_id"), "text"
+    )
+    old = docs.filter("doc_id % 2 = 0")
+    new = docs.filter("doc_id % 2 = 1").toPandas()
+    new_df = spark.createDataFrame(new, f"doc_id {id_t}, text string")
+    with monkeypatch.context() as mp:
+        mp.setattr(dedup_store, "DRIVER_BATCH_DOCS", 0)
+        st = MinHashStore.create(spark, str(tmp_path / "old"))
+        st.append_snapshot(old, "text", "doc_id", "old")
+    st = MinHashStore.open(spark, st.root)
+
+    pairs = _both_paths(monkeypatch, lambda: sorted(
+        tuple(r) for r in st.match_against(new_df, "text", "doc_id").collect()
+    ))
+    assert pairs[0] == pairs[1] and pairs[0]
+    flags = _both_paths(monkeypatch, lambda: sorted(
+        tuple(r) for r in st.flag_batch(new_df, "text", "doc_id").collect()
+    ))
+    assert flags[0] == flags[1] and any(r[-1] for r in flags[0])
+    assert len(flags[0]) == len(new)
+
+    def commit():
+        fresh = MinHashStore.create(spark, str(tmp_path / "fresh"), overwrite=True)
+        entry = fresh.append_snapshot(new_df, "text", "doc_id", "b1")
+        snap = spark.read.parquet(f"{fresh.root}/{entry['dir']}")
+        rows = sorted((r.band, r.bucket, r.id, tuple(r.sig), r.snapshot) for r in snap.collect())
+        return entry["n_docs"], fresh.info()["n_docs"], snap.dtypes, rows
+
+    driver, spark_path = _both_paths(monkeypatch, commit)
+    assert driver == spark_path and driver[0] == len(new)
+    assert driver[2] == [
+        ("bucket", "bigint"), ("id", id_t), ("sig", "array<bigint>"),
+        ("snapshot", "string"), ("band", "int"),
+    ]
+
+
+def test_over_limit_batch_takes_spark_path(spark, store_root, monkeypatch):
+    """A batch over ``DRIVER_BATCH_DOCS`` runs the Spark signature
+    pipeline (``band_rows``); one at the limit does not."""
+    calls = []
+    band_rows = MinHashStore.band_rows
+
+    def spy(self, *a, **kw):
+        calls.append(1)
+        return band_rows(self, *a, **kw)
+
+    monkeypatch.setattr(MinHashStore, "band_rows", spy)
+    monkeypatch.setattr(dedup_store, "DRIVER_BATCH_DOCS", len(BASE))
+    st = MinHashStore.create(spark, store_root)
+    st.append_snapshot(_mk(spark, BASE), "text", "doc_id", "s1")
+    flags = st.flag_batch(_mk(spark, NEW), "text", "doc_id").collect()
+    assert calls == [] and len(flags) == 3
+    monkeypatch.setattr(dedup_store, "DRIVER_BATCH_DOCS", len(BASE) - 1)
+    st.append_snapshot(_mk(spark, NEW), "text", "doc_id", "s2")
+    assert len(calls) == 1 and st.info()["n_docs"] == 6
+    hits = st.match_against(_mk(spark, BASE + NEW), "text", "doc_id").collect()
+    assert len(calls) == 2 and {(r["id"], r["store_id"]) for r in hits} >= {(101, 1), (1, 101)}
+
+
+def test_driver_batch_runs_few_jobs_and_no_shuffle(spark, store_root):
+    """Flag plus append of a 200-doc pandas-built batch, the crawl loop's
+    step: at most 5 Spark jobs (jobs from the job group's statusTracker
+    entry) and no shuffle bytes written (from each stage's status)."""
+    import pandas as pd
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    batch = docs.limit(400).toPandas()
+    st = MinHashStore.create(spark, store_root)
+    st.append_snapshot(spark.createDataFrame(batch[:200]), "text", "doc_id", "s0")
+    df = spark.createDataFrame(pd.DataFrame(batch[200:]))
+    sc = spark.sparkContext
+    sc.setJobGroup("driver-batch", "driver-batch")
+    try:
+        flags = st.flag_batch(df, "text", "doc_id").select("doc_id", "dup_of_store").collect()
+        kept = df.filter(F.col("doc_id").isin([r[0] for r in flags if not r[1]]))
+        st.append_snapshot(kept, "text", "doc_id", "s1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("driver-batch")
+    stages = [s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds]
+    status = sc._jsc.sc().statusStore()
+    assert len(flags) == 200 and len(jobs) <= 5
+    assert sum(status.lastStageAttempt(s).shuffleWriteBytes() for s in stages) == 0
+
+
+def _band_rows_match(spark, rows, id_t, shingle_n=3, num_perm=16, bands=4):
+    """The driver signer's band rows equal ``band_rows(...).collect()``."""
+    from duckdb_vss_spark.operators.dedup import minhash_bands_local
+
+    st = MinHashStore(spark, "unused", {"shingle_n": shingle_n, "num_perm": num_perm, "bands": bands})
+    df = spark.createDataFrame(rows, f"doc_id {id_t}, text string")
+    want = sorted(
+        (r["band"], r["bucket"], r["id"], tuple(r["sig"]))
+        for r in st.band_rows(df, "text", "doc_id").collect()
+    )
+    ids, sig, buckets = minhash_bands_local(
+        [r[0] for r in rows], [r[1] for r in rows], shingle_n, num_perm, bands
+    )
+    got = sorted(
+        (b, int(buckets[d, b]), ids[d], tuple(sig[d].tolist()))
+        for d in range(len(ids)) for b in range(bands)
+    )
+    assert got == want
+
+
+def test_driver_signer_matches_band_rows(spark):
+    """One batch with each input the tokenizer treats specially:
+    whitespace Java's \\s does not match (U+00A0, U+2003, U+3000), tabs
+    and newlines, leading and trailing spaces, empty and None text, docs
+    shorter than the shingle, non-ASCII words and a repeated id."""
+    rows = [
+        (1, "  the quick\tbrown fox\njumps  "),
+        (2, "a\u00a0b c\u2003d e\u3000f g"),
+        (3, ""),
+        (4, None),
+        (5, "two words"),
+        (6, "\tleading tab and trailing newline\n"),
+        (7, "naïve café über straße 東京 タワー"),
+        (7, "a second row for seven"),
+        (8, "   "),
+    ]
+    _band_rows_match(spark, rows, "bigint")
+    _band_rows_match(spark, [(f"s{i}", t) for i, t in rows], "string", shingle_n=2)
+
+
+_WORDS = ["a", "b", "fox", "naïve", "東京", "x1", "", "ü"]
+_SEPS = [" ", "  ", "\t", "\n", "\r\n", "\x0b", "\x0c", "\u00a0", "\u2003", "\u3000"]
+
+
+@pytest.mark.slow  # opt-in: ~1 Spark job per example
+def test_driver_signer_matches_band_rows_property(spark):
+    from hypothesis import given, settings
+    from hypothesis import strategies as hs
+
+    text = hs.one_of(
+        hs.none(),
+        hs.builds(
+            lambda lead, parts, trail: lead + "".join(w + s for w, s in parts) + trail,
+            hs.sampled_from(["", " ", "  ", "\t"]),
+            hs.lists(hs.tuples(hs.sampled_from(_WORDS), hs.sampled_from(_SEPS)), max_size=12),
+            hs.sampled_from(["", " ", "\n", "\u3000"]),
+        ),
+        hs.text(max_size=20),
+    )
+
+    @settings(max_examples=40, deadline=None)
+    @given(
+        rows=hs.lists(hs.tuples(hs.integers(0, 6), text), max_size=8),
+        as_str=hs.booleans(),
+        shape=hs.sampled_from([(1, 4, 2), (2, 8, 4), (3, 16, 4), (4, 6, 3)]),
+    )
+    def check(rows, as_str, shape):
+        if as_str:
+            rows = [(f"id-{i}", t) for i, t in rows]
+        _band_rows_match(spark, rows, "string" if as_str else "bigint", *shape)
+
+    check()
+
+
+def test_create_validates_params(spark, store_root):
+    """Zero or negative shingle_n, num_perm or bands raise ValueError
+    (bands=0 used to raise ZeroDivisionError, shingle_n=0 signed unigrams
+    and a negative num_perm divisible by bands passed)."""
+    for kw in (dict(shingle_n=0), dict(num_perm=0), dict(bands=0), dict(num_perm=-16, bands=4)):
+        with pytest.raises(ValueError, match="must be >= 1"):
+            MinHashStore.create(spark, store_root, **kw)
 
 
 # ---------------------------------------------------------------- image store

@@ -435,11 +435,15 @@ def test_shuffle_shard_writer_single_exchange(spark):
     assert "rangepartitioning" not in plan
 
 
-def test_minhash_store_match_text_never_shuffles(spark, tmp_path):
+def test_minhash_store_match_text_never_shuffles(spark, tmp_path, monkeypatch):
     """The store match moves band rows (band, bucket, id, sig) — the batch's
-    TEXT column must not appear in any Exchange."""
+    TEXT column must not appear in any Exchange. Pins the Spark path: a
+    batch within ``DRIVER_BATCH_DOCS`` is matched on the driver and comes
+    back as a local relation, with no Exchange at all."""
+    from duckdb_vss_spark.index import dedup_store
     from duckdb_vss_spark.index.dedup_store import MinHashStore
 
+    monkeypatch.setattr(dedup_store, "DRIVER_BATCH_DOCS", 0)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     st = MinHashStore.create(spark, str(tmp_path / "s"))
     st.append_snapshot(docs.filter("doc_id % 2 = 0"), "text", "doc_id", "h")
