@@ -26,10 +26,18 @@ Scale posture: a crawl batch is the small side of the match, and the
 store the large one. A batch of at most :data:`DRIVER_BATCH_DOCS` rows is
 collected once (a bounded collect) and signed on the driver with the
 Spark pipeline's exact hashing (:func:`~duckdb_vss_spark.operators.dedup.
-minhash_bands_local`). Its matches come from one scan of the store, which
-is left-semi-joined to the batch's broadcast ``(band, bucket)`` keys, and
-the candidates are verified in numpy. Its commit is one write of the
-driver-built rows. No shuffle runs. A larger batch runs the Spark
+minhash_bands_local`); the append of its kept rows reuses those
+signatures. While the store fits the process's resident budget
+(``knn.RESIDENT_BYTES_BUDGET``, shared with IVF index copies), its
+fingerprints are held on the handle (~190 B/doc at 16 perms x 4 bands:
+id, snapshot, signature, and per band a sorted bucket array), and the
+batch's candidates come from a per-band ``np.searchsorted``: a flag runs
+no Spark job. The copy takes in every commit made through the handle and
+reads another handle's snapshot once. Over the budget, the candidates
+come from one scan of the store, left-semi-joined to the batch's
+broadcast ``(band, bucket)`` keys. Either way they are verified in numpy,
+and the commit is one write of the driver-built rows; no shuffle runs.
+:attr:`MinHashStore.last_source` names the source. A larger batch runs the Spark
 signature pipeline, whose join shuffles the batch's band rows and the
 store's band rows — (band, bucket, id, sig) ≈ 150-byte tuples, 1-2% of
 corpus bytes — never the corpus text. AQE handles hot buckets
@@ -38,6 +46,9 @@ so a probe that only needs band-b candidates prunes 1/bands of the scan.
 """
 
 from __future__ import annotations
+
+import sys
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -51,9 +62,10 @@ from .snapshot_store import SnapshotStore
 __all__ = ["MinHashStore"]
 
 # A batch of at most this many documents is signed, matched and committed
-# on the driver (one store scan and one write); a larger one runs the
-# Spark signature pipeline. A sweep of one crawl step (flag + append of
-# the kept rows, 100-140-word docs, local[4]) put the driver path at 2.5-3x
+# on the driver (against the resident copy or one store scan, then one
+# write); a larger one runs the Spark signature pipeline. A sweep of one
+# crawl step (flag + append of the kept rows, 100-140-word docs, local[4],
+# store scanned) put the driver path at 2.5-3x
 # less process CPU at every size from 1k to 32k docs (0.8-1.1 vs 2.1-3.2
 # ms/doc from 4k up). Wall time breaks even near 16k docs, where one
 # driver thread signing no longer beats four executor cores (16k: 11-12 s
@@ -73,6 +85,11 @@ class MinHashStore(SnapshotStore):
     COUNT_KEY = "n_docs"
     PART_COL = "band"
     COLUMNS = ("band", "bucket", "id", "sig")
+    READ_SCHEMA = "band int, bucket bigint, id {id_type}, sig array<bigint>, snapshot string"
+
+    # what the last flag_batch or match_against matched against: the
+    # resident copy's label, or "scan" (the store's parquet snapshots)
+    last_source = "scan"
 
     @classmethod
     def create(
@@ -127,25 +144,69 @@ class MinHashStore(SnapshotStore):
 
     def _sign_local(self, rows, text_col: str, id_col: str):
         """:meth:`band_rows`' signatures of collected ``rows``:
-        ``(ids, sig, buckets)`` from :func:`minhash_bands_local`."""
+        ``(ids, sig, buckets)`` as from :func:`minhash_bands_local`.
+
+        An id whose text rows are exactly the ones the handle's last
+        driver-signed batch had for it keeps that batch's signature (the
+        append of a flagged batch's kept rows signs nothing); any other id
+        is signed."""
+        texts: dict = {}
+        for r in rows:
+            if r[text_col] is not None:
+                texts.setdefault(r[id_col], []).append(r[text_col])
+        last = getattr(self, "_signed", {})
+        todo = [i for i, t in texts.items() if i not in last or last[i][0] != t]
         m = self.manifest
-        return minhash_bands_local(
-            [r[id_col] for r in rows], [r[text_col] for r in rows],
+        fresh = minhash_bands_local(
+            [i for i in todo for _ in texts[i]], [t for i in todo for t in texts[i]],
             m["shingle_n"], m["num_perm"], m["bands"],
         )
+        signed = {i: (texts[i], s, b) for i, s, b in zip(*fresh)}
+        signed.update((i, last[i]) for i in texts.keys() - signed.keys())
+        ids = list(texts)
+        self._signed = {i: signed[i] for i in ids}
+        sig = np.empty((len(ids), m["num_perm"]), dtype=np.int64)
+        buckets = np.empty((len(ids), m["bands"]), dtype=np.int64)
+        for d, i in enumerate(ids):
+            _, sig[d], buckets[d] = signed[i]
+        return ids, sig, buckets
 
-    def _match_local(self, store: DataFrame, signed, threshold: float) -> pd.DataFrame:
-        """:meth:`match_against` for a batch signed on the driver: the
-        store rows sharing a ``(band, bucket)`` with the batch come back
-        from one store scan (a left-semi join to the broadcast local key
-        frame, whose build is one more small job), and the pairs are
-        verified in numpy. Returns pandas ``(id, store_id, snapshot,
-        est_jaccard)``."""
+    def _match_local(self, source, signed, threshold: float) -> pd.DataFrame:
+        """:meth:`match_against` for a batch signed on the driver, against
+        the handle's resident copy (``source`` a ``_StoreCopy``) or a scan
+        of the store (``source`` the store DataFrame). Returns pandas
+        ``(id, store_id, snapshot, est_jaccard)``.
+
+        The copy's candidates come from a per-band ``np.searchsorted`` of
+        the batch's buckets; the scan's from a left-semi join of the store
+        to the broadcast local ``(band, bucket)`` keys (one job for the
+        scan, one for the broadcast). Either way a (batch doc, store doc,
+        snapshot) pair colliding in several bands is verified once, by
+        signature agreement in numpy."""
         ids, sig, buckets = signed
+        cand = (
+            self._scan_candidates(source, buckets) if isinstance(source, DataFrame)
+            else _copy_candidates(source, buckets)
+        )
+        if cand is None:
+            return pd.DataFrame({"id": [], "store_id": [], "snapshot": [], "est_jaccard": []})
+        rows, store_id, snapshot, store_sig = cand
+        est = (sig[rows] == store_sig).sum(axis=1) / float(self.manifest["num_perm"])
+        keep = est >= threshold
+        return pd.DataFrame({
+            "id": [ids[r] for r in rows[keep]],
+            "store_id": store_id[keep],
+            "snapshot": snapshot[keep],
+            "est_jaccard": est[keep],
+        })
+
+    def _scan_candidates(self, store: DataFrame, buckets: np.ndarray):
+        """``(batch row, store id, snapshot, store sig)`` of every store row
+        sharing a ``(band, bucket)`` with the batch, from one store scan;
+        None when there is none."""
         n, bands = buckets.shape
-        out = pd.DataFrame({"id": [], "store_id": [], "snapshot": [], "est_jaccard": []})
         if n == 0:
-            return out
+            return None
         probe = pd.DataFrame({
             "band": np.tile(np.arange(bands, dtype=np.int32), n),
             "bucket": buckets.ravel(),
@@ -159,21 +220,36 @@ class MinHashStore(SnapshotStore):
             .select("band", "bucket", "id", "snapshot", "sig")
             .toPandas()
         )
-        # a (batch doc, store doc, snapshot) pair colliding in several
-        # bands is verified once
         pairs = probe.merge(cand, on=["band", "bucket"]).drop_duplicates(["row", "id", "snapshot"])
         if pairs.empty:
-            return out
-        rows = pairs["row"].to_numpy()
-        agree = (sig[rows] == np.stack(pairs["sig"].to_numpy())).sum(axis=1)
-        est = agree / float(self.manifest["num_perm"])
-        keep = est >= threshold
-        return pd.DataFrame({
-            "id": [ids[r] for r in rows[keep]],
-            "store_id": pairs["id"].to_numpy()[keep],
-            "snapshot": pairs["snapshot"].to_numpy()[keep],
-            "est_jaccard": est[keep],
-        })
+            return None
+        return (
+            pairs["row"].to_numpy(), pairs["id"].to_numpy(), pairs["snapshot"].to_numpy(),
+            np.stack(pairs["sig"].to_numpy()),
+        )
+
+    # -- resident copy ------------------------------------------------------
+
+    def _copy_item_bytes(self) -> float:
+        # per doc: a bigint id, a snapshot index, the signature, and per
+        # band a bucket and a row position
+        m = self.manifest
+        return 8 + 4 + 8 * m["num_perm"] + 12 * m["bands"]
+
+    def _copy_part(self, rows: pd.DataFrame, id_type: str) -> "Optional[_Part]":
+        return _Part.build(rows, id_type, self.manifest["bands"])
+
+    def _source(self):
+        """The store as a driver batch is matched against it: the resident
+        copy, else the lazy union of its snapshots (None when it has
+        none). Sets :attr:`last_source`."""
+        self._refresh()
+        copy = self._resident()
+        if copy is not None:
+            self.last_source = copy.label
+            return copy if copy.parts else None
+        self.last_source = "scan"
+        return self._store_df()
 
     # -- operations --------------------------------------------------------
 
@@ -183,10 +259,11 @@ class MinHashStore(SnapshotStore):
         """Fingerprint ``df`` and commit it as snapshot ``snapshot``.
         Typically called with the batch's KEPT rows (after
         :meth:`match_against` flagged dupes). A batch of at most
-        ``DRIVER_BATCH_DOCS`` rows is signed on the driver and goes out in
-        one write; a larger one takes one shuffle (the signature groupBy)
-        before its write. Either write is partitioned by band. Returns the
-        updated manifest entry."""
+        ``DRIVER_BATCH_DOCS`` rows is signed on the driver (reusing the
+        flag pass's signatures of unchanged ids) and goes out in one write,
+        which also joins the handle's resident copy; a larger one takes
+        one shuffle (the signature groupBy) before its write. Either write
+        is partitioned by band. Returns the updated manifest entry."""
         rows = self._local_batch(df, text_col, id_col)
         if rows is None:
             # band_rows emits exactly ``bands`` rows per signed document
@@ -204,7 +281,7 @@ class MinHashStore(SnapshotStore):
         })
         id_t = dict(df.dtypes)[id_col]
         schema = f"band int, bucket bigint, id {id_t}, sig array<bigint>"
-        return self._commit(snapshot, self.spark.createDataFrame(local, schema), n=len(ids))
+        return self._commit(snapshot, self.spark.createDataFrame(local, schema), n=len(ids), local=local)
 
     def match_against(
         self,
@@ -220,21 +297,26 @@ class MinHashStore(SnapshotStore):
         Candidates = band-bucket equality in ANY band (the LSH contract);
         verification = signature-agreement estimate. A (id, store_id) pair
         colliding in several bands is emitted once. A batch of at most
-        ``DRIVER_BATCH_DOCS`` rows is matched on the driver and its matches
-        come back as a local relation.
+        ``DRIVER_BATCH_DOCS`` rows is matched on the driver, against the
+        resident copy when the store has one (no Spark job), and its
+        matches come back as a local relation.
         """
-        store = self._store_df()
         id_t = dict(df.dtypes)[id_col]
-        if store is None:
+        rows = self._local_batch(df, text_col, id_col)
+        if rows is None:
+            self.last_source = "scan"
+            source = self._store_df()
+        else:
+            source = self._source()
+        if source is None:
             # track the caller's id dtype so empty- and non-empty-store
             # paths return the same schema (string doc ids included)
             schema = f"id {id_t}, store_id {id_t}, snapshot string, est_jaccard double"
             return self.spark.createDataFrame([], schema)
-        rows = self._local_batch(df, text_col, id_col)
         if rows is None:
-            return self._match_spark(store, df, text_col, id_col, threshold)
-        hits = self._match_local(store, self._sign_local(rows, text_col, id_col), threshold)
-        store_t = dict(store.dtypes)["id"]
+            return self._match_spark(source, df, text_col, id_col, threshold)
+        hits = self._match_local(source, self._sign_local(rows, text_col, id_col), threshold)
+        store_t = dict(source.dtypes)["id"] if isinstance(source, DataFrame) else source.id_type
         schema = f"id {id_t}, store_id {store_t}, snapshot string, est_jaccard double"
         return self.spark.createDataFrame(hits, schema)
 
@@ -290,20 +372,86 @@ class MinHashStore(SnapshotStore):
         ``DRIVER_BATCH_DOCS`` rows comes back as a local relation of the
         rows it was signed from."""
         rows = self._local_batch(df, text_col, id_col, whole=True)
-        store = self._store_df()
         if rows is None:
+            self.last_source = "scan"
+            store = self._store_df()
             hits = (
                 self.match_against(df, text_col, id_col, threshold)
                 if store is None
                 else self._match_spark(store, df, text_col, id_col, threshold)
             )
             return self._flag(df, id_col, hits, flag_col)
+        source = self._source()
         hit = set()
-        if store is not None:
+        if source is not None:
             signed = self._sign_local(rows, text_col, id_col)
-            hit = set(self._match_local(store, signed, threshold)["id"])
+            hit = set(self._match_local(source, signed, threshold)["id"])
         local = pd.DataFrame.from_records(rows, columns=df.columns)
         # a null id never matches, as in the Spark path's equi-join
         local[flag_col] = [r[id_col] is not None and r[id_col] in hit for r in rows]
         schema = df.withColumn(flag_col, F.lit(False)).schema
         return self.spark.createDataFrame(local, schema)
+
+
+# numpy dtypes of the resident copy's ids, per Spark id type
+_ID_DTYPES = {"tinyint": np.int8, "smallint": np.int16, "int": np.int32, "bigint": np.int64, "string": object}
+
+
+class _Part:
+    """One snapshot dir's MinHash docs in a store's resident copy. Per doc
+    (one ``(id, snapshot)``): ``ids``, ``snap`` (an index into ``names``)
+    and ``sig`` (``[n, num_perm]`` int64). Per band, ``bands[b]`` holds the
+    docs' buckets sorted and each bucket's doc position."""
+
+    def __init__(self, id_type: str, ids, snap, names, sig, bands: list):
+        self.id_type = id_type
+        self.ids, self.snap, self.names, self.sig, self.bands = ids, snap, names, sig, bands
+        self.n = len(ids)
+        self.nbytes = ids.nbytes + snap.nbytes + sig.nbytes + sum(b.nbytes + p.nbytes for b, p in bands)
+        if ids.dtype == object:
+            self.nbytes += sum(map(sys.getsizeof, ids))
+
+    @classmethod
+    def build(cls, rows: pd.DataFrame, id_type: str, bands: int) -> "Optional[_Part]":
+        """The part of a snapshot's band rows (pandas ``band, bucket, id,
+        sig, snapshot``), or None when it cannot hold them exactly: an id
+        type outside ``_ID_DTYPES``, or a null id, bucket or signature."""
+        if id_type not in _ID_DTYPES or rows[["id", "bucket", "sig", "snapshot"]].isna().to_numpy().any():
+            return None
+        ids = rows["id"].to_numpy(_ID_DTYPES[id_type])
+        snap, names = pd.factorize(rows["snapshot"])
+        doc, _ = pd.factorize(pd.factorize(ids)[0].astype(np.int64) * len(names) + snap)
+        _, first = np.unique(doc, return_index=True)
+        band, bucket = rows["band"].to_numpy(), rows["bucket"].to_numpy(np.int64)
+        per_band = []
+        for b in range(bands):
+            sel = band == b
+            order = np.argsort(bucket[sel], kind="stable")
+            per_band.append((bucket[sel][order], doc[sel][order].astype(np.int32)))
+        sig = np.stack(rows["sig"].to_numpy()[first])
+        return cls(id_type, ids[first], snap[first].astype(np.int32), np.asarray(names, object), sig, per_band)
+
+
+def _copy_candidates(copy, buckets: np.ndarray):
+    """``(batch row, store id, snapshot, store sig)`` of every resident doc
+    sharing a band's bucket with a batch doc, each (row, doc) pair once;
+    None when there is none."""
+    n = len(buckets)
+    out = []
+    for part in copy.parts.values():
+        rows, docs = [], []
+        for b, (keys, pos) in enumerate(part.bands):
+            lo = np.searchsorted(keys, buckets[:, b], "left")
+            cnt = np.searchsorted(keys, buckets[:, b], "right") - lo
+            total = int(cnt.sum())
+            if total:
+                starts = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+                rows.append(np.repeat(np.arange(n), cnt))
+                docs.append(pos[starts + np.arange(total)])
+        if rows:
+            pair = np.unique(np.concatenate(rows) * part.n + np.concatenate(docs))
+            r, d = pair // part.n, pair % part.n
+            out.append((r, part.ids[d], part.names[part.snap[d]], part.sig[d]))
+    if not out:
+        return None
+    return tuple(np.concatenate(col) for col in zip(*out))

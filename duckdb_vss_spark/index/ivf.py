@@ -470,11 +470,22 @@ def build_ivf(
     dim = stats["dmin"]
     if nlist is None:
         nlist = max(1, min(4096, int(math.sqrt(n) * 32.0 / m0)))
+    from ..operators import knn
+
     sample = src.select("vec")
     frac = min(1.0, kmeans_sample / n)
     if frac < 1.0:
         sample = sample.sample(fraction=frac, seed=seed)
-    smat = np.vstack(sample.toPandas()["vec"].to_numpy()).astype(np.float64)
+    # the sample is the whole source: when the index will be served from a
+    # resident copy, collect the ids with the vectors and hand the rows to
+    # the built handle, so its first query loads nothing
+    hand_off = (
+        frac == 1.0 and not (opts.get("pq_m") or opts.get("quantization"))
+        and n * (8 + 4 * dim) <= knn.RESIDENT_BYTES_BUDGET
+    )
+    spdf = (src if hand_off else sample).toPandas()
+    svec = np.vstack(spdf["vec"].to_numpy())
+    smat = svec.astype(np.float64)
     centroids = kmeans(smat, nlist, iters=kmeans_iters, seed=seed)
     nlist = centroids.shape[0]
     if opts.get("distributed_kmeans"):
@@ -590,7 +601,13 @@ def build_ivf(
         manifest["rerank_auto"] = {"target_recall": float(tr), **auto_diag}
     manifest.update(extra_manifest or {})
     fs.write_json(spark, fs.join(path, "manifest.json"), manifest)  # commit point
-    return IVFIndex(path, spark)
+    idx = IVFIndex(path, spark)
+    if hand_off:
+        # the executors' assignment rule, row for row; the handle knows the
+        # schema it would otherwise infer at its first parquet read
+        idx._data_schema = schema
+        idx._adopt_rows(spdf["id"].to_numpy(), svec, _nearest_centroid(svec, centroids, dtype=np.float32))
+    return idx
 
 
 def _ddl(df: DataFrame) -> str:
@@ -629,7 +646,8 @@ class _Resident:
         return np.concatenate(spans) if spans else np.empty(0, dtype=np.int64)
 
 
-# Every resident copy alive in this process: knn.RESIDENT_BYTES_BUDGET bounds
+# Every resident copy alive in this process, IVF indexes' and fingerprint
+# stores' (snapshot_store._StoreCopy) alike: knn.RESIDENT_BYTES_BUDGET bounds
 # the sum of their nbytes, not each one. A copy leaves the set when its
 # handle lets go of it (delete, compact, drop) or is garbage collected.
 _RESIDENT_LIVE: "weakref.WeakSet[_Resident]" = weakref.WeakSet()
@@ -639,7 +657,8 @@ _RESIDENT_LOAD_LOCK = threading.Lock()
 
 
 def resident_bytes() -> int:
-    """Bytes held by every resident copy in this process."""
+    """Bytes held by every resident copy in this process (indexes and
+    stores)."""
     return sum(r.nbytes for r in list(_RESIDENT_LIVE))
 
 
@@ -953,6 +972,18 @@ class IVFIndex:
                 return None  # heavier than estimated: dropped with ``res``
             self._resident_copy = res
         return res
+
+    def _adopt_rows(self, ids: np.ndarray, vec: np.ndarray, list_ids: np.ndarray) -> None:
+        """Make the base rows just written (``ids``, f32 ``vec`` and their
+        inverted ``list_ids``) the handle's resident copy, when they fit the
+        budget beside the process's other copies."""
+        from ..operators import knn
+
+        with _RESIDENT_LOAD_LOCK:
+            res = _Resident((self.data_path(), *self._delta_dirs()), ids, vec, list_ids, self.nlist)
+            self._resident_row_bytes = max(self._resident_row_bytes, res.nbytes / max(len(res.ids), 1))
+            if resident_bytes() <= knn.RESIDENT_BYTES_BUDGET:
+                self._resident_copy = res
 
     def _resident_search(self, spark: SparkSession, res: _Resident, query, k: int, lists) -> Optional[DataFrame]:
         """:meth:`search` over the resident rows of ``lists``, as a local
@@ -1280,7 +1311,7 @@ class IVFIndex:
         keep = {k: v for k, v in self.manifest.items() if k in ("index_name", "table_name", "column", "id_column")}
         data = data.cache()
         try:
-            build_ivf(
+            new = build_ivf(
                 data, "vec", "id", self.path,
                 metric=self.metric,
                 options=self.manifest.get("options"),
@@ -1297,8 +1328,8 @@ class IVFIndex:
                         fs.delete(spark, fs.join(self.path, leaf))
         finally:
             data.unpersist()
-        self._resident_copy = None  # the new version's handle reads its own
-        return IVFIndex(self.path, spark)
+        self._resident_copy = None  # the new version's handle holds its own
+        return new
 
     def drop(self) -> None:
         """DROP INDEX: free the artifact (reference: src/hnsw/hnsw_index.cpp:410-419)

@@ -594,8 +594,10 @@ def test_over_limit_batch_takes_spark_path(spark, store_root, monkeypatch):
 
 def test_driver_batch_runs_few_jobs_and_no_shuffle(spark, store_root):
     """Flag plus append of a 200-doc pandas-built batch, the crawl loop's
-    step: at most 5 Spark jobs (jobs from the job group's statusTracker
-    entry) and no shuffle bytes written (from each stage's status)."""
+    step, against a store resident on its handle: the flag runs no Spark
+    job and the append one, its write (jobs from each job group's
+    statusTracker entry), and no shuffle bytes are written (from each
+    stage's status)."""
     import pandas as pd
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -604,18 +606,181 @@ def test_driver_batch_runs_few_jobs_and_no_shuffle(spark, store_root):
     st.append_snapshot(spark.createDataFrame(batch[:200]), "text", "doc_id", "s0")
     df = spark.createDataFrame(pd.DataFrame(batch[200:]))
     sc = spark.sparkContext
-    sc.setJobGroup("driver-batch", "driver-batch")
     try:
+        sc.setJobGroup("driver-flag", "driver-flag")
         flags = st.flag_batch(df, "text", "doc_id").select("doc_id", "dup_of_store").collect()
+        sc.setJobGroup("driver-append", "driver-append")
         kept = df.filter(F.col("doc_id").isin([r[0] for r in flags if not r[1]]))
         st.append_snapshot(kept, "text", "doc_id", "s1")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("driver-batch")
+    flag_jobs = sc.statusTracker().getJobIdsForGroup("driver-flag")
+    jobs = [*flag_jobs, *sc.statusTracker().getJobIdsForGroup("driver-append")]
     stages = [s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds]
     status = sc._jsc.sc().statusStore()
-    assert len(flags) == 200 and len(jobs) <= 5
+    assert st.last_source == "resident (200 docs)"
+    assert len(flags) == 200 and len(flag_jobs) == 0 and len(jobs) <= 1
     assert sum(status.lastStageAttempt(s).shuffleWriteBytes() for s in stages) == 0
+
+
+def _scan(monkeypatch, fn):
+    """``fn()`` with resident copies off: every store is scanned."""
+    from duckdb_vss_spark.operators import knn
+
+    with monkeypatch.context() as mp:
+        mp.setattr(knn, "RESIDENT_BYTES_BUDGET", 0)
+        return fn()
+
+
+@pytest.mark.parametrize("id_t", ["bigint", "string"])
+def test_resident_and_scan_paths_agree(spark, tmp_path, monkeypatch, id_t):
+    """Matching against the resident copy gives the same pairs,
+    est_jaccard, flags and schemas as scanning the store (a fresh handle
+    with the budget at 0), at every step of create, append, another
+    handle's append, drop and vacuum: for the handle whose commits feed
+    its copy, for a stale handle that reads the other handle's dirs, for a
+    fresh handle (one job to load, none to match), and for a handle on a
+    store whose manifest entries predate the recorded id type."""
+    from duckdb_vss_spark.index import fs
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        F.col("doc_id").cast(id_t).alias("doc_id"), "text"
+    ).toPandas()
+    part = [spark.createDataFrame(docs[k::3], f"doc_id {id_t}, text string") for k in range(3)]
+    probe = spark.createDataFrame(docs[1::2], f"doc_id {id_t}, text string")
+    root = str(tmp_path / "st")
+    a = MinHashStore.create(spark, root)
+    b = MinHashStore.open(spark, root)
+
+    def run(st):
+        m = st.match_against(probe, "text", "doc_id")
+        f = st.flag_batch(probe, "text", "doc_id")
+        return sorted(map(tuple, m.collect())), m.dtypes, sorted(map(tuple, f.collect())), f.dtypes
+
+    def check(st):
+        n = MinHashStore.open(spark, root).info()["n_docs"]
+        got = run(st)
+        assert st.last_source == f"resident ({n} docs)"
+        scan = MinHashStore.open(spark, root)
+        assert _scan(monkeypatch, lambda: run(scan)) == got
+        # an empty copy fits any budget
+        assert scan.last_source == ("scan" if n else "resident (0 docs)")
+        return got
+
+    assert check(a)[0] == []
+    a.append_snapshot(part[0], "text", "doc_id", "s0")
+    assert check(a)[0]
+    assert a.info()["snapshots"][0]["id_type"] == id_t
+    b.append_snapshot(part[1], "text", "doc_id", "s1")
+    got = check(a)
+    assert {r[2] for r in got[0]} == {"s0", "s1"}
+    assert check(b) == got
+    a.drop_snapshot("s0")
+    a.append_snapshot(part[2], "text", "doc_id", "s2")
+    got = check(a)
+    assert {r[2] for r in got[0]} == {"s1", "s2"}
+    assert check(b) == got
+    assert a.vacuum() == ["snap-000000"]
+    assert check(b) == got
+    fresh = MinHashStore.open(spark, root)
+    sc = spark.sparkContext
+    load, match = f"copy-load-{id_t}", f"copy-match-{id_t}"
+    try:
+        sc.setJobGroup(load, load)
+        fresh.match_against(probe, "text", "doc_id").collect()
+        sc.setJobGroup(match, match)
+        fresh.match_against(probe, "text", "doc_id").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(load)) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(match)) == 0
+    assert check(fresh) == got
+    # a store written before entries recorded the id type
+    legacy = a.info()
+    for entry in legacy["snapshots"]:
+        del entry["id_type"]
+    fs.write_json(spark, fs.join(root, "manifest.json"), legacy)
+    assert check(MinHashStore.open(spark, root)) == got
+
+
+def test_stale_handle_after_overwrite_matches_the_new_store(spark, store_root, monkeypatch):
+    """A handle held across ``create(overwrite=True)`` at its root matches
+    the new store, whose first snapshot reuses the old first snapshot's
+    dir name, from its copy and from a scan alike."""
+    for scan in (False, True):
+        old = MinHashStore.create(spark, store_root, overwrite=True)
+        old.append_snapshot(_mk(spark, BASE), "text", "doc_id", "s1")
+        stale = MinHashStore.open(spark, store_root)
+
+        def hits():
+            m = stale.match_against(_mk(spark, NEW), "text", "doc_id")
+            return {(r.store_id, r.snapshot) for r in m.collect()}
+
+        assert (1, "s1") in (_scan(monkeypatch, hits) if scan else hits())
+        new = MinHashStore.create(spark, store_root, overwrite=True)
+        assert new.append_snapshot(_mk(spark, [(7, NEW[2][1])]), "text", "doc_id", "s2")["dir"] == "snap-000000"
+        assert (_scan(monkeypatch, hits) if scan else hits()) == {(7, "s2")}
+
+
+def test_store_copy_shares_the_budget_with_index_copies(spark, emb, store_root, tmp_path, monkeypatch):
+    """Store copies and IVF copies count against one process-wide budget:
+    with an index's copy held, a store copy that would go over the budget
+    is not built and the store is scanned; once the index lets its copy
+    go, the store is matched from its copy."""
+    import gc
+
+    from duckdb_vss_spark.index import ivf
+    from duckdb_vss_spark.index.ivf import build_ivf
+    from duckdb_vss_spark.operators import knn
+
+    st = MinHashStore.create(spark, store_root)
+    st.append_snapshot(_mk(spark, BASE), "text", "doc_id", "s1")
+    size = st._copy.nbytes
+    assert size == 3 * (8 + 4 + 8 * 16 + 12 * 4)
+    st = MinHashStore.open(spark, store_root)
+    gc.collect()
+    idx = build_ivf(emb, "embedding", "vec_id", str(tmp_path / "idx"))
+    assert idx._resident_copy is not None
+    before = ivf.resident_bytes()
+    monkeypatch.setattr(knn, "RESIDENT_BYTES_BUDGET", before + size - 1)
+    assert st.match_against(_mk(spark, NEW), "text", "doc_id").count() >= 1
+    assert st.last_source == "scan" and st._copy is None
+    idx.drop()
+    assert ivf.resident_bytes() <= before - idx.manifest["count"] * (8 + 4 * idx.dim)
+    assert st.match_against(_mk(spark, NEW), "text", "doc_id").count() >= 1
+    assert st.last_source == "resident (3 docs)"
+    assert ivf.resident_bytes() <= knn.RESIDENT_BYTES_BUDGET
+
+
+def test_append_signs_only_changed_ids(spark, store_root, monkeypatch):
+    """The append of a flagged batch's kept rows reuses the flag pass's
+    signature of an id only when its text rows are the ones that were
+    signed: a kept row whose text changed is signed again, and the
+    committed signatures equal a fresh signer's."""
+    from duckdb_vss_spark.operators.dedup import minhash_bands_local
+
+    st = MinHashStore.create(spark, store_root)
+    st.append_snapshot(_mk(spark, BASE), "text", "doc_id", "s1")
+    st.flag_batch(_mk(spark, NEW), "text", "doc_id").collect()
+    signed = []
+
+    def spy(ids, texts, *a):
+        signed.extend(ids)
+        return minhash_bands_local(ids, texts, *a)
+
+    monkeypatch.setattr(dedup_store, "minhash_bands_local", spy)
+    changed = "a rewritten third document that shares no words with the flagged one"
+    kept = [NEW[0], (103, changed)]
+    entry = st.append_snapshot(_mk(spark, kept), "text", "doc_id", "s2")
+    assert signed == [103]
+    snap = spark.read.parquet(f"{st.root}/{entry['dir']}")
+    got = sorted((r.band, r.bucket, r.id, tuple(r.sig)) for r in snap.collect())
+    ids, sig, buckets = minhash_bands_local([i for i, _ in kept], [t for _, t in kept], 3, 16, 4)
+    assert got == sorted(
+        (b, int(buckets[d, b]), ids[d], tuple(sig[d].tolist())) for d in range(2) for b in range(4)
+    )
+    hits = st.match_against(_mk(spark, [(9, changed)]), "text", "doc_id").collect()
+    assert [(r.store_id, r.snapshot, r.est_jaccard) for r in hits] == [(103, "s2", 1.0)]
 
 
 def _band_rows_match(spark, rows, id_t, shingle_n=3, num_perm=16, bands=4):

@@ -233,23 +233,47 @@ def test_resident_string_ids_order_as_spark(spark, emb, tmp_path, monkeypatch):
         assert len(got) == 25 and _bits(got, *cols) == _bits(want, *cols), ef
 
 
+@pytest.mark.parametrize("metric", METRICS)
+def test_built_copy_equals_loaded_copy(spark, emb, tmp_path, metric):
+    """The build hands its rows to the handle it returns, and that copy
+    holds bit for bit the ids, vectors and list ids a handle loads from
+    the written parquet (row order within a list aside)."""
+    from duckdb_vss_spark.index.ivf import IVFIndex, build_ivf
+
+    built = build_ivf(emb, "embedding", "vec_id", str(tmp_path / "idx"), metric=metric)
+    handed = built._resident_copy
+    loaded = IVFIndex(built.path, spark)._resident(spark)
+    assert handed is not None and loaded is not None and handed is not loaded
+
+    def rows(res):
+        lists = res.list_ids()
+        order = np.lexsort((res.ids, lists))
+        return res.ids[order], res.vec[order].view(np.int32), lists[order], res.offsets
+
+    for got, want in zip(rows(handed), rows(loaded)):
+        assert got.dtype == want.dtype and np.array_equal(got, want)
+    assert handed.nbytes == loaded.nbytes and handed.dirs == loaded.dirs
+
+
 def test_resident_budget_bounds_all_copies(spark, emb, tmp_path, monkeypatch):
     """The budget bounds the sum of every resident copy in the process: an
     index whose copy would go over it reads parquet until another copy is
-    released, which a delete and a drop both do."""
+    released, which a delete and a drop both do. The budget is set before
+    the builds, which hand their rows to the built handle while they fit."""
     import gc
 
     from duckdb_vss_spark.index import ivf
 
     gc.collect()  # copies of handles other tests left behind
+    one = emb.count() * (8 + 4 * 64)
+    monkeypatch.setattr(knn, "RESIDENT_BYTES_BUDGET", ivf.resident_bytes() + one * 3 // 2)
     eng = VSSEngine(spark, index_root=str(tmp_path))
     eng.register_table("emb_bud", emb.select("vec_id", "embedding"))
     for name in ("bud_a", "bud_b"):
         eng.create_index(name, "emb_bud", "embedding", "vec_id")
     a, b = eng.catalog.get("bud_a"), eng.catalog.get("bud_b")
     q = _queries()[0]
-    one = a.manifest["count"] * (8 + 4 * a.dim)
-    monkeypatch.setattr(knn, "RESIDENT_BYTES_BUDGET", ivf.resident_bytes() + one * 3 // 2)
+    assert one == a.manifest["count"] * (8 + 4 * a.dim)
 
     a.search(spark, q, 10).collect()
     assert a.last_source.startswith("resident") and a._resident_copy is not None
