@@ -193,7 +193,7 @@ class VSSEngine:
                 and {c.lower() for c in columns} <= {id_col.lower(), score_col.lower()}
             )
             extra = {"nprobe": idx.nprobe_for(decision.ef_search), "nlist": idx.nlist,
-                     "pq_m": idx.manifest.get("pq_m"),
+                     "codec": idx.codec.label if idx.codec is not None else None,
                      "backend": "graph" if getattr(idx, "is_graph", False) else "ivf",
                      "fetch": "none (covered)" if covered else "broadcast id-join"}
             hits = idx.search(self.spark, list(query), k, decision.ef_search)

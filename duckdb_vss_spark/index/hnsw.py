@@ -365,7 +365,6 @@ class GraphIndex(IVFIndex):
         # cell centroids: probed exactly like IVF lists (the inherited
         # probe_lists/probe_lists_batch read self.centroids + self.metric)
         self.centroids = fs.read_npy(self.spark, fs.join(self.vpath, "centroids.npy"))
-        self.pq_books = None
         self._init_read_caches()
 
     def compact_incremental(self, spark: SparkSession) -> "GraphIndex":

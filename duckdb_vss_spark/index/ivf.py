@@ -244,25 +244,16 @@ PROBE_SAMPLES = 16  # build-time recall probes for target_recall auto-sizing
 PROBE_K = 10        # the recall@k the auto-sizer targets
 
 
-def _auto_rerank(
-    spark: SparkSession,
-    data: DataFrame,
-    metric: str,
-    target: float,
-    floor: int,
-    books=None,
-    sq_scale=None,
-    b1_thr=None,
-) -> tuple[int, dict]:
+def _auto_rerank(spark: SparkSession, data: DataFrame, metric: str, target: float, codec) -> tuple[int, dict]:
     """Build-time re-rank shortlist sizing for ``target_recall`` (round 9):
     the executable form of the README's "size k*rerank to the tie-set"
     rule. Takes ``PROBE_SAMPLES`` deterministic probe vectors from the
     freshly written data, measures — under the SAME approximate scorer the
-    search path uses (ADC / dequantized SQ8 / Hamming, polarity included) —
-    the worst-case approximate rank of each probe's true top-``PROBE_K``
-    neighbors (ties counted against us, matching the shortlist's
-    (score, id) cut), and picks the shortlist size whose pooled rank
-    quantile reaches ``target``, with a 2x sampling margin.
+    search path uses (``codec.scorer``, polarity included) — the worst-case
+    approximate rank of each probe's true top-``PROBE_K`` neighbors (ties
+    counted against us, matching the shortlist's (score, id) cut), and
+    picks the shortlist size whose pooled rank quantile reaches ``target``,
+    with a 2x sampling margin and the codec's default as the floor.
 
     Cost: two extra distributed passes over the index data (exact top-k
     probe + rank counting), paid once at build. The chosen value and the
@@ -271,38 +262,11 @@ def _auto_rerank(
     from ..functions.kernels import pairwise_scores
 
     desc = METRIC_IS_DESCENDING[metric]
+    floor = codec.rerank_default
     probe_rows = data.select("id", "vec").orderBy("id").limit(PROBE_SAMPLES).collect()
     Q = np.vstack([np.asarray(r["vec"], dtype=np.float64) for r in probe_rows])
     S = Q.shape[0]
-    qnorms = np.linalg.norm(Q, axis=1)
-    luts = (
-        np.stack([pqmod.adc_lut(Q[s], books, metric) for s in range(S)])
-        if books is not None
-        else None
-    )
-    qcodes = pqmod.b1_encode(Q, b1_thr) if b1_thr is not None else None
-    bc = tracked_broadcast(spark.sparkContext, (Q, luts, sq_scale, qcodes))
-
-    def _approx(pdf: pd.DataFrame) -> np.ndarray:
-        """(n, S) approximate scores, exactly the search path's math."""
-        Qv, lut_t, sq_l, qc = bc.value
-        if lut_t is not None:
-            ap = np.stack(
-                [pqmod.adc_scores(pdf["codes"].tolist(), lut_t[s]) for s in range(len(Qv))],
-                axis=1,
-            )
-            if metric == "cosine":
-                ap = ap / np.maximum(
-                    np.outer(pdf["vnorm"].to_numpy(np.float64), qnorms), 1e-30
-                )
-            return ap
-        if sq_l is not None:
-            return pairwise_scores(pqmod.sq_decode(pdf["sq"].tolist(), sq_l), Qv, metric)
-        h = np.stack(
-            [pqmod.b1_hamming(pdf["b1"].tolist(), qc[s]).astype(np.float64) for s in range(len(Qv))],
-            axis=1,
-        )
-        return -h if desc else h
+    bc = tracked_broadcast(spark.sparkContext, (Q, codec))
 
     id_t = dict(data.dtypes)["id"]
     out_schema = f"probe int, id {id_t}, exact double, approx double"
@@ -311,14 +275,15 @@ def _auto_rerank(
         # accumulate the running top-K per probe ACROSS the partition's
         # batches and emit once: the driver collect is then
         # O(partitions * S * K), independent of row count
-        Qv = bc.value[0]
+        Qv, codec_l = bc.value
+        approx = codec_l.scorer(Qv, metric)
         best: list[pd.DataFrame | None] = [None] * len(Qv)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
             ex = pairwise_scores(mat, Qv, metric)
-            ap = _approx(pdf)
+            ap = approx(pdf)(0, len(Qv))
             ids = pdf["id"].to_numpy()
             for s in range(len(Qv)):
                 # (score, id) tiebreak, matching the engine's shortlist cut
@@ -357,11 +322,13 @@ def _auto_rerank(
     def count_ranks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # per-partition partial counts, one emit per partition
         ms = bc_m.value
+        Qv, codec_l = bc.value
+        approx = codec_l.scorer(Qv, metric)
         acc = np.zeros(ms.shape, dtype=np.int64)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ap = _approx(pdf)
+            ap = approx(pdf)(0, len(Qv))
             for s in range(ms.shape[0]):
                 # worst-case member position: strictly-better rows PLUS all
                 # ties (the shortlist cut breaks ties by id, so a member can
@@ -437,10 +404,10 @@ def build_ivf(
     The derived values are recorded in the manifest so ``index_info()`` and
     tests can observe the options' effect.
 
-    Extension option ``pq_m`` (see :mod:`.pq`) additionally trains per-subspace
-    codebooks and stores an ``m``-byte PQ code + the vector norm next to each
+    Extension options ``pq_m`` and ``quantization`` (``'i8'``/``'b1'``)
+    train a codec (see :mod:`.pq`) and store its code columns next to each
     row; the scan path then reads codes instead of vectors and re-ranks a
-    shortlist exactly (``pq_rerank`` * k candidates, default 4x).
+    shortlist exactly (``k * <codec>_rerank`` candidates).
     """
     metric = canonical_metric(metric)
     opts = dict(options or {})
@@ -494,58 +461,9 @@ def build_ivf(
         # cannot capture (see kmeans_distributed)
         centroids = kmeans_distributed(src, centroids, kmeans_iters)
 
-    pq_m = opts.get("pq_m")
-    if pq_m and dim % pq_m != 0:
-        raise ValueError(f"IVF-PQ option 'pq_m' ({pq_m}) must divide the vector dimension ({dim})")
-    qz = opts.get("quantization")
-    if qz and pq_m:
-        raise ValueError("IVF options 'pq_m' and 'quantization' are mutually exclusive")
-    books = pqmod.train_codebooks(smat, pq_m, seed=seed) if pq_m else None
-    sq_scale = pqmod.train_sq_scale(smat) if qz == "i8" else None
-    b1_thr = pqmod.train_b1_thresholds(smat) if qz == "b1" else None
-
-    bc = tracked_broadcast(spark.sparkContext, centroids)
-    bc_books = tracked_broadcast(spark.sparkContext, books) if books is not None else None
-    bc_sq = tracked_broadcast(spark.sparkContext, sq_scale) if sq_scale is not None else None
-    bc_b1 = tracked_broadcast(spark.sparkContext, b1_thr) if b1_thr is not None else None
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value
-        cbooks = bc_books.value if bc_books is not None else None
-        sq_l = bc_sq.value if bc_sq is not None else None
-        b1_l = bc_b1.value if bc_b1 is not None else None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-            pdf = pdf.assign(
-                list_id=_nearest_centroid(mat, cents, dtype=np.float32).astype(np.int32)
-            )
-            if cbooks is not None:
-                codes = pqmod.encode(mat, cbooks)
-                pdf = pdf.assign(
-                    codes=[c.tobytes() for c in codes],
-                    vnorm=np.linalg.norm(mat, axis=1).astype(np.float32),
-                )
-            if sq_l is not None:
-                pdf = pdf.assign(
-                    sq=[c.tobytes() for c in pqmod.sq_encode(mat, sq_l)]
-                )
-            if b1_l is not None:
-                pdf = pdf.assign(
-                    b1=[c.tobytes() for c in pqmod.b1_encode(mat, b1_l)]
-                )
-            yield pdf
-
+    codec = pqmod.from_options(opts, smat, seed)
     id_t = dict(df.dtypes)[id_col]
-    schema = f"id {id_t}, vec array<float>, list_id int"
-    if books is not None:
-        schema += ", codes binary, vnorm float"
-    if sq_scale is not None:
-        schema += ", sq binary"
-    if b1_thr is not None:
-        schema += ", b1 binary"
-    assigned = src.mapInPandas(assign, schema=schema)
+    assigned, schema = _assigned(src, centroids, codec, id_t)
     vdir = fs.join(path, version)
     # one file per inverted list; lists are the unit of search-time pruning
     (
@@ -555,20 +473,13 @@ def build_ivf(
         .parquet(fs.join(vdir, "data"))
     )
     fs.write_npy(spark, fs.join(vdir, "centroids.npy"), centroids)
-    if books is not None:
-        fs.write_npy(spark, fs.join(vdir, "pq_codebooks.npy"), books)
-    if sq_scale is not None:
-        fs.write_npy(spark, fs.join(vdir, "sq_scale.npy"), sq_scale)
-    if b1_thr is not None:
-        fs.write_npy(spark, fs.join(vdir, "b1_thresholds.npy"), b1_thr)
+    if codec is not None:
+        fs.write_npy(spark, fs.join(vdir, codec.artifact), codec.array)
     tr = opts.get("target_recall")
     auto_rerank = auto_diag = None
-    if tr is not None and (pq_m or qz):
-        rerank_key = "pq_rerank" if pq_m else ("sq_rerank" if qz == "i8" else "b1_rerank")
-        floor = 16 if rerank_key == "b1_rerank" else 4
+    if tr is not None and codec is not None:
         auto_rerank, auto_diag = _auto_rerank(
-            spark, spark.read.parquet(fs.join(vdir, "data")), metric, float(tr),
-            floor=floor, books=books, sq_scale=sq_scale, b1_thr=b1_thr,
+            spark, spark.read.parquet(fs.join(vdir, "data")), metric, float(tr), codec
         )
     manifest = {
         "format": "ivf-flat-parquet/v2",
@@ -584,20 +495,10 @@ def build_ivf(
         "kmeans_iters": kmeans_iters,
         "kmeans_sample": kmeans_sample,
     }
-    if pq_m:
-        manifest["pq_m"] = int(pq_m)
-        manifest["pq_rerank"] = int(opts.get("pq_rerank", 4))
-    if qz == "i8":
-        manifest["quantization"] = qz
-        manifest["sq_rerank"] = int(opts.get("sq_rerank", 4))
-    elif qz == "b1":
-        manifest["quantization"] = qz
-        # 1-bit codes are far coarser than i8: a wider exact-re-rank
-        # shortlist is the default posture (same lever as pq_rerank; the
-        # recall bench rides both the default and a raised point)
-        manifest["b1_rerank"] = int(opts.get("b1_rerank", 16))
+    if codec is not None:
+        manifest.update(codec.manifest_fields(opts))
     if auto_rerank is not None:
-        manifest[rerank_key] = auto_rerank
+        manifest[codec.rerank_key] = auto_rerank
         manifest["rerank_auto"] = {"target_recall": float(tr), **auto_diag}
     manifest.update(extra_manifest or {})
     fs.write_json(spark, fs.join(path, "manifest.json"), manifest)  # commit point
@@ -608,6 +509,28 @@ def build_ivf(
         idx._data_schema = schema
         idx._adopt_rows(spdf["id"].to_numpy(), svec, _nearest_centroid(svec, centroids, dtype=np.float32))
     return idx
+
+
+def _assigned(src: DataFrame, centroids: np.ndarray, codec, id_t: str) -> tuple[DataFrame, str]:
+    """``src`` (id, vec) in the data layout that build and incremental
+    compact write: each row's inverted list by the build's float32
+    assignment rule, and a quantized index's codec columns. Returns the
+    frame and its schema."""
+    bc = tracked_broadcast(src.sparkSession.sparkContext, (centroids, codec))
+
+    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cents, codec_l = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
+            pdf = pdf.assign(list_id=_nearest_centroid(mat, cents, dtype=np.float32).astype(np.int32))
+            if codec_l is not None:
+                pdf = pdf.assign(**codec_l.encode_columns(mat))
+            yield pdf
+
+    schema = f"id {id_t}, vec array<float>, list_id int{codec.schema if codec is not None else ''}"
+    return src.mapInPandas(assign, schema=schema), schema
 
 
 def _ddl(df: DataFrame) -> str:
@@ -671,6 +594,9 @@ class IVFIndex:
     # where the last search or index join read its rows: "parquet", or the
     # resident copy's label
     last_source = "parquet"
+    # the quantization codec (index/pq.py) of a PQ/SQ8/b1 artifact; None
+    # for flat and graph indexes
+    codec = None
 
     def __init__(self, path: str, spark: Optional[SparkSession] = None):
         self.path = path
@@ -680,24 +606,7 @@ class IVFIndex:
         self.version = self.manifest.get("version", "")
         self.vpath = fs.join(path, self.version) if self.version else path
         self.centroids = fs.read_npy(self.spark, fs.join(self.vpath, "centroids.npy"))
-        self.pq_books = (
-            fs.read_npy(self.spark, fs.join(self.vpath, "pq_codebooks.npy"))
-            if self.manifest.get("pq_m")
-            else None
-        )
-        # pre-'b1' manifests wrote quantization only as 'i8'; keep them
-        # loading by treating any non-'b1' truthy value as the i8 path
-        _qz = self.manifest.get("quantization")
-        self.sq_scale = (
-            fs.read_npy(self.spark, fs.join(self.vpath, "sq_scale.npy"))
-            if _qz and _qz != "b1"
-            else None
-        )
-        self.b1_thresholds = (
-            fs.read_npy(self.spark, fs.join(self.vpath, "b1_thresholds.npy"))
-            if _qz == "b1"
-            else None
-        )
+        self.codec = pqmod.load(self.manifest, lambda name: fs.read_npy(self.spark, fs.join(self.vpath, name)))
         self._init_read_caches()
         # incremental-compact crash repair: a manifest committed with
         # pending_tail_delete means the tail's rows are already live in the
@@ -936,9 +845,7 @@ class IVFIndex:
         ``compact_incremental`` folds into a delta the copy can read alone."""
         from ..operators import knn
 
-        if getattr(self, "is_graph", False) or any(
-            x is not None for x in (self.pq_books, self.sq_scale, self.b1_thresholds)
-        ):
+        if getattr(self, "is_graph", False) or self.codec is not None:
             return None
         budget, need = knn.RESIDENT_BYTES_BUDGET, int(self.manifest["count"]) * self._resident_row_bytes
         if need > budget or self._has_deleted(spark):
@@ -1006,17 +913,13 @@ class IVFIndex:
 
     def search(self, spark: SparkSession, query: list[float], k: int, ef_search: int | None = None) -> DataFrame:
         """Top-k (id, score) for one query vector; score polarity follows the
-        metric. Exact within the probed lists (PQ artifacts re-rank a code-
-        selected shortlist with the exact expression, so reported scores stay
-        exact there too — only membership is approximate). A resident copy
+        metric. Exact within the probed lists (quantized artifacts re-rank a
+        code-selected shortlist with the exact expression, so reported scores
+        stay exact there too — only membership is approximate). A resident copy
         answers without a Spark job, with the same rows and doubles."""
         self.last_source = "parquet"
-        if self.pq_books is not None:
-            return self._pq_search(spark, query, k, ef_search)
-        if self.sq_scale is not None:
-            return self._sq_search(spark, query, k, ef_search)
-        if self.b1_thresholds is not None:
-            return self._b1_search(spark, query, k, ef_search)
+        if self.codec is not None:
+            return self._quantized_search(spark, query, k, ef_search)
         res = self._resident(spark)
         if res is not None:
             if len(query) != self.dim:
@@ -1031,121 +934,43 @@ class IVFIndex:
         order = [F.col("score").desc() if desc else F.col("score").asc(), F.col("id").asc()]
         return scored.orderBy(*order).limit(k)
 
-    def _pq_search(self, spark: SparkSession, query: list[float], k: int, ef_search: int | None) -> DataFrame:
-        """IVF-PQ scan: ADC over the probed lists reading ONLY (id, codes,
-        vnorm) — parquet column pruning keeps the heavy ``vec`` column out of
-        the hot scan — then an exact re-rank of the top ``k * pq_rerank``
-        candidates (vectors fetched by broadcast id-join from the same pruned
-        partitions). Tail rows are unioned brute-force-exact; deleted ids are
-        dropped before every top-k cut (same tombstone contract as
-        :meth:`candidates`)."""
-        metric = self.metric
-        lut = pqmod.adc_lut(np.asarray(query, dtype=np.float64), self.pq_books, metric)
-        bc_lut = tracked_broadcast(spark.sparkContext, lut)
-        qnorm = float(np.linalg.norm(np.asarray(query, dtype=np.float64)))
-
-        def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            table = bc_lut.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                s = pqmod.adc_scores(pdf["codes"].tolist(), table)
-                if metric == "cosine":
-                    s = s / np.maximum(qnorm * pdf["vnorm"].to_numpy(np.float64), 1e-30)
-                yield pd.DataFrame({"id": pdf["id"], "score": s})
-
-        return self._quantized_search(
-            spark, query, k, ef_search, cols=["codes", "vnorm"],
-            approx_fn=adc, rerank=int(self.manifest.get("pq_rerank", 4)),
-        )
-
-    def _sq_search(self, spark: SparkSession, query: list[float], k: int, ef_search: int | None) -> DataFrame:
-        """SQ8 scan (``quantization: 'i8'``): the hot scan reads ONLY
-        (id, sq) — dim bytes/row instead of 4*dim — dequantizes per batch
-        and scores with the GEMM kernel, then exactly re-ranks the top
-        ``k * sq_rerank`` candidates with the full vectors. Same re-rank /
-        tail / tombstone contract as :meth:`_pq_search`, with a per-dim
-        reconstruction error bound of ``1/(2*scale_d)`` instead of
-        codebook distortion."""
-        from ..functions.kernels import pairwise_scores
-
-        metric = self.metric
-        bc_scale = tracked_broadcast(spark.sparkContext, self.sq_scale)
-        q = np.asarray(query, dtype=np.float64)[None, :]
-
-        def approx_scores(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            scale = bc_scale.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = pqmod.sq_decode(pdf["sq"].tolist(), scale)
-                s = pairwise_scores(mat, q, metric)[:, 0]
-                yield pd.DataFrame({"id": pdf["id"], "score": s})
-
-        return self._quantized_search(
-            spark, query, k, ef_search, cols=["sq"],
-            approx_fn=approx_scores, rerank=int(self.manifest.get("sq_rerank", 4)),
-        )
-
-    def _b1_search(self, spark: SparkSession, query: list[float], k: int, ef_search: int | None) -> DataFrame:
-        """Binary scan (``quantization: 'b1'``, usearch's b1x8 scalar kind):
-        the hot scan reads ONLY (id, b1) — ceil(dim/64)*8 bytes/row, 32x
-        less IO than f32 at dim=64 — and ranks by Hamming distance over the
-        packed sign codes (a monotone proxy for angular order), then
-        exactly re-ranks the top ``k * b1_rerank`` with the full vectors.
-        Hamming is polarity-normalized into the metric's direction so the
-        shared shortlist machinery applies unchanged; reported scores are
-        exact (re-rank contract identical to PQ/SQ8)."""
+    def _quantized_search(self, spark: SparkSession, query, k: int, ef_search) -> DataFrame:
+        """The quantized scan (PQ, SQ8 or b1): the probed lists' codes scan
+        reads ONLY ``(id, <codec columns>)`` — parquet column pruning keeps
+        the heavy ``vec`` column out of the hot scan — and scores them with
+        the codec's batch scorer for this one query; then an approximate
+        shortlist of ``k * rerank`` (tombstones dropped first so live rows
+        keep every slot), an exact re-rank of its vectors (fetched by
+        broadcast id-join from the same pruned partitions), the brute-exact
+        tail union and the final top-k cut."""
         if len(query) != self.dim:
             raise ValueError(f"query dimension {len(query)} != index dimension {self.dim}")
-        metric = self.metric
+        metric, codec = self.metric, self.codec
+        bc = tracked_broadcast(spark.sparkContext, (codec, np.asarray(query, dtype=np.float64)[None, :]))
+
+        def approx(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            codec_l, q = bc.value
+            prep = codec_l.scorer(q, metric)
+            for pdf in batches:
+                if len(pdf):
+                    yield pd.DataFrame({"id": pdf["id"], "score": prep(pdf)(0, 1)[:, 0]})
+
         desc = METRIC_IS_DESCENDING[metric]
-        qcode = pqmod.b1_encode(
-            np.asarray(query, dtype=np.float64)[None, :], self.b1_thresholds
-        )[0]
-        bc_q = tracked_broadcast(spark.sparkContext, qcode)
-
-        def approx_scores(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qc = bc_q.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                h = pqmod.b1_hamming(pdf["b1"].tolist(), qc).astype(np.float64)
-                # smaller hamming = more similar; flip for descending
-                # metrics so the shared polarity ordering shortlists right
-                yield pd.DataFrame({"id": pdf["id"], "score": -h if desc else h})
-
-        return self._quantized_search(
-            spark, query, k, ef_search, cols=["b1"],
-            approx_fn=approx_scores, rerank=int(self.manifest.get("b1_rerank", 16)),
-        )
-
-    def _quantized_search(
-        self, spark: SparkSession, query, k: int, ef_search, cols: list, approx_fn, rerank: int
-    ) -> DataFrame:
-        """Shared skeleton of the quantized scans: probed-list codes scan →
-        approximate shortlist (``k * rerank``, tombstones dropped first so
-        live rows keep every slot) → exact re-rank of the fetched vectors →
-        brute-exact tail union → final top-k cut."""
-        if len(query) != self.dim:
-            raise ValueError(f"query dimension {len(query)} != index dimension {self.dim}")
-        desc = METRIC_IS_DESCENDING[self.metric]
-        lists = self.probe_lists(query, self.nprobe_for(ef_search))
-        data = self.data_df(spark, lists)
+        data = self.data_df(spark, self.probe_lists(query, self.nprobe_for(ef_search)))
         id_t = self.manifest.get("id_type", "bigint")
-        approx = data.select("id", *cols).mapInPandas(approx_fn, schema=f"id {id_t}, score double")
+        scores = data.select("id", *codec.scan_cols).mapInPandas(approx, schema=f"id {id_t}, score double")
         deleted = self.deleted_df(spark)
         if deleted is not None:
-            approx = approx.join(deleted, "id", "left_anti")
+            scores = scores.join(deleted, "id", "left_anti")
         order = [F.col("score").desc() if desc else F.col("score").asc(), F.col("id").asc()]
-        shortlist = approx.orderBy(*order).limit(max(k, k * rerank)).select("id")
+        shortlist = scores.orderBy(*order).limit(max(k, k * codec.rerank(self.manifest))).select("id")
         fetched = data.select("id", "vec").join(F.broadcast(shortlist), "id")
         tail = self.tail_df(spark)
         if tail is not None:
             if deleted is not None:
                 tail = tail.join(deleted, "id", "left_anti")
             fetched = fetched.unionByName(tail)
-        scored = fetched.select("id", distance_expr("vec", bound_vec(query), self.metric).alias("score"))
+        scored = fetched.select("id", distance_expr("vec", bound_vec(query), metric).alias("score"))
         return scored.orderBy(*order).limit(k)
 
     # -- maintenance ------------------------------------------------------
@@ -1208,8 +1033,8 @@ class IVFIndex:
         that matters when the index is 100 TB and the tail is 0.1% of it.
 
         Tail rows are assigned to the EXISTING centroids with the same
-        float32 assignment rule as the build (``_nearest_centroid``; PQ
-        artifacts also encode codes against the existing codebooks), and
+        float32 assignment rule as the build (``_assigned``; quantized
+        artifacts also encode with the existing codec), and
         written to ``<version>/delta-NNNNNN/`` partitioned by list id —
         search-time partition pruning treats base and deltas identically
         (``data_df``). Centroids are NOT refit: like growing an IVF index
@@ -1233,45 +1058,10 @@ class IVFIndex:
         ddir = fs.join(self.vpath, dname)
         if fs.exists(spark, ddir):  # orphan from a crashed attempt
             fs.delete(spark, ddir)
-        cents = self.centroids
-        books = self.pq_books
-        sq_scale = self.sq_scale
-        b1_thr = self.b1_thresholds
-        bc = tracked_broadcast(spark.sparkContext, (cents, books, sq_scale, b1_thr))
-
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cents_l, books_l, sq_l, b1_l = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-                pdf = pdf.assign(
-                    list_id=_nearest_centroid(mat, cents_l, dtype=np.float32).astype(np.int32)
-                )
-                if books_l is not None:
-                    codes = pqmod.encode(mat, books_l)
-                    pdf = pdf.assign(
-                        codes=[c.tobytes() for c in codes],
-                        vnorm=np.linalg.norm(mat, axis=1).astype(np.float32),
-                    )
-                if sq_l is not None:
-                    pdf = pdf.assign(sq=[c.tobytes() for c in pqmod.sq_encode(mat, sq_l)])
-                if b1_l is not None:
-                    pdf = pdf.assign(b1=[c.tobytes() for c in pqmod.b1_encode(mat, b1_l)])
-                yield pdf
-
-        id_t = self.manifest.get("id_type", "bigint")
-        schema = f"id {id_t}, vec array<float>, list_id int"
-        if books is not None:
-            schema += ", codes binary, vnorm float"
-        if sq_scale is not None:
-            schema += ", sq binary"
-        if b1_thr is not None:
-            schema += ", b1 binary"
+        assigned, _ = _assigned(tail, self.centroids, self.codec, self.manifest.get("id_type", "bigint"))
         n_tail = tail.count()
         (
-            tail.mapInPandas(assign, schema=schema)
-            .repartition(F.col("list_id"))
+            assigned.repartition(F.col("list_id"))
             .write.mode("overwrite")
             .partitionBy("list_id")
             .parquet(ddir)

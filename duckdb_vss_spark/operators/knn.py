@@ -39,6 +39,18 @@ probes at a time, reference: src/hnsw/hnsw_optimize_join.cpp:135):
   then the rank in numpy, so the probe collect (a bounded collect: two
   small jobs and no shuffle) is its only Spark work.
 
+``cell-cogroup`` (index joins with a probe side too big to broadcast, or
+of at least ``DISTRIBUTED_MIN_PROBES`` probes —
+:func:`knn_join_flat_indexed_distributed`): probes assign to their probed
+cells map-side, both sides shuffle by cell, and each cell runs the same fold
+(:func:`fold_topk`) over its rows for its probes, emitting exact ``(qid,
+rid, score)`` rows; the tail's rows come from the same fold per probe
+batch, and the per-probe window cuts to k. No driver collect anywhere.
+
+Quantized artifacts (:mod:`..index.pq`) run the same fold with their
+codec's scorer over the code columns instead of the vectors, and re-rank
+the shortlist exactly.
+
 ``crossjoin``: pure DataFrame fallback (cross join + window top-k) when the
 probe side is itself huge; correct at any size but O(|L|*|R|) compute —
 the same asymptotics the reference macro has.
@@ -121,63 +133,74 @@ def _anti_join_deleted(df: DataFrame, deleted_df, small: bool, id_col: str = "id
     return df.join(F.broadcast(d) if small else d, id_col, "left_anti")
 
 
-def fold_topk(items, qids, qmat, k: int, metric: str, mask=None) -> "pd.DataFrame | None":
-    """The broadcast kernel's per-probe top-k fold (module docstring, steps
-    2-3) over ``items``, an iterable of ``(rids, vecs, lists)`` batches:
-    one GEMM per batch picks each probe's running top-k, then the survivors
-    are scored with ``paired_exact_scores``. ``mask`` (nlist, nq) bool lets
-    a row compete only for the probes whose probe set holds its inverted
-    list (``lists``, one id per row; None without a mask). Returns the
-    ``(qid, rid, score)`` survivors, or None when no row arrived. The Spark
-    kernel runs it once per partition, an index's resident copy once on the
-    driver, so both score alike."""
+def fold_topk(items, qids, qmat, k: int, metric: str, mask=None, scorer=None) -> "pd.DataFrame | None":
+    """The running per-probe top-k fold (module docstring, steps 2-3) over
+    ``items``, an iterable of ``(rids, batch, lists)`` batches: per batch
+    and probe chunk, one scoring call picks each probe's running top-k.
+
+    Without ``scorer`` each ``batch`` is the rows' (n, d) vectors: a GEMM
+    (``pairwise_scores``) picks the survivors, which are then scored with
+    ``paired_exact_scores``. With ``scorer`` (a codec's, see
+    :mod:`..index.pq`) each ``batch`` is the pandas batch its ``prep``
+    reads, and the survivors keep the codec's approximate score, for the
+    caller's exact re-rank. ``mask`` (nlist, nq) bool lets a row compete
+    only for the probes whose probe set holds its inverted list (``lists``,
+    one id per row; None without a mask). Returns the ``(qid, rid, score)``
+    survivors, or None when no row arrived; a NaN or masked-out score never
+    survives. The Spark kernels run it once per partition or cell, an
+    index's resident copy once on the driver, so every path scores alike."""
     import numpy as np
 
     desc = METRIC_IS_DESCENDING[metric]
+    fill = -np.inf if desc else np.inf
     nq = len(qids)
-    # Running per-probe top-k fold across the batches. best_scores/best_rids
-    # are (k, nq); best_vecs (k, nq, d) f32 keeps the candidate vectors for
-    # the exact score at the end.
+    # best_scores/best_rids are (k, nq); best_vecs (k, nq, d) f32 keeps the
+    # candidate vectors for the exact score at the end
     best_scores = best_rids = best_vecs = None
-    for rids, vecs, lists in items:
-        vecs32 = vecs.astype(np.float32, copy=False)
-        imat = np.ascontiguousarray(vecs32, dtype=np.float64)
+    for rids, batch, lists in items:
+        if scorer is None:
+            vecs32 = batch.astype(np.float32, copy=False)
+            imat = np.ascontiguousarray(vecs32, dtype=np.float64)
+            score = lambda q0, q1: pairwise_scores(imat, qmat[q0:q1], metric)  # noqa: E731
+        else:
+            score = scorer(batch)
         if best_scores is None:
-            d = imat.shape[1]
-            best_scores = np.full((k, nq), -np.inf if desc else np.inf)
+            best_scores = np.full((k, nq), fill)
             # object dtype + None sentinel: rid columns may be strings,
             # where an int64 fill would crash the vstack with a cast error
             rid_numeric = np.issubdtype(rids.dtype, np.number)
             best_rids = (
                 np.full((k, nq), -1, dtype=np.int64) if rid_numeric else np.full((k, nq), None, dtype=object)
             )
-            best_vecs = np.zeros((k, nq, d), dtype=np.float32)
+            if scorer is None:
+                best_vecs = np.zeros((k, nq, imat.shape[1]), dtype=np.float32)
         for q0 in range(0, nq, _PROBE_CHUNK):
             q1 = min(q0 + _PROBE_CHUNK, nq)
-            scores = pairwise_scores(imat, qmat[q0:q1], metric)  # (n_items, chunk)
+            scores = score(q0, q1)  # (n_items, chunk)
             if mask is not None:
-                allowed = mask[lists][:, q0:q1]  # (n_items, chunk)
-                scores = np.where(allowed, scores, -np.inf if desc else np.inf)
+                scores = np.where(mask[lists][:, q0:q1], scores, fill)
             idx = local_topk(scores, k, desc)  # (k', chunk)
             cols = np.arange(q1 - q0)[None, :]
             merged_s = np.vstack([best_scores[:, q0:q1], scores[idx, cols]])
             merged_r = np.vstack([best_rids[:, q0:q1], rids[idx]])
-            merged_v = np.concatenate([best_vecs[:, q0:q1, :], vecs32[idx]], axis=0)
             keep = local_topk(merged_s, k, desc)
             best_scores[: keep.shape[0], q0:q1] = merged_s[keep, cols]
             best_rids[: keep.shape[0], q0:q1] = merged_r[keep, cols]
-            best_vecs[: keep.shape[0], q0:q1, :] = merged_v[keep, cols, :]
+            if best_vecs is not None:
+                merged_v = np.concatenate([best_vecs[:, q0:q1, :], vecs32[idx]], axis=0)
+                best_vecs[: keep.shape[0], q0:q1, :] = merged_v[keep, cols, :]
     if best_scores is None:
         return None
-    # every (slot, probe) scored exactly against its own probe, then fill
-    # slots and masked-out entries dropped (both carry +-inf kernel scores)
-    exact = paired_exact_scores(qmat, best_vecs, metric)  # (k, nq)
+    # fill slots, masked-out entries and NaN scores dropped; every kept
+    # vector slot is scored exactly against its own probe
     valid = np.isfinite(best_scores.ravel(order="F"))
+    if best_vecs is not None:
+        best_scores = paired_exact_scores(qmat, best_vecs, metric)  # (k, nq)
     return pd.DataFrame(
         {
             "qid": np.repeat(qids, k)[valid],
             "rid": best_rids.ravel(order="F")[valid],
-            "score": exact.ravel(order="F")[valid],
+            "score": best_scores.ravel(order="F")[valid],
         }
     )
 
@@ -195,8 +218,10 @@ def _candidates_broadcast(
     right_list_col: str | None = None,
     excluded_ids=None,
     probes_pdf: "pd.DataFrame | None" = None,
+    codec=None,
 ) -> DataFrame:
-    """Per-partition top-k candidate generation (see module docstring).
+    """Per-partition top-k candidate generation (see module docstring):
+    ``(qid, rid, score)`` rows from :func:`fold_topk`.
 
     ``probe_mask`` (nlist, nq) bool + ``right_list_col``: IVF index-join mode —
     item rows only compete for probes whose probe-set contains the item's
@@ -207,6 +232,11 @@ def _candidates_broadcast(
     per-partition top-k cut — deleted rows must not crowd live neighbors out
     of the k slots (the reference's tombstones are likewise invisible before
     the cut, reference: src/hnsw/hnsw_index.cpp:496-512).
+
+    ``codec``: a quantized artifact's codec (:mod:`..index.pq`). The kernel
+    then reads its code columns of ``right`` instead of ``right_on`` (never
+    the f32 vectors; fold memory is O(k * nq) scalars) and the score is the
+    codec's approximate one, for the caller's exact re-rank.
     """
     import numpy as np  # noqa: F811
 
@@ -220,12 +250,12 @@ def _candidates_broadcast(
     qids = probes_pdf["qid"].to_numpy()
     qmat = as_matrix(probes_pdf["v"]) if len(probes_pdf) else None
     excl = np.asarray(list(excluded_ids)) if excluded_ids is not None and len(excluded_ids) else None
-    bc = tracked_broadcast(spark.sparkContext, (qids, qmat, probe_mask, excl))
+    bc = tracked_broadcast(spark.sparkContext, (qids, qmat, probe_mask, excl, codec))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        qids_l, qmat_l, mask_l, excl_l = bc.value
+        qids_l, qmat_l, mask_l, excl_l, codec_l = bc.value
         if qmat_l is None:
             return
 
@@ -235,16 +265,21 @@ def _candidates_broadcast(
                     pdf = pdf[~pdf["rid"].isin(excl_l)]
                 if len(pdf):
                     lists = pdf["__lst"].to_numpy() if mask_l is not None else None
-                    yield pdf["rid"].to_numpy(), np.vstack(pdf["v"].to_numpy()), lists
+                    batch = pdf if codec_l is not None else np.vstack(pdf["v"].to_numpy())
+                    yield pdf["rid"].to_numpy(), batch, lists
 
-        out = fold_topk(items(), qids_l, qmat_l, k, metric, mask_l)
+        scorer = codec_l.scorer(qmat_l, metric) if codec_l is not None else None
+        out = fold_topk(items(), qids_l, qmat_l, k, metric, mask_l, scorer)
         if out is not None:
             yield out
 
-    item_cols = [F.col(right_id).alias("rid"), F.col(right_on).alias("v")]
+    payload = [F.col(c) for c in codec.scan_cols] if codec is not None else [F.col(right_on).alias("v")]
+    item_cols = [F.col(right_id).alias("rid"), *payload]
     if right_list_col is not None:
         item_cols.append(F.col(right_list_col).alias("__lst"))
-    items = right.select(*item_cols).filter(F.col(right_on).isNotNull())
+    items = right.select(*item_cols)
+    if codec is None:
+        items = items.filter(F.col(right_on).isNotNull())
     qid_t = dict(left.dtypes)[left_id]
     rid_t = dict(right.dtypes)[right_id]
     # The GEMM picks candidates; their authoritative score comes from
@@ -252,220 +287,6 @@ def _candidates_broadcast(
     # ``distance_expr`` (which matches DuckDB's DOUBLE[] computation after
     # an f32 round-trip), so the probe side is read once, by the collect.
     return items.mapInPandas(gen, schema=f"qid {qid_t}, rid {rid_t}, score double")
-
-
-def _quantized_candidates(
-    left: DataFrame,
-    data: DataFrame,
-    left_id: str,
-    k_sel: int,
-    metric: str,
-    index,
-    probe_mask,
-    excluded_ids,
-    probes_pdf,
-    data_cols: list,
-    bc_extra,
-    make_batch_scorer,
-) -> DataFrame:
-    """Shared probe-mask fold for codes-only candidate generation over a
-    quantized artifact (PQ and SQ8 wrap this with their scorers): scans
-    only ``data_cols`` (never the f32 vectors), keeps an O(k_sel x nq)
-    running per-probe top-k across the partition's Arrow batches, and
-    returns (qid, rid) pairs for the caller's exact re-rank.
-
-    ``make_batch_scorer(extra, qmat, metric)`` runs once per partition
-    (e.g. PQ builds its per-query LUTs there) and returns a per-batch
-    function ``prep(pdf) -> score(q0, q1) -> (n, chunk) ndarray``.
-    """
-    import numpy as np
-
-    spark = left.sparkSession
-    qids = probes_pdf["qid"].to_numpy()
-    qmat = as_matrix(probes_pdf["v"]) if len(probes_pdf) else None
-    excl = np.asarray(list(excluded_ids)) if excluded_ids is not None and len(excluded_ids) else None
-    bc = tracked_broadcast(spark.sparkContext, (qids, qmat, probe_mask, excl, bc_extra))
-    desc = METRIC_IS_DESCENDING[metric]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        qids_l, qmat_l, mask_l, excl_l, extra_l = bc.value
-        if qmat_l is None:
-            return
-        nq = len(qids_l)
-        prep = make_batch_scorer(extra_l, qmat_l, metric)
-        best_scores = best_rids = None
-        for pdf in batches:
-            if excl_l is not None and len(pdf):
-                pdf = pdf[~pdf["rid"].isin(excl_l)]
-            if len(pdf) == 0:
-                continue
-            rids = pdf["rid"].to_numpy()
-            score = prep(pdf)
-            if best_scores is None:
-                best_scores = np.full((k_sel, nq), -np.inf if desc else np.inf)
-                rid_numeric = np.issubdtype(rids.dtype, np.number)
-                best_rids = (
-                    np.full((k_sel, nq), -1, dtype=np.int64)
-                    if rid_numeric
-                    else np.full((k_sel, nq), None, dtype=object)
-                )
-            lists = pdf["__lst"].to_numpy() if mask_l is not None else None
-            for q0 in range(0, nq, _PROBE_CHUNK):
-                q1 = min(q0 + _PROBE_CHUNK, nq)
-                scores = score(q0, q1)
-                if mask_l is not None:
-                    allowed = mask_l[lists][:, q0:q1]
-                    scores = np.where(allowed, scores, -np.inf if desc else np.inf)
-                idx = local_topk(scores, k_sel, desc)
-                cols = np.arange(q1 - q0)[None, :]
-                merged_s = np.vstack([best_scores[:, q0:q1], scores[idx, cols]])
-                merged_r = np.vstack([best_rids[:, q0:q1], rids[idx]])
-                keep = local_topk(merged_s, k_sel, desc)
-                best_scores[: keep.shape[0], q0:q1] = merged_s[keep, cols]
-                best_rids[: keep.shape[0], q0:q1] = merged_r[keep, cols]
-        if best_scores is None:
-            return
-        valid = np.isfinite(best_scores.ravel(order="F"))
-        out_q = np.repeat(qids_l, k_sel)[valid]
-        out_r = best_rids.ravel(order="F")[valid]
-        yield pd.DataFrame({"qid": out_q, "rid": out_r})
-
-    items = data.select(
-        F.col("id").alias("rid"), *data_cols, F.col("list_id").alias("__lst")
-    )
-    qid_t = dict(left.dtypes)[left_id]
-    rid_t = index.manifest.get("id_type", "bigint")
-    return items.mapInPandas(gen, schema=f"qid {qid_t}, rid {rid_t}")
-
-
-def _pq_batch_scorer(books_l, qmat_l, metric):
-    """ADC scorer for the shared fold: per-partition per-query lookup
-    tables built from the broadcast codebooks + probe matrix (nq*m*256
-    doubles would be a heavy driver broadcast; recomputing per partition
-    is ~33 MFLOPs), then per-batch code-indexed sums. ``cosine`` divides
-    the quantized numerator by the stored true vector norm."""
-    import numpy as np
-
-    nq = len(qmat_l)
-    m, ks, dsub = books_l.shape
-    qsub = qmat_l.reshape(nq, m, dsub)
-    lut = np.empty((nq, m, ks))
-    for j in range(m):
-        if metric == "l2sq":
-            diff = qsub[:, j, None, :] - books_l[j][None, :, :]  # (nq, ks, dsub)
-            lut[:, j, :] = (diff * diff).sum(axis=2)
-        else:  # ip numerator serves both 'ip' and 'cosine'
-            lut[:, j, :] = qsub[:, j, :] @ books_l[j].T
-    qnorms = np.linalg.norm(qmat_l, axis=1) if metric == "cosine" else None
-
-    def prep(pdf):
-        codes = np.frombuffer(b"".join(pdf["codes"].tolist()), dtype=np.uint8).reshape(-1, m)
-        n = codes.shape[0]
-        vn = pdf["vnorm"].to_numpy(np.float64) if metric == "cosine" else None
-
-        def score(q0, q1):
-            s = np.zeros((n, q1 - q0))
-            for j in range(m):
-                s += lut[q0:q1, j, :][:, codes[:, j]].T  # (n, chunk)
-            if metric == "cosine":
-                s = s / np.maximum(vn[:, None] * qnorms[q0:q1][None, :], 1e-30)
-            return s
-
-        return score
-
-    return prep
-
-
-def _sq_batch_scorer(scale_l, qmat_l, metric):
-    """SQ8 scorer for the shared fold: per-batch int8 dequantization + one
-    GEMM — the scan reads ``dim`` bytes per row (4x less than the flat
-    kernel's f32 vectors)."""
-    from ..index import pq as pqmod
-
-    def prep(pdf):
-        mat = pqmod.sq_decode(pdf["sq"].tolist(), scale_l)
-        return lambda q0, q1: pairwise_scores(mat, qmat_l[q0:q1], metric)
-
-    return prep
-
-
-def _candidates_broadcast_pq(
-    left, data, left_on, left_id, k_sel, metric, index, probe_mask, excluded_ids, probes_pdf
-) -> DataFrame:
-    """ADC candidate generation over a PQ artifact (:mod:`..index.pq`):
-    the shared fold over ``(rid, codes, vnorm, list_id)`` — no vectors
-    enter the kernel, fold memory is O(k_sel * nq) scalars, the scan
-    reads ``pq_m`` bytes per row. Returns (qid, rid) pairs."""
-    return _quantized_candidates(
-        left, data, left_id, k_sel, metric, index, probe_mask, excluded_ids,
-        probes_pdf, data_cols=["codes", "vnorm"], bc_extra=index.pq_books,
-        make_batch_scorer=_pq_batch_scorer,
-    )
-
-
-def _candidates_broadcast_sq(
-    left, data, left_on, left_id, k_sel, metric, index, probe_mask, excluded_ids, probes_pdf
-) -> DataFrame:
-    """SQ8 candidate generation (``quantization: 'i8'`` artifacts): the
-    shared fold over ``(rid, sq, list_id)`` with dequantized-GEMM scoring.
-    Returns (qid, rid) pairs; the caller recomputes exact scores."""
-    return _quantized_candidates(
-        left, data, left_id, k_sel, metric, index, probe_mask, excluded_ids,
-        probes_pdf, data_cols=["sq"], bc_extra=index.sq_scale,
-        make_batch_scorer=_sq_batch_scorer,
-    )
-
-
-def _b1_batch_scorer(thr_l, qmat_l, metric):
-    """Binary (b1) scorer for the shared fold: queries encode to packed
-    sign codes once per partition, then per-batch Hamming via table-driven
-    popcount — the scan reads ceil(dim/64)*8 bytes per row (32x less than
-    f32 at dim=64). Emits the NEGATED distance for descending metrics so
-    the fold's polarity ordering shortlists correctly; scores are a
-    monotone proxy only — the caller's exact re-rank restores true
-    values."""
-    import numpy as np
-
-    from ..index import pq as pqmod
-
-    desc = METRIC_IS_DESCENDING[metric]
-    qcodes = pqmod.b1_encode(np.asarray(qmat_l, dtype=np.float64), thr_l)
-
-    def prep(pdf):
-        n_words = qcodes.shape[1]
-        codes = np.frombuffer(b"".join(pdf["b1"].tolist()), dtype=np.uint64).reshape(-1, n_words)
-
-        def score(q0, q1):
-            x = np.ascontiguousarray(
-                np.bitwise_xor(codes[:, None, :], qcodes[None, q0:q1, :])
-            )
-            h = (
-                pqmod._POP8[x.view(np.uint8)]
-                .reshape(len(codes), q1 - q0, -1)
-                .sum(axis=2)
-                .astype(np.float64)
-            )
-            return -h if desc else h
-
-        return score
-
-    return prep
-
-
-def _candidates_broadcast_b1(
-    left, data, left_on, left_id, k_sel, metric, index, probe_mask, excluded_ids, probes_pdf
-) -> DataFrame:
-    """Binary candidate generation (``quantization: 'b1'`` artifacts):
-    the shared fold over ``(rid, b1, list_id)`` with Hamming-proxy
-    scoring. Returns (qid, rid) pairs; the caller recomputes exact
-    scores."""
-    return _quantized_candidates(
-        left, data, left_id, k_sel, metric, index, probe_mask, excluded_ids,
-        probes_pdf, data_cols=["b1"], bc_extra=index.b1_thresholds,
-        make_batch_scorer=_b1_batch_scorer,
-    )
 
 
 def _candidates_crossjoin(
@@ -701,11 +522,7 @@ def knn_join_flat_indexed(
     for qi, lists in enumerate(probe_sets):
         mask[lists, qi] = True
     needed = sorted({int(l) for lists in probe_sets for l in lists})
-    quantized = (
-        getattr(index, "pq_books", None) is not None
-        or getattr(index, "sq_scale", None) is not None
-        or getattr(index, "b1_thresholds", None) is not None
-    )
+    codec = index.codec
     covered = len(needed) >= 0.5 * index.nlist
     res = index._resident(spark)
     if res is not None:
@@ -715,7 +532,7 @@ def knn_join_flat_indexed(
         if covered:
             return _resident_join(spark, res, probes_pdf, qmat, k, metric, schema)
         return _resident_join(spark, res, probes_pdf, qmat, k, metric, schema, mask=mask, lists=needed)
-    if covered and not quantized:
+    if covered and codec is None:
         # the probes' combined lists cover most of the index: the masked
         # kernel would scan nearly everything AND pay per-row mask checks.
         # The exact flat GEMM join over the live rows is then both faster
@@ -743,32 +560,16 @@ def knn_join_flat_indexed(
         data = _anti_join_deleted(data, del_df, del_small)
     # shortlist broadcast bound: <= |probed lists| * nq * k_sel (qid, rid)
     # pairs; beyond ~8M pairs the flat vector kernel is the safer plan
-    rerank_mult = int(
-        index.manifest.get(
-            "pq_rerank",
-            index.manifest.get("sq_rerank", index.manifest.get("b1_rerank", 4)),
-        )
-    )
-    pq_pairs_est = len(needed) * len(probes_pdf) * max(k, k * rerank_mult)
-    if quantized and pq_pairs_est <= 8_000_000:
-        # codes-only kernel (ADC for PQ, dequantized GEMM for SQ8); exact
-        # scores recomputed on a vec fetch driven by a broadcast of the
-        # (qid, rid) shortlist — the expensive codes scan runs once (inside
-        # the broadcast job), and the vec scan streams against it with no
-        # shuffle of the data side.
-        k_sel = max(k, k * rerank_mult)
-        if getattr(index, "pq_books", None) is not None:
-            cand_ids = _candidates_broadcast_pq(
-                left, data, left_on, left_id, k_sel, metric, index, mask, excl, probes_pdf
-            )
-        elif getattr(index, "sq_scale", None) is not None:
-            cand_ids = _candidates_broadcast_sq(
-                left, data, left_on, left_id, k_sel, metric, index, mask, excl, probes_pdf
-            )
-        else:
-            cand_ids = _candidates_broadcast_b1(
-                left, data, left_on, left_id, k_sel, metric, index, mask, excl, probes_pdf
-            )
+    k_sel = max(k, k * codec.rerank(index.manifest)) if codec is not None else k
+    if codec is not None and len(needed) * len(probes_pdf) * k_sel <= 8_000_000:
+        # codes-only kernel (the codec's scorer); exact scores recomputed on
+        # a vec fetch driven by a broadcast of the (qid, rid) shortlist — the
+        # expensive codes scan runs once (inside the broadcast job), and the
+        # vec scan streams against it with no shuffle of the data side.
+        cand_ids = _candidates_broadcast(
+            left, data, left_on, None, left_id, "id", k_sel, metric, probe_mask=mask,
+            right_list_col="list_id", excluded_ids=excl, probes_pdf=probes_pdf, codec=codec,
+        ).select("qid", "rid")
         rvec = data.select(F.col("id").alias("rid"), F.col("vec").alias("__rv")).join(
             F.broadcast(cand_ids), "rid"
         )
@@ -818,21 +619,29 @@ def knn_join_flat_indexed_distributed(
        to one ``(qid, qv, list_id)`` row per probed cell — the same probe
        sets as the broadcast path (shared rule in ``kernels.nearest_cells``);
     2. one Exchange of each side keyed by ``list_id``, then a
-       ``cogroup().applyInPandas`` per cell: one GEMM per (cell probes x
-       cell rows) emitting ``k`` candidate ``(qid, rid, kernel_score)``
-       rows per probe per cell — vectors never leave the cell task;
+       ``cogroup().applyInPandas`` per cell running :func:`fold_topk` over
+       the cell's rows for the cell's probes: ``k`` exact ``(qid, rid,
+       score)`` rows per probe per cell — vectors never leave the cell task;
     3. the bounded tail (``tail_max_rows``) broadcasts INTO a probe-side
        pass (the probe side is the big one here, so the usual
-       probes-broadcast kernel is inverted) and its candidates union in;
-    4. per-probe global rank on the kernel score cut to ``k + band``, then
-       the survivors join back to their vectors for the authoritative JVM
-       exact score and the final ``k``-cut — identical to the broadcast
-       path's output (same eps-band discipline as ``topk(method="kernel")``)
-       except under >k-way EXACT score ties at the boundary, where every
-       kernel path (this one, the broadcast fold, the single-probe search)
-       returns an arbitrary valid subset of the tied group — the reference
-       has the same property and its tests sidestep ties with seeded data
-       (reference: test/sql/hnsw/hnsw_lateral_join_group.test:8).
+       probes-broadcast kernel is inverted), the same fold per probe batch,
+       and its rows union in;
+    4. the per-probe rank on the exact score, ties broken by ``rid``
+       (:func:`_rank_topk`) — the broadcast path's cut, so both return the
+       same rows except under >k-way EXACT score ties at the boundary,
+       where every kernel path (this one, the broadcast fold, the
+       single-probe search) returns an arbitrary valid subset of the tied
+       group — the reference has the same property and its tests sidestep
+       ties with seeded data (reference:
+       test/sql/hnsw/hnsw_lateral_join_group.test:8).
+
+    An SQ8 artifact ships its int8 codes through the cell Exchange instead
+    of f32 vectors (4x less data-side shuffle, the cost this large-probe
+    path exists to manage), so its cells keep ``k * sq_rerank`` rows per
+    probe by the codec's approximate score; the per-probe shortlist of the
+    best ``k * sq_rerank + 8`` then joins back to its vectors and the
+    probes for the exact JVM score before the cut. PQ and b1 artifacts ship
+    their vectors, as a flat index does.
 
     Replaces the previous behavior for this regime — an exact cross join,
     which is O(|probes| x |index|) and a scale cliff at 1M+ probes. Pair
@@ -842,15 +651,14 @@ def knn_join_flat_indexed_distributed(
     """
     import numpy as np
 
-    from ..broadcasts import tracked_broadcast
     from ..functions.kernels import nearest_cells
+    from ..index import pq as pqmod
 
     spark = left.sparkSession
     metric = index.metric
-    desc = METRIC_IS_DESCENDING[metric]
     nprobe = min(index.nprobe_for(ef_search), index.nlist)
-    qid_t = dict(left.dtypes)[left_id]
-    rid_t = index.manifest.get("id_type", "bigint")
+    ltypes = dict(left.dtypes)
+    cand_schema = f"qid {ltypes[left_id]}, rid {index.manifest.get('id_type', 'bigint')}, score double"
     probes = left.select(F.col(left_id).alias("qid"), F.col(left_on).alias("qv")).filter(
         F.col(left_on).isNotNull()
     )
@@ -863,8 +671,7 @@ def knn_join_flat_indexed_distributed(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            qm = np.ascontiguousarray(np.vstack(pdf["qv"].to_numpy()), dtype=np.float64)
-            cells = nearest_cells(qm, cents_l, metric_l, np_l)
+            cells = nearest_cells(as_matrix(pdf["qv"]), cents_l, metric_l, np_l)
             n, w = cells.shape
             yield pd.DataFrame(
                 {
@@ -874,62 +681,43 @@ def knn_join_flat_indexed_distributed(
                 }
             )
 
-    probe_cells = probes.mapInPandas(assign, schema=f"qid {qid_t}, qv array<float>, list_id long")
+    # the probe vectors keep their type, so the exact scores use the values
+    # the broadcast path's collect sees
+    probe_cells = probes.mapInPandas(assign, schema=f"qid {ltypes[left_id]}, qv {ltypes[left_on]}, list_id long")
 
     # tombstones ride into the cell kernel only below DELETED_IDS_KERNEL_CAP;
     # above it the item side is anti-joined before the cogroup instead
     excl, del_df, del_small = _deleted_exclusion(index, spark)
-    # SQ8 artifacts ship their int8 codes through the cell Exchange instead
-    # of f32 vectors — 4x less data-side shuffle, which is exactly the cost
-    # this large-probe path exists to manage; membership then follows the
-    # quantized-shortlist contract (k * sq_rerank candidates per cell, exact
-    # re-rank downstream), same as the broadcast SQ kernel.
-    sq_scale = getattr(index, "sq_scale", None)
-    k_cell = k if sq_scale is None else max(k, k * int(index.manifest.get("sq_rerank", 4)))
-    bc_excl = tracked_broadcast(
-        spark.sparkContext, (np.asarray(excl) if excl else None, sq_scale)
-    )
+    codec = index.codec if isinstance(index.codec, pqmod.SQ8) else None
+    k_cell = k if codec is None else max(k, k * codec.rerank(index.manifest))
+    bc_cell = tracked_broadcast(spark.sparkContext, (np.asarray(excl) if excl else None, codec))
+
+    def fold_cell(probes_pdf: pd.DataFrame, rids, batch, k_fold: int, codec_l) -> pd.DataFrame:
+        """:func:`fold_topk` of one cell's rows for the probes of
+        ``probes_pdf``."""
+        qmat = as_matrix(probes_pdf["qv"])
+        scorer = codec_l.scorer(qmat, metric) if codec_l is not None else None
+        return fold_topk([(rids, batch, None)], probes_pdf["qid"].to_numpy(), qmat, k_fold, metric, scorer=scorer)
 
     def cell_topk(probes_pdf: pd.DataFrame, items_pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        from ..index import pq as pqmod
-
-        excl_l, scale_l = bc_excl.value
+        excl_l, codec_l = bc_cell.value
         if excl_l is not None and len(items_pdf):
             items_pdf = items_pdf[~items_pdf["id"].isin(excl_l)]
         if len(probes_pdf) == 0 or len(items_pdf) == 0:
-            return pd.DataFrame({"qid": [], "rid": [], "ks": []}).astype(
-                {"ks": "float64"}
-            )
-        if scale_l is not None:
-            imat = pqmod.sq_decode(items_pdf["sq"].tolist(), scale_l)
-        else:
-            imat = np.ascontiguousarray(np.vstack(items_pdf["vec"].to_numpy()), dtype=np.float64)
-        rids = items_pdf["id"].to_numpy()
-        out_q, out_r, out_s = [], [], []
-        for q0 in range(0, len(probes_pdf), _PROBE_CHUNK):
-            chunk = probes_pdf.iloc[q0 : q0 + _PROBE_CHUNK]
-            qmat = np.ascontiguousarray(np.vstack(chunk["qv"].to_numpy()), dtype=np.float64)
-            scores = pairwise_scores(imat, qmat, metric)  # (n_items, chunk)
-            idx = local_topk(scores, k_cell, desc)  # (k', chunk)
-            cols = np.arange(scores.shape[1])[None, :]
-            kk = idx.shape[0]
-            out_q.append(np.repeat(chunk["qid"].to_numpy(), kk))
-            out_r.append(rids[idx].ravel(order="F"))
-            out_s.append(scores[idx, cols].ravel(order="F"))
-        return pd.DataFrame(
-            {"qid": np.concatenate(out_q), "rid": np.concatenate(out_r), "ks": np.concatenate(out_s)}
-        )
+            return pd.DataFrame({"qid": [], "rid": [], "score": []}).astype({"score": "float64"})
+        batch = items_pdf if codec_l is not None else np.vstack(items_pdf["vec"].to_numpy())
+        return fold_cell(probes_pdf, items_pdf["id"].to_numpy(), batch, k_cell, codec_l)
 
-    data_col = "sq" if sq_scale is not None else "vec"
-    data = index.data_df(spark).select("id", data_col, F.col("list_id").cast("long").alias("list_id"))
+    data_cols = codec.scan_cols if codec is not None else ("vec",)
+    data = index.data_df(spark).select("id", *data_cols, F.col("list_id").cast("long").alias("list_id"))
     if del_df is not None and excl is None:
         data = _anti_join_deleted(data, del_df, del_small)
     cand = (
         probe_cells.groupBy("list_id")
         .cogroup(data.groupBy("list_id"))
-        .applyInPandas(cell_topk, schema=f"qid {qid_t}, rid {rid_t}, ks double")
+        .applyInPandas(cell_topk, schema=cand_schema)
     )
 
     tail = index.tail_df(spark)
@@ -941,51 +729,26 @@ def knn_join_flat_indexed_distributed(
             tail_pdf = tail_pdf[~tail_pdf["id"].isin(excl)]
         if len(tail_pdf):
             bc_tail = tracked_broadcast(
-                spark.sparkContext,
-                (
-                    tail_pdf["id"].to_numpy(),
-                    np.ascontiguousarray(np.vstack(tail_pdf["vec"].to_numpy()), dtype=np.float64),
-                ),
+                spark.sparkContext, (tail_pdf["id"].to_numpy(), np.vstack(tail_pdf["vec"].to_numpy()))
             )
-
-            def tail_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                import numpy as np
-
-                t_rids, t_mat = bc_tail.value
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    qmat = np.ascontiguousarray(np.vstack(pdf["qv"].to_numpy()), dtype=np.float64)
-                    scores = pairwise_scores(t_mat, qmat, metric)
-                    idx = local_topk(scores, k, desc)
-                    cols = np.arange(scores.shape[1])[None, :]
-                    kk = idx.shape[0]
-                    yield pd.DataFrame(
-                        {
-                            "qid": np.repeat(pdf["qid"].to_numpy(), kk),
-                            "rid": t_rids[idx].ravel(order="F"),
-                            "ks": scores[idx, cols].ravel(order="F"),
-                        }
-                    )
-
+            # every probe batch folds the whole tail, as one more cell
             cand = cand.unionByName(
-                probes.mapInPandas(tail_topk, schema=f"qid {qid_t}, rid {rid_t}, ks double")
+                probes.mapInPandas(
+                    lambda batches: (fold_cell(pdf, *bc_tail.value, k, None) for pdf in batches if len(pdf)),
+                    schema=cand_schema,
+                )
             )
+    if codec is None:
+        return _rank_topk(cand, k, metric)
 
-    # per-probe kernel-score cut with an eps band (GEMM is ~1e-13 relative
-    # of the sequential fold; band 8 >> any plausible near-tie pileup; for
-    # SQ8 the cut keeps the full k_cell shortlist — quantization error is
-    # absorbed by the rerank budget, not the band), then the authoritative
-    # JVM score on the survivors
-    order_ks = [F.col("ks").desc() if desc else F.col("ks").asc(), F.col("rid").asc()]
-    w_ks = Window.partitionBy("qid").orderBy(*order_ks)
-    short = cand.withColumn("__r", F.row_number().over(w_ks)).filter(F.col("__r") <= k_cell + 8).drop("__r")
-
+    # SQ8: the per-probe shortlist by approximate score (the band of 8 rides
+    # over the k_cell rerank budget), then the authoritative JVM score
+    desc = METRIC_IS_DESCENDING[metric]
+    w = Window.partitionBy("qid").orderBy(F.col("score").desc() if desc else F.col("score").asc(), F.col("rid").asc())
+    short = cand.withColumn("__r", F.row_number().over(w)).filter(F.col("__r") <= k_cell + 8).select("qid", "rid")
     vec_src = index.data_df(spark).select(F.col("id").alias("rid"), F.col("vec").alias("__rv"))
     if tail is not None:
-        vec_src = vec_src.unionByName(
-            tail.select(F.col("id").alias("rid"), F.col("vec").alias("__rv"))
-        )
+        vec_src = vec_src.unionByName(tail.select(F.col("id").alias("rid"), F.col("vec").alias("__rv")))
     rescored = (
         short.join(vec_src, "rid")
         .join(probes.withColumnRenamed("qv", "__qv"), "qid")

@@ -122,11 +122,11 @@ def explain_text(spec, decision: Decision, extra: dict | None = None) -> str:
                 lines.append(
                     f"PROJECTION [score := {spec.metric}(vec, <const>)]  (fetch: broadcast id-join, exact recompute)"
                 )
-            pq = f", pq_m={ex['pq_m']} (ADC+rerank)" if ex.get("pq_m") else ""
+            codec = f", {ex['codec']}" if ex.get("codec") else ""
             backend = f", backend={ex['backend']}" if ex.get("backend") else ""
             lines.append(
                 f"HNSW_INDEX_SCAN (index={decision.index_name}, k={spec.k}, "
-                f"ef_search={decision.ef_search}, nprobe={ex.get('nprobe', '?')}/{ex.get('nlist', '?')}{pq}{backend}"
+                f"ef_search={decision.ef_search}, nprobe={ex.get('nprobe', '?')}/{ex.get('nlist', '?')}{codec}{backend}"
                 f"{source})"
             )
         else:

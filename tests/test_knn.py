@@ -146,11 +146,31 @@ def test_indexed_join_distributed_matches_broadcast(spark, tmp_path):
     idx.delete(spark, [35, 40, 3])  # base + tail deletions
 
     probes = emb.filter("vec_id < 5")
+    key = lambda r: (r["qid"], r["rnk"])
     for ef in (8, 256):
         a = knn_join_flat_indexed(probes, idx, "embedding", 4, "vec_id", ef_search=ef).collect()
         b = knn_join_flat_indexed(
             probes, idx, "embedding", 4, "vec_id", ef_search=ef, broadcast_probe_limit=2
         ).collect()
-        key = lambda r: (r["qid"], r["rnk"])
         assert sorted(a, key=key) == sorted(b, key=key), ef
         assert not {35, 40, 3} & {r["rid"] for r in b}
+
+    # zero-norm cosine leg: a zero row has no cosine score (NaN in the
+    # kernels, NULL or an ANSI error in the JVM), so no path may return it.
+    # k reaches every live row, so the zero row survives its cell's cut and
+    # every per-probe window after it.
+    zero = spark.createDataFrame([(999_999, [0.0] * 64)], "vec_id bigint, embedding array<float>")
+    eng.register_table("emb_z", emb.filter("vec_id >= 30").select("vec_id", "embedding").unionByName(zero))
+    eng.create_index("z_idx", "emb_z", "embedding", "vec_id", options={"metric": "cosine"}, replace=True)
+    zidx = eng.catalog.get("z_idx")
+    zidx.insert(emb.filter("vec_id < 30"), "embedding", "vec_id")
+    zidx.delete(spark, [35, 40, 3])
+    k = zidx.counts(spark)["live"]
+    for ef in (8, 256):
+        a = knn_join_flat_indexed(probes, zidx, "embedding", k, "vec_id", ef_search=ef).collect()
+        b = knn_join_flat_indexed(
+            probes, zidx, "embedding", k, "vec_id", ef_search=ef, broadcast_probe_limit=2
+        ).collect()
+        assert sorted(a, key=key) == sorted(b, key=key), ef
+        assert not {999_999, 35, 40, 3} & {r["rid"] for r in b}, ef
+    assert len(b) == 5 * (k - 1)  # full probe: every live row but the zero one

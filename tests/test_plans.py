@@ -366,8 +366,8 @@ def test_winnow_is_map_only(spark):
 
 def test_indexed_join_large_probe_side_never_cartesian(spark, tmp_path_factory):
     """Probe sides past the broadcast limit take the distributed cell-cogroup
-    plan: cogrouped Arrow stages, no CartesianProduct / BroadcastNestedLoop
-    anywhere (the pre-round-5 fallback was an O(|probes| x |index|) cross
+    plan: cogrouped Arrow stages, one scan of the index data, no
+    CartesianProduct / BroadcastNestedLoop anywhere (the pre-round-5 fallback was an O(|probes| x |index|) cross
     join — the plan shape this test permanently forbids)."""
     from duckdb_vss_spark import VSSEngine
     from duckdb_vss_spark.operators.knn import knn_join_flat_indexed
@@ -384,6 +384,10 @@ def test_indexed_join_large_probe_side_never_cartesian(spark, tmp_path_factory):
     )
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "FlatMapCoGroupsInPandas" in plan
+    # the cells score exactly, so the index's vectors are read once (by the
+    # cogroup): no join back to them for a re-score
+    vec_scans = [ln for ln in plan.splitlines() if "FileScan" in ln and "vec:array" in ln]
+    assert len(vec_scans) == 1, plan
 
 
 def test_url_ops_are_map_only(spark):

@@ -9,6 +9,7 @@ RAM (reference: src/hnsw/hnsw_index.cpp:700-724); the PQ artifact reads
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,32 +31,34 @@ def _quantized_corpus(rng, m, dsub, ks, n):
     return np.concatenate([vocab[j][picks[:, j]] for j in range(m)], axis=1)
 
 
+def _scores(codec, data, qmat, metric):
+    """The codec's batch scorer over ``data`` encoded, for every query."""
+    pdf = pd.DataFrame(codec.encode_columns(data))
+    return codec.scorer(np.asarray(qmat, dtype=np.float64), metric)(pdf)(0, len(qmat))
+
+
 def test_adc_exact_on_quantized_data_l2():
     rng = np.random.default_rng(0)
     data = _quantized_corpus(rng, m=4, dsub=3, ks=16, n=500)
-    books = pqmod.train_codebooks(data, 4, seed=1)
-    codes = pqmod.encode(data, books)
-    q = rng.normal(size=12)
-    lut = pqmod.adc_lut(q, books, "l2sq")
-    approx = pqmod.adc_scores([c.tobytes() for c in codes], lut)
-    exact = ((data - q) ** 2).sum(axis=1)
-    np.testing.assert_allclose(approx, exact, rtol=1e-9, atol=1e-9)
+    codec = pqmod.PQ.train(data, 4, seed=1)
+    for q in (rng.normal(size=(1, 12)), rng.normal(size=(3, 12))):  # nq = 1 and 3
+        approx = _scores(codec, data, q, "l2sq")
+        exact = ((data[:, None, :] - q[None, :, :]) ** 2).sum(axis=2)
+        np.testing.assert_allclose(approx, exact, rtol=1e-9, atol=1e-9)
 
 
 def test_adc_exact_on_quantized_data_ip():
     rng = np.random.default_rng(1)
     data = _quantized_corpus(rng, m=2, dsub=4, ks=8, n=200)
-    books = pqmod.train_codebooks(data, 2, seed=2)
-    codes = pqmod.encode(data, books)
-    q = rng.normal(size=8)
-    lut = pqmod.adc_lut(q, books, "ip")
-    approx = pqmod.adc_scores([c.tobytes() for c in codes], lut)
-    np.testing.assert_allclose(approx, data @ q, rtol=1e-9, atol=1e-9)
+    codec = pqmod.PQ.train(data, 2, seed=2)
+    for q in (rng.normal(size=(1, 8)), rng.normal(size=(3, 8))):  # nq = 1 and 3
+        approx = _scores(codec, data, q, "ip")
+        np.testing.assert_allclose(approx, data @ q.T, rtol=1e-9, atol=1e-9)
 
 
 def test_train_codebooks_rejects_bad_m():
     with pytest.raises(ValueError, match="must divide"):
-        pqmod.train_codebooks(np.zeros((10, 10)), 3)
+        pqmod.PQ.train(np.zeros((10, 10)), 3)
 
 
 # -- DDL option surface ----------------------------------------------------
@@ -87,7 +90,7 @@ def pq_engine(spark, tmp_path_factory):
 def test_pq_artifact_shape(spark, pq_engine):
     idx = pq_engine.catalog.get("emb_pq")
     assert idx.manifest["pq_m"] == 8 and idx.manifest["pq_rerank"] == 4
-    assert idx.pq_books.shape == (8, 256, 8)
+    assert isinstance(idx.codec, pqmod.PQ) and idx.codec.array.shape == (8, 256, 8)
     row = spark.read.parquet(idx.data_path()).select("codes", "vnorm").first()
     assert len(row["codes"]) == 8  # one byte per subspace
     assert row["vnorm"] > 0
@@ -239,9 +242,16 @@ def test_pq_indexed_join_respects_delete(spark, pq_join_engine):
         pq_join_engine.set_ef_search(None)
 
 
-def test_pq_explain_marker(pq_engine):
+def test_pq_explain_marker(spark, pq_engine, tmp_path):
     txt = pq_engine.explain_topk("emb", "embedding", Q, 10)
     assert "HNSW_INDEX_SCAN" in txt and "pq_m=8 (ADC+rerank)" in txt
+    # every codec names itself on the index scan
+    eng = VSSEngine(spark, index_root=str(tmp_path))
+    eng.register_table("e", spark.read.parquet(f"{SF}/embeddings.parquet"))
+    for qz, marker in (("i8", "quantization=i8 (SQ8+rerank)"), ("b1", "quantization=b1 (Hamming+rerank)")):
+        eng.create_index("q", "e", "embedding", "vec_id", options={"quantization": qz}, replace=True)
+        txt = eng.explain_topk("e", "embedding", Q, 10)
+        assert "HNSW_INDEX_SCAN" in txt and marker in txt, txt
 
 
 def test_pq_lifecycle_insert_delete_compact(spark, pq_engine):
@@ -268,15 +278,20 @@ def test_pq_lifecycle_insert_delete_compact(spark, pq_engine):
 def test_sq_kernels_roundtrip_bound():
     import numpy as np
 
+    from duckdb_vss_spark.functions.kernels import pairwise_scores
     from duckdb_vss_spark.index import pq
 
     rng = np.random.default_rng(3)
     m = rng.normal(size=(200, 32))
-    s = pq.train_sq_scale(m)
-    d = pq.sq_decode([c.tobytes() for c in pq.sq_encode(m, s)], s)
+    codec = pq.SQ8.train(m)
+    s = codec.array
+    d = codec.decode(pd.DataFrame(codec.encode_columns(m)))
     assert np.abs(d - m).max() <= (1.0 / (2.0 * s)).max() + 1e-12
+    # the scorer is one GEMM over the dequantized rows, at nq = 1 and 3
+    for q in (m[:1], m[5:8]):
+        np.testing.assert_array_equal(_scores(codec, m, q, "l2sq"), pairwise_scores(d, q, "l2sq"))
     # out-of-sample values saturate, never wrap
-    big = pq.sq_encode(np.array([[10.0] * 32]), s)
+    big = codec.encode(np.array([[10.0] * 32]))
     assert big.max() == 127
 
 
@@ -331,7 +346,7 @@ def test_sq_maintenance_lifecycle(spark, tmp_path):
     )
     # full compact rebuilds with the option intact
     idx3 = idx2.compact(spark)
-    assert idx3.manifest.get("quantization") == "i8" and idx3.sq_scale is not None
+    assert idx3.manifest.get("quantization") == "i8" and isinstance(idx3.codec, pqmod.SQ8)
 
 
 def test_sq_option_guards(spark):
@@ -420,10 +435,14 @@ def test_sq_indexed_knn_join_full_probe_exact(spark, tmp_path):
     assert len(r) == 30 and all(x["rid"] != gone for x in r)
 
 
-def test_sq_distributed_join_full_probe_exact(spark, tmp_path):
-    """The large-probe distributed cogroup join over an SQ8 artifact ships
-    int8 codes through the cell Exchange (4x less data-side shuffle) with
-    the quantized-shortlist contract — at full probe it must equal the
+@pytest.mark.parametrize(
+    "opts", [{"quantization": "i8"}, {"pq_m": 8}, {"quantization": "b1"}], ids=["i8", "pq", "b1"]
+)
+def test_sq_distributed_join_full_probe_exact(spark, tmp_path, opts):
+    """The large-probe distributed cogroup join over a quantized artifact:
+    SQ8 ships int8 codes through the cell Exchange (4x less data-side
+    shuffle) with the quantized-shortlist contract, PQ and b1 ship their
+    vectors and fold them exactly — at full probe each must equal the
     exact flat join, incl. under tail rows and tombstones."""
     from pyspark.sql import functions as F
 
@@ -434,7 +453,7 @@ def test_sq_distributed_join_full_probe_exact(spark, tmp_path):
     probes = emb.filter("vec_id < 50")
     eng = VSSEngine(spark, index_root=str(tmp_path / "sqd"))
     eng.register_table("e", emb)
-    eng.create_index("i", "e", "embedding", "vec_id", options={"quantization": "i8"}, replace=True)
+    eng.create_index("i", "e", "embedding", "vec_id", options=opts, replace=True)
     idx = eng.catalog.get("i")
     got = sorted(
         (r["qid"], r["rid"], r["rnk"], round(r["score"], 5))
@@ -518,15 +537,19 @@ def test_b1_kernels_match_bruteforce():
     rng = np.random.default_rng(7)
     for dim in (3, 64, 65, 128, 100):
         m = rng.normal(size=(60, dim))
-        thr = pq.train_b1_thresholds(m)
-        codes = pq.b1_encode(m, thr)
+        codec = pq.B1.train(m)
+        thr = codec.array
+        codes = codec.encode(m)
         assert codes.shape == (60, pq.b1_words(dim))
-        q = m[11]
-        qc = pq.b1_encode(q[None, :], thr)[0]
-        h = pq.b1_hamming([c.tobytes() for c in codes], qc)
         bits = m > thr[None, :]
-        brute = (bits != (q > thr)[None, :]).sum(axis=1)
-        assert (h == brute).all() and h[11] == 0
+        for qi in ([11], [11, 3, 40]):  # nq = 1 and 3
+            h = _scores(codec, m, m[qi], "l2sq")  # ascending: the distance itself
+            for j, q in enumerate(m[qi]):
+                brute = (bits != (q > thr)[None, :]).sum(axis=1)
+                assert (h[:, j] == brute).all()
+            assert h[11, 0] == 0
+            # descending metrics negate it
+            np.testing.assert_array_equal(_scores(codec, m, m[qi], "cosine"), -h)
 
 
 def test_b1_index_full_probe_covering_rerank_exact(spark, tmp_path):
@@ -609,8 +632,7 @@ def test_b1_maintenance_lifecycle(spark, tmp_path):
     )
     # full compact rebuilds with the option intact
     idx3 = idx2.compact(spark)
-    assert idx3.manifest.get("quantization") == "b1" and idx3.b1_thresholds is not None
-    assert idx3.sq_scale is None
+    assert idx3.manifest.get("quantization") == "b1" and isinstance(idx3.codec, pqmod.B1)
 
 
 def test_b1_option_guards(spark):
