@@ -212,10 +212,11 @@ INFO_SCHEMA = StructType(
 class IndexCatalog:
     """Named-index registry rooted at a directory (one artifact dir per
     index). The root may be a local path or any Hadoop-FS URI. Index handles
-    and the name listing are cached per catalog instance — a handle holds
-    only the (immutable-per-version) manifest + centroids, so reuse across
-    queries is safe; ``refresh()`` drops the caches if another session
-    mutates the root."""
+    and the name listing are cached per catalog instance: a handle re-reads
+    its manifest before every write and public read, so it sees the inserts,
+    deletes and compacts other handles commit at its next call.
+    ``refresh()`` drops the caches when another session creates or drops
+    indexes under the root."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark

@@ -42,18 +42,22 @@ src/hnsw/hnsw_index.cpp:700-724, build: hnsw_index_physical_create.cpp:
   each shard to an exact scan, so full-probe searches are exact — the same
   "recall is tunable, exactness at the limit" contract as the IVF backend
   and the reference.
-- **Maintenance** reuses the IVF artifact's tail / deletion-bitmap /
-  versioned-compact machinery unchanged (:class:`~.ivf.IVFIndex`): those
-  layers never looked inside the indexed payload.
+- **Maintenance** reuses the IVF artifact's manifest-committed tail and
+  tombstone segments and its versioned compact unchanged
+  (:class:`~.ivf.IVFIndex`): those layers never look inside the indexed
+  payload. An incremental compact is a full one here (see
+  :meth:`GraphIndex.compact_incremental`).
 
 Artifact layout::
 
     <root>/<name>/
-      manifest.json              # format hnsw-graph-parquet/v1, VERSION
+      manifest.json              # format hnsw-graph-parquet/v1, VERSION,
+                                 # tail and deleted segment lists
       <version>/
-        data/part_id=*/...      # parquet (id, vec, li, nbrs) shards
-        tail/*.parquet           # unindexed appended rows (optional)
-        deleted/*.parquet        # deleted id bitmap (optional)
+        centroids.npy            # (ncells, dim) cell centroids
+        data/part_id=*/...       # parquet (id, vec, li, nbrs) shards
+        tail/snap-NNNNNN/        # one inserted batch (id, vec) per segment
+        deleted/snap-NNNNNN/     # one batch of deleted ids per segment
 
 **When to choose this backend: for reference-contract parity, not for
 speed.** Measured twice against the IVF default on the same staged data
@@ -76,7 +80,7 @@ from __future__ import annotations
 
 import heapq
 import math
-from typing import Iterator, Optional
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -355,17 +359,7 @@ class GraphIndex(IVFIndex):
 
     is_graph = True
     _PART_COL = "part_id"
-
-    def __init__(self, path: str, spark: Optional[SparkSession] = None):
-        self.path = path
-        self.spark = spark or SparkSession.getActiveSession()
-        self.manifest = fs.read_json(self.spark, fs.join(path, "manifest.json"))
-        self.version = self.manifest.get("version", "")
-        self.vpath = fs.join(path, self.version) if self.version else path
-        # cell centroids: probed exactly like IVF lists (the inherited
-        # probe_lists/probe_lists_batch read self.centroids + self.metric)
-        self.centroids = fs.read_npy(self.spark, fs.join(self.vpath, "centroids.npy"))
-        self._init_read_caches()
+    _build = staticmethod(build_graph)
 
     def compact_incremental(self, spark: SparkSession) -> "GraphIndex":
         """The graph backend cannot fold a tail in O(|tail|): new rows must
@@ -415,6 +409,7 @@ class GraphIndex(IVFIndex):
         globally. Scores follow the metric's polarity and are exact (full
         vectors are in hand); full ef probes every cell AND scans each
         shard exactly."""
+        self._refresh()
         if len(query) != self.dim:
             raise ValueError(f"query dimension {len(query)} != index dimension {self.dim}")
         metric = self.metric
@@ -423,7 +418,6 @@ class GraphIndex(IVFIndex):
         parts = self._cell_parts(cells)
         qv = np.asarray(query, dtype=np.float64)
         bc = tracked_broadcast(spark.sparkContext, qv)
-        id_t = self.manifest.get("id_type", "bigint")
 
         def shard_topk(pdf: pd.DataFrame) -> pd.DataFrame:
             if len(pdf) == 0:
@@ -436,24 +430,19 @@ class GraphIndex(IVFIndex):
                 {"id": pdf["id"].iloc[idx].to_numpy(), "vec": pdf["vec"].iloc[idx].to_numpy()}
             )
 
-        data = self.data_df(spark, parts)
-        # kernel selects candidates; the authoritative score is the JVM
+        # the kernel selects candidates (the shard hits, plus the tail,
+        # minus the tombstones); the authoritative score is the JVM
         # double-precision expression (same discipline as the IVF paths)
-        qcol = bound_vec(query)
-        local = (
-            data.groupBy("part_id")
-            .applyInPandas(shard_topk, schema=f"id {id_t}, vec array<float>")
-            .select("id", distance_expr("vec", qcol, metric).alias("score"))
+        hits = self.data_df(spark, parts).groupBy("part_id").applyInPandas(
+            shard_topk, schema=f"id {self.id_type}, vec array<float>"
         )
-        deleted = self.deleted_df(spark)
-        if deleted is not None:
-            local = local.join(deleted, "id", "left_anti")
         tail = self.tail_df(spark)
         if tail is not None:
-            tail_scored = tail.select("id", distance_expr("vec", qcol, metric).alias("score"))
-            if deleted is not None:
-                tail_scored = tail_scored.join(deleted, "id", "left_anti")
-            local = local.unionByName(tail_scored)
+            hits = hits.unionByName(tail)
+        deleted = self.deleted_df(spark)
+        if deleted is not None:
+            hits = hits.join(deleted, "id", "left_anti")
+        local = hits.select("id", distance_expr("vec", bound_vec(query), metric).alias("score"))
         desc = METRIC_IS_DESCENDING[metric]
         order = [F.col("score").desc() if desc else F.col("score").asc(), F.col("id").asc()]
         return local.orderBy(*order).limit(k)
@@ -487,8 +476,6 @@ class GraphIndex(IVFIndex):
         needed_cells = sorted({int(c) for cells in probe_sets for c in cells})
         parts = self._cell_parts(needed_cells)
         bc = tracked_broadcast(spark.sparkContext, (qids, qmat, mask))
-        id_t = self.manifest.get("id_type", "bigint")
-        qid_t = qid_type
 
         empty = pd.DataFrame({"qid": [], "id": [], "score": []})
 
@@ -529,39 +516,5 @@ class GraphIndex(IVFIndex):
 
         data = self.data_df(spark, parts)
         return data.groupBy("part_id").applyInPandas(
-            shard_join, schema=f"qid {qid_t}, id {id_t}, score double"
+            shard_join, schema=f"qid {qid_type}, id {self.id_type}, score double"
         )
-
-    # -- maintenance ------------------------------------------------------
-    def compact(self, spark: SparkSession) -> "GraphIndex":
-        """Versioned rebuild folding in the tail and dropping deleted ids
-        (same crash-safe commit discipline as the IVF artifact)."""
-        data = spark.read.parquet(self.data_path()).select("id", "vec")
-        tail = self.tail_df(spark)
-        if tail is not None:
-            data = data.unionByName(tail)
-        deleted = self.deleted_df(spark)
-        if deleted is not None:
-            data = data.join(deleted, "id", "left_anti")
-        cur = int(self.version[1:]) if self.version else 0
-        new_version = f"v{cur + 1:06d}"
-        keep = {
-            k: v
-            for k, v in self.manifest.items()
-            if k in ("index_name", "table_name", "column", "id_column")
-        }
-        data = data.cache()
-        try:
-            build_graph(
-                data, "vec", "id", self.path,
-                metric=self.metric,
-                options=self.manifest.get("options"),
-                seed=self.manifest.get("seed", 42),
-                version=new_version,
-                extra_manifest=keep,
-            )
-            if self.version:
-                fs.delete(spark, fs.join(self.path, self.version))
-        finally:
-            data.unpersist()
-        return GraphIndex(self.path, spark)

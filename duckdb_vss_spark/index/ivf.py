@@ -23,14 +23,20 @@ for Spark's execution model (SURVEY §7.1):
   (so the usearch default ef_search=64 probes half the lists; ef_search>=128
   degenerates to an exact full scan — recall is tunable, not guaranteed,
   like the reference).
-- Maintenance is immutable-artifact style (SURVEY §2.3 M1-M3): INSERT
-  appends to an unindexed *tail* searched brute-force and unioned in;
-  DELETE records ids in a bitmap consulted before the top-k cut (deleted
-  rows are invisible immediately, like the reference's tombstones,
-  reference: src/hnsw/hnsw_index.cpp:496-512); COMPACT builds a NEW version
-  directory and commits it by atomically overwriting the manifest — a crash
-  mid-compact leaves the previous version fully intact (unlike
-  delete-then-rename, there is no window with no index on disk).
+- Maintenance is immutable-artifact style (SURVEY §2.3 M1-M3) with one
+  commit protocol for every write, the one the fingerprint stores use
+  (``snapshot_store.py``): re-read the manifest, write the new rows to a
+  fresh directory whose name is never reused (``fs.alloc_snap_dir``), then
+  commit with one manifest overwrite. Readers read only the directories the
+  manifest names. INSERT adds a *tail* segment, searched brute-force and
+  unioned in; DELETE adds a tombstone segment of ids, consulted before the
+  top-k cut (deleted rows are invisible at every handle's next call, like
+  the reference's tombstones, reference: src/hnsw/hnsw_index.cpp:496-512);
+  incremental COMPACT folds the tail into a list-partitioned *delta*; full
+  COMPACT builds a NEW version directory. A crash before a commit leaves an
+  orphan directory that no reader sees; a crash after it leaves at most
+  folded directories that no reader sees (unlike delete-then-rename, there
+  is no window with no index on disk).
 
 All control-plane I/O (manifest, centroids, existence checks) goes through
 the Hadoop FileSystem API (:mod:`.fs`), so the artifact root may be a local
@@ -40,12 +46,14 @@ same reach as the parquet data plane.
 Artifact layout::
 
     <root>/<name>/
-      manifest.json          # metric, dim, nlist, counts, params, VERSION
+      manifest.json          # metric, dim, nlist, counts, params, VERSION,
+                             # deltas, tail and deleted segment lists
       <version>/             # e.g. v000001; manifest names the live one
         centroids.npy        # (nlist, dim) float64
         data/list_id=*/...   # parquet (id, vec) inverted lists
-        tail/*.parquet       # unindexed appended rows (optional)
-        deleted/*.parquet    # deleted id bitmap (optional)
+        delta-NNNNNN/list_id=*/...  # folded tails, same layout (optional)
+        tail/snap-NNNNNN/    # one inserted batch (id, vec) per segment
+        deleted/snap-NNNNNN/ # one batch of deleted ids per segment
 """
 
 from __future__ import annotations
@@ -53,13 +61,14 @@ from __future__ import annotations
 import math
 import sys
 import threading
+import warnings
 import weakref
 from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs
@@ -73,6 +82,7 @@ DEFAULT_EF_SEARCH = 64  # usearch default (reference: usearch/index.hpp:1282-129
 KMEANS_SAMPLE = 65536
 KMEANS_ITERS = 12
 FIRST_VERSION = "v000001"
+_MANIFEST = "manifest.json"
 
 
 def kmeans(x: np.ndarray, nlist: int, iters: int = KMEANS_ITERS, seed: int = 42) -> np.ndarray:
@@ -501,7 +511,7 @@ def build_ivf(
         manifest[codec.rerank_key] = auto_rerank
         manifest["rerank_auto"] = {"target_recall": float(tr), **auto_diag}
     manifest.update(extra_manifest or {})
-    fs.write_json(spark, fs.join(path, "manifest.json"), manifest)  # commit point
+    fs.write_json(spark, fs.join(path, _MANIFEST), manifest)  # commit point
     idx = IVFIndex(path, spark)
     if hand_off:
         # the executors' assignment rule, row for row; the handle knows the
@@ -531,12 +541,6 @@ def _assigned(src: DataFrame, centroids: np.ndarray, codec, id_t: str) -> tuple[
 
     schema = f"id {id_t}, vec array<float>, list_id int{codec.schema if codec is not None else ''}"
     return src.mapInPandas(assign, schema=schema), schema
-
-
-def _ddl(df: DataFrame) -> str:
-    """``df``'s schema as a DDL string (every field nullable, as a parquet
-    read sees it)."""
-    return ", ".join(f"`{n}` {t}" for n, t in df.dtypes)
 
 
 class _Resident:
@@ -589,7 +593,17 @@ class IVFIndex:
     """Handle to an on-disk IVF artifact. Search methods return DataFrames
     that compose with further relational ops: lazy parquet plans, or local
     relations when the handle serves a small index from its resident copy
-    (:meth:`_resident`)."""
+    (:meth:`_resident`).
+
+    Handle contract (the fingerprint stores' one): every write
+    (:meth:`insert`, :meth:`delete`, :meth:`compact_incremental`,
+    :meth:`compact`) re-reads ``manifest.json`` first and commits with one
+    overwrite of it, and every public read (:meth:`search`, the index join
+    ``knn.knn_join_flat_indexed``, :meth:`counts`) re-reads it once, so a
+    handle sees every commit made through another handle at its next call.
+    A new version reloads the centroids, codec and caches. Concurrent
+    writers are still unsupported: two commits racing between the re-read
+    and the manifest write can lose one of them."""
 
     # where the last search or index join read its rows: "parquet", or the
     # resident copy's label
@@ -597,52 +611,65 @@ class IVFIndex:
     # the quantization codec (index/pq.py) of a PQ/SQ8/b1 artifact; None
     # for flat and graph indexes
     codec = None
+    # the build a full compact runs (GraphIndex: build_graph)
+    _build = staticmethod(build_ivf)
 
     def __init__(self, path: str, spark: Optional[SparkSession] = None):
         self.path = path
         self.spark = spark or SparkSession.getActiveSession()
-        self.manifest = fs.read_json(self.spark, fs.join(path, "manifest.json"))
-        # v1 artifacts stored everything at the root; v2 adds version dirs
-        self.version = self.manifest.get("version", "")
-        self.vpath = fs.join(path, self.version) if self.version else path
-        self.centroids = fs.read_npy(self.spark, fs.join(self.vpath, "centroids.npy"))
-        self.codec = pqmod.load(self.manifest, lambda name: fs.read_npy(self.spark, fs.join(self.vpath, name)))
-        self._init_read_caches()
-        # incremental-compact crash repair: a manifest committed with
-        # pending_tail_delete means the tail's rows are already live in the
-        # newest delta — delete the stale tail (double-count otherwise) and
-        # clear the flag (see compact_incremental)
-        if self.manifest.get("pending_tail_delete"):
-            if fs.exists(self.spark, fs.join(self.vpath, "tail")):
-                fs.delete(self.spark, fs.join(self.vpath, "tail"))
-            self.manifest.pop("pending_tail_delete", None)
-            fs.write_json(self.spark, fs.join(path, "manifest.json"), self.manifest)
+        self._load(fs.read_json(self.spark, fs.join(path, _MANIFEST)))
 
-    def _init_read_caches(self) -> None:
-        # lazily-resolved existence of the mutable side dirs, so steady-state
-        # searches don't pay two control-plane round trips (an object-store
-        # LIST each) per query; maintenance through THIS handle updates the
-        # flags, cross-session mutations need a fresh handle (same contract
-        # as the catalog's handle cache)
-        self._tail_exists: Optional[bool] = None
-        self._deleted_exists: Optional[bool] = None
-        # data-relation caches: Spark's InMemoryFileIndex re-lists every
-        # partition directory on each spark.read.parquet(root) — at
+    def _load(self, manifest: dict) -> None:
+        """Take the version ``manifest`` names: its centroids, its codec and
+        empty read caches. An artifact whose tail or tombstones were
+        written as loose files outside any manifest entry (the layout
+        before segment entries; such manifests have no ``next_snap_id``) is
+        refused rather than opened without those rows."""
+        self.manifest = manifest
+        # v1 artifacts stored everything at the root; v2 adds version dirs
+        self.version = manifest.get("version", "")
+        self.vpath = fs.join(self.path, self.version) if self.version else self.path
+        if "next_snap_id" not in manifest and any(
+            fs.exists(self.spark, fs.join(self.vpath, kind)) for kind in ("tail", "deleted")
+        ):
+            raise ValueError(
+                f"index at {self.path} has tail or tombstone files that no manifest entry "
+                "names (written by a release before manifest-committed segments); fold "
+                "them in with that release's compact() and open the index again"
+            )
+        self.centroids = fs.read_npy(self.spark, fs.join(self.vpath, "centroids.npy"))
+        self.codec = pqmod.load(manifest, lambda name: fs.read_npy(self.spark, fs.join(self.vpath, name)))
+        # data-relation caches, keyed by the data dirs they came from
+        # (committed dirs never change): Spark's InMemoryFileIndex re-lists
+        # every partition directory on each spark.read.parquet(root) — at
         # nlist=4096 that is thousands of LIST calls (a distributed listing
-        # job, even) per query. One handle-lifetime listing + a cached
+        # job, even) per query. Listing each dir once and caching the
         # relation removes that fixed cost from the steady-state search path.
-        self._data_df = None
-        self._list_ids_on_disk: Optional[dict] = None
-        # read schemas bound once per handle: a parquet read without one
-        # runs a footer-inference Spark job, which would otherwise be one
-        # extra job per probed-list read, tail read and tombstone read on
-        # every query. Base and delta dirs share one layout.
+        self._data_df: Optional[tuple] = None  # (dirs, relation)
+        self._lists_on_disk: dict = {}  # data dir -> list ids with a dir
+        # the data layout's read schema, bound once per version: a parquet
+        # read without one runs a footer-inference Spark job, which would
+        # otherwise be one extra job per probed-list read on every query.
+        # Base and delta dirs share one layout.
         self._data_schema = None
-        self._tail_schema: Optional[str] = None
         self._resident_copy: Optional[_Resident] = None
         # bytes per row of a resident copy: ids and f32 vectors until a load
         # measures it (string ids weigh more)
         self._resident_row_bytes = 8 + 4 * self.dim
+
+    def _refresh(self) -> None:
+        """Re-read the manifest (the handle contract). A new version is
+        loaded whole; within a version the caches follow the dirs the
+        manifest names by themselves."""
+        manifest = fs.read_json(self.spark, fs.join(self.path, _MANIFEST))
+        if manifest.get("version", "") != self.version:
+            self._load(manifest)
+        else:
+            self.manifest = manifest
+
+    def _commit(self) -> None:
+        # the manifest overwrite is the atomic commit point
+        fs.write_json(self.spark, fs.join(self.path, _MANIFEST), self.manifest)
 
     def _read(self, spark: SparkSession, schema, *paths, **options) -> DataFrame:
         """``spark.read.parquet`` with ``schema`` bound when known (no
@@ -689,14 +716,16 @@ class IVFIndex:
         return [fs.join(self.vpath, d) for d in self.manifest.get("deltas", [])]
 
     def _existing_ids_per_dir(self) -> dict:
-        if self._list_ids_on_disk is None:
-            prefix = self._PART_COL + "="
-            per = {}
-            for d in [self.data_path()] + self._delta_dirs():
+        """The list ids with a partition dir, per data dir the manifest
+        names (base first, then deltas). A committed dir never changes, so
+        each is listed once per handle."""
+        prefix = self._PART_COL + "="
+        dirs = [self.data_path(), *self._delta_dirs()]
+        for d in dirs:
+            if d not in self._lists_on_disk:
                 names = fs.listdir(self.spark, d)
-                per[d] = {int(n.split("=", 1)[1]) for n in names if n.startswith(prefix)}
-            self._list_ids_on_disk = per
-        return self._list_ids_on_disk
+                self._lists_on_disk[d] = {int(n.split("=", 1)[1]) for n in names if n.startswith(prefix)}
+        return {d: self._lists_on_disk[d] for d in dirs}
 
     def _existing_list_ids(self) -> set:
         out: set = set()
@@ -737,52 +766,63 @@ class IVFIndex:
                 for p in parts[1:]:
                     out = out.unionByName(p)
                 return out
-        if self._data_df is None:
-            base = self._read_data(spark, self.data_path())
-            for d in self._delta_dirs():
+        dirs = (self.data_path(), *self._delta_dirs())
+        if self._data_df is None or self._data_df[0] != dirs:
+            base = self._read_data(spark, dirs[0])
+            for d in dirs[1:]:
                 base = base.unionByName(self._read_data(spark, d))
-            self._data_df = base
-        out = self._data_df
+            self._data_df = (dirs, base)
+        out = self._data_df[1]
         if lists is not None:
             out = out.filter(F.col(self._PART_COL).isin([int(l) for l in lists]))
         return out
 
-    def _tail_path(self) -> str:
-        return fs.join(self.vpath, "tail")
+    @property
+    def id_type(self) -> str:
+        return self.manifest.get("id_type", "bigint")
 
-    def _deleted_path(self) -> str:
-        return fs.join(self.vpath, "deleted")
+    def _segment_paths(self, kind: str) -> list[str]:
+        """The committed segment dirs of ``kind`` ("tail" or "deleted")."""
+        return [fs.join(self.vpath, kind, s["dir"]) for s in self.manifest.get(kind, [])]
 
-    def _has_tail(self, spark: SparkSession) -> bool:
-        if self._tail_exists is None:
-            self._tail_exists = fs.exists(spark, self._tail_path())
-        return self._tail_exists
-
-    def _has_deleted(self, spark: SparkSession) -> bool:
-        if self._deleted_exists is None:
-            self._deleted_exists = fs.exists(spark, self._deleted_path())
-        return self._deleted_exists
+    def _tail_rows(self) -> int:
+        """Committed tail rows, from the manifest's segment entries."""
+        return sum(s["rows"] for s in self.manifest.get("tail", []))
 
     def tail_df(self, spark: SparkSession) -> Optional[DataFrame]:
-        if self._has_tail(spark):
-            df = self._read(spark, self._tail_schema, self._tail_path())
-            self._tail_schema = self._tail_schema or _ddl(df)
-            return df.select("id", "vec")
-        return None
+        """The committed tail rows (id, vec), or None."""
+        paths = self._segment_paths("tail")
+        return self._read(spark, f"id {self.id_type}, vec array<float>", *paths) if paths else None
 
     def deleted_df(self, spark: SparkSession) -> Optional[DataFrame]:
-        if self._has_deleted(spark):
-            # tombstones are always written with this schema (see delete)
-            schema = f"id {self.manifest.get('id_type', 'bigint')}"
-            return self._read(spark, schema, self._deleted_path()).select("id").distinct()
-        return None
+        """The committed tombstone ids, or None. An id deleted twice is
+        listed twice: every reader anti-joins them."""
+        paths = self._segment_paths("deleted")
+        return self._read(spark, f"id {self.id_type}", *paths) if paths else None
 
     def counts(self, spark: SparkSession) -> dict:
-        base = self.manifest["count"]
-        tail_df, deleted_df = self.tail_df(spark), self.deleted_df(spark)
-        tail = tail_df.count() if tail_df is not None else 0
-        deleted = deleted_df.count() if deleted_df is not None else 0
+        """Base, tail, distinct deleted and live row counts. Only the
+        deleted count runs a Spark job."""
+        self._refresh()
+        base, tail = int(self.manifest["count"]), self._tail_rows()
+        deleted_df = self.deleted_df(spark)
+        deleted = deleted_df.distinct().count() if deleted_df is not None else 0
         return {"base": base, "tail": tail, "deleted": deleted, "live": base + tail - deleted}
+
+    def live_df(self, spark: SparkSession, lists: Optional[list[int]] = None) -> DataFrame:
+        """The live rows (id, vec): the data (restricted to ``lists`` when
+        given), plus the tail, minus the tombstones. No broadcast hint on
+        the anti-join: the tombstone set is unbounded in principle, so AQE
+        broadcasts it only while it actually fits (same discipline as
+        operators/knn.py)."""
+        out = self.data_df(spark, lists).select("id", "vec")
+        tail = self.tail_df(spark)
+        if tail is not None:
+            out = out.unionByName(tail)
+        deleted = self.deleted_df(spark)
+        if deleted is not None:
+            out = out.join(deleted, "id", "left_anti")
+        return out
 
     # -- search -----------------------------------------------------------
     def nprobe_for(self, ef_search: int | None) -> int:
@@ -818,40 +858,31 @@ class IVFIndex:
         eager search + rowid paging (reference: src/hnsw/hnsw_index.cpp:315-356)."""
         if len(query) != self.dim:
             raise ValueError(f"query dimension {len(query)} != index dimension {self.dim}")
-        lists = self.probe_lists(query, self.nprobe_for(ef_search))
-        cand = self.data_df(spark, lists).select("id", "vec")
-        tail = self.tail_df(spark)
-        if tail is not None:
-            cand = cand.unionByName(tail)
-        deleted = self.deleted_df(spark)
-        if deleted is not None:
-            # deletions are immediately invisible (reference: src/hnsw/hnsw_index.cpp:496-512);
-            # filtering happens BEFORE the top-k cut so k rows still come back.
-            # No forced broadcast hint anywhere tombstones are joined: the
-            # set is unbounded in principle, so AQE broadcasts it only while
-            # it actually fits (same discipline as operators/knn.py).
-            cand = cand.join(deleted, "id", "left_anti")
-        return cand
+        # deletions are immediately invisible (reference:
+        # src/hnsw/hnsw_index.cpp:496-512): the tombstones leave BEFORE the
+        # top-k cut, so k rows still come back
+        return self.live_df(spark, self.probe_lists(query, self.nprobe_for(ef_search)))
 
     def _resident(self, spark: SparkSession) -> Optional[_Resident]:
         """The handle's resident copy of the base and delta rows, or None
         when this index reads parquet: quantized and graph artifacts, a
         copy that would take the process's copies past
-        ``knn.RESIDENT_BYTES_BUDGET``, or a tail or tombstones (so the copy
-        never serves data the parquet path would not). Filled by one Spark
-        collect on first use; a delta committed since then is read alone and
-        merged in, since committed data dirs never change. A copy that
-        cannot serve is released, except behind a tail, which
-        ``compact_incremental`` folds into a delta the copy can read alone."""
+        ``knn.RESIDENT_BYTES_BUDGET``, or a manifest listing tail or
+        tombstone segments (so the copy never serves data the parquet path
+        would not). Filled by one Spark collect on first use; a delta
+        committed since then is read alone and merged in, since committed
+        data dirs never change. A copy that cannot serve is released, except
+        behind a tail, which ``compact_incremental`` folds into a delta the
+        copy can read alone."""
         from ..operators import knn
 
         if getattr(self, "is_graph", False) or self.codec is not None:
             return None
         budget, need = knn.RESIDENT_BYTES_BUDGET, int(self.manifest["count"]) * self._resident_row_bytes
-        if need > budget or self._has_deleted(spark):
+        if need > budget or self.manifest.get("deleted"):
             self._resident_copy = None
             return None
-        if self._has_tail(spark):
+        if self.manifest.get("tail"):
             return None
         dirs = (self.data_path(), *self._delta_dirs())
         res = self._resident_copy
@@ -908,7 +939,7 @@ class IVFIndex:
         top = np.lexsort((sort_key(ids), -scores if METRIC_IS_DESCENDING[self.metric] else scores))[:k]
         return spark.createDataFrame(
             pd.DataFrame({"id": ids[top], "score": scores[top]}),
-            f"id {self.manifest.get('id_type', 'bigint')}, score double",
+            f"id {self.id_type}, score double",
         )
 
     def search(self, spark: SparkSession, query: list[float], k: int, ef_search: int | None = None) -> DataFrame:
@@ -917,6 +948,7 @@ class IVFIndex:
         code-selected shortlist with the exact expression, so reported scores
         stay exact there too — only membership is approximate). A resident copy
         answers without a Spark job, with the same rows and doubles."""
+        self._refresh()
         self.last_source = "parquet"
         if self.codec is not None:
             return self._quantized_search(spark, query, k, ef_search)
@@ -957,8 +989,7 @@ class IVFIndex:
 
         desc = METRIC_IS_DESCENDING[metric]
         data = self.data_df(spark, self.probe_lists(query, self.nprobe_for(ef_search)))
-        id_t = self.manifest.get("id_type", "bigint")
-        scores = data.select("id", *codec.scan_cols).mapInPandas(approx, schema=f"id {id_t}, score double")
+        scores = data.select("id", *codec.scan_cols).mapInPandas(approx, schema=f"id {self.id_type}, score double")
         deleted = self.deleted_df(spark)
         if deleted is not None:
             scores = scores.join(deleted, "id", "left_anti")
@@ -974,57 +1005,68 @@ class IVFIndex:
         return scored.orderBy(*order).limit(k)
 
     # -- maintenance ------------------------------------------------------
-    def insert(self, df: DataFrame, vec_col: str, id_col: str) -> None:
-        """Append rows to the unindexed tail (searched brute-force until the
-        next compact — matches the reference's 'create index after load'
-        guidance, reference README.md:66-68).
+    def _commit_segment(self, kind: str, rows: DataFrame, n: Optional[int] = None) -> None:
+        """Write ``rows`` to a fresh segment dir under ``<version>/<kind>/``
+        and commit it as an entry of the manifest's ``kind`` list with its
+        row count: ``n``, or the count the write job itself observes (no
+        read-back). An empty batch commits nothing."""
+        name = fs.alloc_snap_dir(self.spark, self.vpath, self.manifest)
+        out = fs.join(self.vpath, kind, name)
+        if n is None:
+            obs = Observation()
+            rows.observe(obs, F.count(F.lit(1)).alias("rows")).write.parquet(out, mode="overwrite")
+            n = int(obs.get["rows"])
+        else:
+            rows.write.parquet(out, mode="overwrite")
+        if not n:
+            fs.delete(self.spark, out)
+            return
+        self.manifest[kind] = [*self.manifest.get(kind, []), {"dir": name, "rows": n}]
+        self._commit()
 
-        If the index was created with ``tail_max_rows``, the tail row count
-        (a parquet-footer metadata read) is checked after the append: past
-        the bound, ``tail_policy='compact'`` folds the tail in place (this
-        handle and any catalog handle stay valid — the rebuilt state is
-        adopted in-place), the default ``'warn'`` policy emits a warning so
-        the unbounded-tail drift at streaming ingest rates is at least
-        visible (round-4 verdict item 8)."""
-        rows = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).filter(
-            F.col(vec_col).isNotNull()
-        )
-        rows.write.mode("append").parquet(self._tail_path())
-        # the tail's read schema is what was written, when this handle knows
-        # it wrote the tail's first rows or rows of the same schema
-        written = _ddl(rows)
-        self._tail_schema = written if self._tail_exists is False or self._tail_schema == written else None
-        self._tail_exists = True
+    def insert(self, df: DataFrame, vec_col: str, id_col: str) -> None:
+        """Append rows as one committed tail segment, searched brute-force
+        until the next compact (matches the reference's 'create index after
+        load' guidance, reference README.md:66-68). The rows are cast to
+        the data layout as the build casts them: f32 vectors, the
+        manifest's id type.
+
+        If the index was created with ``tail_max_rows``, the committed tail
+        row count (the manifest's segment entries) is checked after the
+        commit: past the bound, ``tail_policy='compact'`` folds the tail
+        (every handle sees the fold at its next call), the default
+        ``'warn'`` policy emits a warning so the unbounded-tail drift at
+        streaming ingest rates is at least visible (round-4 verdict item
+        8)."""
+        self._refresh()
+        rows = df.select(
+            F.col(id_col).cast(self.id_type).alias("id"), F.col(vec_col).cast("array<float>").alias("vec")
+        ).filter(F.col(vec_col).isNotNull())
+        self._commit_segment("tail", rows)
         opts = self.manifest.get("options") or {}
         limit = opts.get("tail_max_rows")
-        if limit:
-            spark = df.sparkSession
-            tail_rows = self.tail_df(spark).count()
-            if tail_rows > int(limit):
-                if opts.get("tail_policy", "warn") == "compact":
-                    # incremental: the auto-fold fires at ingest cadence, so
-                    # it must be O(tail), not O(index) (graph backends fall
-                    # back to the full rebuild); any rebuilt handle state is
-                    # adopted in place so every live handle (catalog,
-                    # engine, streaming sink closure) stays valid
-                    rebuilt = self.compact_incremental(spark)
-                    self.__dict__.update(rebuilt.__dict__)
-                else:
-                    import warnings
-
-                    warnings.warn(
-                        f"index tail has {tail_rows} rows (> tail_max_rows={limit}); "
-                        "searches brute-force the whole tail — run compact(), or create "
-                        "the index with tail_policy='compact' to fold automatically",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
+        if limit and self._tail_rows() > int(limit):
+            if opts.get("tail_policy", "warn") == "compact":
+                # incremental: the auto-fold fires at ingest cadence, so it
+                # must be O(tail), not O(index) (graph backends fall back to
+                # the full rebuild)
+                self.compact_incremental(df.sparkSession)
+            else:
+                warnings.warn(
+                    f"index tail has {self._tail_rows()} rows (> tail_max_rows={limit}); "
+                    "searches brute-force the whole tail — run compact(), or create "
+                    "the index with tail_policy='compact' to fold automatically",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
 
     def delete(self, spark: SparkSession, ids: list) -> None:
-        """Record deleted ids; they disappear from search results immediately."""
-        id_t = self.manifest.get("id_type", "bigint")
-        spark.createDataFrame([(i,) for i in ids], f"id {id_t}").write.mode("append").parquet(self._deleted_path())
-        self._deleted_exists = True
+        """Record deleted ids as one committed tombstone segment; no handle
+        returns them from its next call on."""
+        if not ids:
+            return
+        self._refresh()
+        self._commit_segment("deleted", spark.createDataFrame([(i,) for i in ids], f"id {self.id_type}"), len(ids))
         self._resident_copy = None  # only a full compact's new handle serves again
 
     def compact_incremental(self, spark: SparkSession) -> "IVFIndex":
@@ -1042,42 +1084,33 @@ class IVFIndex:
         the data drifts from the centroids' fit; a full :meth:`compact`
         refits. Deleted-id tombstones likewise remain until a full compact.
 
-        Crash-safety: the delta only becomes visible with the manifest
-        commit (which also sets ``pending_tail_delete``); the tail is
-        deleted after the commit and the flag then cleared. A crash before
-        the commit leaves an orphan delta dir (invisible, overwritten by
-        the next attempt); a crash between commit and tail delete is
-        repaired at the next handle open (``__init__`` deletes the
-        already-folded tail). Single-writer, like every maintenance op
-        here."""
-        tail = self.tail_df(spark)
-        if tail is None:
+        One commit lists the delta, adds the tail rows to ``count`` and
+        empties the tail list; the folded segment dirs are removed after
+        it. A crash before the commit leaves an orphan delta dir (invisible,
+        overwritten by the next attempt); a crash after it leaves folded
+        segment dirs that no manifest names. Single-writer, like every
+        maintenance op here."""
+        self._refresh()
+        folded = self._segment_paths("tail")
+        if not folded:
             return self
-        seq = len(self.manifest.get("deltas", [])) + 1
-        dname = f"delta-{seq:06d}"
+        dname = f"delta-{len(self.manifest.get('deltas', [])) + 1:06d}"
         ddir = fs.join(self.vpath, dname)
         if fs.exists(spark, ddir):  # orphan from a crashed attempt
             fs.delete(spark, ddir)
-        assigned, _ = _assigned(tail, self.centroids, self.codec, self.manifest.get("id_type", "bigint"))
-        n_tail = tail.count()
+        assigned, _ = _assigned(self.tail_df(spark), self.centroids, self.codec, self.id_type)
         (
             assigned.repartition(F.col("list_id"))
             .write.mode("overwrite")
             .partitionBy("list_id")
             .parquet(ddir)
         )
-        # commit: delta becomes visible + tail marked folded, atomically
         self.manifest["deltas"] = [*self.manifest.get("deltas", []), dname]
-        self.manifest["count"] = int(self.manifest["count"]) + int(n_tail)
-        self.manifest["pending_tail_delete"] = True
-        fs.write_json(spark, fs.join(self.path, "manifest.json"), self.manifest)
-        fs.delete(spark, self._tail_path())
-        self.manifest.pop("pending_tail_delete", None)
-        fs.write_json(spark, fs.join(self.path, "manifest.json"), self.manifest)
-        self._tail_exists = False
-        self._tail_schema = None
-        self._data_df = None
-        self._list_ids_on_disk = None
+        self.manifest["count"] = int(self.manifest["count"]) + self._tail_rows()
+        self.manifest["tail"] = []
+        self._commit()
+        for d in folded:
+            fs.delete(spark, d)
         return self
 
     def compact(self, spark: SparkSession) -> "IVFIndex":
@@ -1085,28 +1118,22 @@ class IVFIndex:
         semantics of PRAGMA hnsw_compact_index
         (reference: src/hnsw/hnsw_index.cpp:481-494). Crash-safe: the rebuild
         lands in a NEW version directory and only becomes live when the
-        manifest is overwritten (single atomic commit); the old version is
-        removed after the commit. Committed incremental deltas fold in with
-        the base."""
-        data = self.data_df(spark).select("id", "vec")
-        tail = self.tail_df(spark)
-        if tail is not None:
-            data = data.unionByName(tail)
-        deleted = self.deleted_df(spark)
-        if deleted is not None:
-            data = data.join(deleted, "id", "left_anti")
+        build's manifest write commits it; the old version is removed after
+        the commit. Committed incremental deltas fold in with the base.
+        Returns the new version's handle; this one loads the new version at
+        its next call."""
+        self._refresh()
         cur = int(self.version[1:]) if self.version else 0
-        new_version = f"v{cur + 1:06d}"
         # carry catalog identity through the rebuild
         keep = {k: v for k, v in self.manifest.items() if k in ("index_name", "table_name", "column", "id_column")}
-        data = data.cache()
+        data = self.live_df(spark).cache()
         try:
-            new = build_ivf(
+            new = self._build(
                 data, "vec", "id", self.path,
                 metric=self.metric,
                 options=self.manifest.get("options"),
                 seed=self.manifest.get("seed", 42),
-                version=new_version,
+                version=f"v{cur + 1:06d}",
                 extra_manifest=keep,
             )
             if self.version:

@@ -459,6 +459,7 @@ def knn_join_flat_indexed(
     import numpy as np
 
     spark = left.sparkSession
+    index._refresh()  # the handle contract: see another handle's commits
     metric = index.metric
     index.last_source = "parquet"
     probes_pdf = _collect_probes(left, left_on, left_id, broadcast_probe_limit)
@@ -501,17 +502,8 @@ def knn_join_flat_indexed(
         # rows (and its module docs route performance users to IVF anyway).
         if not getattr(index, "is_graph", False):
             return knn_join_flat_indexed_distributed(left, index, left_on, k, left_id, ef_search)
-        full = index.data_df(spark).select("id", "vec")
-        tail = index.tail_df(spark)
-        if tail is not None:
-            full = full.unionByName(tail)
-        deleted = index.deleted_df(spark)
-        if deleted is not None:
-            # no forced broadcast hint: the tombstone set is unbounded in
-            # principle; AQE broadcasts it while it actually fits
-            full = full.join(deleted, "id", "left_anti")
-        return knn_join_flat(left, full, left_on, "vec", k, metric, left_id, "id", method="crossjoin")
-    schema = f"qid {dict(left.dtypes)[left_id]}, rid {index.manifest.get('id_type', 'bigint')}, rnk int, score double"
+        return knn_join_flat(left, index.live_df(spark), left_on, "vec", k, metric, left_id, "id", method="crossjoin")
+    schema = f"qid {dict(left.dtypes)[left_id]}, rid {index.id_type}, rnk int, score double"
     if len(probes_pdf) == 0:
         return spark.createDataFrame([], schema)
     qmat = as_matrix(probes_pdf["v"])
@@ -538,16 +530,8 @@ def knn_join_flat_indexed(
         # The exact flat GEMM join over the live rows is then both faster
         # and a strict recall superset — route there (measured at 10M rows:
         # masked path 2x slower than brute once coverage passes ~1/2)
-        full = index.data_df(spark).select("id", "vec")
-        tail = index.tail_df(spark)
-        if tail is not None:
-            full = full.unionByName(tail)
-        deleted = index.deleted_df(spark)
-        if deleted is not None:
-            # no forced broadcast hint (unbounded set; AQE decides)
-            full = full.join(deleted, "id", "left_anti")
         return knn_join_flat(
-            left, full, left_on, "vec", k, metric, left_id, "id", _probes_pdf=probes_pdf
+            left, index.live_df(spark), left_on, "vec", k, metric, left_id, "id", _probes_pdf=probes_pdf
         )
     # deleted ids ride into the kernel (so live rows keep all k slots) only
     # while the tombstone set fits DELETED_IDS_KERNEL_CAP — the reference's
@@ -658,7 +642,7 @@ def knn_join_flat_indexed_distributed(
     metric = index.metric
     nprobe = min(index.nprobe_for(ef_search), index.nlist)
     ltypes = dict(left.dtypes)
-    cand_schema = f"qid {ltypes[left_id]}, rid {index.manifest.get('id_type', 'bigint')}, score double"
+    cand_schema = f"qid {ltypes[left_id]}, rid {index.id_type}, score double"
     probes = left.select(F.col(left_id).alias("qid"), F.col(left_on).alias("qv")).filter(
         F.col(left_on).isNotNull()
     )

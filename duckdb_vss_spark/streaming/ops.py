@@ -330,10 +330,10 @@ def stream_index_insert(
     — new rows searchable immediately; fold in at the next compact).
 
     Delivery: the checkpoint makes each micro-batch's insert happen once
-    per committed batch; a retry of an uncommitted batch re-appends (tail
-    appends are not transactional), which matches at-least-once file-sink
-    semantics — dedup-sensitive callers compact (which drops duplicate ids
-    via the rebuild's id-keyed fold) or keep ids unique upstream.
+    per committed batch; a retry of a batch whose insert committed but
+    whose stream checkpoint did not commits a second tail segment, which
+    matches at-least-once file-sink semantics — dedup-sensitive callers
+    keep ids unique upstream.
 
     ``compact_tail_rows``: auto-compaction inside the sink — after a
     micro-batch pushes the unindexed tail past this row count, the
@@ -341,12 +341,10 @@ def stream_index_insert(
     INSIDE ``foreachBatch``, committing the tail as a list-partitioned
     delta before the next batch arrives. This bounds the brute-force tail
     scan every concurrent search pays at streaming ingest rates, without
-    ever taking the index offline (the fold is a manifest commit; the
-    handle is updated in place so this sink and any catalog handle stay
-    valid). Equivalent to creating the index with ``tail_max_rows`` +
-    ``tail_policy='compact'`` — this knob puts the policy at the sink for
-    indexes created without one. A fold that loses the race with a crash
-    is repaired at next handle open (see ``compact_incremental``).
+    ever taking the index offline (the fold is one manifest commit, which
+    every handle sees at its next call). Equivalent to creating the index
+    with ``tail_max_rows`` + ``tail_policy='compact'`` — this knob puts the
+    policy at the sink for indexes created without one.
 
     Runs with ``availableNow`` over the currently-staged input and blocks
     until the stream drains (the harness contract: one pass over all data
@@ -355,14 +353,9 @@ def stream_index_insert(
 
     def _batch(bdf: DataFrame, _bid: int) -> None:
         index.insert(bdf, vec_col, id_col)
-        if compact_tail_rows is not None and getattr(index, "_tail_exists", False):
-            spark = bdf.sparkSession
-            tail = index.tail_df(spark)
-            if tail is not None and tail.count() > int(compact_tail_rows):
-                rebuilt = index.compact_incremental(spark)
-                # adopt rebuilt state in place: catalog/engine handles and
-                # this closure all keep working across the fold
-                index.__dict__.update(rebuilt.__dict__)
+        # the tail's row count is in the manifest the insert committed
+        if compact_tail_rows is not None and index._tail_rows() > int(compact_tail_rows):
+            index.compact_incremental(bdf.sparkSession)
 
     q = (
         vectors.writeStream.foreachBatch(_batch)

@@ -8,11 +8,16 @@ lifecycle/durability."""
 
 from __future__ import annotations
 
+import warnings
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from duckdb_vss_spark import VSSEngine, knn_join_flat, topk
 from duckdb_vss_spark.index.catalog import BinderException, validate_options
+from duckdb_vss_spark.operators import knn as knn_mod
+from duckdb_vss_spark.operators.knn import knn_join_flat_indexed
 
 Q = [((i * 7) % 16) / 16.0 for i in range(64)]
 
@@ -528,43 +533,12 @@ def test_compact_incremental_pq(spark, tmp_path):
     assert got == [r["vec_id"] for r in exact]
 
 
-def test_compact_incremental_crash_recovery(spark, tmp_path):
-    """The commit-then-delete-tail window repairs at handle open: a manifest
-    with pending_tail_delete plus a still-present tail means the tail's rows
-    are already live in the delta — the fresh handle deletes the tail and
-    clears the flag, and results carry no duplicates."""
-    from duckdb_vss_spark.index import fs
-    from duckdb_vss_spark.index.ivf import IVFIndex
-
-    emb = emb_df(spark)
-    eng = VSSEngine(spark, index_root=str(tmp_path / "crash"))
-    eng.register_table("t", emb.filter("vec_id >= 100"))
-    eng.create_index("cr_idx", "t", "embedding", "vec_id", replace=True)
-    idx = eng.catalog.get("cr_idx")
-    idx.insert(emb.filter("vec_id < 50"), "embedding", "vec_id")
-    tail_path = idx._tail_path()
-    tail_backup = spark.read.parquet(tail_path).collect()
-    idx = eng.compact_index("cr_idx", incremental=True)
-    # simulate the crash window: folded tail reappears + flag restored
-    spark.createDataFrame(tail_backup).write.mode("overwrite").parquet(tail_path)
-    m = dict(idx.manifest)
-    m["pending_tail_delete"] = True
-    fs.write_json(spark, fs.join(idx.path, "manifest.json"), m)
-
-    reopened = IVFIndex(idx.path, spark)
-    assert not reopened.manifest.get("pending_tail_delete")
-    assert reopened.tail_df(spark) is None
-    ids = [r["id"] for r in reopened.search(spark, Q, 8, ef_search=10**6).collect()]
-    assert len(ids) == len(set(ids)) == 8
-
-
 def test_indexed_join_tombstones_above_kernel_cap(spark, tmp_path, monkeypatch):
     """Tombstone sets above DELETED_IDS_KERNEL_CAP must never be collected
     to the driver or ride the kernels: exclusion routes through the
     distributed anti-join on the item side, with identical results. The cap
     is monkeypatched tiny so the over-cap route runs on test-size data."""
     from duckdb_vss_spark import knn_join_flat
-    from duckdb_vss_spark.operators import knn as knn_mod
 
     eng = VSSEngine(spark, index_root=str(tmp_path))
     emb = emb_df(spark)
@@ -593,3 +567,301 @@ def test_indexed_join_tombstones_above_kernel_cap(spark, tmp_path, monkeypatch):
     assert key(base) == key(want)
     assert key(capped) == key(want)
     assert not any(r["rid"] in deleted_ids for r in capped)
+
+
+# -- the write protocol: one manifest commit per write ----------------------
+#
+# Inserts and deletes commit segments the manifest names, compacts commit in
+# one manifest write, and every handle re-reads the manifest before a write
+# or a public read. The model tests below check search and index-join rows
+# against a numpy model of the live rows at full probe (random float32
+# vectors, so no scores tie), on a handle that ran every write and on one
+# opened apart from it.
+
+DIM, K, FULL = 8, 5, 10**6
+
+
+class _Model:
+    """An index beside a numpy model of its live rows (id -> f32 vector).
+    ``writer`` runs every write and is never replaced, even by a full
+    compact; ``reader`` is a second handle that :meth:`reopen` replaces.
+    Row ids are never reused, as reference row ids are not."""
+
+    def __init__(self, spark, path, backend="ivf", seed=0, n=120):
+        from duckdb_vss_spark.index.hnsw import build_graph
+        from duckdb_vss_spark.index.ivf import build_ivf
+
+        self.spark, self.path, self.backend = spark, path, backend
+        self.rng = np.random.default_rng(seed)
+        self.live, self.next_id = {}, 0
+        build = build_graph if backend == "hnsw" else build_ivf
+        self.writer = build(self.fresh(n), "vec", "id", path)
+        self.reopen()
+
+    def fresh(self, n):
+        """``n`` new rows (id long, vec array<float>), added to the model."""
+        ids = range(self.next_id, self.next_id + n)
+        self.next_id += n
+        vec = self.rng.standard_normal((n, DIM)).astype(np.float32)
+        self.live.update(zip(ids, vec))
+        return self.spark.createDataFrame([(i, v.tolist()) for i, v in zip(ids, vec)], "id long, vec array<float>")
+
+    def reopen(self):
+        from duckdb_vss_spark.index.hnsw import GraphIndex
+        from duckdb_vss_spark.index.ivf import IVFIndex
+
+        self.reader = (GraphIndex if self.backend == "hnsw" else IVFIndex)(self.path, self.spark)
+
+    def insert(self, n):
+        self.writer.insert(self.fresh(n), "vec", "id")
+
+    def delete(self, n):
+        gone = [int(i) for i in self.rng.choice(sorted(self.live), n, replace=False)]
+        self.writer.delete(self.spark, gone)
+        for i in gone:
+            del self.live[i]
+
+    def compact(self, incremental):
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)  # the graph backend folds in full
+            if incremental:
+                self.writer.compact_incremental(self.spark)
+            else:
+                self.writer.compact(self.spark)
+
+    def exact(self, q, k=K):
+        ids = np.array(sorted(self.live))
+        d = ((np.stack([self.live[i] for i in ids]).astype(np.float64) - q) ** 2).sum(1)
+        return ids[np.lexsort((ids, d))[:k]].tolist()
+
+    def queries(self, n=3):
+        return self.rng.standard_normal((n, DIM)).astype(np.float32)
+
+    def search(self, q=None):
+        q = self.queries(1)[0] if q is None else q
+        for idx in (self.writer, self.reader):
+            got = [r["id"] for r in idx.search(self.spark, q.tolist(), K, FULL).collect()]
+            assert got == self.exact(q), idx.last_source
+
+    def join(self, qs=None):
+        qs = self.queries() if qs is None else qs
+        probes = self.spark.createDataFrame([(j, q.tolist()) for j, q in enumerate(qs)], "qid long, v array<float>")
+        for idx in (self.writer, self.reader):
+            rows = sorted(knn_join_flat_indexed(probes, idx, "v", K, "qid", ef_search=FULL).collect(), key=lambda r: (r["qid"], r["rnk"]))
+            got = [[r["rid"] for r in rows if r["qid"] == j] for j in range(len(qs))]
+            assert got == [self.exact(q) for q in qs], idx.last_source
+
+    def answers(self, idx):
+        """Full-probe search and join rows and counts of ``idx``, at fixed
+        queries."""
+        qs = np.random.default_rng(99).standard_normal((2, DIM)).astype(np.float32)
+        probes = self.spark.createDataFrame([(j, q.tolist()) for j, q in enumerate(qs)], "qid long, v array<float>")
+        search = [tuple(r) for r in idx.search(self.spark, qs[0].tolist(), K, FULL).collect()]
+        join = sorted(tuple(r) for r in knn_join_flat_indexed(probes, idx, "v", K, "qid", ef_search=FULL).collect())
+        return search, join, idx.counts(self.spark)
+
+
+@pytest.mark.parametrize("backend,budget", [("ivf", None), ("ivf", 0), ("hnsw", None)])
+def test_index_writes_match_numpy_model(spark, tmp_path, monkeypatch, backend, budget):
+    """A fixed sequence of every write, each followed by full-probe searches
+    and joins on the writing handle and on a second handle, equal to the
+    model's exact top-k: IVF served resident and from parquet (budget 0),
+    and the graph backend."""
+    if budget is not None:
+        monkeypatch.setattr(knn_mod, "RESIDENT_BYTES_BUDGET", budget)
+    m = _Model(spark, str(tmp_path / "idx"), backend)
+    m.search()
+    m.insert(20)
+    m.join()
+    m.delete(7)
+    m.search()
+    m.compact(incremental=True)
+    m.join()
+    m.insert(15)
+    m.delete(5)
+    m.reopen()
+    m.search()
+    m.compact(incremental=False)
+    m.search()
+    m.join()
+    assert m.reader.counts(spark)["live"] == len(m.live)
+
+
+@pytest.mark.slow  # opt-in: heavy steady-state/property tier (see pytest.ini)
+@pytest.mark.parametrize("budget", [None, 0])
+def test_index_writes_match_numpy_model_stateful(spark, tmp_path_factory, monkeypatch, budget):
+    """Random sequences of create, insert, delete, full and incremental
+    compact, search, join and reopen, on IVF and graph indexes, checked
+    against the numpy model; resident serving on and off (budget 0)."""
+    from hypothesis import HealthCheck, settings
+    from hypothesis import strategies as st
+    from hypothesis.stateful import RuleBasedStateMachine, initialize, precondition, rule, run_state_machine_as_test
+
+    if budget is not None:
+        monkeypatch.setattr(knn_mod, "RESIDENT_BYTES_BUDGET", budget)
+
+    class Ops(RuleBasedStateMachine):
+        @initialize(backend=st.sampled_from(["ivf", "hnsw"]), seed=st.integers(0, 2**16), n=st.integers(K + 20, 150))
+        def create(self, backend, seed, n):
+            self.m = _Model(spark, str(tmp_path_factory.mktemp("model")), backend, seed, n)
+
+        @rule(n=st.integers(1, 30))
+        def insert(self, n):
+            self.m.insert(n)
+
+        @precondition(lambda self: len(self.m.live) > K + 10)
+        @rule(n=st.integers(1, 10))
+        def delete(self, n):
+            self.m.delete(n)
+
+        @rule(incremental=st.booleans())
+        def compact(self, incremental):
+            self.m.compact(incremental)
+
+        @rule()
+        def reopen(self):
+            self.m.reopen()
+
+        @rule()
+        def search(self):
+            self.m.search()
+
+        @rule()
+        def join(self):
+            self.m.join()
+
+    run_state_machine_as_test(
+        Ops,
+        settings=settings(
+            max_examples=6, stateful_step_count=10, deadline=None, database=None,
+            suppress_health_check=list(HealthCheck),
+        ),
+    )
+
+
+def test_write_crash_before_commit_changes_nothing(spark, tmp_path, monkeypatch):
+    """A commit that raises leaves the index as it was: a fresh handle and
+    the handle that crashed answer exactly as before, for insert, delete,
+    incremental and full compact. Run for real afterwards, each of the four
+    writes commits the manifest exactly once."""
+    from duckdb_vss_spark.index import fs
+    from duckdb_vss_spark.index.ivf import IVFIndex
+
+    m = _Model(spark, str(tmp_path / "idx"))
+    m.insert(10)
+    m.delete(3)
+    idx = m.writer
+    before = m.answers(IVFIndex(m.path, spark))
+    ops = {
+        "insert": lambda: idx.insert(m.fresh(4), "vec", "id"),
+        "delete": lambda: idx.delete(spark, [int(i) for i in sorted(m.live)[:2]]),
+        "compact_incremental": lambda: idx.compact_incremental(spark),
+        "compact": lambda: idx.compact(spark),
+    }
+    write_json, commits = fs.write_json, []
+
+    def failing_commit(s, path, obj):
+        if path.endswith("manifest.json"):
+            raise OSError("commit lost")
+        write_json(s, path, obj)
+
+    for name, op in ops.items():
+        with monkeypatch.context() as p:
+            p.setattr(fs, "write_json", failing_commit)
+            with pytest.raises(OSError, match="commit lost"):
+                op()
+        assert m.answers(IVFIndex(m.path, spark)) == before, name
+        assert m.answers(idx) == before, name
+
+    monkeypatch.setattr(fs, "write_json", lambda s, path, obj: commits.append(path) or write_json(s, path, obj))
+    for name, op in ops.items():
+        commits.clear()
+        op()
+        assert [c for c in commits if c.endswith("manifest.json")] == [fs.join(m.path, "manifest.json")], name
+
+
+def test_incremental_compact_crash_after_commit_keeps_rows(spark, tmp_path, monkeypatch):
+    """A crash between the fold's commit and the removal of the folded tail
+    segments: a fresh handle shows the fold (no tail, the rows counted in
+    the base) and every live row exactly once."""
+    from duckdb_vss_spark.index import fs
+    from duckdb_vss_spark.index.ivf import IVFIndex
+
+    def lost_cleanup(*_):
+        raise OSError("cleanup lost")
+
+    m = _Model(spark, str(tmp_path / "idx"), n=60)
+    m.insert(25)
+    with monkeypatch.context() as p:
+        p.setattr(fs, "delete", lost_cleanup)
+        with pytest.raises(OSError, match="cleanup lost"):
+            m.writer.compact_incremental(spark)
+    fresh = IVFIndex(m.path, spark)
+    assert fresh.counts(spark) == {"base": 85, "tail": 0, "deleted": 0, "live": 85}
+    q = m.queries(1)[0]
+    got = [r["id"] for r in fresh.search(spark, q.tolist(), 85, FULL).collect()]
+    assert got == m.exact(q, 85)
+    m.search(q)
+
+
+def test_second_handle_sees_other_handles_writes(spark, tmp_path):
+    """Handle B queries first; handle A then inserts and deletes. B's next
+    search and join return the new row and none of the deleted ids."""
+    m = _Model(spark, str(tmp_path / "idx"))
+    b = m.reader
+    qs = m.queries(2)
+    gone = m.exact(qs[1])[:3]
+    probes = spark.createDataFrame([(j, q.tolist()) for j, q in enumerate(qs)], "qid long, v array<float>")
+    assert [r["id"] for r in b.search(spark, qs[1].tolist(), K, FULL).collect()][:3] == gone
+    knn_join_flat_indexed(probes, b, "v", K, "qid", ef_search=FULL).collect()
+
+    new_id = m.next_id
+    m.writer.insert(spark.createDataFrame([(new_id, qs[0].tolist())], "id long, vec array<float>"), "vec", "id")
+    m.live[new_id], m.next_id = qs[0], new_id + 1
+    m.writer.delete(spark, gone)
+    for i in gone:
+        del m.live[i]
+
+    got = [r["id"] for r in b.search(spark, qs[0].tolist(), K, FULL).collect()]
+    assert got[0] == new_id and got == m.exact(qs[0])
+    rows = knn_join_flat_indexed(probes, b, "v", K, "qid", ef_search=FULL).collect()
+    assert not set(gone) & {r["rid"] for r in rows}
+    assert sorted(r["rid"] for r in rows if r["qid"] == 0) == sorted(m.exact(qs[0]))
+    assert sorted(r["rid"] for r in rows if r["qid"] == 1) == sorted(m.exact(qs[1]))
+
+
+@pytest.mark.parametrize("kind", ["tail", "deleted"])
+def test_loose_tail_or_tombstone_files_are_refused(spark, tmp_path, kind):
+    """An artifact whose tail or tombstones are loose parquet files that no
+    manifest entry names (the layout before manifest-committed segments)
+    is refused with an error that says how to fold them, rather than opened
+    without those rows."""
+    from duckdb_vss_spark.index import fs
+    from duckdb_vss_spark.index.ivf import IVFIndex
+
+    m = _Model(spark, str(tmp_path / "idx"), n=40)
+    loose = fs.join(m.writer.vpath, kind)
+    spark.createDataFrame([(999, [0.0] * DIM)], "id long, vec array<float>").write.parquet(loose)
+    with pytest.raises(ValueError, match=r"compact\(\)"):
+        IVFIndex(m.path, spark)
+    fs.delete(spark, loose)
+    assert IVFIndex(m.path, spark).counts(spark)["live"] == 40
+
+
+def test_inserted_doubles_score_as_stored_f32(spark, emb, tmp_path):
+    """Inserted rows are cast to the data layout as the build casts them:
+    rows inserted from an array<double> column (vectors + 1e-9) score the
+    same in the point search as in the index join, bit for bit."""
+    from duckdb_vss_spark.index.ivf import build_ivf
+
+    idx = build_ivf(emb.filter("vec_id >= 100"), "embedding", "vec_id", str(tmp_path / "idx"))
+    doubles = F.transform(F.col("embedding").cast("array<double>"), lambda x: x + F.lit(1e-9))
+    idx.insert(emb.filter("vec_id < 100").select("vec_id", doubles.alias("embedding")), "embedding", "vec_id")
+    probes = emb.filter(F.col("vec_id").isin(3, 42, 150)).select("vec_id", "embedding")
+    join = knn_join_flat_indexed(probes, idx, "embedding", K, "vec_id", ef_search=FULL).collect()
+    bits = lambda pairs: [(i, np.float64(s).view(np.int64)) for i, s in pairs]
+    for p in probes.collect():
+        got = idx.search(spark, [float(x) for x in p["embedding"]], K, FULL).collect()
+        want = sorted((r for r in join if r["qid"] == p["vec_id"]), key=lambda r: r["rnk"])
+        assert got[0]["id"] == p["vec_id"]
+        assert bits((r["id"], r["score"]) for r in got) == bits((r["rid"], r["score"]) for r in want)
