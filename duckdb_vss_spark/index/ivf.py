@@ -1063,6 +1063,7 @@ class IVFIndex:
     def delete(self, spark: SparkSession, ids: list) -> None:
         """Record deleted ids as one committed tombstone segment; no handle
         returns them from its next call on."""
+        ids = list(ids)
         if not ids:
             return
         self._refresh()
