@@ -622,15 +622,19 @@ class IVFIndex:
     def _load(self, manifest: dict) -> None:
         """Take the version ``manifest`` names: its centroids, its codec and
         empty read caches. An artifact whose tail or tombstones were
-        written as loose files outside any manifest entry (the layout
-        before segment entries; such manifests have no ``next_snap_id``) is
-        refused rather than opened without those rows."""
+        written as loose files directly under ``tail/`` or ``deleted/`` (the
+        layout before segment entries; such manifests have no
+        ``next_snap_id``) is refused rather than opened without those rows.
+        ``snap-*`` dirs there are segments no commit named (a crash, an
+        empty insert) and are ignored."""
         self.manifest = manifest
         # v1 artifacts stored everything at the root; v2 adds version dirs
         self.version = manifest.get("version", "")
         self.vpath = fs.join(self.path, self.version) if self.version else self.path
         if "next_snap_id" not in manifest and any(
-            fs.exists(self.spark, fs.join(self.vpath, kind)) for kind in ("tail", "deleted")
+            not name.startswith("snap-")
+            for kind in ("tail", "deleted")
+            for name in fs.listdir(self.spark, fs.join(self.vpath, kind))
         ):
             raise ValueError(
                 f"index at {self.path} has tail or tombstone files that no manifest entry "
@@ -1005,19 +1009,16 @@ class IVFIndex:
         return scored.orderBy(*order).limit(k)
 
     # -- maintenance ------------------------------------------------------
-    def _commit_segment(self, kind: str, rows: DataFrame, n: Optional[int] = None) -> None:
+    def _commit_segment(self, kind: str, rows: DataFrame) -> None:
         """Write ``rows`` to a fresh segment dir under ``<version>/<kind>/``
-        and commit it as an entry of the manifest's ``kind`` list with its
-        row count: ``n``, or the count the write job itself observes (no
-        read-back). An empty batch commits nothing."""
+        and commit it as an entry of the manifest's ``kind`` list with the
+        row count the write job itself observes (no read-back). An empty
+        batch commits nothing."""
         name = fs.alloc_snap_dir(self.spark, self.vpath, self.manifest)
         out = fs.join(self.vpath, kind, name)
-        if n is None:
-            obs = Observation()
-            rows.observe(obs, F.count(F.lit(1)).alias("rows")).write.parquet(out, mode="overwrite")
-            n = int(obs.get["rows"])
-        else:
-            rows.write.parquet(out, mode="overwrite")
+        obs = Observation()
+        rows.observe(obs, F.count(F.lit(1)).alias("rows")).write.parquet(out, mode="overwrite")
+        n = int(obs.get["rows"])
         if not n:
             fs.delete(self.spark, out)
             return
@@ -1067,7 +1068,7 @@ class IVFIndex:
         if not ids:
             return
         self._refresh()
-        self._commit_segment("deleted", spark.createDataFrame([(i,) for i in ids], f"id {self.id_type}"), len(ids))
+        self._commit_segment("deleted", spark.createDataFrame([(i,) for i in ids], f"id {self.id_type}"))
         self._resident_copy = None  # only a full compact's new handle serves again
 
     def compact_incremental(self, spark: SparkSession) -> "IVFIndex":

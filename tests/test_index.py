@@ -780,6 +780,34 @@ def test_write_crash_before_commit_changes_nothing(spark, tmp_path, monkeypatch)
         assert [c for c in commits if c.endswith("manifest.json")] == [fs.join(m.path, "manifest.json")], name
 
 
+@pytest.mark.parametrize("first_write", ["empty insert", "insert crash", "delete crash"])
+def test_first_write_after_build_leaves_index_openable(spark, tmp_path, monkeypatch, first_write):
+    """The first write on a fresh build (whose manifest has no segment
+    counter yet) that commits nothing, an empty insert or a commit that
+    raises, leaves only an orphan segment dir: a new handle opens the index
+    and answers as before."""
+    from duckdb_vss_spark.index import fs
+    from duckdb_vss_spark.index.ivf import IVFIndex
+
+    m = _Model(spark, str(tmp_path / "idx"), n=40)
+    before = m.answers(m.reader)
+
+    def failing_commit(s, path, obj):
+        raise OSError("commit lost")
+
+    if first_write == "empty insert":
+        m.writer.insert(m.fresh(0), "vec", "id")
+    else:
+        monkeypatch.setattr(fs, "write_json", failing_commit)
+        with pytest.raises(OSError, match="commit lost"):
+            if first_write == "insert crash":
+                m.writer.insert(m.fresh(3), "vec", "id")
+            else:
+                m.writer.delete(spark, [0, 1])
+        monkeypatch.undo()
+    assert m.answers(IVFIndex(m.path, spark)) == before
+
+
 def test_incremental_compact_crash_after_commit_keeps_rows(spark, tmp_path, monkeypatch):
     """A crash between the fold's commit and the removal of the folded tail
     segments: a fresh handle shows the fold (no tail, the rows counted in
