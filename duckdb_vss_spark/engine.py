@@ -255,6 +255,11 @@ class VSSEngine:
         metric: str = "l2sq",
         filter: str | None = None,
     ) -> DataFrame:
+        """``min_by(value_col, metric(vec_col, query), k)`` through the index
+        when one applies, else exact. Both paths pass ``tiebreak=None`` to
+        :func:`~duckdb_vss_spark.operators.topk.min_by_k`, so when rows tie at
+        rank k, which tied rows are kept depends on the partitioning (and, on
+        the index path, on which hits the index returns)."""
         df, _ = self._plan_by_k(table, value_col, vec_col, query, k, metric, filter, descending=False)
         return df
 
@@ -268,6 +273,8 @@ class VSSEngine:
         metric: str = "array_cosine_similarity",
         filter: str | None = None,
     ) -> DataFrame:
+        """``max_by(value_col, metric(vec_col, query), k)``; ties at rank k
+        resolve as in :meth:`min_by_k` (``tiebreak=None`` on both paths)."""
         df, _ = self._plan_by_k(table, value_col, vec_col, query, k, metric, filter, descending=True)
         return df
 

@@ -380,10 +380,16 @@ def grouped_topk(
 def min_by_k(df, value_col, score: Column, k: int, tiebreak=None, filter=None) -> DataFrame:
     """DuckDB ``min_by(value, score, k) [FILTER (WHERE ...)]``: single-row
     DataFrame with column ``values`` = the k values with the smallest scores,
-    ascending; ``filter`` restricts the aggregate's input rows."""
+    ascending; ``filter`` restricts the aggregate's input rows.
+
+    When rows tie at rank k, which of the tied rows are kept depends on the
+    input's partitioning unless ``tiebreak`` (a column or column name,
+    ascending) is given; only the k scores are fixed."""
     return _by_k(df, value_col, score, k, descending=False, tiebreak=tiebreak, filter=filter)
 
 
 def max_by_k(df, value_col, score: Column, k: int, tiebreak=None, filter=None) -> DataFrame:
-    """DuckDB ``max_by(value, score, k) [FILTER (WHERE ...)]`` (descending)."""
+    """DuckDB ``max_by(value, score, k) [FILTER (WHERE ...)]`` (descending).
+    Ties at rank k resolve as in :func:`min_by_k`: by ``tiebreak`` if given,
+    else by the input's partitioning."""
     return _by_k(df, value_col, score, k, descending=True, tiebreak=tiebreak, filter=filter)

@@ -88,8 +88,23 @@ def test_min_by_k_matches_duckdb(spark, ddb, emb):
 
 
 def test_min_by_k_reference_grid_contract(spark, grid):
-    """min_by(vec, dist [5,5,5], 3) flatten-sum lands in [45, 50]
-    (reference: test/sql/hnsw/hnsw_topk.test:24-31)."""
-    vals = min_by_k(grid, "vec", array_distance("vec", [5.0, 5.0, 5.0]), 3).collect()[0]["values"]
-    total = sum(sum(v) for v in vals)
-    assert 45 <= total <= 50
+    """Exact min_by(vec, array_distance(vec, [5,5,5]), 3) on the 9x9x9 grid.
+
+    The three nearest points are (5,5,5) itself at distance 0 (coordinate
+    sum 15) and two of its six axis neighbours at distance 1 (sum 15 +/- 1
+    each). The six neighbours tie, and without a tiebreak min_by_k promises
+    the k smallest scores, not which tied rows are kept, so the flattened
+    sum is 15 + 30 + (+/-1 +/-1): 43, 45 or 47, and nothing else.
+
+    The reference asserts a sum in [45, 50] (test/sql/hnsw/hnsw_topk.test:24-31)
+    only after CREATE INDEX ... USING HNSW, as a tolerance for approximate
+    results (SURVEY.md section 3.2, step 3). It is not a contract of the
+    exact operator: DuckDB's own exact plan returns a sum of 43."""
+    q = [5.0, 5.0, 5.0]
+    vals = min_by_k(grid, "vec", array_distance("vec", q), 3).collect()[0]["values"]
+    assert [sum((a - b) ** 2 for a, b in zip(v, q)) for v in vals] == [0.0, 1.0, 1.0]
+    assert list(vals[0]) == q
+    others = {tuple(v) for v in vals[1:]}
+    assert len(others) == 2
+    assert others <= {tuple(r["vec"]) for r in grid.collect()}
+    assert sum(sum(v) for v in vals) in {43.0, 45.0, 47.0}
