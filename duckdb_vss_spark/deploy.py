@@ -10,6 +10,7 @@ it zips the package once and registers it with ``SparkContext.addPyFile``.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -18,21 +19,28 @@ _shipped: set[int] = set()
 
 
 def package_zip() -> str:
+    """The package's ``.py`` files as a zip in the temp dir, named by a hash
+    of their paths and bytes: two checkouts share a zip exactly when they
+    ship the same code, and a zip, once written, never changes (its entries
+    carry a fixed timestamp)."""
     pkgdir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "duckdb_vss_spark_pkg.zip")
-    if not os.path.exists(zpath) or os.path.getmtime(zpath) < max(
-        os.path.getmtime(os.path.join(r, f))
-        for r, _, fs in os.walk(pkgdir)
-        for f in fs
-        if f.endswith(".py")
-    ):
+    files = {}
+    for root, _, names in os.walk(pkgdir):
+        for f in names:
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    files[os.path.relpath(full, os.path.dirname(pkgdir))] = fh.read()
+    digest = hashlib.sha256()
+    for rel in sorted(files):
+        digest.update(f"{rel}\0{len(files[rel])}\0".encode())
+        digest.update(files[rel])
+    zpath = os.path.join(tempfile.gettempdir(), f"duckdb_vss_spark_pkg-{digest.hexdigest()[:20]}.zip")
+    if not os.path.exists(zpath):
         tmp = zpath + f".{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as z:
-            for root, _, files in os.walk(pkgdir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        z.write(full, os.path.relpath(full, os.path.dirname(pkgdir)))
+            for rel in sorted(files):
+                z.writestr(zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0)), files[rel])
         os.replace(tmp, zpath)
     return zpath
 

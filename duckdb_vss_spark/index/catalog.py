@@ -31,7 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from . import fs
+from . import fs, segments
 from .hnsw import GRAPH_FORMAT, GraphIndex, build_graph
 from .ivf import DEFAULT_EF_SEARCH, IVFIndex, build_ivf
 
@@ -236,14 +236,14 @@ class IndexCatalog:
         if self._names is None:
             self._names = sorted(
                 d for d in fs.listdir(self.spark, self.root)
-                if fs.exists(self.spark, fs.join(self.root, d, "manifest.json"))
+                if segments.exists(self.spark, fs.join(self.root, d))
             )
         return self._names
 
     def exists(self, name: str) -> bool:
         if name in self._handles:
             return True
-        return fs.exists(self.spark, fs.join(self._entry_path(name), "manifest.json"))
+        return segments.exists(self.spark, self._entry_path(name))
 
     def get(self, name: str) -> IVFIndex:
         if name in self._handles:
@@ -251,8 +251,7 @@ class IndexCatalog:
         if not self.exists(name):
             raise KeyError(f"No HNSW index named '{name}'")
         path = self._entry_path(name)
-        manifest = fs.read_json(self.spark, fs.join(path, "manifest.json"))
-        if manifest.get("format", "").startswith("hnsw-graph-parquet"):
+        if segments.read_manifest(self.spark, path).get("format", "").startswith("hnsw-graph-parquet"):
             idx: IVFIndex = GraphIndex(path, self.spark)
         else:
             idx = IVFIndex(path, self.spark)

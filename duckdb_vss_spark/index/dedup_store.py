@@ -173,7 +173,7 @@ class MinHashStore(SnapshotStore):
 
     def _match_local(self, source, signed, threshold: float) -> pd.DataFrame:
         """:meth:`match_against` for a batch signed on the driver, against
-        the handle's resident copy (``source`` a ``_StoreCopy``) or a scan
+        the handle's resident copy (``source`` a :class:`.segments.Resident`) or a scan
         of the store (``source`` the store DataFrame). Returns pandas
         ``(id, store_id, snapshot, est_jaccard)``.
 
@@ -243,7 +243,7 @@ class MinHashStore(SnapshotStore):
         """The store as a driver batch is matched against it: the resident
         copy, else the lazy union of its snapshots (None when it has
         none). Sets :attr:`last_source`."""
-        self._refresh()
+        self._log.refresh()
         copy = self._resident()
         if copy is not None:
             self.last_source = copy.label
@@ -316,7 +316,7 @@ class MinHashStore(SnapshotStore):
         if rows is None:
             return self._match_spark(source, df, text_col, id_col, threshold)
         hits = self._match_local(source, self._sign_local(rows, text_col, id_col), threshold)
-        store_t = dict(source.dtypes)["id"] if isinstance(source, DataFrame) else source.id_type
+        store_t = dict(source.dtypes)["id"] if isinstance(source, DataFrame) else next(iter(source.parts.values())).id_type
         schema = f"id {id_t}, store_id {store_t}, snapshot string, est_jaccard double"
         return self.spark.createDataFrame(hits, schema)
 

@@ -3,11 +3,12 @@
 The index data plane (inverted lists, tail, deletes) already moves through
 ``spark.read/write.parquet`` and therefore works against any Hadoop-supported
 store (local, ``file://``, ``s3a://``, ``abfss://``, ``hdfs://``). The control
-plane (manifest.json, centroids.npy, existence checks, directory swaps) used
-to be ``os.*``/local-only — the reference's analog is index blocks living in
-the database file itself (reference: src/hnsw/hnsw_index.cpp:45-144). Routing
-these few-KB reads/writes through ``Path.getFileSystem`` gives every path the
-same reach as the data plane with zero extra dependencies.
+plane (manifest.json, centroids.npy, existence checks, listings and deletes)
+goes through ``Path.getFileSystem`` too, so every path has the same reach
+as the data plane with zero extra dependencies — the reference's analog is
+index blocks living in the database file itself (reference:
+src/hnsw/hnsw_index.cpp:45-144). The commit protocol built on these calls
+is :mod:`.segments`.
 
 All functions accept plain local paths or any URI Hadoop resolves. Latency is
 one JVM round-trip per call — fine for per-query metadata, never used per-row.
@@ -26,9 +27,7 @@ __all__ = [
     "exists",
     "mkdirs",
     "delete",
-    "rename",
     "listdir",
-    "alloc_snap_dir",
     "read_bytes",
     "write_bytes",
     "read_json",
@@ -66,45 +65,11 @@ def delete(spark: SparkSession, path: str) -> None:
     fs.delete(p, True)
 
 
-def rename(spark: SparkSession, src: str, dst: str) -> bool:
-    fs, p, jvm = _fs(spark, src)
-    return bool(fs.rename(p, jvm.org.apache.hadoop.fs.Path(dst)))
-
-
 def listdir(spark: SparkSession, path: str) -> list[str]:
     fs, p, _ = _fs(spark, path)
     if not fs.exists(p):
         return []
     return [st.getPath().getName() for st in fs.listStatus(p)]
-
-
-def alloc_snap_dir(spark: SparkSession, root: str, manifest: dict) -> str:
-    """Allocate the next ``snap-NNNNNN`` directory name for a versioned
-    snapshot store and bump the manifest's in-memory ``next_snap_id``
-    counter (persisted by the caller's commit write).
-
-    Dir names must NEVER be reused: deriving them from
-    ``len(manifest['snapshots'])`` breaks after ``drop_snapshot`` — the
-    next append re-derives a LIVE snapshot's directory and
-    ``mode='overwrite'`` destroys its data. A monotonic counter persisted
-    in the manifest makes reuse impossible. Legacy manifests without the
-    counter are migrated by scanning EVERY ``snap-*`` dir on disk
-    (orphans included, so a dropped-but-unvacuumed dir is not overwritten
-    under a reader still holding the old manifest).
-    """
-    nid = manifest.get("next_snap_id")
-    if nid is None:
-        idxs = [-1]
-        for name in listdir(spark, root):
-            base = name.rstrip("/").split("/")[-1]
-            if base.startswith("snap-"):
-                try:
-                    idxs.append(int(base[5:]))
-                except ValueError:
-                    pass
-        nid = max(idxs) + 1
-    manifest["next_snap_id"] = nid + 1
-    return f"snap-{nid:06d}"
 
 
 def read_bytes(spark: SparkSession, path: str) -> bytes:

@@ -43,9 +43,9 @@ src/hnsw/hnsw_index.cpp:700-724, build: hnsw_index_physical_create.cpp:
   "recall is tunable, exactness at the limit" contract as the IVF backend
   and the reference.
 - **Maintenance** reuses the IVF artifact's manifest-committed tail and
-  tombstone segments and its versioned compact unchanged
-  (:class:`~.ivf.IVFIndex`): those layers never look inside the indexed
-  payload. An incremental compact is a full one here (see
+  tombstone segments (:mod:`.segments`), its versioned compact and its
+  vacuum unchanged (:class:`~.ivf.IVFIndex`): those layers never look
+  inside the indexed payload. An incremental compact is a full one here (see
   :meth:`GraphIndex.compact_incremental`).
 
 Artifact layout::
@@ -88,7 +88,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import fs
+from . import fs, segments
 from .ivf import FIRST_VERSION, IVFIndex
 from ..broadcasts import tracked_broadcast
 from ..functions.distance import METRIC_IS_DESCENDING, bound_vec, canonical_metric, distance_expr
@@ -348,7 +348,7 @@ def build_graph(
         "graph_part_rows": part_rows,
     }
     manifest.update(extra_manifest or {})
-    fs.write_json(spark, fs.join(path, "manifest.json"), manifest)  # commit point
+    segments.SegmentLog(spark, path, manifest).commit()
     return GraphIndex(path, spark)
 
 

@@ -24,19 +24,23 @@ for Spark's execution model (SURVEY §7.1):
   degenerates to an exact full scan — recall is tunable, not guaranteed,
   like the reference).
 - Maintenance is immutable-artifact style (SURVEY §2.3 M1-M3) with one
-  commit protocol for every write, the one the fingerprint stores use
-  (``snapshot_store.py``): re-read the manifest, write the new rows to a
-  fresh directory whose name is never reused (``fs.alloc_snap_dir``), then
-  commit with one manifest overwrite. Readers read only the directories the
-  manifest names. INSERT adds a *tail* segment, searched brute-force and
-  unioned in; DELETE adds a tombstone segment of ids, consulted before the
-  top-k cut (deleted rows are invisible at every handle's next call, like
-  the reference's tombstones, reference: src/hnsw/hnsw_index.cpp:496-512);
+  commit protocol for every write, the segment log the fingerprint stores
+  use too (:mod:`.segments`): re-read the manifest, write the new rows to a
+  fresh directory whose name is never reused, then commit with one
+  manifest overwrite. Readers read only the directories the manifest
+  names. INSERT adds a *tail* segment, searched brute-force and unioned in;
+  DELETE adds a tombstone segment of ids, consulted before the top-k cut
+  (deleted rows are invisible at every handle's next call, like the
+  reference's tombstones, reference: src/hnsw/hnsw_index.cpp:496-512);
   incremental COMPACT folds the tail into a list-partitioned *delta*; full
   COMPACT builds a NEW version directory. A crash before a commit leaves an
   orphan directory that no reader sees; a crash after it leaves at most
   folded directories that no reader sees (unlike delete-then-rename, there
-  is no window with no index on disk).
+  is no window with no index on disk); :meth:`IVFIndex.vacuum` deletes
+  both kinds.
+- A small unquantized index is served from a resident copy on the handle
+  (:meth:`IVFIndex._resident`, a :class:`.segments.Resident` with one part
+  per data dir).
 
 All control-plane I/O (manifest, centroids, existence checks) goes through
 the Hadoop FileSystem API (:mod:`.fs`), so the artifact root may be a local
@@ -60,18 +64,16 @@ from __future__ import annotations
 
 import math
 import sys
-import threading
 import warnings
-import weakref
 from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import fs
+from . import fs, segments
 from . import pq as pqmod
 from ..broadcasts import tracked_broadcast
 from ..functions.distance import METRIC_IS_DESCENDING, bound_vec, canonical_metric, distance_expr
@@ -82,7 +84,6 @@ DEFAULT_EF_SEARCH = 64  # usearch default (reference: usearch/index.hpp:1282-129
 KMEANS_SAMPLE = 65536
 KMEANS_ITERS = 12
 FIRST_VERSION = "v000001"
-_MANIFEST = "manifest.json"
 
 
 def kmeans(x: np.ndarray, nlist: int, iters: int = KMEANS_ITERS, seed: int = 42) -> np.ndarray:
@@ -449,18 +450,20 @@ def build_ivf(
         nlist = max(1, min(4096, int(math.sqrt(n) * 32.0 / m0)))
     from ..operators import knn
 
-    sample = src.select("vec")
     frac = min(1.0, kmeans_sample / n)
     if frac < 1.0:
-        sample = sample.sample(fraction=frac, seed=seed)
-    # the sample is the whole source: when the index will be served from a
-    # resident copy, collect the ids with the vectors and hand the rows to
+        spdf = src.select("vec").sample(fraction=frac, seed=seed).toPandas()
+    else:
+        # the sample is the whole source: ordered by id, so the centroids
+        # do not follow the file-scan order (which follows the hash of the
+        # artifact's paths when a compact reads its own parquet back)
+        spdf = src.toPandas().sort_values("id", kind="stable", ignore_index=True)
+    # when the index will be served from a resident copy, hand the rows to
     # the built handle, so its first query loads nothing
     hand_off = (
         frac == 1.0 and not (opts.get("pq_m") or opts.get("quantization"))
         and n * (8 + 4 * dim) <= knn.RESIDENT_BYTES_BUDGET
     )
-    spdf = (src if hand_off else sample).toPandas()
     svec = np.vstack(spdf["vec"].to_numpy())
     smat = svec.astype(np.float64)
     centroids = kmeans(smat, nlist, iters=kmeans_iters, seed=seed)
@@ -511,13 +514,14 @@ def build_ivf(
         manifest[codec.rerank_key] = auto_rerank
         manifest["rerank_auto"] = {"target_recall": float(tr), **auto_diag}
     manifest.update(extra_manifest or {})
-    fs.write_json(spark, fs.join(path, _MANIFEST), manifest)  # commit point
+    segments.SegmentLog(spark, path, manifest).commit()
     idx = IVFIndex(path, spark)
     if hand_off:
         # the executors' assignment rule, row for row; the handle knows the
         # schema it would otherwise infer at its first parquet read
         idx._data_schema = schema
-        idx._adopt_rows(spdf["id"].to_numpy(), svec, _nearest_centroid(svec, centroids, dtype=np.float32))
+        lists = _nearest_centroid(svec, centroids, dtype=np.float32)
+        idx._copy.adopt(idx.data_path(), _Lists(spdf["id"].to_numpy(), svec, lists, nlist))
     return idx
 
 
@@ -543,50 +547,36 @@ def _assigned(src: DataFrame, centroids: np.ndarray, codec, id_t: str) -> tuple[
     return src.mapInPandas(assign, schema=schema), schema
 
 
-class _Resident:
-    """An index's rows held on the driver: ``ids`` and f32 ``vec`` sorted by
-    inverted list, so ``offsets[l]:offsets[l + 1]`` are the rows of list
-    ``l``. ``dirs`` names the data dirs (base, then deltas) they came from;
-    those are immutable once the manifest names them. ``nbytes`` counts the
-    arrays, and the strings of string ids."""
+class _Lists:
+    """One data dir's rows (base or delta) in an index's resident copy:
+    ``ids`` and f32 ``vec`` sorted by inverted list, so
+    ``offsets[l]:offsets[l + 1]`` are the rows of list ``l``. ``nbytes``
+    counts the arrays, and the strings of string ids."""
 
-    def __init__(self, dirs: tuple, ids: np.ndarray, vec: np.ndarray, list_ids: np.ndarray, nlist: int):
+    def __init__(self, ids: np.ndarray, vec: np.ndarray, list_ids: np.ndarray, nlist: int):
         order = np.argsort(list_ids, kind="stable")
-        self.dirs = dirs
         self.ids, self.vec = ids[order], vec[order]
         self.offsets = np.r_[0, np.cumsum(np.bincount(list_ids, minlength=nlist))]
-        self.label = f"resident ({len(ids)} rows)"
+        self.n = len(ids)
         self.nbytes = self.ids.nbytes + self.vec.nbytes + self.offsets.nbytes
         if self.ids.dtype == object:
             self.nbytes += sum(map(sys.getsizeof, self.ids))
-        _RESIDENT_LIVE.add(self)
-
-    def list_ids(self) -> np.ndarray:
-        """The inverted list of each row."""
-        return np.repeat(np.arange(len(self.offsets) - 1), np.diff(self.offsets))
-
-    def rows(self, lists=None) -> np.ndarray:
-        """Row positions of ``lists``, in that order (every row when None)."""
-        if lists is None:
-            return np.arange(len(self.ids))
-        spans = [np.arange(self.offsets[l], self.offsets[l + 1]) for l in lists]
-        return np.concatenate(spans) if spans else np.empty(0, dtype=np.int64)
 
 
-# Every resident copy alive in this process, IVF indexes' and fingerprint
-# stores' (snapshot_store._StoreCopy) alike: knn.RESIDENT_BYTES_BUDGET bounds
-# the sum of their nbytes, not each one. A copy leaves the set when its
-# handle lets go of it (delete, compact, drop) or is garbage collected.
-_RESIDENT_LIVE: "weakref.WeakSet[_Resident]" = weakref.WeakSet()
-# one load at a time, so the budget check and the load that follows it are
-# not interleaved with another handle's
-_RESIDENT_LOAD_LOCK = threading.Lock()
-
-
-def resident_bytes() -> int:
-    """Bytes held by every resident copy in this process (indexes and
-    stores)."""
-    return sum(r.nbytes for r in list(_RESIDENT_LIVE))
+def resident_rows(res: segments.Resident, lists=None) -> tuple:
+    """``(ids, vec, list_ids)`` of the rows of ``lists`` (every list when
+    None) in the resident copy ``res``: list by list, and within a list
+    base rows first, then each delta's in commit order."""
+    parts = list(res.parts.values())
+    if lists is None:
+        lists = range(len(parts[0].offsets) - 1)
+    spans = [(p, p.offsets[l], p.offsets[l + 1], l) for l in lists for p in parts]
+    spans = [s for s in spans if s[2] > s[1]] or [(parts[0], 0, 0, 0)]
+    return (
+        np.concatenate([p.ids[a:b] for p, a, b, _ in spans]),
+        np.concatenate([p.vec[a:b] for p, a, b, _ in spans]),
+        np.repeat(np.array([l for *_, l in spans], dtype=np.int64), [b - a for _, a, b, _ in spans]),
+    )
 
 
 class IVFIndex:
@@ -595,15 +585,13 @@ class IVFIndex:
     relations when the handle serves a small index from its resident copy
     (:meth:`_resident`).
 
-    Handle contract (the fingerprint stores' one): every write
+    Handle contract (the segment log's, :mod:`.segments`): every write
     (:meth:`insert`, :meth:`delete`, :meth:`compact_incremental`,
     :meth:`compact`) re-reads ``manifest.json`` first and commits with one
     overwrite of it, and every public read (:meth:`search`, the index join
     ``knn.knn_join_flat_indexed``, :meth:`counts`) re-reads it once, so a
     handle sees every commit made through another handle at its next call.
-    A new version reloads the centroids, codec and caches. Concurrent
-    writers are still unsupported: two commits racing between the re-read
-    and the manifest write can lose one of them."""
+    A new version reloads the centroids, codec and caches."""
 
     # where the last search or index join read its rows: "parquet", or the
     # resident copy's label
@@ -617,17 +605,22 @@ class IVFIndex:
     def __init__(self, path: str, spark: Optional[SparkSession] = None):
         self.path = path
         self.spark = spark or SparkSession.getActiveSession()
-        self._load(fs.read_json(self.spark, fs.join(path, _MANIFEST)))
+        self._log = segments.SegmentLog(self.spark, path)
+        self._load()
 
-    def _load(self, manifest: dict) -> None:
-        """Take the version ``manifest`` names: its centroids, its codec and
+    @property
+    def manifest(self) -> dict:
+        return self._log.manifest
+
+    def _load(self) -> None:
+        """Take the version the manifest names: its centroids, its codec and
         empty read caches. An artifact whose tail or tombstones were
         written as loose files directly under ``tail/`` or ``deleted/`` (the
         layout before segment entries; such manifests have no
         ``next_snap_id``) is refused rather than opened without those rows.
         ``snap-*`` dirs there are segments no commit named (a crash, an
         empty insert) and are ignored."""
-        self.manifest = manifest
+        manifest = self.manifest
         # v1 artifacts stored everything at the root; v2 adds version dirs
         self.version = manifest.get("version", "")
         self.vpath = fs.join(self.path, self.version) if self.version else self.path
@@ -643,37 +636,24 @@ class IVFIndex:
             )
         self.centroids = fs.read_npy(self.spark, fs.join(self.vpath, "centroids.npy"))
         self.codec = pqmod.load(manifest, lambda name: fs.read_npy(self.spark, fs.join(self.vpath, name)))
-        # data-relation caches, keyed by the data dirs they came from
-        # (committed dirs never change): Spark's InMemoryFileIndex re-lists
-        # every partition directory on each spark.read.parquet(root) — at
-        # nlist=4096 that is thousands of LIST calls (a distributed listing
-        # job, even) per query. Listing each dir once and caching the
-        # relation removes that fixed cost from the steady-state search path.
-        self._data_df: Optional[tuple] = None  # (dirs, relation)
-        self._lists_on_disk: dict = {}  # data dir -> list ids with a dir
+        # list ids with a partition dir, per data dir (committed dirs never
+        # change): listed once per handle
+        self._lists_on_disk: dict = {}
         # the data layout's read schema, bound once per version: a parquet
         # read without one runs a footer-inference Spark job, which would
         # otherwise be one extra job per probed-list read on every query.
         # Base and delta dirs share one layout.
         self._data_schema = None
-        self._resident_copy: Optional[_Resident] = None
-        # bytes per row of a resident copy: ids and f32 vectors until a load
-        # measures it (string ids weigh more)
-        self._resident_row_bytes = 8 + 4 * self.dim
+        # the resident copy, one part per data dir (base, then deltas); a
+        # row is an id and an f32 vector until a load measures it
+        self._copy = segments.Resident("rows", 8 + 4 * self.dim)
 
     def _refresh(self) -> None:
         """Re-read the manifest (the handle contract). A new version is
         loaded whole; within a version the caches follow the dirs the
         manifest names by themselves."""
-        manifest = fs.read_json(self.spark, fs.join(self.path, _MANIFEST))
-        if manifest.get("version", "") != self.version:
-            self._load(manifest)
-        else:
-            self.manifest = manifest
-
-    def _commit(self) -> None:
-        # the manifest overwrite is the atomic commit point
-        fs.write_json(self.spark, fs.join(self.path, _MANIFEST), self.manifest)
+        if self._log.refresh().get("version", "") != self.version:
+            self._load()
 
     def _read(self, spark: SparkSession, schema, *paths, **options) -> DataFrame:
         """``spark.read.parquet`` with ``schema`` bound when known (no
@@ -770,13 +750,11 @@ class IVFIndex:
                 for p in parts[1:]:
                     out = out.unionByName(p)
                 return out
-        dirs = (self.data_path(), *self._delta_dirs())
-        if self._data_df is None or self._data_df[0] != dirs:
-            base = self._read_data(spark, dirs[0])
-            for d in dirs[1:]:
-                base = base.unionByName(self._read_data(spark, d))
-            self._data_df = (dirs, base)
-        out = self._data_df[1]
+        # one relation per data dir set, memoized by the log: Spark's
+        # InMemoryFileIndex re-lists every partition directory on each
+        # spark.read.parquet(root), at nlist=4096 thousands of LIST calls
+        # (a distributed listing job, even) per query
+        out = self._log.union((self.data_path(), *self._delta_dirs()), lambda d: self._read_data(spark, d))
         if lists is not None:
             out = out.filter(F.col(self._PART_COL).isin([int(l) for l in lists]))
         return out
@@ -867,67 +845,33 @@ class IVFIndex:
         # top-k cut, so k rows still come back
         return self.live_df(spark, self.probe_lists(query, self.nprobe_for(ef_search)))
 
-    def _resident(self, spark: SparkSession) -> Optional[_Resident]:
+    def _resident(self, spark: SparkSession) -> Optional[segments.Resident]:
         """The handle's resident copy of the base and delta rows, or None
         when this index reads parquet: quantized and graph artifacts, a
         copy that would take the process's copies past
         ``knn.RESIDENT_BYTES_BUDGET``, or a manifest listing tail or
         tombstone segments (so the copy never serves data the parquet path
-        would not). Filled by one Spark collect on first use; a delta
-        committed since then is read alone and merged in, since committed
-        data dirs never change. A copy that cannot serve is released, except
-        behind a tail, which ``compact_incremental`` folds into a delta the
-        copy can read alone."""
-        from ..operators import knn
-
+        would not). A data dir the copy lacks is read once, all of them in
+        one Spark collect. Tombstones release the copy; a tail does not,
+        since ``compact_incremental`` folds it into a delta the copy can
+        read alone."""
         if getattr(self, "is_graph", False) or self.codec is not None:
             return None
-        budget, need = knn.RESIDENT_BYTES_BUDGET, int(self.manifest["count"]) * self._resident_row_bytes
-        if need > budget or self.manifest.get("deleted"):
-            self._resident_copy = None
+        if self.manifest.get("deleted"):
+            self._copy.release()
             return None
         if self.manifest.get("tail"):
             return None
-        dirs = (self.data_path(), *self._delta_dirs())
-        res = self._resident_copy
-        if res is not None and res.dirs == dirs:
-            return res
-        with _RESIDENT_LOAD_LOCK:
-            if res is not None and not set(res.dirs) <= set(dirs):
-                res = None  # another version: start over
-            self._resident_copy = None  # the copy below replaces it
-            if resident_bytes() - (0 if res is None else res.nbytes) + need > budget:
-                return None
-            new = [d for d in dirs if res is None or d not in res.dirs]
-            frame = self._read_data(spark, new[0])
-            for d in new[1:]:
-                frame = frame.unionByName(self._read_data(spark, d))
-            pdf = frame.select("id", "vec", self._PART_COL).toPandas()
-            ids, lists = pdf["id"].to_numpy(), pdf[self._PART_COL].to_numpy(np.int64)
+
+        def build(_, pdf):
             vec = np.vstack([np.empty((0, self.dim), np.float32), *pdf["vec"]]).astype(np.float32, copy=False)
-            del pdf
-            if res is not None:
-                ids, vec, lists = np.r_[res.ids, ids], np.vstack([res.vec, vec]), np.r_[res.list_ids(), lists]
-            res = _Resident(dirs, ids, vec, lists, self.nlist)
-            self._resident_row_bytes = max(self._resident_row_bytes, res.nbytes / max(len(res.ids), 1))
-            if resident_bytes() > budget:
-                return None  # heavier than estimated: dropped with ``res``
-            self._resident_copy = res
-        return res
+            return _Lists(pdf["id"].to_numpy(), vec, pdf[self._PART_COL].to_numpy(np.int64), self.nlist)
 
-    def _adopt_rows(self, ids: np.ndarray, vec: np.ndarray, list_ids: np.ndarray) -> None:
-        """Make the base rows just written (``ids``, f32 ``vec`` and their
-        inverted ``list_ids``) the handle's resident copy, when they fit the
-        budget beside the process's other copies."""
-        from ..operators import knn
+        key = (self.data_path(), *self._delta_dirs())
+        read = lambda d: self._read_data(spark, d).select("id", "vec", self._PART_COL)
+        return self._copy if self._copy.sync(key, int(self.manifest["count"]), read, build) else None
 
-        with _RESIDENT_LOAD_LOCK:
-            res = _Resident((self.data_path(), *self._delta_dirs()), ids, vec, list_ids, self.nlist)
-            self._resident_row_bytes = max(self._resident_row_bytes, res.nbytes / max(len(res.ids), 1))
-            if resident_bytes() <= knn.RESIDENT_BYTES_BUDGET:
-                self._resident_copy = res
-
-    def _resident_search(self, spark: SparkSession, res: _Resident, query, k: int, lists) -> Optional[DataFrame]:
+    def _resident_search(self, spark: SparkSession, res: segments.Resident, query, k: int, lists) -> Optional[DataFrame]:
         """:meth:`search` over the resident rows of ``lists``, as a local
         relation with the parquet path's exact doubles and (score, id)
         order. None when a score is NaN — a zero-norm cosine row, NULL in
@@ -935,11 +879,10 @@ class IVFIndex:
         takes the parquet path and keeps Spark's semantics."""
         from ..functions.kernels import paired_exact_scores, sort_key
 
-        rows = res.rows(lists)
-        scores = paired_exact_scores(np.asarray(query, dtype=np.float64), res.vec[rows], self.metric)
+        ids, vec, _ = resident_rows(res, lists)
+        scores = paired_exact_scores(np.asarray(query, dtype=np.float64), vec, self.metric)
         if np.isnan(scores).any():
             return None
-        ids = res.ids[rows]
         top = np.lexsort((sort_key(ids), -scores if METRIC_IS_DESCENDING[self.metric] else scores))[:k]
         return spark.createDataFrame(
             pd.DataFrame({"id": ids[top], "score": scores[top]}),
@@ -1009,22 +952,6 @@ class IVFIndex:
         return scored.orderBy(*order).limit(k)
 
     # -- maintenance ------------------------------------------------------
-    def _commit_segment(self, kind: str, rows: DataFrame) -> None:
-        """Write ``rows`` to a fresh segment dir under ``<version>/<kind>/``
-        and commit it as an entry of the manifest's ``kind`` list with the
-        row count the write job itself observes (no read-back). An empty
-        batch commits nothing."""
-        name = fs.alloc_snap_dir(self.spark, self.vpath, self.manifest)
-        out = fs.join(self.vpath, kind, name)
-        obs = Observation()
-        rows.observe(obs, F.count(F.lit(1)).alias("rows")).write.parquet(out, mode="overwrite")
-        n = int(obs.get["rows"])
-        if not n:
-            fs.delete(self.spark, out)
-            return
-        self.manifest[kind] = [*self.manifest.get(kind, []), {"dir": name, "rows": n}]
-        self._commit()
-
     def insert(self, df: DataFrame, vec_col: str, id_col: str) -> None:
         """Append rows as one committed tail segment, searched brute-force
         until the next compact (matches the reference's 'create index after
@@ -1043,7 +970,7 @@ class IVFIndex:
         rows = df.select(
             F.col(id_col).cast(self.id_type).alias("id"), F.col(vec_col).cast("array<float>").alias("vec")
         ).filter(F.col(vec_col).isNotNull())
-        self._commit_segment("tail", rows)
+        self._log.append("tail", fs.join(self.vpath, "tail"), rows)
         opts = self.manifest.get("options") or {}
         limit = opts.get("tail_max_rows")
         if limit and self._tail_rows() > int(limit):
@@ -1068,8 +995,9 @@ class IVFIndex:
         if not ids:
             return
         self._refresh()
-        self._commit_segment("deleted", spark.createDataFrame([(i,) for i in ids], f"id {self.id_type}"))
-        self._resident_copy = None  # only a full compact's new handle serves again
+        rows = spark.createDataFrame([(i,) for i in ids], f"id {self.id_type}")
+        self._log.append("deleted", fs.join(self.vpath, "deleted"), rows)
+        self._copy.release()  # only a full compact's new handle serves again
 
     def compact_incremental(self, spark: SparkSession) -> "IVFIndex":
         """Fold the tail into the live version as a committed DELTA —
@@ -1087,32 +1015,28 @@ class IVFIndex:
         refits. Deleted-id tombstones likewise remain until a full compact.
 
         One commit lists the delta, adds the tail rows to ``count`` and
-        empties the tail list; the folded segment dirs are removed after
-        it. A crash before the commit leaves an orphan delta dir (invisible,
-        overwritten by the next attempt); a crash after it leaves folded
-        segment dirs that no manifest names. Single-writer, like every
-        maintenance op here."""
+        empties the tail list; a :meth:`vacuum` after it removes the folded
+        segment dirs. A crash before the commit leaves an orphan delta dir
+        (invisible, overwritten by the next attempt); a crash after it
+        leaves folded segment dirs that no manifest names, which the next
+        :meth:`vacuum` removes. Single-writer, like every maintenance op
+        here."""
         self._refresh()
-        folded = self._segment_paths("tail")
-        if not folded:
+        if not self.manifest.get("tail"):
             return self
         dname = f"delta-{len(self.manifest.get('deltas', [])) + 1:06d}"
-        ddir = fs.join(self.vpath, dname)
-        if fs.exists(spark, ddir):  # orphan from a crashed attempt
-            fs.delete(spark, ddir)
         assigned, _ = _assigned(self.tail_df(spark), self.centroids, self.codec, self.id_type)
         (
             assigned.repartition(F.col("list_id"))
             .write.mode("overwrite")
             .partitionBy("list_id")
-            .parquet(ddir)
+            .parquet(fs.join(self.vpath, dname))
         )
         self.manifest["deltas"] = [*self.manifest.get("deltas", []), dname]
         self.manifest["count"] = int(self.manifest["count"]) + self._tail_rows()
         self.manifest["tail"] = []
-        self._commit()
-        for d in folded:
-            fs.delete(spark, d)
+        self._log.commit()
+        self.vacuum()
         return self
 
     def compact(self, spark: SparkSession) -> "IVFIndex":
@@ -1120,10 +1044,10 @@ class IVFIndex:
         semantics of PRAGMA hnsw_compact_index
         (reference: src/hnsw/hnsw_index.cpp:481-494). Crash-safe: the rebuild
         lands in a NEW version directory and only becomes live when the
-        build's manifest write commits it; the old version is removed after
-        the commit. Committed incremental deltas fold in with the base.
-        Returns the new version's handle; this one loads the new version at
-        its next call."""
+        build's manifest write commits it; a :meth:`vacuum` after the commit
+        removes the old version. Committed incremental deltas fold in with
+        the base. Returns the new version's handle; this one loads the new
+        version at its next call."""
         self._refresh()
         cur = int(self.version[1:]) if self.version else 0
         # carry catalog identity through the rebuild
@@ -1138,20 +1062,33 @@ class IVFIndex:
                 version=f"v{cur + 1:06d}",
                 extra_manifest=keep,
             )
-            if self.version:
-                fs.delete(spark, fs.join(self.path, self.version))
-            else:
-                # legacy v1 layout stored payload at the artifact root
-                for leaf in ("centroids.npy", "data", "tail", "deleted"):
-                    if fs.exists(spark, fs.join(self.path, leaf)):
-                        fs.delete(spark, fs.join(self.path, leaf))
         finally:
             data.unpersist()
-        self._resident_copy = None  # the new version's handle holds its own
+        self._copy.release()  # the new version's handle holds its own
+        new.vacuum()
         return new
+
+    def vacuum(self) -> list:
+        """Delete every dir under the index that its manifest does not
+        name: ``tail/`` and ``deleted/`` segments and ``delta-*`` dirs that
+        no commit named (a crash before it) or that one folded, and version
+        dirs (and the root files of the unversioned layout) that a full
+        compact replaced. Returns their paths relative to the index root.
+        Run when no reader still holds an older manifest."""
+        self._refresh()
+        m = self.manifest
+        named = [
+            (fs.join(self.vpath, kind), {s["dir"] for s in m.get(kind, [])}, "snap-") for kind in ("tail", "deleted")
+        ] + [(self.vpath, set(m.get("deltas", [])), "delta-")]
+        if self.version:
+            named.append((self.path, {self.version}, ""))
+        root = len(fs.join(self.path, ""))
+        return [
+            fs.join(parent, name)[root:] for parent, live, prefix in named for name in self._log.vacuum(parent, live, prefix)
+        ]
 
     def drop(self) -> None:
         """DROP INDEX: free the artifact (reference: src/hnsw/hnsw_index.cpp:410-419)
         and the handle's resident copy."""
         fs.delete(self.spark, self.path)
-        self._resident_copy = None
+        self._copy.release()

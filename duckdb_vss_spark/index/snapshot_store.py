@@ -3,19 +3,12 @@
 :class:`~.dedup_store.MinHashStore` (text), :class:`~.audio_store.
 AudioFingerprintStore`, :class:`~.image_store.ImageHashStore` and
 :class:`~.video_store.VideoFingerprintStore` persist per-modality
-fingerprint rows under one artifact discipline, the dedup analog of the
-vector index (``ivf.py``):
-
-- an append-only directory of ``snap-NNNNNN`` parquet snapshots, each
-  partitioned by the store's partition column (``band=`` or ``kb=``);
-- a JSON ``manifest.json`` as the atomic commit point: the data dir is
-  written first, the manifest overwrite commits it, and readers only
-  touch the dirs the manifest lists, so a crash leaves an orphan dir
-  that no read sees and :meth:`SnapshotStore.vacuum` reclaims;
-- dir names from the manifest's monotonic ``next_snap_id``
-  (:func:`.fs.alloc_snap_dir`), never reused after a drop;
-- any Hadoop filesystem (``file:// s3a:// abfss:// hdfs://``) through
-  :mod:`.fs`.
+fingerprint rows as ``snap-NNNNNN`` parquet snapshots, each partitioned by
+the store's partition column (``band=`` or ``kb=``), named by a JSON
+``manifest.json``. The commit protocol (fresh never-reused dir names, the
+counted write, one manifest overwrite as the commit, the memoized union of
+snapshot reads, vacuum of unnamed dirs) and the resident copy are the
+segment module's (:mod:`.segments`), shared with the vector indexes.
 
 A subclass states five values (:attr:`SnapshotStore.FORMAT`,
 ``COUNT_KEY``, ``PART_COL``, ``COLUMNS``, ``COUNT_T0``) and keeps its
@@ -31,58 +24,27 @@ the schema.
 
 A store whose batches can be matched on the driver (``MinHashStore``)
 also keeps a resident copy of the live snapshots' rows on the handle
-(:meth:`SnapshotStore._resident`): one part per snapshot dir, keyed by
-the manifest's tuple of live snapshots (dir, name, count). Committed dirs
-are immutable, so a part never goes stale; a commit through the handle hands its
-driver-built rows to the copy, a dir committed by another handle is read
-once, and a dropped dir just leaves the key. The copy counts against the
+(:meth:`SnapshotStore._resident`): one part per snapshot, keyed by its
+manifest entry (dir, name, count). A commit through the handle hands its
+driver-built rows to the copy, a snapshot committed by another handle is
+read once, and a dropped one is let go. The copy counts against the
 process-wide budget of resident copies (``knn.RESIDENT_BYTES_BUDGET``,
-shared with IVF indexes through ``ivf.resident_bytes()``); a store that
+shared with IVF indexes, :func:`.segments.resident_bytes`); a store that
 does not fit is matched by a scan of its parquet snapshots.
 """
 
 from __future__ import annotations
 
 import copy
-from functools import reduce
 from typing import Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import fs, ivf
+from . import fs, segments
 
 __all__ = ["SnapshotStore"]
-
-_MANIFEST = "manifest.json"
-
-
-class _StoreCopy:
-    """A store's resident copy: ``parts`` maps each snapshot it holds
-    (``(dir, name, count)``, oldest first) to that snapshot's rows in the
-    store's in-memory form (see :meth:`SnapshotStore._copy_part`).
-    Registered with the IVF copies, so ``ivf.resident_bytes()`` counts
-    it."""
-
-    def __init__(self, parts: dict):
-        self.parts = parts
-        self.nbytes = sum(p.nbytes for p in parts.values())
-        ivf._RESIDENT_LIVE.add(self)
-
-    def add(self, key: tuple, part) -> None:
-        self.parts[key] = part
-        self.nbytes += part.nbytes
-
-    @property
-    def id_type(self) -> Optional[str]:
-        """The Spark type of the ids (one for every part), or None when
-        the copy holds nothing."""
-        return next((p.id_type for p in self.parts.values()), None)
-
-    @property
-    def label(self) -> str:
-        return f"resident ({sum(p.n for p in self.parts.values())} docs)"
 
 
 class SnapshotStore:
@@ -94,9 +56,7 @@ class SnapshotStore:
     re-read ``manifest.json`` first (one small JSON read), so a handle
     never overwrites, drops or vacuums against a manifest older than the
     last commit made through another handle, and matches see every
-    committed snapshot. Concurrent writers are still unsupported: two
-    commits racing between the re-read and the manifest write can lose
-    one of them.
+    committed snapshot.
     """
 
     FORMAT: str  # manifest "format"
@@ -114,13 +74,17 @@ class SnapshotStore:
     def __init__(self, spark: SparkSession, root: str, manifest: dict):
         self.spark = spark
         self.root = root
-        self.manifest = manifest
-        self._copy: Optional[_StoreCopy] = None
+        self._log = segments.SegmentLog(spark, root, manifest)
+        per_item = self._copy_item_bytes()
+        # the resident copy, keyed by (dir, name, count) of each live
+        # snapshot; None for a store matched by a scan only
+        self._copy = None if per_item is None else segments.Resident("docs", per_item)
         # snapshots whose rows the copy cannot hold exactly (see _copy_part)
         self._unfit: set = set()
-        # bytes per item of the last copy built: string ids weigh more
-        # than the estimate
-        self._item_bytes_seen = 0.0
+
+    @property
+    def manifest(self) -> dict:
+        return self._log.manifest
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -128,7 +92,7 @@ class SnapshotStore:
     def _create(cls, spark: SparkSession, root: str, overwrite: bool, **params):
         """Write a fresh manifest with ``params`` (the store's
         configuration, in manifest order) at ``root``."""
-        if fs.exists(spark, fs.join(root, _MANIFEST)):
+        if segments.exists(spark, root):
             if not overwrite:
                 raise ValueError(f"{cls.__name__} already exists at {root}")
             fs.delete(spark, root)
@@ -141,26 +105,17 @@ class SnapshotStore:
             cls.COUNT_KEY: 0,
             "next_snap_id": 0,
         }
-        fs.write_json(spark, fs.join(root, _MANIFEST), manifest)
         store = cls(spark, root, manifest)
-        if store._copy_item_bytes() is not None:
-            store._copy = _StoreCopy({})  # a fresh store holds nothing
+        store._log.commit()
         return store
 
     @classmethod
     def open(cls, spark: SparkSession, root: str):
-        manifest = fs.read_json(spark, fs.join(root, _MANIFEST))
+        manifest = segments.read_manifest(spark, root)
         if manifest.get("format") != cls.FORMAT:
             article = "an" if cls.__name__[0] in "AEIOU" else "a"
             raise ValueError(f"not {article} {cls.__name__}: {root}")
         return cls(spark, root, manifest)
-
-    def _refresh(self) -> None:
-        self.manifest = fs.read_json(self.spark, fs.join(self.root, _MANIFEST))
-
-    def _write_manifest(self) -> None:
-        # the manifest overwrite is the atomic commit point
-        fs.write_json(self.spark, fs.join(self.root, _MANIFEST), self.manifest)
 
     def has_snapshot(self, name: str) -> bool:
         """Whether this handle's manifest lists snapshot ``name``."""
@@ -176,43 +131,22 @@ class SnapshotStore:
             for s in self.manifest["snapshots"] if s.get(self.COUNT_KEY) != 0
         )
 
-    def _read_snapshot(self, entry: dict) -> DataFrame:
+    def _read_snapshot(self, key: tuple) -> DataFrame:
         """One committed snapshot's rows (``COLUMNS`` and ``snapshot``),
-        with ``READ_SCHEMA`` bound when the entry records its id type."""
+        with ``READ_SCHEMA`` bound when its entry records its id type."""
+        entry = next(s for s in self.manifest["snapshots"] if s["dir"] == key[0])
         reader = self.spark.read
         if self.READ_SCHEMA is not None and "id_type" in entry:
             reader = reader.schema(self.READ_SCHEMA.format(id_type=entry["id_type"]))
         return reader.parquet(fs.join(self.root, entry["dir"])).select(*self.COLUMNS, "snapshot")
 
     def _store_df(self) -> Optional[DataFrame]:
-        """Lazy union of every non-empty committed snapshot, or None.
-
-        One read per snapshot dir, unioned lazily: the snapshot count is
-        the manifest list's length (dozens), not a scale dimension. The
-        union is memoized on the live snapshot-dir tuple: committed dirs
-        are immutable, so a steady-state loop (one ``match_against`` per
-        micro-batch) reuses the analyzed DataFrame and its file index
-        instead of re-listing and re-reading footers of every snapshot
-        dir per batch. Data is NOT persisted (a store can be TBs); only
-        the lazy plan is reused."""
-        self._refresh()
-        key = self._live_snapshots()
-        if not key:
-            return None
-        cached = getattr(self, "_store_df_memo", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        out, todo = None, key
-        if cached is not None and key[: len(cached[0])] == cached[0]:
-            # append-only steady state: extend the memo with just the new
-            # snapshot dirs instead of re-analyzing every old one
-            out, todo = cached[1], key[len(cached[0]):]
-        entries = {s["dir"]: s for s in self.manifest["snapshots"]}
-        for dirname, _, _ in todo:
-            df = self._read_snapshot(entries[dirname])
-            out = df if out is None else out.unionByName(df)
-        self._store_df_memo = (key, out)
-        return out
+        """Lazy union of every non-empty committed snapshot, or None: one
+        read per snapshot dir, memoized on the live snapshots
+        (:meth:`.segments.SegmentLog.union`). Data is NOT persisted (a
+        store can be TBs); only the lazy plan is reused."""
+        self._log.refresh()
+        return self._log.union(self._live_snapshots(), self._read_snapshot)
 
     # -- resident copy -----------------------------------------------------
 
@@ -228,63 +162,32 @@ class SnapshotStore:
         copy cannot hold them exactly."""
         raise NotImplementedError
 
-    def _resident(self) -> Optional[_StoreCopy]:
+    def _resident(self) -> Optional[segments.Resident]:
         """The handle's resident copy of the live snapshots, current with
         the manifest as last read, or None when this store is matched by a
-        scan: a store without a copy form, a dir the copy cannot hold, parts
-        of differing id types, or a copy that would take the process's
-        copies past ``knn.RESIDENT_BYTES_BUDGET``. The dirs the copy lacks
-        are read once, in one Spark job, with their schemas bound; parts of
-        dropped dirs are let go."""
-        from ..operators import knn
-
-        per_item = self._copy_item_bytes()
+        scan: a store without a copy form, a snapshot the copy cannot hold,
+        snapshots of differing id types, or a copy that would take the
+        process's copies past ``knn.RESIDENT_BYTES_BUDGET``."""
         key = self._live_snapshots()
-        if per_item is None or self._unfit.intersection(key):
+        if self._copy is None or self._unfit.intersection(key):
             return None
-        budget = knn.RESIDENT_BYTES_BUDGET
-        need = int(self.manifest[self.COUNT_KEY] * max(per_item, self._item_bytes_seen))
-        if need > budget:
-            self._copy = None
-            return None
-        old = self._copy
-        if old is not None and tuple(old.parts) == key:
-            return old
-        with ivf._RESIDENT_LOAD_LOCK:
-            self._copy = None  # the copy below replaces it
-            held = {} if old is None else old.parts
-            if ivf.resident_bytes() - (0 if old is None else old.nbytes) + need > budget:
-                return None
-            entries = {s["dir"]: s for s in self.manifest["snapshots"]}
-            reads = {k[0]: self._read_snapshot(entries[k[0]]) for k in key if k not in held}
-            types = {held[k].id_type for k in key if k in held}
-            types.update(dict(df.dtypes)["id"] for df in reads.values())
-            if len(types) > 1:
+        types = {k: p.id_type for k, p in self._copy.parts.items() if k in key}
+
+        def read(k):
+            df = self._read_snapshot(k)
+            types[k] = dict(df.dtypes)["id"]
+            if len(set(types.values())) > 1:
                 self._unfit.update(key)
                 return None
-            id_type = next(iter(types), None)
-            rows = {}
-            if reads:
-                # every missing dir in one job
-                both = reduce(DataFrame.unionByName, [df.withColumn("_dir", F.lit(d)) for d, df in reads.items()])
-                rows = dict(iter(both.toPandas().groupby("_dir", sort=False)))
-            parts = {}
-            for k in key:
-                part = held.get(k)
-                if part is None:
-                    part = self._copy_part(rows.pop(k[0]).drop(columns="_dir"), id_type) if k[0] in rows else None
-                    if part is None:
-                        self._unfit.add(k)
-                        return None
-                parts[k] = part
-            del old, held, rows
-            new = _StoreCopy(parts)
-            n = sum(p.n for p in parts.values())
-            self._item_bytes_seen = max(self._item_bytes_seen, new.nbytes / max(n, 1))
-            if ivf.resident_bytes() > budget:
-                return None  # heavier than estimated: dropped with ``new``
-            self._copy = new
-        return new
+            return df
+
+        def build(k, rows):
+            part = self._copy_part(rows, types[k])
+            if part is None:
+                self._unfit.add(k)
+            return part
+
+        return self._copy if self._copy.sync(key, self.manifest[self.COUNT_KEY], read, build) else None
 
     # -- operations --------------------------------------------------------
 
@@ -298,19 +201,27 @@ class SnapshotStore:
 
         ``n`` is the item count when the caller already knows it: rows
         built on the driver (a local relation) go out in one write task,
-        with no Observation and no repartition shuffle. Without it the
-        write itself counts the items (:meth:`_write_counted`). ``local``
+        with no observed count and no repartition shuffle. Without it the
+        write itself counts the items
+        (:meth:`.segments.SegmentLog.write_counted`): every audio, image and
+        video commit, and a MinHash batch over its driver limit. ``local``
         is the pandas frame ``rows`` was built from; once committed, it
         joins the handle's resident copy, so nothing is read back."""
-        self._refresh()
+        log = self._log
+        log.refresh()
         if self.has_snapshot(snapshot):
             raise ValueError(f"snapshot {snapshot!r} already in store")
-        dirname = fs.alloc_snap_dir(self.spark, self.root, self.manifest)
+        dirname = log.alloc()
         out = fs.join(self.root, dirname)
         id_type = dict(rows.dtypes)["id"]
         rows = rows.withColumn("snapshot", F.lit(snapshot))
         if n is None:
-            n = self._write_counted(rows, out)
+            got = log.write_counted(rows, out, self.PART_COL, **({"clips": F.count_if(F.col("t") == 0)} if self.COUNT_T0 else {}))
+            n = int(got["clips"]) if self.COUNT_T0 else int(got["rows"]) // int(self.manifest["bands"])
+            if self.COUNT_T0 and n == 0 and got["rows"]:
+                # rows without the t == 0 marker (a caller-shaped key
+                # table): prove the count from the written snapshot
+                n = self.spark.read.parquet(out).select("id").distinct().count()
         else:
             # one task writes one file per partition value; an empty frame
             # still leaves the dir (and its _SUCCESS) for the manifest entry
@@ -318,7 +229,7 @@ class SnapshotStore:
         entry = {"name": snapshot, "dir": dirname, self.COUNT_KEY: n, "id_type": id_type}
         self.manifest["snapshots"].append(entry)
         self.manifest[self.COUNT_KEY] += n
-        self._write_manifest()
+        log.commit()
         if local is not None and n and self._copy is not None:
             self._adopt((dirname, snapshot, n), local.assign(snapshot=snapshot), id_type)
         return entry
@@ -326,73 +237,14 @@ class SnapshotStore:
     def _adopt(self, key: tuple, rows: pd.DataFrame, id_type: str) -> None:
         """Add the just-committed ``rows`` of snapshot ``key`` (its dir,
         name and count) to the handle's copy, or let the copy go when it
-        cannot hold them or no longer fits the budget."""
-        from ..operators import knn
-
-        with ivf._RESIDENT_LOAD_LOCK:
-            part = self._copy_part(rows, id_type)
-            if part is None:
-                self._unfit.add(key)
-            elif self._copy.id_type in (None, id_type):
-                self._copy.add(key, part)
-                if ivf.resident_bytes() <= knn.RESIDENT_BYTES_BUDGET:
-                    return
-            self._copy = None
-
-    def _write_counted(self, rows: DataFrame, out: str) -> int:
-        """Write distributed ``rows`` to ``out``, partitioned by the
-        store's partition column, and return their item count."""
-        # This is the path of rows whose count the driver does not know
-        # (every audio, image and video commit, and a MinHash batch over
-        # its driver limit). The item count folds into the WRITE job via
-        # the Observation API (see COUNT_T0), so a commit needs no
-        # read-back of the written snapshot: no extra driver action or
-        # file listing per commit, and no window where a transient read
-        # error after a good write could commit a wrong count.
-        obs = Observation()
-        aggs = [F.count(F.lit(1)).alias("rows")]
-        if self.COUNT_T0:
-            aggs.append(F.count_if(F.col("t") == 0).alias("clips"))
-        rows = rows.observe(obs, *aggs)
-        # cluster by the partition column before the write: without it
-        # every task writes one file per partition value it holds (tasks x
-        # values small files + their commit overhead). The key is
-        # COMPOSITE (part, pmod(xxhash64(id), defaultParallelism)):
-        # clustering on the partition column alone capped write
-        # parallelism at its distinct-value count (~16 tasks for a 100 TB
-        # initial build); the id sub-key spreads a corpus-scale commit to
-        # cluster width, while AQE's coalescing (REPARTITION_BY_COL origin)
-        # still folds a batch-scale commit into a few files per value.
-        par = max(1, int(self.spark.sparkContext.defaultParallelism))
-        rows = rows.repartition(
-            F.col(self.PART_COL), F.pmod(F.xxhash64(F.col("id")), F.lit(par))
-        )
-        rows.write.partitionBy(self.PART_COL).parquet(out, mode="overwrite")
-        try:
-            got = obs.get
-            if self.COUNT_T0:
-                n = int(got["clips"])
-                if n == 0 and int(got["rows"]) > 0:
-                    # rows without the t == 0 marker (a caller-shaped key
-                    # table): prove the count from the written snapshot
-                    n = self.spark.read.parquet(out).select("id").distinct().count()
-                return n
-            return int(got["rows"]) // int(self.manifest["bands"])
-        except Exception:
-            # an EMPTY batch: AQE's empty-relation propagation can
-            # eliminate the CollectMetrics node with the rest of the plan,
-            # so no metrics row exists — prove emptiness (or not) from the
-            # directory listing
-            has_data = any(
-                nm.startswith(f"{self.PART_COL}=")
-                or (nm.startswith("part-") and not nm.endswith(".crc"))
-                for nm in fs.listdir(self.spark, out)
-            )
-            return (
-                self.spark.read.parquet(out).select("id").distinct().count()
-                if has_data
-                else 0
-            )
+        cannot hold them."""
+        part = self._copy_part(rows, id_type)
+        if part is None:
+            self._unfit.add(key)
+        if part is None or any(p.id_type != id_type for p in self._copy.parts.values()):
+            self._copy.release()
+        else:
+            self._copy.adopt(key, part)
 
     def _flag(
         self, df: DataFrame, id_col: str, matches: DataFrame, flag_col: str
@@ -413,28 +265,21 @@ class SnapshotStore:
         an orphan that :meth:`vacuum` reclaims (its name is never
         reallocated), so a reader holding the old manifest can finish its
         scan."""
-        self._refresh()
+        self._log.refresh()
         snaps = self.manifest["snapshots"]
         entry = next((s for s in snaps if s["name"] == snapshot), None)
         if entry is None:
             raise ValueError(f"snapshot {snapshot!r} not in store")
         self.manifest["snapshots"] = [s for s in snaps if s["name"] != snapshot]
         self.manifest[self.COUNT_KEY] -= entry[self.COUNT_KEY]
-        self._write_manifest()
+        self._log.commit()
 
     def vacuum(self) -> list:
         """Delete data dirs the manifest no longer references (dropped
         snapshots, crash orphans). Returns the deleted dir names. Run when
         no reader still holds a pre-drop manifest."""
-        self._refresh()
-        live = {s["dir"] for s in self.manifest["snapshots"]}
-        deleted = []
-        for name in fs.listdir(self.spark, self.root):
-            base = name.rstrip("/").split("/")[-1]
-            if base.startswith("snap-") and base not in live:
-                fs.delete(self.spark, fs.join(self.root, base))
-                deleted.append(base)
-        return deleted
+        self._log.refresh()
+        return self._log.vacuum(self.root, {s["dir"] for s in self.manifest["snapshots"]}, "snap-")
 
     def info(self) -> dict:
         """A deep copy of the manifest, for pragma-style introspection."""

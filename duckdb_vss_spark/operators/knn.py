@@ -379,13 +379,14 @@ def _resident_join(spark, res, probes_pdf, qmat, k: int, metric: str, schema: st
     tie at rank ``k``, or that the GEMM and exact scores order differently
     there, therefore resolve by exact score and then ``rid``, as in the
     exact plan, as long as at most ``k`` extra rows crowd the boundary."""
-    rows = res.rows(lists)
-    row_lists = res.list_ids()[rows] if mask is not None else None
+    from ..index.ivf import resident_rows
+
+    ids, vec, row_lists = resident_rows(res, lists)
 
     def items():
-        for lo in range(0, len(rows), _RESIDENT_BATCH_ROWS):
+        for lo in range(0, len(ids), _RESIDENT_BATCH_ROWS):
             sel = slice(lo, lo + _RESIDENT_BATCH_ROWS)
-            yield res.ids[rows[sel]], res.vec[rows[sel]], None if row_lists is None else row_lists[sel]
+            yield ids[sel], vec[sel], None if mask is None else row_lists[sel]
 
     cand = fold_topk(items(), probes_pdf["qid"].to_numpy(), qmat, 2 * k, metric, mask)
     if cand is None:

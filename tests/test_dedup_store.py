@@ -729,7 +729,7 @@ def test_store_copy_shares_the_budget_with_index_copies(spark, emb, store_root, 
     go, the store is matched from its copy."""
     import gc
 
-    from duckdb_vss_spark.index import ivf
+    from duckdb_vss_spark.index import segments
     from duckdb_vss_spark.index.ivf import build_ivf
     from duckdb_vss_spark.operators import knn
 
@@ -740,16 +740,16 @@ def test_store_copy_shares_the_budget_with_index_copies(spark, emb, store_root, 
     st = MinHashStore.open(spark, store_root)
     gc.collect()
     idx = build_ivf(emb, "embedding", "vec_id", str(tmp_path / "idx"))
-    assert idx._resident_copy is not None
-    before = ivf.resident_bytes()
+    assert idx._copy.parts
+    before = segments.resident_bytes()
     monkeypatch.setattr(knn, "RESIDENT_BYTES_BUDGET", before + size - 1)
     assert st.match_against(_mk(spark, NEW), "text", "doc_id").count() >= 1
-    assert st.last_source == "scan" and st._copy is None
+    assert st.last_source == "scan" and not st._copy.parts
     idx.drop()
-    assert ivf.resident_bytes() <= before - idx.manifest["count"] * (8 + 4 * idx.dim)
+    assert segments.resident_bytes() <= before - idx.manifest["count"] * (8 + 4 * idx.dim)
     assert st.match_against(_mk(spark, NEW), "text", "doc_id").count() >= 1
     assert st.last_source == "resident (3 docs)"
-    assert ivf.resident_bytes() <= knn.RESIDENT_BYTES_BUDGET
+    assert segments.resident_bytes() <= knn.RESIDENT_BYTES_BUDGET
 
 
 def test_append_signs_only_changed_ids(spark, store_root, monkeypatch):

@@ -8,6 +8,7 @@ lifecycle/durability."""
 
 from __future__ import annotations
 
+import os
 import warnings
 
 import numpy as np
@@ -739,10 +740,16 @@ def test_index_writes_match_numpy_model_stateful(spark, tmp_path_factory, monkey
     )
 
 
+def _dirs(root):
+    """Every directory under ``root``, relative to it."""
+    return sorted(os.path.relpath(os.path.join(r, d), root) for r, ds, _ in os.walk(root) for d in ds)
+
+
 def test_write_crash_before_commit_changes_nothing(spark, tmp_path, monkeypatch):
     """A commit that raises leaves the index as it was: a fresh handle and
     the handle that crashed answer exactly as before, for insert, delete,
-    incremental and full compact. Run for real afterwards, each of the four
+    incremental and full compact, and ``vacuum()`` then leaves exactly the
+    dirs of the crash-free state. Run for real afterwards, each of the four
     writes commits the manifest exactly once."""
     from duckdb_vss_spark.index import fs
     from duckdb_vss_spark.index.ivf import IVFIndex
@@ -752,6 +759,7 @@ def test_write_crash_before_commit_changes_nothing(spark, tmp_path, monkeypatch)
     m.delete(3)
     idx = m.writer
     before = m.answers(IVFIndex(m.path, spark))
+    dirs = _dirs(m.path)
     ops = {
         "insert": lambda: idx.insert(m.fresh(4), "vec", "id"),
         "delete": lambda: idx.delete(spark, [int(i) for i in sorted(m.live)[:2]]),
@@ -772,6 +780,10 @@ def test_write_crash_before_commit_changes_nothing(spark, tmp_path, monkeypatch)
                 op()
         assert m.answers(IVFIndex(m.path, spark)) == before, name
         assert m.answers(idx) == before, name
+    assert _dirs(m.path) != dirs
+    assert idx.vacuum()
+    assert _dirs(m.path) == dirs
+    assert m.answers(IVFIndex(m.path, spark)) == before
 
     monkeypatch.setattr(fs, "write_json", lambda s, path, obj: commits.append(path) or write_json(s, path, obj))
     for name, op in ops.items():
@@ -811,7 +823,8 @@ def test_first_write_after_build_leaves_index_openable(spark, tmp_path, monkeypa
 def test_incremental_compact_crash_after_commit_keeps_rows(spark, tmp_path, monkeypatch):
     """A crash between the fold's commit and the removal of the folded tail
     segments: a fresh handle shows the fold (no tail, the rows counted in
-    the base) and every live row exactly once."""
+    the base) and every live row exactly once, and ``vacuum()`` leaves
+    exactly the dirs of a crash-free run."""
     from duckdb_vss_spark.index import fs
     from duckdb_vss_spark.index.ivf import IVFIndex
 
@@ -830,6 +843,80 @@ def test_incremental_compact_crash_after_commit_keeps_rows(spark, tmp_path, monk
     got = [r["id"] for r in fresh.search(spark, q.tolist(), 85, FULL).collect()]
     assert got == m.exact(q, 85)
     m.search(q)
+
+    clean = _Model(spark, str(tmp_path / "clean"), n=60)
+    clean.insert(25)
+    clean.writer.compact_incremental(spark)
+    assert _dirs(m.path) != _dirs(clean.path)
+    assert fresh.vacuum() == [f"{fresh.version}/tail/snap-000000"]
+    assert _dirs(m.path) == _dirs(clean.path)
+    assert [r["id"] for r in fresh.search(spark, q.tolist(), 85, FULL).collect()] == got
+
+
+def test_full_compact_crash_after_commit_keeps_rows(spark, tmp_path, monkeypatch):
+    """A crash between a full compact's commit and the removal of the old
+    version dir: a fresh handle serves the new version with every live row
+    exactly once, and ``vacuum()`` removes the old version, leaving exactly
+    the dirs of a crash-free run."""
+    from duckdb_vss_spark.index import fs
+    from duckdb_vss_spark.index.ivf import IVFIndex
+
+    def lost_cleanup(*_):
+        raise OSError("cleanup lost")
+
+    def run(path, crash):
+        m = _Model(spark, path, n=60)
+        m.insert(10)
+        m.delete(4)
+        with monkeypatch.context() as p:
+            if crash:
+                p.setattr(fs, "delete", lost_cleanup)
+                with pytest.raises(OSError, match="cleanup lost"):
+                    m.writer.compact(spark)
+            else:
+                m.writer.compact(spark)
+        return m
+
+    m, clean = run(str(tmp_path / "idx"), True), run(str(tmp_path / "clean"), False)
+    fresh = IVFIndex(m.path, spark)
+    assert fresh.version == "v000002" and fresh.counts(spark) == {"base": 66, "tail": 0, "deleted": 0, "live": 66}
+    q = m.queries(1)[0]
+    got = [r["id"] for r in fresh.search(spark, q.tolist(), 66, FULL).collect()]
+    assert got == m.exact(q, 66)
+    assert "v000001" in _dirs(m.path)
+    assert fresh.vacuum() == ["v000001"]
+    assert _dirs(m.path) == _dirs(clean.path)
+    assert [r["id"] for r in fresh.search(spark, q.tolist(), 66, FULL).collect()] == got
+    m.search(q)
+
+
+def test_rebuild_is_the_same_under_any_root(spark, tmp_path):
+    """The same write sequence (insert, incremental compact, insert,
+    delete, full compact) under three index roots gives equal centroids,
+    manifests and ef-16 search rows: the full compact's k-means takes its
+    rows in id order, not in the file-scan order that follows the paths."""
+    from duckdb_vss_spark.index.ivf import build_ivf
+
+    rng = np.random.default_rng(3)
+    vec = rng.standard_normal((600, DIM)).astype(np.float32)
+    rows = lambda lo, hi: spark.createDataFrame(
+        [(i, vec[i].tolist()) for i in range(lo, hi)], "id long, vec array<float>"
+    )
+    qs = rng.standard_normal((4, DIM)).tolist()
+    out = []
+    for root in ("a", "index-b", "c/deeper/root"):
+        idx = build_ivf(rows(0, 400), "vec", "id", str(tmp_path / root), nlist=24)
+        idx.insert(rows(400, 500), "vec", "id")
+        idx.compact_incremental(spark)
+        idx.insert(rows(500, 600), "vec", "id")
+        idx.delete(spark, list(range(0, 600, 7)))
+        new = idx.compact(spark)
+        out.append((
+            new.centroids.tobytes(),
+            new.manifest,
+            [[tuple(r) for r in new.search(spark, q, K, 16).collect()] for q in qs],
+        ))
+    assert out[0] == out[1] == out[2]
 
 
 def test_second_handle_sees_other_handles_writes(spark, tmp_path):

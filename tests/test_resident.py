@@ -163,11 +163,11 @@ def test_resident_handle_contract(spark, emb, tmp_path, monkeypatch):
     got = top(idx, fresh, 50)
     assert idx.last_source == "parquet" and not set(gone) & {r[0] for r in got}
     new = eng.compact_index("hc_idx")
-    assert idx._resident_copy is None
+    assert not idx._copy.parts
     got = top(new, fresh, 50)
     assert new.last_source == f"resident ({n - 3} rows)" and not set(gone) & {r[0] for r in got}
     eng.drop_index("hc_idx")
-    assert new._resident_copy is None
+    assert not new._copy.parts
 
 
 def test_resident_ties_at_rank_k_resolve_by_id(spark, emb, tmp_path, monkeypatch):
@@ -238,21 +238,22 @@ def test_built_copy_equals_loaded_copy(spark, emb, tmp_path, metric):
     """The build hands its rows to the handle it returns, and that copy
     holds bit for bit the ids, vectors and list ids a handle loads from
     the written parquet (row order within a list aside)."""
-    from duckdb_vss_spark.index.ivf import IVFIndex, build_ivf
+    from duckdb_vss_spark.index.ivf import IVFIndex, build_ivf, resident_rows
 
     built = build_ivf(emb, "embedding", "vec_id", str(tmp_path / "idx"), metric=metric)
-    handed = built._resident_copy
+    handed = built._copy
     loaded = IVFIndex(built.path, spark)._resident(spark)
-    assert handed is not None and loaded is not None and handed is not loaded
+    assert handed.parts and loaded is not None and handed is not loaded
 
     def rows(res):
-        lists = res.list_ids()
-        order = np.lexsort((res.ids, lists))
-        return res.ids[order], res.vec[order].view(np.int32), lists[order], res.offsets
+        ids, vec, lists = resident_rows(res)
+        order = np.lexsort((ids, lists))
+        (part,) = res.parts.values()
+        return ids[order], vec[order].view(np.int32), lists[order], part.offsets
 
     for got, want in zip(rows(handed), rows(loaded)):
         assert got.dtype == want.dtype and np.array_equal(got, want)
-    assert handed.nbytes == loaded.nbytes and handed.dirs == loaded.dirs
+    assert handed.nbytes == loaded.nbytes and tuple(handed.parts) == tuple(loaded.parts)
 
 
 def test_resident_budget_bounds_all_copies(spark, emb, tmp_path, monkeypatch):
@@ -262,11 +263,11 @@ def test_resident_budget_bounds_all_copies(spark, emb, tmp_path, monkeypatch):
     the builds, which hand their rows to the built handle while they fit."""
     import gc
 
-    from duckdb_vss_spark.index import ivf
+    from duckdb_vss_spark.index import segments
 
     gc.collect()  # copies of handles other tests left behind
     one = emb.count() * (8 + 4 * 64)
-    monkeypatch.setattr(knn, "RESIDENT_BYTES_BUDGET", ivf.resident_bytes() + one * 3 // 2)
+    monkeypatch.setattr(knn, "RESIDENT_BYTES_BUDGET", segments.resident_bytes() + one * 3 // 2)
     eng = VSSEngine(spark, index_root=str(tmp_path))
     eng.register_table("emb_bud", emb.select("vec_id", "embedding"))
     for name in ("bud_a", "bud_b"):
@@ -276,15 +277,15 @@ def test_resident_budget_bounds_all_copies(spark, emb, tmp_path, monkeypatch):
     assert one == a.manifest["count"] * (8 + 4 * a.dim)
 
     a.search(spark, q, 10).collect()
-    assert a.last_source.startswith("resident") and a._resident_copy is not None
+    assert a.last_source.startswith("resident") and a._copy.parts
     b.search(spark, q, 10).collect()
-    assert b.last_source == "parquet" and b._resident_copy is None
+    assert b.last_source == "parquet" and not b._copy.parts
     eng.delete("bud_a", [1])
-    assert a._resident_copy is None
+    assert not a._copy.parts
     b.search(spark, q, 10).collect()
     assert b.last_source.startswith("resident")
     a.search(spark, q, 10).collect()
-    assert a.last_source == "parquet" and a._resident_copy is None
-    before = ivf.resident_bytes()
+    assert a.last_source == "parquet" and not a._copy.parts
+    before = segments.resident_bytes()
     eng.drop_index("bud_b")
-    assert ivf.resident_bytes() == before - one - 8 * (b.nlist + 1)
+    assert segments.resident_bytes() == before - one - 8 * (b.nlist + 1)
