@@ -10,8 +10,9 @@ it zips the package once and registers it with ``SparkContext.addPyFile``.
 
 from __future__ import annotations
 
-import hashlib
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -19,29 +20,20 @@ _shipped: set[int] = set()
 
 
 def package_zip() -> str:
-    """The package's ``.py`` files as a zip in the temp dir, named by a hash
-    of their paths and bytes: two checkouts share a zip exactly when they
-    ship the same code, and a zip, once written, never changes (its entries
-    carry a fixed timestamp)."""
+    """The package's ``.py`` files as a zip in a new temp dir, which is
+    removed when the interpreter exits: no zip outlives the process that
+    wrote it, and no process touches a zip that another one registered
+    with ``addPyFile``."""
     pkgdir = os.path.dirname(os.path.abspath(__file__))
-    files = {}
-    for root, _, names in os.walk(pkgdir):
-        for f in names:
-            if f.endswith(".py"):
-                full = os.path.join(root, f)
-                with open(full, "rb") as fh:
-                    files[os.path.relpath(full, os.path.dirname(pkgdir))] = fh.read()
-    digest = hashlib.sha256()
-    for rel in sorted(files):
-        digest.update(f"{rel}\0{len(files[rel])}\0".encode())
-        digest.update(files[rel])
-    zpath = os.path.join(tempfile.gettempdir(), f"duckdb_vss_spark_pkg-{digest.hexdigest()[:20]}.zip")
-    if not os.path.exists(zpath):
-        tmp = zpath + f".{os.getpid()}.tmp"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for rel in sorted(files):
-                z.writestr(zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0)), files[rel])
-        os.replace(tmp, zpath)
+    zdir = tempfile.mkdtemp(prefix="duckdb_vss_spark_pkg-")
+    atexit.register(shutil.rmtree, zdir, ignore_errors=True)
+    zpath = os.path.join(zdir, "duckdb_vss_spark.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        for root, _, names in os.walk(pkgdir):
+            for f in names:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    z.write(full, os.path.relpath(full, os.path.dirname(pkgdir)))
     return zpath
 
 

@@ -45,8 +45,10 @@ src/hnsw/hnsw_index.cpp:700-724, build: hnsw_index_physical_create.cpp:
 - **Maintenance** reuses the IVF artifact's manifest-committed tail and
   tombstone segments (:mod:`.segments`), its versioned compact and its
   vacuum unchanged (:class:`~.ivf.IVFIndex`): those layers never look
-  inside the indexed payload. An incremental compact is a full one here (see
-  :meth:`GraphIndex.compact_incremental`).
+  inside the indexed payload. A tombstoned row stays in its shard until a
+  compact, since the adjacency is by row position: ``live_rows`` tags it
+  dead, and the search walks it and never returns it. An incremental
+  compact is a full one here (see :meth:`GraphIndex.compact_incremental`).
 
 Artifact layout::
 
@@ -157,17 +159,23 @@ def _build_shard_graph(mat: np.ndarray, m0: int, part_seed: int) -> np.ndarray:
 
 
 def _beam_search(
-    mat: np.ndarray, nbrs: np.ndarray, qv: np.ndarray, k: int, ef: int, metric: str
+    mat: np.ndarray, nbrs: np.ndarray, qv: np.ndarray, k: int, ef: int, metric: str, live=None
 ) -> tuple[np.ndarray, np.ndarray]:
     """Best-first beam search over one shard graph (usearch search_ loop
     shape, reference: usearch/index.hpp): returns (local indices, nav
-    scores) of the top-k, ascending nav score. ``ef >= n`` short-circuits
-    to the exact scan, so full-probe searches are exact."""
+    scores) of the top-k rows that ``live`` (n,) bool marks (every row when
+    None), ascending nav score. Dead rows (tombstones) are walked like any
+    other and never returned, as usearch walks its deleted nodes.
+    ``ef >= n`` short-circuits to the exact scan, so full-probe searches
+    are exact."""
     n = mat.shape[0]
     ef = max(ef, k)
+    if live is None:
+        live = np.ones(n, dtype=bool)
     if ef >= n:
         nav = _nav_scores(qv[None, :], mat, metric)[0]
-        order = np.argsort(nav, kind="stable")[:k]
+        order = np.argsort(nav, kind="stable")
+        order = order[live[order]][:k]
         return order, nav[order]
     # deterministic spread entry points (hierarchy substitute)
     entries = np.unique(np.linspace(0, n - 1, num=min(8, n), dtype=np.int64))
@@ -176,7 +184,7 @@ def _beam_search(
     visited[entries] = True
     cand: list = [(float(d), int(i)) for d, i in zip(nav_e, entries)]
     heapq.heapify(cand)
-    result: list = [(-float(d), int(i)) for d, i in zip(nav_e, entries)]
+    result: list = [(-float(d), int(i)) for d, i in zip(nav_e, entries) if live[i]]
     heapq.heapify(result)
     while len(result) > ef:
         heapq.heappop(result)
@@ -190,15 +198,16 @@ def _beam_search(
             continue
         visited[nb] = True
         dn = _nav_scores(qv[None, :], mat[nb], metric)[0]
-        bound = -result[0][0]
+        bound = -result[0][0] if result else np.inf
         for dd, jj in zip(dn, nb):
             dd = float(dd)
             if len(result) < ef or dd < bound:
                 heapq.heappush(cand, (dd, int(jj)))
-                heapq.heappush(result, (-dd, int(jj)))
-                if len(result) > ef:
-                    heapq.heappop(result)
-                    bound = -result[0][0]
+                if live[jj]:
+                    heapq.heappush(result, (-dd, int(jj)))
+                    if len(result) > ef:
+                        heapq.heappop(result)
+                        bound = -result[0][0]
     top = sorted((-d, i) for d, i in result)[:k]
     idx = np.asarray([i for _, i in top], dtype=np.int64)
     nav = np.asarray([d for d, _ in top], dtype=np.float64)
@@ -245,14 +254,10 @@ def build_graph(
     # k-means, so the search side gets the SAME pruning granularity as IVF;
     # shards are then PACKS of cells (or hash splits of oversized cells),
     # decoupling pruning granularity from the bounded graph size
-    from .ivf import KMEANS_ITERS, KMEANS_SAMPLE, _nearest_centroid, kmeans
+    from .ivf import KMEANS_ITERS, KMEANS_SAMPLE, _nearest_centroid, kmeans, kmeans_rows
 
     ncells = max(1, min(4096, int(math.sqrt(n) * 32.0 / m0)))
-    sample = src.select("vec")
-    frac = min(1.0, KMEANS_SAMPLE / n)
-    if frac < 1.0:
-        sample = sample.sample(fraction=frac, seed=seed)
-    smat = np.vstack(sample.toPandas()["vec"].to_numpy()).astype(np.float64)
+    smat = np.vstack(kmeans_rows(src, n, KMEANS_SAMPLE, seed)["vec"].to_numpy()).astype(np.float64)
     centroids = kmeans(smat, ncells, iters=KMEANS_ITERS, seed=seed)
     ncells = centroids.shape[0]
     bc_cent = tracked_broadcast(spark.sparkContext, centroids)
@@ -425,23 +430,18 @@ class GraphIndex(IVFIndex):
             pdf = pdf.sort_values("li").reset_index(drop=True)
             mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
             nbrs = np.vstack(pdf["nbrs"].to_numpy()).astype(np.int32)
-            idx, _ = _beam_search(mat, nbrs, bc.value, k, ef, metric)
+            idx, _ = _beam_search(mat, nbrs, bc.value, k, ef, metric, pdf["live"].to_numpy(bool))
             return pd.DataFrame(
                 {"id": pdf["id"].iloc[idx].to_numpy(), "vec": pdf["vec"].iloc[idx].to_numpy()}
             )
 
-        # the kernel selects candidates (the shard hits, plus the tail,
-        # minus the tombstones); the authoritative score is the JVM
-        # double-precision expression (same discipline as the IVF paths)
-        hits = self.data_df(spark, parts).groupBy("part_id").applyInPandas(
-            shard_topk, schema=f"id {self.id_type}, vec array<float>"
-        )
-        tail = self.tail_df(spark)
+        # the kernel selects candidates (the shards' live hits, plus the live
+        # tail); the authoritative score is the JVM double-precision
+        # expression (same discipline as the IVF paths)
+        data, tail = self.live_rows(spark, parts, tag=True)
+        hits = data.groupBy("part_id").applyInPandas(shard_topk, schema=f"id {self.id_type}, vec array<float>")
         if tail is not None:
             hits = hits.unionByName(tail)
-        deleted = self.deleted_df(spark)
-        if deleted is not None:
-            hits = hits.join(deleted, "id", "left_anti")
         local = hits.select("id", distance_expr("vec", bound_vec(query), metric).alias("score"))
         desc = METRIC_IS_DESCENDING[metric]
         order = [F.col("score").desc() if desc else F.col("score").asc(), F.col("id").asc()]
@@ -454,17 +454,18 @@ class GraphIndex(IVFIndex):
         k: int,
         ef_search: int | None = None,
         qid_type: str = "bigint",
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, "DataFrame | None"]:
         """Batched per-probe search (HNSW_INDEX_JOIN payload): per-probe
         cell sets come from the inherited IVF probing; only shards of cells
         probed by AT LEAST one probe are read, and inside each shard's
         kernel only the probes that probed that shard's cell run (mask
         broadcast, same shape as the IVF join's probe mask). Emits k
-        candidate rows ``(qid, id, score)`` per (probe, shard). The
+        live candidate rows ``(qid, id, score)`` per (probe, shard). The
         float64-GEMM score only navigates; the emitted score is the
         authoritative one, from ``paired_exact_scores`` on the hits in hand
-        (bit-identical to the JVM ``distance_expr``). The caller
-        deletion-filters and rank-windows."""
+        (bit-identical to the JVM ``distance_expr``). Returns them with the
+        live tail (:meth:`live_rows`), which the caller folds brute-force
+        before its rank window."""
         metric = self.metric
         ef = self._ef(ef_search, k)
         qmat = np.vstack(probes_pdf["v"].to_numpy()).astype(np.float64)
@@ -489,21 +490,24 @@ class GraphIndex(IVFIndex):
             pdf = pdf.sort_values("li").reset_index(drop=True)
             mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
             nbrs = np.vstack(pdf["nbrs"].to_numpy()).astype(np.int32)
+            live = pdf["live"].to_numpy(bool)
             out_q, out_sel = [], []
             if ef >= mat.shape[0]:
-                # exact shard scan for this shard's probe subset in one GEMM
-                nav = _nav_scores(qm[sel_q], mat, metric)
-                take = min(k, mat.shape[0])
-                part = np.argpartition(nav, take - 1, axis=1)[:, :take] if take < mat.shape[0] else (
+                # exact scan of the shard's live rows for this shard's probe
+                # subset in one GEMM
+                rows = np.flatnonzero(live)
+                nav = _nav_scores(qm[sel_q], mat[rows], metric)
+                take = min(k, rows.size)
+                part = np.argpartition(nav, take - 1, axis=1)[:, :take] if take < rows.size else (
                     np.argsort(nav, axis=1)
                 )
                 for row, qi in enumerate(sel_q):
-                    sel = part[row][:take]
+                    sel = rows[part[row][:take]]
                     out_q.extend([qi] * len(sel))
                     out_sel.extend(sel.tolist())
             else:
                 for qi in sel_q:
-                    idx, _ = _beam_search(mat, nbrs, qm[qi], k, ef, metric)
+                    idx, _ = _beam_search(mat, nbrs, qm[qi], k, ef, metric, live)
                     out_q.extend([qi] * len(idx))
                     out_sel.extend(idx.tolist())
             return pd.DataFrame(
@@ -514,7 +518,6 @@ class GraphIndex(IVFIndex):
                 }
             )
 
-        data = self.data_df(spark, parts)
-        return data.groupBy("part_id").applyInPandas(
-            shard_join, schema=f"qid {qid_type}, id {self.id_type}, score double"
-        )
+        data, tail = self.live_rows(spark, parts, tag=True)
+        schema = f"qid {qid_type}, id {self.id_type}, score double"
+        return data.groupBy("part_id").applyInPandas(shard_join, schema=schema), tail

@@ -29,9 +29,10 @@ for Spark's execution model (SURVEY §7.1):
   fresh directory whose name is never reused, then commit with one
   manifest overwrite. Readers read only the directories the manifest
   names. INSERT adds a *tail* segment, searched brute-force and unioned in;
-  DELETE adds a tombstone segment of ids, consulted before the top-k cut
-  (deleted rows are invisible at every handle's next call, like the
-  reference's tombstones, reference: src/hnsw/hnsw_index.cpp:496-512);
+  DELETE adds a tombstone segment of ids, which every read takes out
+  before its top-k cut (:meth:`IVFIndex.live_rows`; deleted rows are
+  invisible at every handle's next call, like the reference's tombstones,
+  reference: src/hnsw/hnsw_index.cpp:496-512);
   incremental COMPACT folds the tail into a list-partitioned *delta*; full
   COMPACT builds a NEW version directory. A crash before a commit leaves an
   orphan directory that no reader sees; a crash after it leaves at most
@@ -251,6 +252,17 @@ def kmeans_distributed(
     return cents
 
 
+def kmeans_rows(src: DataFrame, n: int, sample: int, seed: int) -> pd.DataFrame:
+    """The k-means training rows of ``src`` (``n`` rows of id, vec) on the
+    driver: a seeded sample of about ``sample`` rows (its vectors only), or,
+    when that would be every row, the whole source ordered by id, so the
+    centroids do not follow the file-scan order (which follows the hash of
+    the artifact's paths when a compact reads its own parquet back)."""
+    if sample < n:
+        return src.select("vec").sample(fraction=sample / n, seed=seed).toPandas()
+    return src.toPandas().sort_values("id", kind="stable", ignore_index=True)
+
+
 PROBE_SAMPLES = 16  # build-time recall probes for target_recall auto-sizing
 PROBE_K = 10        # the recall@k the auto-sizer targets
 
@@ -450,18 +462,11 @@ def build_ivf(
         nlist = max(1, min(4096, int(math.sqrt(n) * 32.0 / m0)))
     from ..operators import knn
 
-    frac = min(1.0, kmeans_sample / n)
-    if frac < 1.0:
-        spdf = src.select("vec").sample(fraction=frac, seed=seed).toPandas()
-    else:
-        # the sample is the whole source: ordered by id, so the centroids
-        # do not follow the file-scan order (which follows the hash of the
-        # artifact's paths when a compact reads its own parquet back)
-        spdf = src.toPandas().sort_values("id", kind="stable", ignore_index=True)
-    # when the index will be served from a resident copy, hand the rows to
-    # the built handle, so its first query loads nothing
+    spdf = kmeans_rows(src, n, kmeans_sample, seed)
+    # when the index will be served from a resident copy, hand the rows (the
+    # whole source) to the built handle, so its first query loads nothing
     hand_off = (
-        frac == 1.0 and not (opts.get("pq_m") or opts.get("quantization"))
+        kmeans_sample >= n and not (opts.get("pq_m") or opts.get("quantization"))
         and n * (8 + 4 * dim) <= knn.RESIDENT_BYTES_BUDGET
     )
     svec = np.vstack(spdf["vec"].to_numpy())
@@ -778,7 +783,7 @@ class IVFIndex:
 
     def deleted_df(self, spark: SparkSession) -> Optional[DataFrame]:
         """The committed tombstone ids, or None. An id deleted twice is
-        listed twice: every reader anti-joins them."""
+        listed twice. Reads take them out through :meth:`live_rows`."""
         paths = self._segment_paths("deleted")
         return self._read(spark, f"id {self.id_type}", *paths) if paths else None
 
@@ -791,20 +796,39 @@ class IVFIndex:
         deleted = deleted_df.distinct().count() if deleted_df is not None else 0
         return {"base": base, "tail": tail, "deleted": deleted, "live": base + tail - deleted}
 
-    def live_df(self, spark: SparkSession, lists: Optional[list[int]] = None) -> DataFrame:
-        """The live rows (id, vec): the data (restricted to ``lists`` when
-        given), plus the tail, minus the tombstones. No broadcast hint on
-        the anti-join: the tombstone set is unbounded in principle, so AQE
-        broadcasts it only while it actually fits (same discipline as
-        operators/knn.py)."""
-        out = self.data_df(spark, lists).select("id", "vec")
-        tail = self.tail_df(spark)
-        if tail is not None:
-            out = out.unionByName(tail)
+    def live_rows(
+        self, spark: SparkSession, lists: Optional[list[int]] = None, tag: bool = False
+    ) -> tuple[DataFrame, Optional[DataFrame]]:
+        """The rows every read of this index scores: the data rows of
+        ``lists`` (every list when None) with all their columns, and the
+        whole tail ``(id, vec)`` (None without one), minus the tombstones.
+
+        Deleted rows are invisible at once and k rows still come back
+        (reference: src/hnsw/hnsw_index.cpp:496-512), so the tombstones leave
+        here, before any kernel or top-k cut. Each frame takes one anti-join
+        with no broadcast hint: Spark's planner broadcasts the tombstones
+        while they fit and shuffles them when not, so no read collects them
+        to the driver. ``tag=True`` keeps every data row and marks it with a
+        boolean ``live`` column instead, by a left join to the distinct
+        tombstones: a graph shard's adjacency is by row position, so its
+        search walks dead rows and never returns one."""
+        data, tail = self.data_df(spark, lists), self.tail_df(spark)
         deleted = self.deleted_df(spark)
-        if deleted is not None:
-            out = out.join(deleted, "id", "left_anti")
-        return out
+        if deleted is None:
+            return (data.withColumn("live", F.lit(True)) if tag else data), tail
+        if tag:
+            dead = deleted.distinct().withColumn("live", F.lit(False))
+            data = data.join(dead, "id", "left").withColumn("live", F.coalesce("live", F.lit(True)))
+        else:
+            data = data.join(deleted, "id", "left_anti")
+        return data, None if tail is None else tail.join(deleted, "id", "left_anti")
+
+    def live_df(self, spark: SparkSession, lists: Optional[list[int]] = None) -> DataFrame:
+        """The live rows (id, vec) of :meth:`live_rows`, data and tail in one
+        frame."""
+        data, tail = self.live_rows(spark, lists)
+        data = data.select("id", "vec")
+        return data if tail is None else data.unionByName(tail)
 
     # -- search -----------------------------------------------------------
     def nprobe_for(self, ef_search: int | None) -> int:
@@ -840,9 +864,6 @@ class IVFIndex:
         eager search + rowid paging (reference: src/hnsw/hnsw_index.cpp:315-356)."""
         if len(query) != self.dim:
             raise ValueError(f"query dimension {len(query)} != index dimension {self.dim}")
-        # deletions are immediately invisible (reference:
-        # src/hnsw/hnsw_index.cpp:496-512): the tombstones leave BEFORE the
-        # top-k cut, so k rows still come back
         return self.live_df(spark, self.probe_lists(query, self.nprobe_for(ef_search)))
 
     def _resident(self, spark: SparkSession) -> Optional[segments.Resident]:
@@ -915,13 +936,12 @@ class IVFIndex:
 
     def _quantized_search(self, spark: SparkSession, query, k: int, ef_search) -> DataFrame:
         """The quantized scan (PQ, SQ8 or b1): the probed lists' codes scan
-        reads ONLY ``(id, <codec columns>)`` — parquet column pruning keeps
-        the heavy ``vec`` column out of the hot scan — and scores them with
-        the codec's batch scorer for this one query; then an approximate
-        shortlist of ``k * rerank`` (tombstones dropped first so live rows
-        keep every slot), an exact re-rank of its vectors (fetched by
-        broadcast id-join from the same pruned partitions), the brute-exact
-        tail union and the final top-k cut."""
+        reads ONLY ``(id, <codec columns>)`` of the live rows — parquet
+        column pruning keeps the heavy ``vec`` column out of the hot scan —
+        and scores them with the codec's batch scorer for this one query;
+        then an approximate shortlist of ``k * rerank``, an exact re-rank of
+        its vectors (fetched by broadcast id-join from the same pruned
+        partitions), the brute-exact tail union and the final top-k cut."""
         if len(query) != self.dim:
             raise ValueError(f"query dimension {len(query)} != index dimension {self.dim}")
         metric, codec = self.metric, self.codec
@@ -935,18 +955,12 @@ class IVFIndex:
                     yield pd.DataFrame({"id": pdf["id"], "score": prep(pdf)(0, 1)[:, 0]})
 
         desc = METRIC_IS_DESCENDING[metric]
-        data = self.data_df(spark, self.probe_lists(query, self.nprobe_for(ef_search)))
+        data, tail = self.live_rows(spark, self.probe_lists(query, self.nprobe_for(ef_search)))
         scores = data.select("id", *codec.scan_cols).mapInPandas(approx, schema=f"id {self.id_type}, score double")
-        deleted = self.deleted_df(spark)
-        if deleted is not None:
-            scores = scores.join(deleted, "id", "left_anti")
         order = [F.col("score").desc() if desc else F.col("score").asc(), F.col("id").asc()]
         shortlist = scores.orderBy(*order).limit(max(k, k * codec.rerank(self.manifest))).select("id")
         fetched = data.select("id", "vec").join(F.broadcast(shortlist), "id")
-        tail = self.tail_df(spark)
         if tail is not None:
-            if deleted is not None:
-                tail = tail.join(deleted, "id", "left_anti")
             fetched = fetched.unionByName(tail)
         scored = fetched.select("id", distance_expr("vec", bound_vec(query), metric).alias("score"))
         return scored.orderBy(*order).limit(k)

@@ -47,6 +47,13 @@ cells map-side, both sides shuffle by cell, and each cell runs the same fold
 rid, score)`` rows; the tail's rows come from the same fold per probe
 batch, and the per-probe window cuts to k. No driver collect anywhere.
 
+Tombstones: every index join takes its item rows from
+``IVFIndex.live_rows``, the data rows of the probed lists and the whole tail
+minus the tombstones (an anti-join the planner broadcasts while the
+tombstones fit), so deleted rows leave before any kernel and each probe
+keeps k live slots. A graph shard cannot drop rows (its adjacency is by row
+position): its kernel walks tombstoned rows and never returns one.
+
 Quantized artifacts (:mod:`..index.pq`) run the same fold with their
 codec's scorer over the code columns instead of the vectors, and re-rank
 the shortlist exactly.
@@ -84,13 +91,6 @@ _PROBE_CHUNK = 1024  # bounds the (batch x probe-chunk) GEMM output size
 # flat join. Below it, the broadcast kernel's single-pass zero-shuffle shape
 # wins on fixed costs (100 probes: ~0.8 s).
 DISTRIBUTED_MIN_PROBES = 1024
-# Tombstone sets at or below this many ids ride into the scan kernels as an
-# in-memory exclusion list (the reference's in-RAM free-list shape,
-# usearch/index_dense.hpp:1228-1248 — fine there because it never leaves one
-# process). Above it, the driver collect is the scale hazard: exclusion
-# routes through a distributed anti-join on the item side BEFORE the
-# kernels instead, so live rows still keep all k slots.
-DELETED_IDS_KERNEL_CAP = 1_000_000
 # An unquantized IVF index with no tail or tombstones is served from a copy
 # of its base and delta rows (8-byte id + f32 vector per row) resident on
 # its handle while every such copy in the process fits this many bytes
@@ -106,31 +106,6 @@ RESIDENT_BYTES_BUDGET = 64 << 20
 # rows per batch the driver feeds the fold from a resident copy, as an
 # Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``) does
 _RESIDENT_BATCH_ROWS = 10_000
-
-
-def _deleted_exclusion(index, spark):
-    """Resolve the index's tombstone set into ``(excl_ids, deleted_df,
-    small)``: ``excl_ids`` is the driver-side id list when the set fits
-    ``DELETED_IDS_KERNEL_CAP`` (else None — callers must anti-join
-    ``deleted_df`` onto the item side pre-kernel); ``deleted_df`` is None
-    when there are no tombstones; ``small`` says a broadcast-hinted
-    anti-join is safe."""
-    deleted = index.deleted_df(spark)
-    if deleted is None:
-        return None, None, True
-    head = collect_at_most(deleted, DELETED_IDS_KERNEL_CAP)
-    if head is None:
-        return None, deleted, False
-    return [r["id"] for r in head], deleted, True
-
-
-def _anti_join_deleted(df: DataFrame, deleted_df, small: bool, id_col: str = "id") -> DataFrame:
-    """Remove tombstoned ids from an item-side frame; broadcast the
-    tombstones only when the set is known small."""
-    if deleted_df is None:
-        return df
-    d = deleted_df.withColumnRenamed("id", id_col) if id_col != "id" else deleted_df
-    return df.join(F.broadcast(d) if small else d, id_col, "left_anti")
 
 
 def fold_topk(items, qids, qmat, k: int, metric: str, mask=None, scorer=None) -> "pd.DataFrame | None":
@@ -216,7 +191,6 @@ def _candidates_broadcast(
     metric: str,
     probe_mask: "np.ndarray | None" = None,
     right_list_col: str | None = None,
-    excluded_ids=None,
     probes_pdf: "pd.DataFrame | None" = None,
     codec=None,
 ) -> DataFrame:
@@ -228,18 +202,11 @@ def _candidates_broadcast(
     inverted list (the per-probe approximate search of the reference's
     HNSW_INDEX_JOIN, reference: src/hnsw/hnsw_optimize_join.cpp:111-168).
 
-    ``excluded_ids``: ids filtered out INSIDE the kernel, before the
-    per-partition top-k cut — deleted rows must not crowd live neighbors out
-    of the k slots (the reference's tombstones are likewise invisible before
-    the cut, reference: src/hnsw/hnsw_index.cpp:496-512).
-
     ``codec``: a quantized artifact's codec (:mod:`..index.pq`). The kernel
     then reads its code columns of ``right`` instead of ``right_on`` (never
     the f32 vectors; fold memory is O(k * nq) scalars) and the score is the
     codec's approximate one, for the caller's exact re-rank.
     """
-    import numpy as np  # noqa: F811
-
     spark = left.sparkSession
     if probes_pdf is None:
         probes_pdf = (
@@ -249,20 +216,17 @@ def _candidates_broadcast(
         )
     qids = probes_pdf["qid"].to_numpy()
     qmat = as_matrix(probes_pdf["v"]) if len(probes_pdf) else None
-    excl = np.asarray(list(excluded_ids)) if excluded_ids is not None and len(excluded_ids) else None
-    bc = tracked_broadcast(spark.sparkContext, (qids, qmat, probe_mask, excl, codec))
+    bc = tracked_broadcast(spark.sparkContext, (qids, qmat, probe_mask, codec))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        qids_l, qmat_l, mask_l, excl_l, codec_l = bc.value
+        qids_l, qmat_l, mask_l, codec_l = bc.value
         if qmat_l is None:
             return
 
         def items():
             for pdf in batches:
-                if excl_l is not None and len(pdf):
-                    pdf = pdf[~pdf["rid"].isin(excl_l)]
                 if len(pdf):
                     lists = pdf["__lst"].to_numpy() if mask_l is not None else None
                     batch = pdf if codec_l is not None else np.vstack(pdf["v"].to_numpy())
@@ -394,6 +358,19 @@ def _resident_join(spark, res, probes_pdf, qmat, k: int, metric: str, schema: st
     return spark.createDataFrame(_rank_local(cand, k, metric), schema)
 
 
+def _with_tail(
+    cand: DataFrame, tail, left: DataFrame, left_on: str, left_id: str, k: int, metric: str, probes_pdf
+) -> DataFrame:
+    """``cand`` plus the candidates of an index's live ``tail`` (None: no
+    tail), whose rows compete for every probe brute-force. The collected
+    probe table is reused, so the tail costs no extra driver job."""
+    if tail is None:
+        return cand
+    return cand.unionByName(
+        _candidates_broadcast(left, tail, left_on, "vec", left_id, "id", k, metric, probes_pdf=probes_pdf)
+    )
+
+
 def _collect_probes(left: DataFrame, left_on: str, left_id: str, limit: int):
     """Collect the probe (id, vector) pairs, at most ``limit`` of them, as
     pandas ``(qid, v)``. Returns None when the probe side exceeds the limit
@@ -449,9 +426,11 @@ def knn_join_flat_indexed(
     src/hnsw/hnsw_optimize_join.cpp:30-179). Unlike the reference's
     non-parallel operator, probes and index partitions both parallelize.
 
-    Only the ``nprobe`` nearest inverted lists per probe are searched; the
-    tail is searched brute-force; deleted ids are filtered inside the kernel
-    BEFORE the per-partition top-k cut. Scores are exact.
+    Only the ``nprobe`` nearest inverted lists per probe are searched and
+    the tail is searched brute-force. Every path takes its rows from
+    ``index.live_rows``, so deleted ids leave before any kernel and its
+    per-partition top-k cut, and each probe keeps k live slots. Scores are
+    exact.
 
     A probe side above ``broadcast_probe_limit`` rows cannot be broadcast —
     fall back to the exact cross-join plan over the live index rows instead
@@ -466,25 +445,12 @@ def knn_join_flat_indexed(
     probes_pdf = _collect_probes(left, left_on, left_id, broadcast_probe_limit)
     if probes_pdf is not None and len(probes_pdf) > 0 and getattr(index, "is_graph", False):
         # graph backend: probes ride a broadcast into every shard's beam-
-        # search kernel (index/hnsw.py); deletions filtered before the
-        # global per-probe rank window, tail competes brute-force — the
-        # same contract as the IVF kernel path below. The shard hits arrive
-        # with their exact scores.
-        cand = index.search_join(
-            spark, probes_pdf, k, ef_search, qid_type=dict(left.dtypes)[left_id]
-        ).withColumnRenamed("id", "rid")
-        excl, del_df, del_small = _deleted_exclusion(index, spark)
-        cand = _anti_join_deleted(cand, del_df, del_small, id_col="rid")
-        tail = index.tail_df(spark)
-        if tail is not None:
-            if del_df is not None and excl is None:
-                tail = _anti_join_deleted(tail, del_df, del_small)
-            cand = cand.unionByName(
-                _candidates_broadcast(
-                    left, tail, left_on, "vec", left_id, "id", k, metric,
-                    excluded_ids=excl, probes_pdf=probes_pdf,
-                )
-            )
+        # search kernel (index/hnsw.py), which walks tombstoned rows and
+        # never returns one; the live tail competes brute-force, as in the
+        # IVF kernel path below. The shard hits arrive with their exact
+        # scores.
+        cand, tail = index.search_join(spark, probes_pdf, k, ef_search, qid_type=dict(left.dtypes)[left_id])
+        cand = _with_tail(cand.withColumnRenamed("id", "rid"), tail, left, left_on, left_id, k, metric, probes_pdf)
         return _rank_topk(cand, k, metric)
     if (
         probes_pdf is not None
@@ -534,15 +500,7 @@ def knn_join_flat_indexed(
         return knn_join_flat(
             left, index.live_df(spark), left_on, "vec", k, metric, left_id, "id", _probes_pdf=probes_pdf
         )
-    # deleted ids ride into the kernel (so live rows keep all k slots) only
-    # while the tombstone set fits DELETED_IDS_KERNEL_CAP — the reference's
-    # in-RAM free list (usearch/index_dense.hpp:1228-1248) has no such
-    # bound because it never leaves one process; ours must. Above the cap,
-    # exclusion anti-joins the item side BEFORE the kernel instead.
-    excl, del_df, del_small = _deleted_exclusion(index, spark)
-    data = index.data_df(spark, needed)
-    if del_df is not None and excl is None:
-        data = _anti_join_deleted(data, del_df, del_small)
+    data, tail = index.live_rows(spark, needed)
     # shortlist broadcast bound: <= |probed lists| * nq * k_sel (qid, rid)
     # pairs; beyond ~8M pairs the flat vector kernel is the safer plan
     k_sel = max(k, k * codec.rerank(index.manifest)) if codec is not None else k
@@ -553,7 +511,7 @@ def knn_join_flat_indexed(
         # vec scan streams against it with no shuffle of the data side.
         cand_ids = _candidates_broadcast(
             left, data, left_on, None, left_id, "id", k_sel, metric, probe_mask=mask,
-            right_list_col="list_id", excluded_ids=excl, probes_pdf=probes_pdf, codec=codec,
+            right_list_col="list_id", probes_pdf=probes_pdf, codec=codec,
         ).select("qid", "rid")
         rvec = data.select(F.col("id").alias("rid"), F.col("vec").alias("__rv")).join(
             F.broadcast(cand_ids), "rid"
@@ -571,21 +529,9 @@ def knn_join_flat_indexed(
     else:
         cand = _candidates_broadcast(
             left, data, left_on, "vec", left_id, "id", k, metric,
-            probe_mask=mask, right_list_col="list_id", excluded_ids=excl, probes_pdf=probes_pdf,
+            probe_mask=mask, right_list_col="list_id", probes_pdf=probes_pdf,
         )
-    # tail rows compete for every probe (brute force); the already-collected
-    # probe table is reused, so the tail union costs no extra driver job
-    tail = index.tail_df(spark)
-    if tail is not None:
-        if del_df is not None and excl is None:
-            tail = _anti_join_deleted(tail, del_df, del_small)
-        cand = cand.unionByName(
-            _candidates_broadcast(
-                left, tail, left_on, "vec", left_id, "id", k, metric,
-                excluded_ids=excl, probes_pdf=probes_pdf,
-            )
-        )
-    return _rank_topk(cand, k, metric)
+    return _rank_topk(_with_tail(cand, tail, left, left_on, left_id, k, metric, probes_pdf), k, metric)
 
 
 def knn_join_flat_indexed_distributed(
@@ -605,9 +551,9 @@ def knn_join_flat_indexed_distributed(
        sets as the broadcast path (shared rule in ``kernels.nearest_cells``);
     2. one Exchange of each side keyed by ``list_id``, then a
        ``cogroup().applyInPandas`` per cell running :func:`fold_topk` over
-       the cell's rows for the cell's probes: ``k`` exact ``(qid, rid,
+       the cell's live rows (``index.live_rows``) for the cell's probes: ``k`` exact ``(qid, rid,
        score)`` rows per probe per cell — vectors never leave the cell task;
-    3. the bounded tail (``tail_max_rows``) broadcasts INTO a probe-side
+    3. the bounded live tail (``tail_max_rows``) broadcasts INTO a probe-side
        pass (the probe side is the big one here, so the usual
        probes-broadcast kernel is inverted), the same fold per probe batch,
        and its rows union in;
@@ -670,12 +616,9 @@ def knn_join_flat_indexed_distributed(
     # the broadcast path's collect sees
     probe_cells = probes.mapInPandas(assign, schema=f"qid {ltypes[left_id]}, qv {ltypes[left_on]}, list_id long")
 
-    # tombstones ride into the cell kernel only below DELETED_IDS_KERNEL_CAP;
-    # above it the item side is anti-joined before the cogroup instead
-    excl, del_df, del_small = _deleted_exclusion(index, spark)
     codec = index.codec if isinstance(index.codec, pqmod.SQ8) else None
     k_cell = k if codec is None else max(k, k * codec.rerank(index.manifest))
-    bc_cell = tracked_broadcast(spark.sparkContext, (np.asarray(excl) if excl else None, codec))
+    bc_codec = tracked_broadcast(spark.sparkContext, codec)
 
     def fold_cell(probes_pdf: pd.DataFrame, rids, batch, k_fold: int, codec_l) -> pd.DataFrame:
         """:func:`fold_topk` of one cell's rows for the probes of
@@ -687,31 +630,23 @@ def knn_join_flat_indexed_distributed(
     def cell_topk(probes_pdf: pd.DataFrame, items_pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        excl_l, codec_l = bc_cell.value
-        if excl_l is not None and len(items_pdf):
-            items_pdf = items_pdf[~items_pdf["id"].isin(excl_l)]
+        codec_l = bc_codec.value
         if len(probes_pdf) == 0 or len(items_pdf) == 0:
             return pd.DataFrame({"qid": [], "rid": [], "score": []}).astype({"score": "float64"})
         batch = items_pdf if codec_l is not None else np.vstack(items_pdf["vec"].to_numpy())
         return fold_cell(probes_pdf, items_pdf["id"].to_numpy(), batch, k_cell, codec_l)
 
+    live, tail = index.live_rows(spark)
     data_cols = codec.scan_cols if codec is not None else ("vec",)
-    data = index.data_df(spark).select("id", *data_cols, F.col("list_id").cast("long").alias("list_id"))
-    if del_df is not None and excl is None:
-        data = _anti_join_deleted(data, del_df, del_small)
+    data = live.select("id", *data_cols, F.col("list_id").cast("long").alias("list_id"))
     cand = (
         probe_cells.groupBy("list_id")
         .cogroup(data.groupBy("list_id"))
         .applyInPandas(cell_topk, schema=cand_schema)
     )
 
-    tail = index.tail_df(spark)
     if tail is not None:
-        if del_df is not None and excl is None:
-            tail = _anti_join_deleted(tail, del_df, del_small)
         tail_pdf = tail.toPandas()  # bounded by the compact cadence / tail_max_rows
-        if excl:
-            tail_pdf = tail_pdf[~tail_pdf["id"].isin(excl)]
         if len(tail_pdf):
             bc_tail = tracked_broadcast(
                 spark.sparkContext, (tail_pdf["id"].to_numpy(), np.vstack(tail_pdf["vec"].to_numpy()))
@@ -731,7 +666,7 @@ def knn_join_flat_indexed_distributed(
     desc = METRIC_IS_DESCENDING[metric]
     w = Window.partitionBy("qid").orderBy(F.col("score").desc() if desc else F.col("score").asc(), F.col("rid").asc())
     short = cand.withColumn("__r", F.row_number().over(w)).filter(F.col("__r") <= k_cell + 8).select("qid", "rid")
-    vec_src = index.data_df(spark).select(F.col("id").alias("rid"), F.col("vec").alias("__rv"))
+    vec_src = live.select(F.col("id").alias("rid"), F.col("vec").alias("__rv"))
     if tail is not None:
         vec_src = vec_src.unionByName(tail.select(F.col("id").alias("rid"), F.col("vec").alias("__rv")))
     rescored = (

@@ -1,13 +1,13 @@
-"""The shipped package zip is named by the package's content: checkouts that
-differ in one byte ship different zips, identical checkouts share one, and
-the zip holds the calling checkout's bytes."""
+"""The shipped package zip holds the calling checkout's bytes and is gone
+once the process that wrote it exits."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
 import shutil
-import tempfile
+import subprocess
+import sys
 import zipfile
 
 import duckdb_vss_spark
@@ -29,10 +29,8 @@ def _zip_of(pkg: str) -> str:
     return mod.package_zip()
 
 
-def test_package_zip_is_named_by_content(tmp_path, monkeypatch):
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
-    os.makedirs(tmp_path / "tmp")
-    a, b, c = (_checkout(str(tmp_path / n)) for n in "abc")
+def test_package_zip_holds_the_calling_checkouts_bytes(tmp_path):
+    a, b = (_checkout(str(tmp_path / n)) for n in "ab")
     target = os.path.join(b, "index", "segments.py")
     with open(target, "rb") as f:
         data = bytearray(f.read())
@@ -40,9 +38,7 @@ def test_package_zip_is_named_by_content(tmp_path, monkeypatch):
     with open(target, "wb") as f:
         f.write(bytes(data))
 
-    za, zb, zc = _zip_of(a), _zip_of(b), _zip_of(c)
-    assert za != zb and za == zc
-    assert all(os.path.dirname(z) == str(tmp_path / "tmp") for z in (za, zb))
+    za, zb = _zip_of(a), _zip_of(b)
     with zipfile.ZipFile(zb) as z:
         assert z.read("duckdb_vss_spark/index/segments.py") == bytes(data)
     with zipfile.ZipFile(za) as z:
@@ -52,3 +48,19 @@ def test_package_zip_is_named_by_content(tmp_path, monkeypatch):
             os.path.relpath(os.path.join(r, f), str(tmp_path / "a")).replace(os.sep, "/")
             for r, _, fs in os.walk(a) for f in fs if f.endswith(".py")
         )
+
+
+def test_package_zip_is_gone_after_its_process_exits(tmp_path):
+    script = (
+        "import os; from duckdb_vss_spark.deploy import package_zip; "
+        "z = package_zip(); assert os.path.isfile(z); print(z)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=os.path.dirname(os.path.dirname(duckdb_vss_spark.__file__)),
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True, text=True, check=True,
+    )
+    z = out.stdout.strip()
+    assert z.startswith(str(tmp_path)) and z.endswith(".zip")
+    assert not os.path.exists(z) and os.listdir(tmp_path) == []

@@ -8,6 +8,7 @@ lifecycle/durability."""
 
 from __future__ import annotations
 
+import functools
 import os
 import warnings
 
@@ -534,40 +535,68 @@ def test_compact_incremental_pq(spark, tmp_path):
     assert got == [r["vec_id"] for r in exact]
 
 
-def test_indexed_join_tombstones_above_kernel_cap(spark, tmp_path, monkeypatch):
-    """Tombstone sets above DELETED_IDS_KERNEL_CAP must never be collected
-    to the driver or ride the kernels: exclusion routes through the
-    distributed anti-join on the item side, with identical results. The cap
-    is monkeypatched tiny so the over-cap route runs on test-size data."""
-    from duckdb_vss_spark import knn_join_flat
+def test_indexed_join_drops_tombstones_before_every_kernel(spark, tmp_path, monkeypatch):
+    """Every index-join shape returns the exact join over the live rows it
+    searches (its probes' lists and the tail) after the two nearest rows of
+    each probe are deleted, one in the data and one in the tail: the masked
+    kernel (ef 8), the coverage reroute (full probe), the cell-cogroup path
+    (ef 8), the PQ codes-only kernel and the graph backend (full probe)."""
+    from duckdb_vss_spark.index.hnsw import build_graph
+    from duckdb_vss_spark.index.ivf import build_ivf
 
-    eng = VSSEngine(spark, index_root=str(tmp_path))
-    emb = emb_df(spark)
-    eng.register_table("tc", emb)
-    eng.create_index("tc_idx", "tc", "embedding", "vec_id")
-    deleted_ids = [0, 1, 2, 5, 8, 13]
-    eng.delete("tc_idx", deleted_ids)
-    probes = emb.filter(F.col("vec_id") < 3)
-    live = emb.filter(~F.col("vec_id").isin(deleted_ids))
-    want = knn_join_flat(
-        probes, live, "embedding", "embedding", 4, "l2sq", left_id="vec_id", right_id="vec_id"
-    ).collect()
-    key = lambda rows: sorted((r["qid"], r["rnk"], r["rid"]) for r in rows)
+    pdf = emb_df(spark).toPandas()
+    base_ids, vecs = pdf["vec_id"].to_numpy(), np.stack(pdf["embedding"]).astype(np.float32)
+    frame = lambda ids, v: spark.createDataFrame(
+        [(int(i), x.tolist()) for i, x in zip(ids, v)], "id long, vec array<float>"
+    )
+    # a near copy of each probe in the tail: with the probe's own row, its
+    # two nearest rows
+    probe_ids = np.array([0, 1, 2])
+    tail_ids, tail_vecs = probe_ids + 1000, vecs[probe_ids] + np.float32(1e-3)
+    gone = [*probe_ids.tolist(), *tail_ids.tolist()]
+    probes = frame(probe_ids, vecs[probe_ids]).withColumnRenamed("id", "qid")
 
-    eng.set_ef_search(10**6)
-    try:
-        base = eng.knn_join(
-            probes, "tc", "embedding", "embedding", 4, left_id="vec_id", right_id="vec_id"
-        ).collect()
-        monkeypatch.setattr(knn_mod, "DELETED_IDS_KERNEL_CAP", 2)
-        capped = eng.knn_join(
-            probes, "tc", "embedding", "embedding", 4, left_id="vec_id", right_id="vec_id"
-        ).collect()
-    finally:
-        eng.set_ef_search(None)
-    assert key(base) == key(want)
-    assert key(capped) == key(want)
-    assert not any(r["rid"] in deleted_ids for r in capped)
+    def index(build, name, **kw):
+        idx = build(frame(base_ids, vecs), "vec", "id", str(tmp_path / name), **kw)
+        idx.insert(frame(tail_ids, tail_vecs), "vec", "id")
+        idx.delete(spark, gone)
+        return idx
+
+    def want(ef=None):
+        """Per probe, the exact top-k ids over the live rows; with ``ef``,
+        over the live tail and those of its lists ``flat`` probes."""
+        lists = flat.data_df(spark).select("id", "list_id").toPandas()
+        list_of = dict(zip(lists["id"], lists["list_id"]))
+        out = []
+        for q in vecs[probe_ids].astype(np.float64):
+            probed = set(flat.probe_lists(q.tolist(), flat.nprobe_for(ef))) if ef else set(list_of.values())
+            ids = np.array(
+                [i for i in base_ids if i not in gone and list_of[i] in probed] + [i for i in tail_ids if i not in gone]
+            )
+            v = np.concatenate([vecs, tail_vecs])[np.where(ids >= 1000, ids - 1000 + len(vecs), ids)]
+            d = ((v.astype(np.float64) - q) ** 2).sum(1)
+            out.append(ids[np.lexsort((ids, d))[:K]].tolist())
+        return out
+
+    def got(idx, ef):
+        rows = knn_join_flat_indexed(probes, idx, "vec", K, "qid", ef_search=ef).collect()
+        rows = sorted(rows, key=lambda r: (r["qid"], r["rnk"]))
+        return [[r["rid"] for r in rows if r["qid"] == q] for q in probe_ids]
+
+    flat = index(build_ivf, "flat")
+    masked_lists = {l for q in vecs[probe_ids] for l in flat.probe_lists(q.tolist(), flat.nprobe_for(8))}
+    assert len(masked_lists) < 0.5 * flat.nlist  # ef 8 takes the masked kernel, not the reroute
+    assert want(8) != want()  # the probed lists matter at ef 8
+    assert got(flat, 8) == want(8)
+    assert got(flat, FULL) == want()
+    monkeypatch.setattr(knn_mod, "DISTRIBUTED_MIN_PROBES", 1)
+    assert got(flat, 8) == want(8)
+    monkeypatch.undo()
+    # a shortlist of k * 200 rows holds every row: the codes pick, the
+    # exact re-rank decides
+    pq = index(build_ivf, "pq", options={"pq_m": 8, "pq_rerank": 200})
+    assert got(pq, FULL) == want()
+    assert got(index(build_graph, "graph"), FULL) == want()
 
 
 # -- the write protocol: one manifest commit per write ----------------------
@@ -622,6 +651,16 @@ class _Model:
         for i in gone:
             del self.live[i]
 
+    def delete_nearest(self, n=3):
+        """Delete the ``n`` nearest live rows of the next query and return
+        that query: every index read must still return k live rows."""
+        q = self.queries(1)[0]
+        gone = self.exact(q, n)
+        self.writer.delete(self.spark, gone)
+        for i in gone:
+            del self.live[i]
+        return q
+
     def compact(self, incremental):
         with warnings.catch_warnings():
             warnings.simplefilter("ignore", RuntimeWarning)  # the graph backend folds in full
@@ -667,7 +706,9 @@ def test_index_writes_match_numpy_model(spark, tmp_path, monkeypatch, backend, b
     """A fixed sequence of every write, each followed by full-probe searches
     and joins on the writing handle and on a second handle, equal to the
     model's exact top-k: IVF served resident and from parquet (budget 0),
-    and the graph backend."""
+    and the graph backend. One step deletes the next query's nearest rows,
+    so a read that drops tombstones after its top-k cut returns fewer than
+    k rows."""
     if budget is not None:
         monkeypatch.setattr(knn_mod, "RESIDENT_BYTES_BUDGET", budget)
     m = _Model(spark, str(tmp_path / "idx"), backend)
@@ -682,6 +723,9 @@ def test_index_writes_match_numpy_model(spark, tmp_path, monkeypatch, backend, b
     m.delete(5)
     m.reopen()
     m.search()
+    q = m.delete_nearest(3)
+    m.search(q)
+    m.join(q[None, :])
     m.compact(incremental=False)
     m.search()
     m.join()
@@ -691,8 +735,9 @@ def test_index_writes_match_numpy_model(spark, tmp_path, monkeypatch, backend, b
 @pytest.mark.slow  # opt-in: heavy steady-state/property tier (see pytest.ini)
 @pytest.mark.parametrize("budget", [None, 0])
 def test_index_writes_match_numpy_model_stateful(spark, tmp_path_factory, monkeypatch, budget):
-    """Random sequences of create, insert, delete, full and incremental
-    compact, search, join and reopen, on IVF and graph indexes, checked
+    """Random sequences of create, insert, delete (of random rows and of a
+    query's nearest rows), full and incremental compact, search, join and
+    reopen, on IVF and graph indexes, checked
     against the numpy model; resident serving on and off (budget 0)."""
     from hypothesis import HealthCheck, settings
     from hypothesis import strategies as st
@@ -714,6 +759,13 @@ def test_index_writes_match_numpy_model_stateful(spark, tmp_path_factory, monkey
         @rule(n=st.integers(1, 10))
         def delete(self, n):
             self.m.delete(n)
+
+        @precondition(lambda self: len(self.m.live) > K + 10)
+        @rule()
+        def delete_nearest(self):
+            q = self.m.delete_nearest(3)
+            self.m.search(q)
+            self.m.join(q[None, :])
 
         @rule(incremental=st.booleans())
         def compact(self, incremental):
@@ -890,13 +942,16 @@ def test_full_compact_crash_after_commit_keeps_rows(spark, tmp_path, monkeypatch
     m.search(q)
 
 
-def test_rebuild_is_the_same_under_any_root(spark, tmp_path):
+@pytest.mark.parametrize("backend", ["ivf", "hnsw"])
+def test_rebuild_is_the_same_under_any_root(spark, tmp_path, backend):
     """The same write sequence (insert, incremental compact, insert,
     delete, full compact) under three index roots gives equal centroids,
     manifests and ef-16 search rows: the full compact's k-means takes its
     rows in id order, not in the file-scan order that follows the paths."""
+    from duckdb_vss_spark.index.hnsw import build_graph
     from duckdb_vss_spark.index.ivf import build_ivf
 
+    build = build_graph if backend == "hnsw" else functools.partial(build_ivf, nlist=24)
     rng = np.random.default_rng(3)
     vec = rng.standard_normal((600, DIM)).astype(np.float32)
     rows = lambda lo, hi: spark.createDataFrame(
@@ -905,9 +960,11 @@ def test_rebuild_is_the_same_under_any_root(spark, tmp_path):
     qs = rng.standard_normal((4, DIM)).tolist()
     out = []
     for root in ("a", "index-b", "c/deeper/root"):
-        idx = build_ivf(rows(0, 400), "vec", "id", str(tmp_path / root), nlist=24)
+        idx = build(rows(0, 400), "vec", "id", str(tmp_path / root))
         idx.insert(rows(400, 500), "vec", "id")
-        idx.compact_incremental(spark)
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)  # the graph backend folds in full
+            idx = idx.compact_incremental(spark)
         idx.insert(rows(500, 600), "vec", "id")
         idx.delete(spark, list(range(0, 600, 7)))
         new = idx.compact(spark)
