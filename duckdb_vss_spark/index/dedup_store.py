@@ -4,9 +4,12 @@ The 100 TB crawl-pipeline shape: each new snapshot (a CommonCrawl dump, a
 day of ingest) must dedup against EVERYTHING already accepted, but
 re-shingling the historical corpus per batch is O(history) text processing.
 This store persists only the dedup *fingerprints* — per-doc MinHash
-signatures and their LSH band buckets, ~100 bytes/doc regardless of
-document size — so matching a new batch costs one join of the batch's band
-rows against the stored band rows: the historical TEXT is never re-read.
+signatures and their LSH band buckets, regardless of document size — so
+matching a new batch costs one join of the batch's band rows against the
+stored band rows: the historical TEXT is never re-read. At 16 perms x 4
+bands a doc takes ~475 bytes of snappy parquet, since each band row carries
+the whole signature (``crawl_dedup``'s 100-140-word docs: ~0.95 store
+bytes per text byte).
 
 The artifact lifecycle (versioned ``snap-*`` parquet dirs, the JSON
 manifest as the atomic commit point, drop, vacuum, the handle contract)
@@ -35,8 +38,9 @@ batch's candidates come from a per-band ``np.searchsorted``: a flag runs
 no Spark job. The copy takes in every commit made through the handle and
 reads another handle's snapshot once. Over the budget, the candidates
 come from one scan of the store, left-semi-joined to the batch's
-broadcast ``(band, bucket)`` keys. Either way they are verified in numpy,
-and the commit is one write of the driver-built rows; no shuffle runs.
+broadcast ``(band, bucket)`` keys. Either way they are verified in numpy.
+The driver writes the commit's rows itself, one parquet file per band
+(:meth:`.segments.SegmentLog.write_local`): an append runs no Spark job.
 :attr:`MinHashStore.last_source` names the source. A larger batch runs the Spark
 signature pipeline, whose join shuffles the batch's band rows and the
 store's band rows — (band, bucket, id, sig) ≈ 150-byte tuples, 1-2% of
@@ -62,15 +66,18 @@ from .snapshot_store import SnapshotStore
 __all__ = ["MinHashStore"]
 
 # A batch of at most this many documents is signed, matched and committed
-# on the driver (against the resident copy or one store scan, then one
-# write); a larger one runs the Spark signature pipeline. A sweep of one
-# crawl step (flag + append of the kept rows, 100-140-word docs, local[4],
-# store scanned) put the driver path at 2.5-3x
-# less process CPU at every size from 1k to 32k docs (0.8-1.1 vs 2.1-3.2
-# ms/doc from 4k up). Wall time breaks even near 16k docs, where one
-# driver thread signing no longer beats four executor cores (16k: 11-12 s
-# vs 12-13 s; 32k: 25 s vs 20-21 s). The limit is half that, as
-# knn.RESIDENT_BYTES_BUDGET is half its break-even.
+# on the driver (against the resident copy or one store scan, then the
+# driver's own write); a larger one runs the Spark signature pipeline. A
+# sweep of one crawl step (flag + append of the kept rows, 100-140-word
+# docs, local[4], store scanned) put the driver path at 2.5-3x less
+# process CPU at every size from 1k to 32k docs (0.8-1.1 vs 2.1-3.2 ms/doc
+# from 4k up). Wall time breaks even near 16k docs, where one driver
+# thread signing no longer beats four executor cores (16k: 11-12 s vs
+# 12-13 s; 32k: 25 s vs 20-21 s). The limit is half that, as
+# knn.RESIDENT_BYTES_BUDGET is half its break-even. The sweep's driver
+# path still committed by a one-task Spark write; the driver's own write
+# halved a 1,000-doc step's process CPU since. That only widens the driver
+# path's lead, so the limit stays where it is until a new sweep moves it.
 DRIVER_BATCH_DOCS = 8_000
 # id types the driver path keys its signatures by (hashable, and equal
 # exactly when Spark's groupBy(id) groups them)
@@ -260,10 +267,11 @@ class MinHashStore(SnapshotStore):
         Typically called with the batch's KEPT rows (after
         :meth:`match_against` flagged dupes). A batch of at most
         ``DRIVER_BATCH_DOCS`` rows is signed on the driver (reusing the
-        flag pass's signatures of unchanged ids) and goes out in one write,
-        which also joins the handle's resident copy; a larger one takes
-        one shuffle (the signature groupBy) before its write. Either write
-        is partitioned by band. Returns the updated manifest entry."""
+        flag pass's signatures of unchanged ids) and written by the driver,
+        with no Spark job; its rows also join the handle's resident copy. A
+        larger one takes one shuffle (the signature groupBy) before its
+        Spark write. Either write is partitioned by band. Returns the
+        updated manifest entry."""
         rows = self._local_batch(df, text_col, id_col)
         if rows is None:
             # band_rows emits exactly ``bands`` rows per signed document
@@ -272,16 +280,13 @@ class MinHashStore(SnapshotStore):
             return self._commit(snapshot, self.band_rows(df, text_col, id_col))
         ids, sig, buckets = self._sign_local(rows, text_col, id_col)
         bands = buckets.shape[1]
-        # band-major, so the one write task's partitions are contiguous
         local = pd.DataFrame({
             "band": np.repeat(np.arange(bands, dtype=np.int32), len(ids)),
             "bucket": buckets.T.ravel(),
             "id": ids * bands,
             "sig": list(sig) * bands,
         })
-        id_t = dict(df.dtypes)[id_col]
-        schema = f"band int, bucket bigint, id {id_t}, sig array<bigint>"
-        return self._commit(snapshot, self.spark.createDataFrame(local, schema), n=len(ids), local=local)
+        return self._commit(snapshot, local, id_type=dict(df.dtypes)[id_col], n=len(ids))
 
     def match_against(
         self,

@@ -1003,14 +1003,14 @@ class IVFIndex:
                 )
 
     def delete(self, spark: SparkSession, ids: list) -> None:
-        """Record deleted ids as one committed tombstone segment; no handle
-        returns them from its next call on."""
+        """Record deleted ids as one committed tombstone segment, written
+        by the driver (no Spark job); no handle returns them from its next
+        call on."""
         ids = list(ids)
         if not ids:
             return
         self._refresh()
-        rows = spark.createDataFrame([(i,) for i in ids], f"id {self.id_type}")
-        self._log.append("deleted", fs.join(self.vpath, "deleted"), rows)
+        self._log.append("deleted", fs.join(self.vpath, "deleted"), pd.DataFrame({"id": ids}), f"id {self.id_type}")
         self._copy.release()  # only a full compact's new handle serves again
 
     def compact_incremental(self, spark: SparkSession) -> "IVFIndex":

@@ -13,10 +13,15 @@ commits with one overwrite of the manifest (:meth:`~SegmentLog.commit`).
 Readers read only the dirs the manifest names, so a crash before a commit
 leaves an orphan dir that no reader sees, a crash after it leaves at most
 dirs the manifest no longer names, and :meth:`~SegmentLog.vacuum` deletes
-both. The log also makes the one counted segment write
-(:meth:`~SegmentLog.write_counted`) and keeps the lazy union of segment
-reads (:meth:`~SegmentLog.union`). Concurrent writers are unsupported: two
-commits racing between the re-read and the manifest write can lose one.
+both. The log makes the segment writes, of two kinds: rows a Spark plan
+computes go out in one counted Spark write
+(:meth:`~SegmentLog.write_counted`); rows already on the driver (a small
+crawl batch's fingerprints, an index's tombstone ids) are written by the
+driver itself, with no Spark job (:meth:`~SegmentLog.write_local`). Both
+leave the same parquet layout. The log also keeps the lazy union of
+segment reads (:meth:`~SegmentLog.union`). Concurrent writers are
+unsupported: two commits racing between the re-read and the manifest
+write can lose one.
 
 :class:`Resident` is a handle's resident copy of committed dirs: one part
 per dir, in the owner's in-memory form. Committed dirs never change, so a
@@ -37,10 +42,12 @@ import re
 import threading
 import weakref
 from functools import reduce
-from typing import Callable, Optional
+from typing import Callable, Optional, Union
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, _parse_datatype_string
 
 from . import fs
 
@@ -129,13 +136,62 @@ class SegmentLog:
                 return dict.fromkeys(["rows", *aggs], 0)
             return self.spark.read.parquet(out).agg(*cols).first().asDict()
 
-    def append(self, kind: str, parent: str, rows: DataFrame) -> None:
+    def write_local(self, pdf: pd.DataFrame, schema: str, out: str, part_col: Optional[str] = None) -> None:
+        """Write the driver-held rows ``pdf`` (pandas, with the columns of
+        ``schema``, a Spark DDL string) to ``out`` from this process: no
+        Spark job. Partitioned by ``part_col`` when given, one
+        file per value under ``<part_col>=<v>/``, else one file.
+
+        Each file is one snappy parquet file serialized in memory and
+        written through :func:`.fs.write_bytes`, so ``out`` may be any
+        Hadoop URI. Spark reads it as it reads its own files: the arrow
+        types come from ``schema``, only string columns are
+        dictionary-encoded (pyarrow's default also dictionary-encodes the
+        int64 columns, ~20 % larger on fingerprint rows) and no arrow
+        schema is embedded. An empty frame still leaves the dir."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        if pdf.empty:
+            # as Spark's empty partitioned write: the dir and no part file
+            fs.mkdirs(self.spark, out)
+            return
+        schema = _parse_datatype_string(schema)
+        table = pa.Table.from_pandas(
+            pdf[schema.names], schema=to_arrow_schema(schema), preserve_index=False
+        ).replace_schema_metadata()
+        strings = [f.name for f in schema.fields if isinstance(f.dataType, StringType) and f.name != part_col]
+
+        def put(part: "pa.Table", path: str) -> None:
+            buf = pa.BufferOutputStream()
+            pq.write_table(part, buf, compression="snappy", use_dictionary=strings, store_schema=False)
+            fs.write_bytes(self.spark, fs.join(path, "part-00000.snappy.parquet"), buf.getvalue().to_pybytes())
+
+        if part_col is None:
+            put(table, out)
+            return
+        keys = pdf[part_col]
+        body = table.drop_columns([part_col])
+        for v, at in keys.groupby(keys, sort=True).indices.items():
+            put(body.take(at), fs.join(out, f"{part_col}={v}"))
+
+    def append(
+        self, kind: str, parent: str, rows: Union[DataFrame, pd.DataFrame], schema: Optional[str] = None
+    ) -> None:
         """Write ``rows`` as a new segment dir under ``parent`` and commit
         it as an entry ``{"dir", "rows"}`` of the manifest's ``kind`` list.
-        An empty batch commits nothing."""
+        ``rows`` is a DataFrame (one counted Spark write) or driver-held
+        pandas rows of the Spark DDL ``schema`` (:meth:`write_local`: no
+        Spark job, and their count is ``len(rows)``). An empty batch commits
+        nothing."""
         name = self.alloc()
         out = fs.join(parent, name)
-        n = int(self.write_counted(rows, out)["rows"])
+        if isinstance(rows, DataFrame):
+            n = int(self.write_counted(rows, out)["rows"])
+        else:
+            n = len(rows)
+            self.write_local(rows, schema, out)
         if not n:
             fs.delete(self.spark, out)
             return

@@ -36,7 +36,7 @@ does not fit is matched by a scan of its parquet snapshots.
 from __future__ import annotations
 
 import copy
-from typing import Optional
+from typing import Optional, Union
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -192,30 +192,35 @@ class SnapshotStore:
     # -- operations --------------------------------------------------------
 
     def _commit(
-        self, snapshot: str, rows: DataFrame, n: Optional[int] = None,
-        local: Optional[pd.DataFrame] = None,
+        self, snapshot: str, rows: Union[DataFrame, pd.DataFrame],
+        id_type: Optional[str] = None, n: Optional[int] = None,
     ) -> dict:
         """Write the fingerprint ``rows`` (the store's ``COLUMNS``) as
         snapshot ``snapshot`` and commit it. Returns the new manifest
         entry, which records the rows' id type.
 
-        ``n`` is the item count when the caller already knows it: rows
-        built on the driver (a local relation) go out in one write task,
-        with no observed count and no repartition shuffle. Without it the
-        write itself counts the items
-        (:meth:`.segments.SegmentLog.write_counted`): every audio, image and
-        video commit, and a MinHash batch over its driver limit. ``local``
-        is the pandas frame ``rows`` was built from; once committed, it
-        joins the handle's resident copy, so nothing is read back."""
+        One of two writes (:mod:`.segments`) lands the snapshot:
+
+        - ``rows`` a DataFrame: one counted Spark write, whose job also
+          counts the items (:meth:`.segments.SegmentLog.write_counted`):
+          every audio, image and video commit, and a MinHash batch over
+          its driver limit.
+        - ``rows`` a pandas frame built on the driver (a MinHash batch of
+          at most ``DRIVER_BATCH_DOCS`` docs), with ids of Spark type
+          ``id_type`` and ``n`` items: the driver writes it, one file per
+          partition value and no Spark job
+          (:meth:`.segments.SegmentLog.write_local`, under
+          ``READ_SCHEMA``). Once committed, the rows join the handle's
+          resident copy, so nothing is read back."""
         log = self._log
         log.refresh()
         if self.has_snapshot(snapshot):
             raise ValueError(f"snapshot {snapshot!r} already in store")
         dirname = log.alloc()
         out = fs.join(self.root, dirname)
-        id_type = dict(rows.dtypes)["id"]
-        rows = rows.withColumn("snapshot", F.lit(snapshot))
-        if n is None:
+        if isinstance(rows, DataFrame):
+            id_type = dict(rows.dtypes)["id"]
+            rows = rows.withColumn("snapshot", F.lit(snapshot))
             got = log.write_counted(rows, out, self.PART_COL, **({"clips": F.count_if(F.col("t") == 0)} if self.COUNT_T0 else {}))
             n = int(got["clips"]) if self.COUNT_T0 else int(got["rows"]) // int(self.manifest["bands"])
             if self.COUNT_T0 and n == 0 and got["rows"]:
@@ -223,15 +228,14 @@ class SnapshotStore:
                 # table): prove the count from the written snapshot
                 n = self.spark.read.parquet(out).select("id").distinct().count()
         else:
-            # one task writes one file per partition value; an empty frame
-            # still leaves the dir (and its _SUCCESS) for the manifest entry
-            rows.coalesce(1).write.partitionBy(self.PART_COL).parquet(out, mode="overwrite")
+            rows = rows.assign(snapshot=snapshot)
+            log.write_local(rows, self.READ_SCHEMA.format(id_type=id_type), out, self.PART_COL)
         entry = {"name": snapshot, "dir": dirname, self.COUNT_KEY: n, "id_type": id_type}
         self.manifest["snapshots"].append(entry)
         self.manifest[self.COUNT_KEY] += n
         log.commit()
-        if local is not None and n and self._copy is not None:
-            self._adopt((dirname, snapshot, n), local.assign(snapshot=snapshot), id_type)
+        if isinstance(rows, pd.DataFrame) and n and self._copy is not None:
+            self._adopt((dirname, snapshot, n), rows, id_type)
         return entry
 
     def _adopt(self, key: tuple, rows: pd.DataFrame, id_type: str) -> None:

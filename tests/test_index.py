@@ -1020,6 +1020,33 @@ def test_loose_tail_or_tombstone_files_are_refused(spark, tmp_path, kind):
     assert IVFIndex(m.path, spark).counts(spark)["live"] == 40
 
 
+@pytest.mark.parametrize("id_t", ["int", "string"])
+def test_delete_runs_no_spark_job(spark, tmp_path, id_t):
+    """A delete's tombstone segment is written by the driver: no Spark job
+    runs, the segment reads back with the index's id type, and a fresh
+    handle counts the ids as deleted and never returns them."""
+    from duckdb_vss_spark.index.ivf import IVFIndex, build_ivf
+
+    vec = np.random.default_rng(3).standard_normal((40, DIM)).astype(np.float32)
+    rows = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(vec)], "id long, vec array<float>")
+    idx = build_ivf(rows.select(F.col("id").cast(id_t).alias("id"), "vec"), "vec", "id", str(tmp_path / "idx"), nlist=4)
+    gone = [i if id_t == "int" else str(i) for i in (0, 7)]
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("driver-delete", "driver-delete")
+        idx.delete(spark, gone)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("driver-delete")) == 0
+    (seg,) = idx._segment_paths("deleted")
+    tomb = spark.read.parquet(seg)
+    assert tomb.dtypes == [("id", id_t)] and sorted(r.id for r in tomb.collect()) == sorted(gone)
+    fresh = IVFIndex(idx.path, spark)
+    assert fresh.counts(spark)["deleted"] == 2
+    hits = [r["id"] for r in fresh.search(spark, vec[0].tolist(), K, FULL).collect()]
+    assert len(hits) == K and not set(hits) & set(gone)
+
+
 def test_inserted_doubles_score_as_stored_f32(spark, emb, tmp_path):
     """Inserted rows are cast to the data layout as the build casts them:
     rows inserted from an array<double> column (vectors + 1e-9) score the
