@@ -22,10 +22,9 @@ Spark-native fix.
 
 from __future__ import annotations
 
-import os
 from collections import deque
 
-MAX_LIVE_BROADCASTS = int(os.environ.get("SPARK_GRAFT_MAX_LIVE_BROADCASTS", "64"))
+MAX_LIVE_BROADCASTS = 64
 
 # applicationId -> deque of live Broadcast handles (oldest first)
 _LIVE: dict[str, deque] = {}
@@ -51,7 +50,7 @@ def live_broadcast_count(sc) -> int:
     return len(_LIVE.get(sc.applicationId, ()))
 
 
-MAX_LIVE_PERSISTS = int(os.environ.get("SPARK_GRAFT_MAX_LIVE_PERSISTS", "8"))
+MAX_LIVE_PERSISTS = 8
 
 # applicationId -> deque of internally persisted DataFrames (oldest first)
 _LIVE_PERSISTS: dict[str, deque] = {}

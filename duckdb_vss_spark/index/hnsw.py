@@ -427,7 +427,8 @@ class GraphIndex(IVFIndex):
         def shard_topk(pdf: pd.DataFrame) -> pd.DataFrame:
             if len(pdf) == 0:
                 return pd.DataFrame({"id": [], "vec": []})
-            pdf = pdf.sort_values("li").reset_index(drop=True)
+            # an id deleted twice joins its tombstones twice (live_rows)
+            pdf = pdf.drop_duplicates("li").sort_values("li").reset_index(drop=True)
             mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
             nbrs = np.vstack(pdf["nbrs"].to_numpy()).astype(np.int32)
             idx, _ = _beam_search(mat, nbrs, bc.value, k, ef, metric, pdf["live"].to_numpy(bool))
@@ -487,7 +488,8 @@ class GraphIndex(IVFIndex):
             sel_q = np.nonzero(mask_l[int(pdf["part_id"].iloc[0])])[0]
             if sel_q.size == 0:
                 return empty
-            pdf = pdf.sort_values("li").reset_index(drop=True)
+            # an id deleted twice joins its tombstones twice (live_rows)
+            pdf = pdf.drop_duplicates("li").sort_values("li").reset_index(drop=True)
             mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
             nbrs = np.vstack(pdf["nbrs"].to_numpy()).astype(np.int32)
             live = pdf["live"].to_numpy(bool)

@@ -809,15 +809,16 @@ class IVFIndex:
         with no broadcast hint: Spark's planner broadcasts the tombstones
         while they fit and shuffles them when not, so no read collects them
         to the driver. ``tag=True`` keeps every data row and marks it with a
-        boolean ``live`` column instead, by a left join to the distinct
-        tombstones: a graph shard's adjacency is by row position, so its
-        search walks dead rows and never returns one."""
+        boolean ``live`` column instead, by a left join to the tombstones
+        (an id deleted twice joins twice; the graph kernels drop the
+        repeated row): a graph shard's adjacency is by row position, so
+        its search walks dead rows and never returns one."""
         data, tail = self.data_df(spark, lists), self.tail_df(spark)
         deleted = self.deleted_df(spark)
         if deleted is None:
             return (data.withColumn("live", F.lit(True)) if tag else data), tail
         if tag:
-            dead = deleted.distinct().withColumn("live", F.lit(False))
+            dead = deleted.withColumn("live", F.lit(False))
             data = data.join(dead, "id", "left").withColumn("live", F.coalesce("live", F.lit(True)))
         else:
             data = data.join(deleted, "id", "left_anti")

@@ -451,13 +451,6 @@ def _encode_block(blk, pred: int, dc_codes: dict, ac_codes: dict, bw: _BitWriter
     return dc
 
 
-def _encode_plane(qcoefs: np.ndarray, dc_codes: dict, ac_codes: dict, bw: _BitWriter) -> None:
-    """qcoefs: (n_blocks, 64) zigzag-ordered quantized coefficients."""
-    pred = 0
-    for blk in qcoefs:
-        pred = _encode_block(blk, pred, dc_codes, ac_codes, bw)
-
-
 def encode_jpeg(
     pixels: np.ndarray,
     quality: int = 75,

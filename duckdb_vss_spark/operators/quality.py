@@ -166,15 +166,6 @@ def clean_lines(
     )
 
 
-def _frac(num: Column, den: Column) -> Column:
-    """num/den as FLOAT with the 0-denominator → 0.0 convention; numerators
-    and denominators are exact int64 sums, so the single double division is
-    bit-stable against the duckdb oracle."""
-    return (
-        F.when(den > 0, num.cast("double") / den.cast("double")).otherwise(F.lit(0.0))
-    ).cast("float")
-
-
 def repetition_stats(
     df: DataFrame,
     text_col: str,

@@ -42,16 +42,6 @@ __all__ = ["topk", "min_by_k", "max_by_k", "grouped_topk"]
 FAST_OVERFETCH = 64
 
 
-def _estimated_bytes(df: DataFrame):
-    """Catalyst's sizeInBytes estimate for the relation — free (no job): file
-    sources report file size, cached relations their in-memory size. None if
-    the internal API is unavailable (callers then keep the JVM path)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
-
-
 def _kernel_candidates(df: DataFrame, vec_col: str, query: list, k: int, metric: str) -> DataFrame:
     """Per-partition brute-force top-k candidate rows via one GEMM per Arrow
     batch (`mapInPandas`) — the engine's analog of the reference's SIMD

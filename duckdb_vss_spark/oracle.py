@@ -87,12 +87,6 @@ def sql_minhash_from_halves(h1s_col: str, h2s_col: str, num_perm: int) -> str:
     return f"[{elems}]"
 
 
-def sql_minhash_signature(col: str, n: int, num_perm: int) -> str:
-    """One-shot signature expression (tests); operators use the CTE form."""
-    h1s, h2s = sql_shingle_hash_halves(col, n)
-    return sql_minhash_from_halves(f"({h1s})", f"({h2s})", num_perm)
-
-
 def sql_stopword_ratio(col: str, lang: str) -> str:
     t = f"list_distinct({sql_tokens(col)})"
     words = ", ".join(f"'{w}'" for w in STOPWORDS[lang])

@@ -292,18 +292,10 @@ def audio_curate(
     )
     keep = F.col("quality_keep") & F.col("dedup_keep")
     if store is not None:
-        hits = (
-            store.match_against(
-                clips.select(id_col, content_col), content_col, id_col, min_matches
-            )
-            .select(F.col("id").alias("__mid"))
-            .distinct()
+        matches = store.match_against(
+            clips.select(id_col, content_col), content_col, id_col, min_matches
         )
-        out = (
-            out.join(hits, F.col(id_col) == F.col("__mid"), "left")
-            .withColumn("dup_of_store", F.col("__mid").isNotNull())
-            .drop("__mid")
-        )
+        out = store._flag(out, id_col, matches, "dup_of_store")
         keep = keep & ~F.col("dup_of_store")
     out = out.withColumn("audio_keep", keep)
     if store is not None and snapshot is not None:
@@ -448,22 +440,14 @@ def image_curate(
     )
     keep = F.col("quality_keep") & F.col("dedup_keep")
     if store is not None:
-        hits = (
-            # the recipe's threshold governs BOTH the in-batch join and
-            # the history match (a smaller per-call bound than the
-            # store's configured one is always pigeonhole-complete)
-            store.match_against(
-                hashes, id_col, hash_col="phash",
-                max_hamming=max_hamming, max_bucket=max_bucket,
-            )
-            .select(F.col("id").alias("__mid"))
-            .distinct()
+        # the recipe's threshold governs BOTH the in-batch join and the
+        # history match (a smaller per-call bound than the store's
+        # configured one is always pigeonhole-complete)
+        matches = store.match_against(
+            hashes, id_col, hash_col="phash",
+            max_hamming=max_hamming, max_bucket=max_bucket,
         )
-        out = (
-            out.join(hits, F.col(id_col) == F.col("__mid"), "left")
-            .withColumn("dup_of_store", F.col("__mid").isNotNull())
-            .drop("__mid")
-        )
+        out = store._flag(out, id_col, matches, "dup_of_store")
         keep = keep & ~F.col("dup_of_store")
     out = out.withColumn("image_keep", keep)
     if store is not None and snapshot is not None:
@@ -608,19 +592,11 @@ def video_curate(
     ).withColumnRenamed("is_canonical", "dedup_keep")
     keep = F.col("quality_keep") & F.col("dedup_keep")
     if store is not None:
-        hits = (
-            store.match_against(
-                None, id_col, keys_df=keys, min_matches=min_matches,
-                max_hamming=max_hamming, max_bucket=max_bucket,
-            )
-            .select(F.col("id").alias("__mid"))
-            .distinct()
+        matches = store.match_against(
+            None, id_col, keys_df=keys, min_matches=min_matches,
+            max_hamming=max_hamming, max_bucket=max_bucket,
         )
-        out = (
-            out.join(hits, F.col(id_col) == F.col("__mid"), "left")
-            .withColumn("dup_of_store", F.col("__mid").isNotNull())
-            .drop("__mid")
-        )
+        out = store._flag(out, id_col, matches, "dup_of_store")
         keep = keep & ~F.col("dup_of_store")
     out = out.withColumn("video_keep", keep)
     if store is not None and snapshot is not None:

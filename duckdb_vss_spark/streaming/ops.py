@@ -10,11 +10,37 @@ Scale notes (the 100 TB posture):
   no driver state, no collect;
 - the stateless vector-scoring stream is a pure projection: it pipelines at
   source speed with zero state and zero shuffle.
+
+Store-backed streams (crawl, WARC, curate, audio, image, video and
+image-text) mutate a fingerprint store through ``foreachBatch`` and are
+effectively-once under replay. ``foreachBatch`` writes get no exactly-once
+help from the checkpoint, so :func:`_store_batch` runs each micro-batch
+``bid`` the same way:
+
+1. If snapshot ``{prefix}-{bid:06d}`` is already committed, skip the batch:
+   its sink and store rows are complete. Recomputing would be wrong, not
+   just wasteful — the batch's docs would match their own committed
+   fingerprints, every kept row would flip to a store dup, and the
+   overwrite would replace the correct sink with that.
+2. Flag the batch with the recipe (flag, don't drop).
+3. Write the flagged rows to ``out_path/batch={bid:06d}`` with
+   ``overwrite``, so a replay that does recompute (crash before the
+   commit; the store holds no trace of the batch, so the flags come out
+   the same) replaces rather than duplicates. Readers see ``batch`` as an
+   ordinary partition column of ``spark.read.parquet(out_path)``.
+4. Commit the kept rows, read back from that sink, as the snapshot. The
+   sink write precedes the commit, so a committed snapshot implies a
+   complete sink; the read-back commits what the sink holds without
+   running the recipe a second time.
+
+The stream owns snapshot naming and the store: the curate streams reject
+either in their pass-through kwargs (:func:`_check_owned_kwargs`).
 """
 
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager, nullcontext
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -252,6 +278,60 @@ def _drain(q, timeout_sec: float, name: str) -> None:
     q.awaitTermination()
 
 
+def _run_batches(stream: DataFrame, batch_fn, checkpoint: str, timeout_sec: float, name: str) -> None:
+    """Run ``batch_fn(batch_df, batch_id)`` over every micro-batch of the
+    currently-staged input (``availableNow``) and block until the stream
+    drains; a failed batch re-raises here (:func:`_drain`)."""
+    q = (
+        stream.writeStream.foreachBatch(batch_fn)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    _drain(q, timeout_sec, name)
+
+
+def _check_owned_kwargs(name: str, curate_kwargs: dict) -> None:
+    """A store-backed stream owns snapshot naming and the store. A
+    caller-fixed ``snapshot`` would commit a second, identically-named
+    snapshot every micro-batch that the ``{prefix}-{batch_id}`` skip
+    cannot see, so a restarted batch would re-dedup against its own
+    fingerprints."""
+    forbidden = {"snapshot", "store"} & curate_kwargs.keys()
+    if forbidden:
+        raise ValueError(
+            f"{name} owns snapshot naming and the store; "
+            f"pass {sorted(forbidden)} as direct arguments, not via curate_kwargs"
+        )
+
+
+def _store_batch(
+    bdf: DataFrame,
+    bid: int,
+    store,
+    out_path: str,
+    snapshot_prefix: str,
+    recipe,
+    keep_col: str,
+    keep_cols: tuple,
+    commit,
+) -> None:
+    """One micro-batch of a store-backed stream, under the protocol in the
+    module docstring. ``recipe(bdf)`` is a context manager yielding the
+    flagged frame (it releases what it cached on exit);
+    ``commit(kept, name)`` appends the ``keep_cols`` of the sink's
+    ``keep_col`` rows to ``store`` as snapshot ``name``."""
+    name = f"{snapshot_prefix}-{bid:06d}"
+    if store.has_snapshot(name):
+        return  # replayed after full commit: sink + store already hold the batch
+    sink = f"{out_path}/batch={bid:06d}"
+    with recipe(bdf) as out:
+        out.write.mode("overwrite").parquet(sink)
+        # the flagged frame's schema is the sink's: no footer-reading job
+        kept = bdf.sparkSession.read.schema(out.schema).parquet(sink)
+        commit(kept.filter(keep_col).select(*keep_cols), name)
+
+
 def stream_knn_join(
     probes: DataFrame,
     index,
@@ -277,20 +357,12 @@ def stream_knn_join(
     """
     from ..operators.knn import knn_join_flat_indexed
 
-    spark = probes.sparkSession
-
     def _batch(bdf: DataFrame, _bid: int) -> None:
         out = knn_join_flat_indexed(bdf, index, vec_col, k, id_col, ef_search)
         out.write.mode("append").parquet(out_path)
 
-    q = (
-        probes.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", out_path + ".ckpt")
-        .start()
-    )
-    _drain(q, timeout_sec, "stream_knn_join")
-    return spark.read.parquet(out_path)
+    _run_batches(probes, _batch, out_path + ".ckpt", timeout_sec, "stream_knn_join")
+    return probes.sparkSession.read.parquet(out_path)
 
 
 def run_to_memory(
@@ -357,13 +429,7 @@ def stream_index_insert(
         if compact_tail_rows is not None and index._tail_rows() > int(compact_tail_rows):
             index.compact_incremental(bdf.sparkSession)
 
-    q = (
-        vectors.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    _drain(q, timeout_sec, "stream_index_insert")
+    _run_batches(vectors, _batch, checkpoint, timeout_sec, "stream_index_insert")
 
 
 def _crawl_ingest_batch(
@@ -377,34 +443,19 @@ def _crawl_ingest_batch(
     snapshot_prefix: str,
     **ingest_kwargs,
 ) -> None:
-    """One micro-batch of :func:`stream_crawl_ingest`, idempotent under
-    replay. Two guards make the replay a no-op rather than a recompute:
-
-    - If this batch's snapshot name is ALREADY in the store, the whole
-      batch is skipped. Re-running the flags would be wrong, not just
-      wasteful: flag_batch would match the batch's docs against their own
-      committed fingerprints (est_jaccard 1.0), flip every kept row to
-      dup_of_store, and the sink overwrite would replace the correct
-      first-attempt output with an all-dup version. The sink write
-      precedes the snapshot commit, so a committed snapshot implies the
-      sink subdirectory is already complete.
-    - The sink write targets a batch-id-keyed subdirectory with
-      ``overwrite``, so a replay that DOES recompute (crash before the
-      snapshot committed — the store holds no trace of this batch yet,
-      flags recompute identically) replaces rather than duplicates."""
+    """One micro-batch of :func:`stream_crawl_ingest` and
+    :func:`stream_warc_ingest`: the crawl recipe under
+    :func:`_store_batch`."""
     from ..pipelines import crawl_ingest
 
-    name = f"{snapshot_prefix}-{bid:06d}"
-    if store.has_snapshot(name):
-        return  # replayed after full commit: sink + store already hold batch
-    out = crawl_ingest(
-        bdf, store, url_col=url_col, text_col=text_col, id_col=id_col,
-        append_snapshot=None, **ingest_kwargs,
-    )
-    out.write.mode("overwrite").parquet(f"{out_path}/batch={bid:06d}")
-    store.append_snapshot(
-        out.filter("ingest_keep").select(id_col, text_col),
-        text_col, id_col, name,
+    _store_batch(
+        bdf, bid, store, out_path, snapshot_prefix,
+        lambda b: nullcontext(crawl_ingest(
+            b, store, url_col=url_col, text_col=text_col, id_col=id_col,
+            append_snapshot=None, **ingest_kwargs,
+        )),
+        "ingest_keep", (id_col, text_col),
+        lambda kept, name: store.append_snapshot(kept, text_col, id_col, name),
     )
 
 
@@ -424,23 +475,13 @@ def stream_crawl_ingest(
     documents arriving on a stream are curated per micro-batch against the
     accumulated MinHashStore history — URL normalize/flags, per-domain cap
     (within the micro-batch), near-dup match against every PRIOR batch —
-    then the flagged rows land in a parquet sink and the kept rows'
+    then the flagged rows land in the sink and the kept rows'
     fingerprints commit as snapshot ``{prefix}-{batch_id}`` so the NEXT
     micro-batch dedups against this one. This is the same
     artifact-maintenance shape as :func:`stream_index_insert`: the stream
     mutates a persisted store through its batch API, one committed
-    snapshot per micro-batch.
-
-    Delivery: effectively-once. A replayed uncommitted micro-batch re-runs
-    the whole flag+append; the snapshot-name collision guard makes the
-    replayed append a no-op-with-error, which we swallow — the store then
-    holds the FIRST attempt's fingerprints. The sink write is made
-    idempotent the same way: each micro-batch lands in its own
-    ``out_path/batch=NNNNNN/`` subdirectory with ``mode("overwrite")``
-    (foreachBatch manual writes get no exactly-once help from the
-    checkpoint, so a plain ``mode("append")`` would duplicate the batch's
-    rows on replay). Readers see ``batch`` as an ordinary partition column
-    of ``spark.read.parquet(out_path)``.
+    snapshot per micro-batch. Delivery is effectively-once (module
+    docstring).
     """
     def _batch(bdf: DataFrame, bid: int) -> None:
         _crawl_ingest_batch(
@@ -449,71 +490,7 @@ def stream_crawl_ingest(
             snapshot_prefix=snapshot_prefix, **ingest_kwargs,
         )
 
-    q = (
-        docs.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    _drain(q, timeout_sec, "stream_crawl_ingest")
-
-
-def _curate_batch(
-    bdf: DataFrame,
-    bid: int,
-    store,
-    bench,
-    out_path: str,
-    text_col: str,
-    id_col: str,
-    snapshot_prefix: str,
-    **curate_kwargs,
-) -> None:
-    """One micro-batch of :func:`stream_curate`. Same replay discipline as
-    :func:`_crawl_ingest_batch`: a committed snapshot means sink + store
-    already hold this batch (skip — re-flagging would match the batch
-    against its own fingerprints); the sink write is batch-keyed with
-    overwrite and PRECEDES the snapshot commit. The recipe's persisted
-    narrow flag frame is unpersisted once the batch is fully
-    materialized, so a long-running stream does not accumulate one
-    cached frame per micro-batch."""
-    from ..operators.dedup import _fan_out
-    from ..pipelines import curate_corpus
-
-    name = f"{snapshot_prefix}-{bid:06d}"
-    if store.has_snapshot(name):
-        return
-    # a micro-batch inherits the arrival files' partition count — a
-    # narrow drop (1-4 files) would run the recipe's map-only stages at
-    # file width while the cluster idles (measured: the MinHash stage
-    # re-fans itself, the classifier/decontam stages do not); doc-level
-    # rows are cheap to shuffle relative to anything derived from them
-    out = curate_corpus(
-        _fan_out(bdf), store=store, bench=bench, text_col=text_col,
-        id_col=id_col, **curate_kwargs,
-    )
-    sink = f"{out_path}/batch={bid:06d}"
-    out.write.mode("overwrite").parquet(sink)
-    # the snapshot commit fingerprints the KEPT rows — read them back from
-    # the sink just written instead of re-evaluating the recipe chain
-    # (round 9: the write already materialized every flag; re-running
-    # `out` here paid the classifier + store join + decontam a second
-    # time per batch)
-    kept = (
-        bdf.sparkSession.read.parquet(sink)
-        .filter("curate_keep")
-        .select(id_col, text_col)
-    )
-    store.append_snapshot(kept, text_col, id_col, name)
-    # unpersist AND vacate the tracked-ring slot, so a long stream's
-    # per-batch frames (the narrow flag frame and the store-match hit
-    # set) don't evict ring entries still in use
-    for attr in ("_curate_narrow", "_curate_hits"):
-        cached = getattr(out, attr, None)
-        if cached is not None:
-            from ..broadcasts import untrack_persist
-
-            untrack_persist(cached)
+    _run_batches(docs, _batch, checkpoint, timeout_sec, "stream_crawl_ingest")
 
 
 def stream_curate(
@@ -540,22 +517,18 @@ def stream_curate(
     mixing race's population — the same per-dump semantics the batch
     recipe has when invoked per crawl snapshot); cross-batch state is
     exactly the MinHashStore's fingerprints, O(kept docs), never text.
-    Delivery is effectively-once via the same two guards as
-    :func:`stream_crawl_ingest` (snapshot-name skip + batch-keyed
-    overwrite sink). ``curate_kwargs`` pass through to the recipe
-    (``strata_col``, ``alpha``, ``pack_budget``, thresholds...) — except
-    ``snapshot`` and ``store``, which the stream owns: a caller-fixed
-    snapshot name would commit a second, identically-named snapshot every
-    micro-batch that the ``{prefix}-{batch_id}`` replay guard cannot see,
-    so a restarted batch would re-dedup against its own fingerprints and
-    break the effectively-once contract.
+    Delivery is effectively-once (module docstring). ``curate_kwargs``
+    pass through to the recipe (``strata_col``, ``alpha``,
+    ``pack_budget``, thresholds...) — except ``snapshot`` and ``store``,
+    which the stream owns. The recipe's persisted narrow flag frame and
+    store-match hit set are released after each batch, so a long-running
+    stream does not accumulate one cached frame per micro-batch.
     """
-    forbidden = {"snapshot", "store"} & curate_kwargs.keys()
-    if forbidden:
-        raise ValueError(
-            f"stream_curate owns snapshot naming and the store; "
-            f"pass {sorted(forbidden)} as direct arguments, not via curate_kwargs"
-        )
+    from ..broadcasts import untrack_persist
+    from ..operators.dedup import _fan_out
+    from ..pipelines import curate_corpus
+
+    _check_owned_kwargs("stream_curate", curate_kwargs)
     # the benchmark gram set is stream-invariant: build + persist it ONCE
     # and hand it to every micro-batch, instead of re-running the
     # benchmark explode+distinct per batch (round 9 overhead cut).
@@ -581,59 +554,39 @@ def stream_curate(
         )
         curate_kwargs["bench_grams"] = owned_grams
 
+    @contextmanager
+    def recipe(bdf: DataFrame):
+        # a micro-batch inherits the arrival files' partition count — a
+        # narrow drop (1-4 files) would run the recipe's map-only stages at
+        # file width while the cluster idles (measured: the MinHash stage
+        # re-fans itself, the classifier/decontam stages do not); doc-level
+        # rows are cheap to shuffle relative to anything derived from them
+        out = curate_corpus(
+            _fan_out(bdf), store=store, bench=bench, text_col=text_col,
+            id_col=id_col, **curate_kwargs,
+        )
+        try:
+            yield out
+        finally:
+            # unpersist AND vacate the tracked-ring slot, so a long stream's
+            # per-batch frames don't evict ring entries still in use
+            for attr in ("_curate_narrow", "_curate_hits"):
+                cached = getattr(out, attr, None)
+                if cached is not None:
+                    untrack_persist(cached)
+
     def _batch(bdf: DataFrame, bid: int) -> None:
-        _curate_batch(
-            bdf, bid, store, bench, out_path,
-            text_col=text_col, id_col=id_col,
-            snapshot_prefix=snapshot_prefix, **curate_kwargs,
+        _store_batch(
+            bdf, bid, store, out_path, snapshot_prefix, recipe,
+            "curate_keep", (id_col, text_col),
+            lambda kept, name: store.append_snapshot(kept, text_col, id_col, name),
         )
 
     try:
-        q = (
-            docs.writeStream.foreachBatch(_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-        _drain(q, timeout_sec, "stream_curate")
+        _run_batches(docs, _batch, checkpoint, timeout_sec, "stream_curate")
     finally:
         if owned_grams is not None:
             owned_grams.unpersist()
-
-
-def _audio_curate_batch(
-    bdf: DataFrame,
-    bid: int,
-    store,
-    out_path: str,
-    content_col: str,
-    id_col: str,
-    snapshot_prefix: str,
-    **curate_kwargs,
-) -> None:
-    """One micro-batch of :func:`stream_audio_curate` — the same replay
-    discipline as :func:`_curate_batch`: committed snapshot ⇒ skip;
-    batch-keyed overwrite sink PRECEDES the snapshot commit; kept rows
-    are read back from the sink just written rather than re-running the
-    decode/fingerprint chain."""
-    from ..operators.dedup import _fan_out
-    from ..pipelines import audio_curate
-
-    name = f"{snapshot_prefix}-{bid:06d}"
-    if store.has_snapshot(name):
-        return
-    out = audio_curate(
-        _fan_out(bdf), content_col=content_col, id_col=id_col,
-        store=store, snapshot=None, **curate_kwargs,
-    )
-    sink = f"{out_path}/batch={bid:06d}"
-    out.write.mode("overwrite").parquet(sink)
-    kept = (
-        bdf.sparkSession.read.parquet(sink)
-        .filter("audio_keep")
-        .select(id_col, content_col)
-    )
-    store.append_snapshot(kept, content_col, id_col, name)
 
 
 def stream_audio_curate(
@@ -656,66 +609,25 @@ def stream_audio_curate(
     micro-batch dedups against it. Cross-batch state is the
     :class:`~duckdb_vss_spark.index.audio_store.AudioFingerprintStore`'s
     key rows — O(kept clips' frames), never audio bytes. Delivery is
-    effectively-once via the snapshot-name skip + batch-keyed overwrite
-    sink, like :func:`stream_curate` (which also owns snapshot naming,
-    hence the same kwarg guard)."""
-    forbidden = {"snapshot", "store"} & curate_kwargs.keys()
-    if forbidden:
-        raise ValueError(
-            f"stream_audio_curate owns snapshot naming and the store; "
-            f"pass {sorted(forbidden)} as direct arguments, not via curate_kwargs"
-        )
+    effectively-once (module docstring); the commit re-fingerprints the
+    kept clips' bytes read back from the sink."""
+    from ..operators.dedup import _fan_out
+    from ..pipelines import audio_curate
+
+    _check_owned_kwargs("stream_audio_curate", curate_kwargs)
 
     def _batch(bdf: DataFrame, bid: int) -> None:
-        _audio_curate_batch(
-            bdf, bid, store, out_path,
-            content_col=content_col, id_col=id_col,
-            snapshot_prefix=snapshot_prefix, **curate_kwargs,
+        _store_batch(
+            bdf, bid, store, out_path, snapshot_prefix,
+            lambda b: nullcontext(audio_curate(
+                _fan_out(b), content_col=content_col, id_col=id_col,
+                store=store, snapshot=None, **curate_kwargs,
+            )),
+            "audio_keep", (id_col, content_col),
+            lambda kept, name: store.append_snapshot(kept, content_col, id_col, name),
         )
 
-    q = (
-        clips.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    _drain(q, timeout_sec, "stream_audio_curate")
-
-
-def _image_curate_batch(
-    bdf: DataFrame,
-    bid: int,
-    store,
-    out_path: str,
-    content_col: str,
-    id_col: str,
-    snapshot_prefix: str,
-    **curate_kwargs,
-) -> None:
-    """One micro-batch of :func:`stream_image_curate` — the same replay
-    discipline as the text/audio twins: committed snapshot ⇒ skip;
-    batch-keyed overwrite sink PRECEDES the snapshot commit; the kept
-    rows' hashes are read back from the sink just written (the recipe
-    materialized ``phash`` there), so neither the replay nor the commit
-    re-decodes a single image."""
-    from ..operators.dedup import _fan_out
-    from ..pipelines import image_curate
-
-    name = f"{snapshot_prefix}-{bid:06d}"
-    if store.has_snapshot(name):
-        return
-    out = image_curate(
-        _fan_out(bdf), content_col=content_col, id_col=id_col,
-        store=store, snapshot=None, **curate_kwargs,
-    )
-    sink = f"{out_path}/batch={bid:06d}"
-    out.write.mode("overwrite").parquet(sink)
-    kept = (
-        bdf.sparkSession.read.parquet(sink)
-        .filter("image_keep")
-        .select(id_col, "phash")
-    )
-    store.append_snapshot(kept, id_col, name, hash_col="phash")
+    _run_batches(clips, _batch, checkpoint, timeout_sec, "stream_audio_curate")
 
 
 def stream_image_curate(
@@ -738,67 +650,25 @@ def stream_image_curate(
     dedups against it. Cross-batch state is the
     :class:`~duckdb_vss_spark.index.image_store.ImageHashStore`'s banded
     hash rows — a few longs per kept image, never pixels. Delivery is
-    effectively-once via the snapshot-name skip + batch-keyed overwrite
-    sink, like its siblings (which also own snapshot naming, hence the
-    same kwarg guard)."""
-    forbidden = {"snapshot", "store"} & curate_kwargs.keys()
-    if forbidden:
-        raise ValueError(
-            f"stream_image_curate owns snapshot naming and the store; "
-            f"pass {sorted(forbidden)} as direct arguments, not via curate_kwargs"
-        )
+    effectively-once (module docstring); the commit takes the ``phash``
+    the recipe materialized in the sink, so it re-decodes no image."""
+    from ..operators.dedup import _fan_out
+    from ..pipelines import image_curate
+
+    _check_owned_kwargs("stream_image_curate", curate_kwargs)
 
     def _batch(bdf: DataFrame, bid: int) -> None:
-        _image_curate_batch(
-            bdf, bid, store, out_path,
-            content_col=content_col, id_col=id_col,
-            snapshot_prefix=snapshot_prefix, **curate_kwargs,
+        _store_batch(
+            bdf, bid, store, out_path, snapshot_prefix,
+            lambda b: nullcontext(image_curate(
+                _fan_out(b), content_col=content_col, id_col=id_col,
+                store=store, snapshot=None, **curate_kwargs,
+            )),
+            "image_keep", (id_col, "phash"),
+            lambda kept, name: store.append_snapshot(kept, id_col, name, hash_col="phash"),
         )
 
-    q = (
-        images.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    _drain(q, timeout_sec, "stream_image_curate")
-
-
-def _video_curate_batch(
-    bdf: DataFrame,
-    bid: int,
-    store,
-    out_path: str,
-    content_col: str,
-    id_col: str,
-    snapshot_prefix: str,
-    **curate_kwargs,
-) -> None:
-    """One micro-batch of :func:`stream_video_curate` — same replay
-    discipline as the text/audio/image twins: committed snapshot ⇒ skip;
-    batch-keyed overwrite sink PRECEDES the snapshot commit. The replay
-    path re-reads the kept clips' BYTES from the sink and re-fingerprints
-    them through the store's content path (the frame-hash table is
-    per-frame rows, too wide to ride every clip row like the image
-    store's single hash does — the audio twin makes the same trade)."""
-    from ..operators.dedup import _fan_out
-    from ..pipelines import video_curate
-
-    name = f"{snapshot_prefix}-{bid:06d}"
-    if store.has_snapshot(name):
-        return
-    out = video_curate(
-        _fan_out(bdf), content_col=content_col, id_col=id_col,
-        store=store, snapshot=None, **curate_kwargs,
-    )
-    sink = f"{out_path}/batch={bid:06d}"
-    out.write.mode("overwrite").parquet(sink)
-    kept = (
-        bdf.sparkSession.read.parquet(sink)
-        .filter("video_keep")
-        .select(id_col, content_col)
-    )
-    store.append_snapshot(kept, id_col, name, content_col=content_col)
+    _run_batches(images, _batch, checkpoint, timeout_sec, "stream_image_curate")
 
 
 def stream_video_curate(
@@ -821,87 +691,27 @@ def stream_video_curate(
     dedups against it. Cross-batch state is the
     :class:`~duckdb_vss_spark.index.video_store.VideoFingerprintStore`'s
     ``(id, t, h)`` rows — three longs per kept frame, never pixels.
-    Delivery is effectively-once via the snapshot-name skip +
-    batch-keyed overwrite sink, like its siblings (which also own
-    snapshot naming, hence the same kwarg guard)."""
-    forbidden = {"snapshot", "store"} & curate_kwargs.keys()
-    if forbidden:
-        raise ValueError(
-            f"stream_video_curate owns snapshot naming and the store; "
-            f"pass {sorted(forbidden)} as direct arguments, not via curate_kwargs"
-        )
+    Delivery is effectively-once (module docstring); the commit
+    re-fingerprints the kept clips' bytes read back from the sink (the
+    frame-hash table is per-frame rows, too wide to ride every clip row
+    like the image store's single hash does)."""
+    from ..operators.dedup import _fan_out
+    from ..pipelines import video_curate
+
+    _check_owned_kwargs("stream_video_curate", curate_kwargs)
 
     def _batch(bdf: DataFrame, bid: int) -> None:
-        _video_curate_batch(
-            bdf, bid, store, out_path,
-            content_col=content_col, id_col=id_col,
-            snapshot_prefix=snapshot_prefix, **curate_kwargs,
+        _store_batch(
+            bdf, bid, store, out_path, snapshot_prefix,
+            lambda b: nullcontext(video_curate(
+                _fan_out(b), content_col=content_col, id_col=id_col,
+                store=store, snapshot=None, **curate_kwargs,
+            )),
+            "video_keep", (id_col, content_col),
+            lambda kept, name: store.append_snapshot(kept, id_col, name, content_col=content_col),
         )
 
-    q = (
-        clips.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    _drain(q, timeout_sec, "stream_video_curate")
-
-
-def _image_text_curate_batch(
-    bdf: DataFrame,
-    bid: int,
-    store,
-    out_path: str,
-    fetch_fn,
-    html_col: str,
-    id_col: str,
-    snapshot_prefix: str,
-    prefetch_kwargs: dict,
-    **curate_kwargs,
-) -> None:
-    """One micro-batch of :func:`stream_image_text_curate` — the same
-    replay discipline as the text/audio/image/video twins: committed
-    snapshot ⇒ skip (the replay never re-fetches a byte); batch-keyed
-    overwrite sink PRECEDES the snapshot commit; the kept images'
-    pHashes are read back from the pair ledger just written (it
-    materializes ``img_phash``), so neither the replay nor the commit
-    re-decodes an image. The pair ledger is persisted for the batch's
-    lifetime — it is evaluated twice (the fetch queue inside
-    ``fetch_fn``, then the flag-join side of the recipe), and without
-    the persist the HTML parse and the url_canonical window would run
-    twice per micro-batch — and released before the batch returns, so a
-    long stream does not accumulate one cached frame per batch."""
-    from ..broadcasts import untrack_persist
-    from ..operators.dedup import _fan_out, _shared
-    from ..pipelines import image_text_curate, image_text_pairs
-
-    name = f"{snapshot_prefix}-{bid:06d}"
-    if store.has_snapshot(name):
-        return
-    pairs = _shared(image_text_pairs(
-        _fan_out(bdf), html_col=html_col, id_col=id_col, **prefetch_kwargs
-    ))
-    try:
-        # the fetch queue is the PRE-fetch verdict: one URL per kept pair
-        queue = (
-            pairs.filter("pair_keep")
-            .select(F.col("img_url_norm").alias("url"))
-            .distinct()
-        )
-        out = image_text_curate(
-            pairs, fetch_fn(queue), store=store, snapshot=None, **curate_kwargs
-        )
-        sink = f"{out_path}/batch={bid:06d}"
-        out.write.mode("overwrite").parquet(sink)
-        kept = (
-            bdf.sparkSession.read.parquet(sink)
-            .filter("img_keep")
-            .select(F.col("img_url_norm"), F.col("img_phash"))
-            .dropDuplicates(["img_url_norm"])
-        )
-        store.append_snapshot(kept, "img_url_norm", name, hash_col="img_phash")
-    finally:
-        untrack_persist(pairs)
+    _run_batches(clips, _batch, checkpoint, timeout_sec, "stream_video_curate")
 
 
 def stream_image_text_curate(
@@ -941,40 +751,58 @@ def stream_image_text_curate(
     Cross-batch state is the
     :class:`~duckdb_vss_spark.index.image_store.ImageHashStore`'s banded
     hash rows — a few longs per kept image, never pixels or captions.
-    Delivery is effectively-once via the snapshot-name skip +
-    batch-keyed overwrite sink, like its siblings (which also own
-    snapshot naming, hence the same kwarg guard). ``prefetch_kwargs``
-    feed :func:`image_text_pairs` (declared-dims and caption gates);
-    ``curate_kwargs`` feed :func:`image_text_curate` (real post-fetch
-    gates) — the two stages intentionally keep separate ``min_width``/
-    ``min_height`` namespaces."""
+    Delivery is effectively-once (module docstring): a replay never
+    re-fetches a byte, and the commit takes the ``img_phash`` the pair
+    ledger materialized in the sink, so it re-decodes no image. The pair
+    ledger is persisted for the batch's lifetime — it is evaluated twice
+    (the fetch queue inside ``fetch_fn``, then the flag-join side of the
+    recipe), and without the persist the HTML parse and the url_canonical
+    window would run twice per micro-batch — and released before the
+    batch returns. ``prefetch_kwargs`` feed :func:`image_text_pairs`
+    (declared-dims and caption gates); ``curate_kwargs`` feed
+    :func:`image_text_curate` (real post-fetch gates) — the two stages
+    intentionally keep separate ``min_width``/``min_height`` namespaces."""
+    from ..broadcasts import untrack_persist
+    from ..operators.dedup import _fan_out, _shared
+    from ..pipelines import image_text_curate, image_text_pairs
+
     if fetch_fn is None:
         raise ValueError(
             "stream_image_text_curate requires fetch_fn: the engine owns the "
             "fetch queue and the post-fetch recipe, the caller owns the bytes"
         )
-    forbidden = {"snapshot", "store"} & curate_kwargs.keys()
-    if forbidden:
-        raise ValueError(
-            f"stream_image_text_curate owns snapshot naming and the store; "
-            f"pass {sorted(forbidden)} as direct arguments, not via curate_kwargs"
-        )
+    _check_owned_kwargs("stream_image_text_curate", curate_kwargs)
+    prefetch_kwargs = dict(prefetch_kwargs or {})
+
+    @contextmanager
+    def recipe(bdf: DataFrame):
+        pairs = _shared(image_text_pairs(
+            _fan_out(bdf), html_col=html_col, id_col=id_col, **prefetch_kwargs
+        ))
+        try:
+            # the fetch queue is the PRE-fetch verdict: one URL per kept pair
+            queue = (
+                pairs.filter("pair_keep")
+                .select(F.col("img_url_norm").alias("url"))
+                .distinct()
+            )
+            yield image_text_curate(
+                pairs, fetch_fn(queue), store=store, snapshot=None, **curate_kwargs
+            )
+        finally:
+            untrack_persist(pairs)
 
     def _batch(bdf: DataFrame, bid: int) -> None:
-        _image_text_curate_batch(
-            bdf, bid, store, out_path, fetch_fn,
-            html_col=html_col, id_col=id_col,
-            snapshot_prefix=snapshot_prefix,
-            prefetch_kwargs=dict(prefetch_kwargs or {}), **curate_kwargs,
+        _store_batch(
+            bdf, bid, store, out_path, snapshot_prefix, recipe,
+            "img_keep", ("img_url_norm", "img_phash"),
+            lambda kept, name: store.append_snapshot(
+                kept.dropDuplicates(["img_url_norm"]), "img_url_norm", name,
+                hash_col="img_phash",
+            ),
         )
 
-    q = (
-        pages.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    _drain(q, timeout_sec, "stream_image_text_curate")
+    _run_batches(pages, _batch, checkpoint, timeout_sec, "stream_image_text_curate")
 
 
 def stream_warc_ingest(
@@ -999,8 +827,8 @@ def stream_warc_ingest(
     checkpoint; each micro-batch parses its segments, extracts HTML text,
     and runs the incremental crawl curation against the MinHashStore —
     so segment N+1 near-dedups against everything segment N kept. Sink
-    and store writes share :func:`_crawl_ingest_batch`'s replay guards
-    (batch-keyed overwrite + committed-snapshot skip).
+    and store writes follow :func:`stream_crawl_ingest`'s effectively-once
+    protocol (module docstring).
 
     Parallelism note: one segment file = one task (the same unit as the
     batch path); a micro-batch of S segments fans out S-wide.
@@ -1013,8 +841,6 @@ def stream_warc_ingest(
     from ..operators.web import extract_html_text, extract_main_content
     from ..functions.text import hash64
     from ..sources.warc import parse_warc_bytes
-
-    import pandas as pd
 
     files = (
         spark.readStream.format("binaryFile")
@@ -1066,10 +892,4 @@ def stream_warc_ingest(
             snapshot_prefix=snapshot_prefix, **ingest_kwargs,
         )
 
-    q = (
-        files.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    _drain(q, timeout_sec, "stream_warc_ingest")
+    _run_batches(files, _batch, checkpoint, timeout_sec, "stream_warc_ingest")

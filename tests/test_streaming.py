@@ -344,6 +344,46 @@ def test_crawl_ingest_batch_replay_idempotent(spark, tmp_path):
     assert len(st.info()["snapshots"]) == 1
 
 
+def test_crawl_ingest_batch_commits_the_rows_it_wrote(spark, tmp_path, monkeypatch):
+    """The crawl sink commits the kept rows it wrote, read back from the
+    batch's sink directory, not a re-evaluation of the recipe: the
+    committed frame reads only the sink's files, and the snapshot's doc
+    count is the sink's kept count."""
+    from duckdb_vss_spark.index.dedup_store import MinHashStore
+    from duckdb_vss_spark.streaming.ops import _crawl_ingest_batch
+
+    st = MinHashStore.create(spark, str(tmp_path / "store"))
+    committed = []
+    append = st.append_snapshot
+
+    def spy(df, *args, **kwargs):
+        committed.append(df)
+        return append(df, *args, **kwargs)
+
+    monkeypatch.setattr(st, "append_snapshot", spy)
+    bdf = spark.createDataFrame(
+        [
+            (1, "https://a.com/x", "the first body of text about rivers and banks"),
+            (2, "https://a.com/x", "a recrawl of the same url with another body"),
+            (3, "https://b.com/y", "spark shuffles rows between executors at wide stages"),
+            (4, "https://c.com/z", "parquet files hold columns in row groups with stats"),
+        ],
+        "doc_id long, url string, text string",
+    )
+    out_path = str(tmp_path / "out")
+    _crawl_ingest_batch(
+        bdf, 0, st, out_path,
+        url_col="url", text_col="text", id_col="doc_id", snapshot_prefix="b",
+    )
+    assert len(committed) == 1
+    sink = os.path.join(out_path, "batch=000000")
+    files = committed[0].inputFiles()
+    assert files and all(sink + os.sep in f for f in files), files
+    kept = spark.read.parquet(sink).filter("ingest_keep").count()
+    assert kept == 3  # the url recrawl is flagged, not committed
+    assert st.info()["snapshots"][0]["n_docs"] == kept
+
+
 def test_stream_warc_ingest_segments_as_microbatches(spark, tmp_path):
     """WARC segments landing in a directory are the stream: two segments
     processed as separate micro-batches; the second's recrawl of a page
