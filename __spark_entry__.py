@@ -2829,8 +2829,8 @@ def _m_data_mixing(spark, sf_dir):
     )
     # per-domain cap (RefinedWeb-style site bound): domains derived from
     # source (20 domains x 25 docs), cap=3 kept per domain via the
-    # deterministic hash64 order — exercises grouped_topk's partial+window
-    # dataflow under the driver's value hash
+    # deterministic hash64 order — exercises grouped_topk's window plan
+    # under the driver's value hash
     from duckdb_vss_spark.operators.web import per_domain_cap
 
     dd = docs.select("doc_id", F.concat(F.col("source"), F.lit(".example.com")).alias("domain"))

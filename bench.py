@@ -787,15 +787,6 @@ def main() -> None:
         s2_spark["topk_cosine_k10"] = run(
             lambda: topk(emb_b, "embedding", Q, 10, "cosine", tiebreak="vec_id").collect()
         )
-        # method comparison on the same data: the two-phase f32-tree candidate
-        # plan and the Arrow GEMM kernel vs the default exact JVM plan (all
-        # three bit-identical; see operators/topk.py method docstring)
-        s2_spark["topk_l2_fast"] = run(
-            lambda: topk(emb_b, "embedding", Q, 10, "l2sq", tiebreak="vec_id", method="fast").collect()
-        )
-        s2_spark["topk_l2_kernel"] = run(
-            lambda: topk(emb_b, "embedding", Q, 10, "l2sq", tiebreak="vec_id", method="kernel").collect()
-        )
         s2_spark["minby_topk_k5"] = run(
             lambda: min_by_k(emb_b, "vec_id", array_distance("embedding", Q), 5, tiebreak="vec_id").collect()
         )

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from .functions import distance as D
 from .functions.distance import METRIC_IS_DESCENDING, bound_vec, canonical_metric, distance_expr
 from .index.catalog import IndexCatalog
-from .operators.knn import knn_join_flat, knn_join_flat_indexed, knn_match
+from .operators.knn import join_from_flat, knn_join_flat, knn_join_flat_indexed, knn_match, match_from_flat
 from .operators.topk import _by_k
 from .operators.topk import topk as exact_topk
 from .plans import Decision, KnnJoinSpec, TopKAggSpec, TopKSpec, decide, explain_text
@@ -345,13 +345,7 @@ class VSSEngine:
         else:
             out = knn_join_flat(ldf, rdf, left_col, right_col, k, m, left_id, right_id)
         if not flat:
-            lstruct = ldf.select(F.col(left_id).alias("__qid"), F.struct(*ldf.columns).alias("left_tbl"))
-            rstruct = rdf.select(F.col(right_id).alias("__rid"), F.struct(*rdf.columns).alias("right_tbl"))
-            out = (
-                out.join(rstruct, out["rid"] == rstruct["__rid"])
-                .join(lstruct, out["qid"] == lstruct["__qid"])
-                .select(F.col("score").cast("float").alias("score"), "left_tbl", "right_tbl")
-            )
+            out = join_from_flat(out, ldf, rdf, left_id, right_id)
         plan = explain_text(spec, decision, extra)
         self.last_plan = plan
         return out, plan
@@ -364,8 +358,6 @@ class VSSEngine:
         """vss_match macro parity (matches list output). The flat k-NN core
         routes through the index (HNSW_INDEX_JOIN) when one matches; the
         list-of-struct assembly is shared with the exact path."""
-        from .operators.knn import match_from_flat
-
         flat, _ = self._plan_knn_join(left, right, left_col, right_col, k, metric, left_id, right_id, True)
         return match_from_flat(flat, self.table(left), self.table(right), left_id, right_id)
 

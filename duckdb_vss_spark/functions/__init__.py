@@ -9,5 +9,4 @@ from .distance import (  # noqa: F401
     array_negative_inner_product,
     canonical_metric,
     distance_expr,
-    ordering_distance_expr,
 )

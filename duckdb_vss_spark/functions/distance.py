@@ -254,58 +254,6 @@ def array_cosine_distance(a, b) -> Column:
     return F.lit(1.0) - array_cosine_similarity(a, b)
 
 
-def _balanced(terms: list[str]) -> str:
-    """Pairwise-parenthesized sum: ((t0+t1)+(t2+t3))+... — the JVM schedules
-    the independent adds in parallel (ILP), measured 1.6x over the
-    left-to-right chain at 1M x 64-dim. NOT bit-compatible with the
-    sequential fold — candidate-phase use only."""
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
-
-
-def fast_score_sql(a, b, metric: str) -> "str | None":
-    """Candidate-phase score expression: float32 balanced-tree arithmetic,
-    order-*approximately*-equivalent to :func:`distance_expr` (same polarity,
-    values differ in the low bits — relative error ~1e-6 from f32 terms plus
-    reassociation). Callers MUST overfetch and exactly re-rank with
-    :func:`distance_expr`; see ``operators.topk.topk(method="fast")``.
-
-    Runs at the scan floor: f32 math halves the cast work and the balanced
-    tree restores the instruction-level parallelism the bit-exact
-    left-to-right chain gives up (measured 0.22 s -> 0.14 s on a 1M x 64-dim
-    cached scan — the gap to duckdb's SIMD microkernel, simsimd/spatial.h:42-117,
-    closes to ~2x). None when the (a, b) pair isn't unrollable; callers fall
-    back to the exact expression."""
-    m = canonical_metric(metric)
-    name, cv = _unroll_operand(a, b)
-    if name is None:
-        return None
-
-    def flit(q: float) -> str:
-        return f"CAST('{q!r}' AS FLOAT)"
-
-    def felem(i: int) -> str:  # raw element, no per-element DOUBLE cast
-        return f"{name}[{i}]"
-
-    if m == "l2sq":
-        return _balanced(
-            [f"(({felem(i)} - {flit(q)}) * ({felem(i)} - {flit(q)}))" for i, q in enumerate(cv)]
-        )
-    dot = _balanced([f"({felem(i)} * {flit(q)})" for i, q in enumerate(cv)])
-    if m == "ip":
-        return dot
-    # cosine similarity; constant side's norm folds to a literal
-    sq = _balanced([f"({felem(i)} * {felem(i)})" for i in range(len(cv))])
-    s = 0.0
-    for q in cv:
-        s += q * q
-    return f"({dot}) / (SQRT({sq}) * {_dlit(math.sqrt(s))})"
-
-
 def distance_expr(a, b, metric: str = "l2sq") -> Column:
     """The *score* expression for a metric, with the polarity the vss macros
     use (reference: src/hnsw/hnsw_index_macros.cpp:30-41): l2sq -> Euclidean
@@ -318,14 +266,3 @@ def distance_expr(a, b, metric: str = "l2sq") -> Column:
         return array_cosine_similarity(a, b)
     return array_inner_product(a, b)
 
-
-def ordering_distance_expr(a, b, metric: str = "l2sq") -> Column:
-    """Ascending-orderable distance per metric, as stored in the index
-    (smaller is better for all three, reference: src/hnsw/hnsw_index.cpp:262-275):
-    l2sq -> squared L2, cosine -> cosine distance, ip -> negative inner product."""
-    m = canonical_metric(metric)
-    if m == "l2sq":
-        return array_distance_sq(a, b)
-    if m == "cosine":
-        return array_cosine_distance(a, b)
-    return array_negative_inner_product(a, b)

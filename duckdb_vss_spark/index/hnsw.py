@@ -493,6 +493,11 @@ class GraphIndex(IVFIndex):
             mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
             nbrs = np.vstack(pdf["nbrs"].to_numpy()).astype(np.int32)
             live = pdf["live"].to_numpy(bool)
+            if metric == "cosine":
+                # a zero row has no cosine score (NaN in the exact fold), but
+                # its clamped navigation score is a finite 1.0: walk it like
+                # a dead row so it never takes a scorable row's slot
+                live = live & mat.any(axis=1)
             out_q, out_sel = [], []
             if ef >= mat.shape[0]:
                 # exact scan of the shard's live rows for this shard's probe
@@ -512,11 +517,13 @@ class GraphIndex(IVFIndex):
                     idx, _ = _beam_search(mat, nbrs, qm[qi], k, ef, metric, live)
                     out_q.extend([qi] * len(idx))
                     out_sel.extend(idx.tolist())
+            score = paired_exact_scores(qm[out_q], mat[out_sel], metric)
+            ok = np.isfinite(score)  # a NaN score never survives, as in knn.fold_topk
             return pd.DataFrame(
                 {
-                    "qid": ids_q[out_q],
-                    "id": pdf["id"].iloc[out_sel].to_numpy(),
-                    "score": paired_exact_scores(qm[out_q], mat[out_sel], metric),
+                    "qid": ids_q[out_q][ok],
+                    "id": pdf["id"].iloc[out_sel].to_numpy()[ok],
+                    "score": score[ok],
                 }
             )
 

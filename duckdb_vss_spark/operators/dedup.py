@@ -173,47 +173,25 @@ def _shared(df: DataFrame) -> DataFrame:
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str, id_col: str, method: str = "window"
-) -> DataFrame:
+def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact duplicate assignment: every row mapped to the smallest id
     sharing its normalized-text fingerprint.
 
     Output: (id_col, canonical_id, fingerprint, group_size).
 
-    Two measured strategies (same dual-strategy contract as
-    ``grouped_topk``; outputs identical, equality test-pinned):
-
-    - ``"window"`` (default): one shuffle, min/count over the
-      fingerprint partition. Measured faster wherever a hot group fits
-      one reducer's sort: 4.7 s vs the agg form's 13.1 s at 10M rows
-      with a 50%-hot fingerprint, and parity (8.0 vs 7.2 s) even when
-      ALL 10M rows share one fingerprint (local[32]; BASELINE.md).
-    - ``"agg"``: map-side-combinable aggregate (one row per distinct
-      local fingerprint leaves each task) + a sort-merge join whose
-      residual skew AQE's skew-join SPLITS — a window's hot sort never
-      splits. Two shuffles of the row set, so it costs ~2x at moderate
-      skew; opt in when one fingerprint's occurrence count exceeds what
-      a single reducer can sort/spill in your stage budget (10^8-10^9
-      duplicates of one boilerplate page at 100 TB).
+    One shuffle: min/count over the fingerprint window partition. A
+    map-side-combinable aggregate joined back to the rows (two shuffles,
+    whose skewed join AQE can split) measured slower: 13.1 s vs 4.7 s at
+    10M rows with a 50%-hot fingerprint, and about even (7.2 vs 8.0 s)
+    when all 10M rows share one fingerprint (local[32]; BASELINE.md).
     """
     fp = df.select(F.col(id_col), fingerprint_md5(text_col).alias("fingerprint"))
-    if method == "window":
-        w = Window.partitionBy("fingerprint")
-        return fp.select(
-            F.col(id_col),
-            F.min(id_col).over(w).alias("canonical_id"),
-            "fingerprint",
-            F.count(F.lit(1)).over(w).alias("group_size"),
-        )
-    if method != "agg":
-        raise ValueError(f"method must be 'window' or 'agg', got {method!r}")
-    groups = fp.groupBy("fingerprint").agg(
-        F.min(id_col).alias("canonical_id"),
-        F.count(F.lit(1)).alias("group_size"),
-    )
-    return fp.join(groups, "fingerprint").select(
-        F.col(id_col), "canonical_id", "fingerprint", "group_size"
+    w = Window.partitionBy("fingerprint")
+    return fp.select(
+        F.col(id_col),
+        F.min(id_col).over(w).alias("canonical_id"),
+        "fingerprint",
+        F.count(F.lit(1)).over(w).alias("group_size"),
     )
 
 

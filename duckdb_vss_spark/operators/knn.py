@@ -403,13 +403,7 @@ def knn_join(
     ``score`` polarity follows the metric (distance for l2sq, similarity for
     cosine, inner product for ip)."""
     flat = knn_join_flat(left, right, left_on, right_on, k, metric, left_id, right_id, method)
-    lstruct = left.select(F.col(left_id).alias("__qid"), F.struct(*left.columns).alias("left_tbl"))
-    rstruct = right.select(F.col(right_id).alias("__rid"), F.struct(*right.columns).alias("right_tbl"))
-    return (
-        flat.join(rstruct, flat["rid"] == rstruct["__rid"])
-        .join(lstruct, flat["qid"] == lstruct["__qid"])
-        .select(F.col("score").cast("float").alias("score"), "left_tbl", "right_tbl")
-    )
+    return join_from_flat(flat, left, right, left_id, right_id)
 
 
 def knn_join_flat_indexed(
@@ -694,6 +688,19 @@ def knn_match(
     m = canonical_metric(metric)
     flat = knn_join_flat(left, right, left_on, right_on, k, m, left_id, right_id, method)
     return match_from_flat(flat, left, right, left_id, right_id)
+
+
+def join_from_flat(flat: DataFrame, left: DataFrame, right: DataFrame, left_id: str, right_id: str) -> DataFrame:
+    """Assemble the vss_join output shape ``(score FLOAT, left_tbl STRUCT,
+    right_tbl STRUCT)`` from any flat (qid, rid, rnk, score) k-NN result —
+    shared by the exact and indexed paths."""
+    lstruct = left.select(F.col(left_id).alias("__qid"), F.struct(*left.columns).alias("left_tbl"))
+    rstruct = right.select(F.col(right_id).alias("__rid"), F.struct(*right.columns).alias("right_tbl"))
+    return (
+        flat.join(rstruct, flat["rid"] == rstruct["__rid"])
+        .join(lstruct, flat["qid"] == lstruct["__qid"])
+        .select(F.col("score").cast("float").alias("score"), "left_tbl", "right_tbl")
+    )
 
 
 def match_from_flat(flat: DataFrame, left: DataFrame, right: DataFrame, left_id: str, right_id: str) -> DataFrame:

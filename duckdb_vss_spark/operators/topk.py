@@ -21,138 +21,12 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.distance import (
-    METRIC_IS_DESCENDING,
-    canonical_metric,
-    distance_expr,
-    fast_score_sql,
-)
+from ..functions.distance import METRIC_IS_DESCENDING, canonical_metric, distance_expr
 
 __all__ = ["topk", "min_by_k", "max_by_k", "grouped_topk"]
-
-# Candidate overfetch for method="fast": the fast score's f32+reassociation
-# error is ~1e-6 relative, so a true top-k row can only be displaced past the
-# cut if >64 rows score within that band of the kth — with the eventual exact
-# re-rank, missing one would additionally require those near-ties to be
-# *distinct* rows. Exact score ties (e.g. duplicated vectors) are handled by
-# ordering phase 1 on the same tiebreak as the final rank.
-FAST_OVERFETCH = 64
-
-
-def _kernel_candidates(df: DataFrame, vec_col: str, query: list, k: int, metric: str) -> DataFrame:
-    """Per-partition brute-force top-k candidate rows via one GEMM per Arrow
-    batch (`mapInPandas`) — the engine's analog of the reference's SIMD
-    columnar scan (reference: simsimd/spatial.h:42-117).
-
-    Returns a DataFrame with ``df``'s exact schema holding, per input
-    partition, every row whose kernel score is within the partition's top-k
-    eps-band. The caller re-scores these ~``numPartitions * k`` rows with the
-    authoritative JVM double expression, so the final output is bit-identical
-    to the pure-JVM plan (same discipline as the knn-join kernel,
-    ``knn.py:159-166``); the eps band absorbs the GEMM-vs-sequential-fold
-    last-bit difference at the cut boundary.
-
-    Scale shape: rows never shuffle and never leave their partition; only the
-    banded candidates (k-ish rows per partition) cross to the final tiny
-    exact sort. This is the same partial-top-k dataflow as
-    TakeOrderedAndProject, executed columnar instead of row-at-a-time.
-    """
-    import numpy as np
-
-    from ..functions.kernels import pairwise_scores
-
-    name = vec_col if isinstance(vec_col, str) else vec_col._jc.toString()
-    q = np.asarray([float(x) for x in query], dtype=np.float64)[None, :]
-    d = q.shape[1]
-    desc = METRIC_IS_DESCENDING[metric]
-
-    def batch_matrix(arr, np, pa):
-        """Arrow list column -> (n, d) float64 matrix + valid-row mask,
-        zero-copy on the flat values buffer in the common (no-null,
-        contiguous, uniform-length) case — the per-row object materialization
-        pandas would do here is exactly what made the mapInPandas variant 3x
-        slower than the JVM plan."""
-        if isinstance(arr, pa.FixedSizeListArray):
-            vals = arr.values.to_numpy(zero_copy_only=False)
-            mat = vals.reshape(len(arr), arr.type.list_size)
-            valid = np.ones(len(arr), dtype=bool) if arr.null_count == 0 else arr.is_valid().to_numpy(zero_copy_only=False)
-            return mat.astype(np.float64, copy=False), valid
-        off = arr.offsets.to_numpy()
-        lens = np.diff(off)
-        vals = arr.values.to_numpy(zero_copy_only=False)
-        valid = lens == d
-        if arr.null_count:
-            valid &= arr.is_valid().to_numpy(zero_copy_only=False)
-        if valid.all() and off[0] == 0 and off[-1] == len(arr) * d:
-            mat = vals.reshape(len(arr), d)
-        elif len(vals) < d:  # nothing valid in this batch
-            mat = np.zeros((len(arr), d))
-            valid = np.zeros(len(arr), dtype=bool)
-        else:
-            starts = np.where(valid, off[:-1].astype(np.int64), 0)
-            mat = vals[starts[:, None] + np.arange(d)[None, :]]
-        return mat.astype(np.float64, copy=False), valid
-
-    def gen(batches):
-        import pyarrow as pa
-
-        kept: list = []  # candidate RecordBatches
-        scores: list[np.ndarray] = []
-
-        def prune(final: bool):
-            tab = pa.Table.from_batches(kept)
-            s = np.concatenate(scores)
-            o = -s if desc else s
-            if len(s) > k:
-                kth = np.partition(o, k - 1)[k - 1]
-                tol = 1e-9 * max(1.0, abs(kth))
-                keep = np.flatnonzero(o <= kth + tol)
-                tab = tab.take(pa.array(keep))
-                s = s[keep]
-            return tab, s
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            arr = rb.column(rb.schema.get_field_index(name))
-            mat, valid = batch_matrix(arr, np, pa)
-            s = pairwise_scores(mat, q, metric)[:, 0]
-            if not valid.all():
-                s = np.where(valid, s, -np.inf if desc else np.inf)
-            # nan scores (null elements inside a vector) never rank
-            s = np.where(np.isnan(s), -np.inf if desc else np.inf, s)
-            # per-batch pre-cut: only k + eps-band rows survive to the fold
-            o = -s if desc else s
-            if rb.num_rows > k:
-                kth = np.partition(o, k - 1)[k - 1]
-                tol = 1e-9 * max(1.0, abs(kth))
-                keep = np.flatnonzero(o <= kth + tol)
-                kept.append(pa.compute.take(rb, pa.array(keep)))
-                scores.append(s[keep])
-            else:
-                kept.append(rb)
-                scores.append(s)
-            if sum(len(x) for x in scores) > 4 * (k + 64):
-                tab, s = prune(False)
-                kept, scores = tab.to_batches(), [s]
-        if kept:
-            tab, s = prune(True)
-            finite = np.isfinite(s)
-            if not finite.all():
-                tab = tab.take(pa.array(np.flatnonzero(finite)))
-            yield from tab.to_batches()
-
-    return df.mapInArrow(gen, schema=df.schema)
-
-
-def _score_and_order(df: DataFrame, vec_col, query, metric: str, score_name: str):
-    m = canonical_metric(metric)
-    score = distance_expr(vec_col, query, m).alias(score_name)
-    desc = METRIC_IS_DESCENDING[m]
-    return df.withColumn(score_name, score), desc
 
 
 def topk(
@@ -163,7 +37,6 @@ def topk(
     metric: str = "l2sq",
     score_col: str = "score",
     tiebreak=None,
-    method: str = "auto",
 ) -> DataFrame:
     """k nearest rows of ``df`` to the constant ``query`` vector.
 
@@ -172,31 +45,17 @@ def topk(
     correctness harness; the reference's own tests sidestep ties with seeded
     data (reference: test/sql/hnsw/hnsw_lateral_join_group.test:8).
 
-    ``method`` selects the candidate strategy — every one finishes with the
-    same authoritative JVM exact score + order, so outputs are bit-identical:
-
-    - ``"jvm"`` (what ``"auto"`` resolves to): single-phase exact
-      TakeOrderedAndProject — bit-exact sequential-fold expression in the
-      scan itself. Measured at duckdb-brute parity once the data amortizes
-      the local job floor (10M x 64-dim cached: 0.59 s vs duckdb 0.61 s l2,
-      0.55 s vs 0.43 s cosine); at 1M the residual vs duckdb is the fixed
-      ~0.15-0.25 s local-mode scheduling + row-materialization floor, not
-      per-row throughput.
-    - ``"fast"``: two-phase — phase 1 overfetches ``k + FAST_OVERFETCH``
-      candidate rows ordered by the f32 balanced-tree score
-      (:func:`~duckdb_vss_spark.functions.distance.fast_score_sql`); phase 2
-      exactly re-ranks those few rows. The score projection alone runs 1.6x
-      faster than the sequential fold, but carrying the vector column
-      through the candidate heap cancels the gain at 64-dim (measured ties
-      with ``"jvm"`` at 1M and 10M) — an opt-in for workloads where the
-      score, not the row copy, dominates (wide dims, narrow rows).
-    - ``"kernel"``: Arrow-batch GEMM scan (:func:`_kernel_candidates`).
-      Measured SLOWER than both JVM plans at 64-dim (the Python worker
-      boundary alone costs ~0.45 s against a 0.14 s scan floor; 2.4 s vs
-      0.59 s at 10M) — an explicit opt-in for very high dimensions /
-      expensive metrics where per-row expression cost dominates the
-      boundary, and the measured proof that "ship rows to a SIMD kernel"
-      loses to staying JVM-side on this engine.
+    One plan: a single-phase exact TakeOrderedAndProject, with the bit-exact
+    sequential-fold score expression (unrolled against the constant query,
+    see :func:`~duckdb_vss_spark.functions.distance.distance_expr`) in the
+    scan itself. Measured at duckdb-brute parity once the data amortizes
+    the local job floor (10M x 64-dim cached: 0.59 s vs duckdb 0.61 s l2,
+    0.55 s vs 0.43 s cosine); at 1M the residual vs duckdb is the fixed
+    ~0.15-0.25 s local-mode scheduling + row-materialization floor, not
+    per-row throughput. Candidate phases measured no faster at 1M x 64-dim:
+    an f32 balanced-tree score overfetch with an exact re-rank 0.39 s vs
+    0.37 s, an Arrow-batch GEMM scan 0.91 s (2.4 s vs 0.59 s at 10M — the
+    Python worker boundary alone costs more than the JVM scan).
 
     Rows whose vector is NULL are excluded (the reference's index build
     plan filters IS NOT NULL, reference: src/hnsw/hnsw_index_plan.cpp:118-133).
@@ -210,33 +69,10 @@ def topk(
     filter-free, the shape that matters at 100 TB.
     """
     m = canonical_metric(metric)
-    fast_sql = (
-        fast_score_sql(vec_col, list(query), m)
-        if isinstance(vec_col, str) and isinstance(query, (list, tuple))
-        else None
-    )
-    if method == "fast":
-        if fast_sql is None:
-            raise ValueError("method='fast' requires a plain vector column name and a constant query")
-        desc = METRIC_IS_DESCENDING[m]
-        # materialize the fast score as a column BEFORE ordering: an
-        # expression inlined in the sort order is re-evaluated per heap
-        # comparison by the generated ordering, not once per row (measured
-        # 2x slower than the plain exact plan); as a projected column it
-        # computes once inside whole-stage codegen and the heap compares a
-        # scalar
-        fs = "__fast_score"
-        order = [F.col(fs).desc_nulls_last() if desc else F.col(fs).asc_nulls_last()]
-        if tiebreak is not None:
-            order.append(F.col(tiebreak) if isinstance(tiebreak, str) else tiebreak)
-        df = df.withColumn(fs, F.expr(fast_sql)).orderBy(*order).limit(k + FAST_OVERFETCH).drop(fs)
-    elif method == "kernel":
-        if not isinstance(vec_col, str):
-            raise ValueError("method='kernel' requires vec_col as a column name")
-        df = _kernel_candidates(df, vec_col, list(query), k, m)
     if isinstance(vec_col, str):
         vec_col = F.col(vec_col)
-    scored, desc = _score_and_order(df, vec_col, query, metric, score_col)
+    scored = df.withColumn(score_col, distance_expr(vec_col, query, m).alias(score_col))
+    desc = METRIC_IS_DESCENDING[m]
     order = [F.col(score_col).desc_nulls_last() if desc else F.col(score_col).asc_nulls_last()]
     if tiebreak is not None:
         order.append(F.col(tiebreak) if isinstance(tiebreak, str) else tiebreak)
@@ -278,42 +114,21 @@ def _by_k(df, value_col, score: Column, k: int, descending: bool, tiebreak, filt
     return head.agg(F.transform(arr, lambda e: e["v"]).alias("values"))
 
 
-def grouped_topk(
-    df: DataFrame,
-    group_cols: list,
-    order_cols: list,
-    k: int,
-    buffer_rows: int = 262_144,
-    method: str = "window",
-) -> DataFrame:
-    """Exact top-k rows PER GROUP, ordered ascending by ``order_cols``.
-    Two strategies with MEASURED regimes (same discipline as ``topk``'s
-    method parameter — both produce identical rows, test-pinned):
-
-    - ``"window"`` (default): ``row_number()`` window + filter ``<= k`` —
-      one shuffle, sort per group inside each reducer task, all JVM.
-      Measured at 10M rows with an 8M-row hot group: **1.2 s** — a
-      single-task 8M-row sort is cheap, and Spark's sort spills to disk
-      rather than failing, so this plan is right far beyond where
-      intuition says it breaks.
-    - ``"partial"``: a map-side per-partition per-group partial top-k
-      (``mapInPandas``: stable sort + ``groupby().head(k)`` over a
-      bounded row buffer) before the same window, capping the window's
-      input at ``k × n_partitions`` rows per group — shuffle and
-      reducer-sort proportional to the OUTPUT, not the input. Measured
-      4.0 s on the same fixture: the whole table crossing the Arrow
-      boundary costs more than the skew it removes at this scale. The
-      win regime is a group so hot that ONE reducer's shuffle fetch +
-      spilled sort dominates the stage wall (a 10 TB domain on a real
-      cluster) — there the partial phase turns an unrunnable reducer
-      into k×P rows, and its map-side cost is amortized by the scan.
+def grouped_topk(df: DataFrame, group_cols: list, order_cols: list, k: int) -> DataFrame:
+    """Exact top-k rows PER GROUP, ordered ascending by ``order_cols``:
+    ``row_number()`` window + filter ``<= k`` — one shuffle, sort per group
+    inside each reducer task, all JVM. Measured at 10M rows with an
+    8M-row hot group: **1.2 s** — a single-task 8M-row sort is cheap, and
+    Spark's sort spills to disk rather than failing, so this plan is right
+    far beyond where intuition says it breaks. A map-side per-partition
+    partial top-k (``mapInPandas``) in front of the same window measured
+    4.0 s on that fixture: the whole table crossing the Arrow boundary
+    costs more than the skew it removes.
 
     ``group_cols`` are column names; ``order_cols`` may be names or Column
     expressions (aliased helper columns are projected and dropped on
     return). Ordering is ascending; include a unique tiebreak as the last
-    order column for deterministic results. Under ``"partial"``, rows
-    pass through an Arrow boundary — keep wide binary/vector columns out
-    of ``df`` when they aren't needed downstream.
+    order column for deterministic results.
     """
     proj = df
     names: list[str] = []
@@ -321,49 +136,8 @@ def grouped_topk(
         nm = f"__gtk_o{i}"
         proj = proj.withColumn(nm, F.col(oc) if isinstance(oc, str) else oc)
         names.append(nm)
-    gcols = list(group_cols)
-    schema = proj.schema
-    if method == "window":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*gcols).orderBy(*[F.col(n).asc() for n in names])
-        out = proj.withColumn("__gtk_rn", F.row_number().over(w)).filter(
-            F.col("__gtk_rn") <= k
-        )
-        return out.drop("__gtk_rn", *names)
-    if method != "partial":
-        raise ValueError(f"unknown grouped_topk method: {method!r}")
-
-    def gen(batches):
-        import pandas as pd
-
-        buf: list = []
-        nbuf = 0
-
-        def prune(frames):
-            d = pd.concat(frames, ignore_index=True)
-            # mergesort = stable, so equal keys keep input order; callers
-            # wanting full determinism supply a unique tiebreak column
-            return d.sort_values(names, kind="mergesort").groupby(
-                gcols, sort=False, dropna=False
-            ).head(k)
-
-        for b in batches:
-            if len(b) == 0:
-                continue
-            buf.append(b)
-            nbuf += len(b)
-            if nbuf > buffer_rows:
-                d = prune(buf)
-                buf, nbuf = [d], len(d)
-        if buf:
-            yield prune(buf)
-
-    part = proj.mapInPandas(gen, schema=schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*gcols).orderBy(*[F.col(n).asc() for n in names])
-    out = part.withColumn("__gtk_rn", F.row_number().over(w)).filter(F.col("__gtk_rn") <= k)
+    w = Window.partitionBy(*group_cols).orderBy(*[F.col(n).asc() for n in names])
+    out = proj.withColumn("__gtk_rn", F.row_number().over(w)).filter(F.col("__gtk_rn") <= k)
     return out.drop("__gtk_rn", *names)
 
 

@@ -269,7 +269,6 @@ def per_domain_cap(
     id_col: str,
     cap: int,
     keep_col: str | None = None,
-    method: str = "window",
 ) -> DataFrame:
     """Keep at most ``cap`` documents per domain, chosen deterministically
     (the ``cap`` smallest ``hash64('pdc:' || id)`` values, ties broken by
@@ -281,23 +280,17 @@ def per_domain_cap(
     flags every row (the pipeline-recipes' flag-don't-drop discipline).
 
     Scale shape: delegates to :func:`~duckdb_vss_spark.operators.topk
-    .grouped_topk` and inherits its measured method trade-off — the
-    default one-shuffle ``"window"`` plan (right even for multi-million-row
-    hot domains; Spark's sort spills rather than fails), and the
-    ``"partial"`` opt-in that bounds a pathological domain's reducer input
-    to ``cap × n_partitions`` rows for the regime where one domain's
-    shuffle fetch dominates the stage (see grouped_topk's docstring for
-    the numbers).
+    .grouped_topk`, a one-shuffle window plan — right even for
+    multi-million-row hot domains, since Spark's sort spills rather than
+    fails (see grouped_topk's docstring for the numbers).
     """
     from ..functions.text import hash64
     from .topk import grouped_topk
 
     order = hash64(F.concat(F.lit("pdc:"), _c(id_col).cast("string")))
     if keep_col is None:
-        return grouped_topk(df, [domain_col], [order, _c(id_col)], cap, method=method)
-    kept = grouped_topk(
-        df, [domain_col], [order, _c(id_col)], cap, method=method
-    ).select(_c(id_col).alias("__kid"))
+        return grouped_topk(df, [domain_col], [order, _c(id_col)], cap)
+    kept = grouped_topk(df, [domain_col], [order, _c(id_col)], cap).select(_c(id_col).alias("__kid"))
     # No forced broadcast: the kept-id set is cap x n_domains rows, and
     # n_domains is unknowable here (web scale = millions of registered
     # domains, so even cap=10 can be a multi-GB set). AQE sizes the built

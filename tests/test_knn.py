@@ -174,3 +174,25 @@ def test_indexed_join_distributed_matches_broadcast(spark, tmp_path):
         assert sorted(a, key=key) == sorted(b, key=key), ef
         assert not {999_999, 35, 40, 3} & {r["rid"] for r in b}, ef
     assert len(b) == 5 * (k - 1)  # full probe: every live row but the zero one
+
+    # the graph backend's join follows the same rule at full ef, against the
+    # exact join over the same rows. Its navigation score clamps the zero
+    # row's norm to a finite 1.0 (an orthogonal row's cosine distance), so
+    # at 3/4 of the rows the zero row sits inside the one shard's cut and
+    # must not take a scorable row's slot there either
+    allz = emb.select("vec_id", "embedding").unionByName(zero)
+    eng.register_table("emb_zg", allz)
+    eng.create_index(
+        "zg_idx", "emb_zg", "embedding", "vec_id",
+        options={"metric": "cosine", "index_type": "hnsw"}, replace=True,
+    )
+    gidx = eng.catalog.get("zg_idx")
+    n = gidx.counts(spark)["live"]
+    flat = lambda rows: sorted((r["qid"], r["rnk"], r["rid"], r["score"]) for r in rows)  # noqa: E731
+    for kk in (n, 3 * n // 4):
+        got = knn_join_flat_indexed(probes, gidx, "embedding", kk, "vec_id", ef_search=10**6).collect()
+        want = knn_join_flat(
+            probes, allz, "embedding", "embedding", kk, "cosine", left_id="vec_id", right_id="vec_id"
+        ).collect()
+        assert flat(got) == flat(want), kk
+        assert len(got) == 5 * min(kk, n - 1), kk

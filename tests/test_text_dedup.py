@@ -528,10 +528,9 @@ def test_remove_duplicated_spans(spark):
 
 
 def test_exact_dedup_agg_equals_window_form(spark):
-    """Round 8: exact_dedup's opt-in agg+join method (for hot groups
-    beyond one reducer's sort budget) must be row-identical to the
-    default window form, on a fixture with a HOT fingerprint (half the
-    corpus one duplicated page)."""
+    """exact_dedup must be row-identical to the min/count-over-fingerprint
+    window form, on a fixture with a HOT fingerprint (half the corpus one
+    duplicated page)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -542,19 +541,13 @@ def test_exact_dedup_agg_equals_window_form(spark):
             for i in range(2000)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: (r["canonical_id"], r["group_size"])
-           for r in exact_dedup(df, "text", "doc_id", method="agg").collect()}
+           for r in exact_dedup(df, "text", "doc_id").collect()}
     fp = df.select("doc_id", fingerprint_md5("text").alias("fingerprint"))
     w = Window.partitionBy("fingerprint")
     want = {r["doc_id"]: (r["c"], r["g"]) for r in fp.select(
         "doc_id", F.min("doc_id").over(w).alias("c"),
         F.count(F.lit(1)).over(w).alias("g")).collect()}
     assert got == want
-    # plan shape of the opt-in: no Window — partial-aggregate + join only
-    plan = exact_dedup(df, "text", "doc_id", method="agg")._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, plan[:1500]
-    import pytest as _pt
-    with _pt.raises(ValueError, match="method"):
-        exact_dedup(df, "text", "doc_id", method="nope")
 
 
 def test_simhash_non_divisor_bands_still_exact(docs, spark):

@@ -4,6 +4,8 @@ per-partition top-k that is the scale-correct plan)."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from duckdb_vss_spark import array_distance, min_by_k, topk
@@ -39,36 +41,23 @@ def test_topk_cosine_polarity(spark, grid):
     assert abs(rows[0]["score"] - 1.0) < 1e-9
 
 
-def test_topk_methods_bit_identical(spark, emb):
-    """The fast (f32 balanced-tree candidate phase) and kernel (Arrow GEMM)
-    methods must return byte-for-byte what the exact JVM plan returns — the
-    candidate phases only preselect; the authoritative score/order is the
-    same JVM expression in all three."""
-    for metric in ("l2sq", "cosine", "ip"):
-        ref = topk(emb, "embedding", Q, 10, metric, tiebreak="vec_id", method="jvm").collect()
-        for method in ("fast", "kernel", "auto"):
-            got = topk(emb, "embedding", Q, 10, metric, tiebreak="vec_id", method=method).collect()
-            assert got == ref, (metric, method)
-
-
 def test_topk_methods_nulls_and_ties(spark):
-    """Null vectors are excluded on every method; exact-duplicate vectors
-    (score ties) resolve by the tiebreak identically — the shape that broke
-    a naive overfetch (500-way replicated vectors at the cut boundary)."""
+    """Null vectors are excluded; exact-duplicate vectors (score ties)
+    resolve by the tiebreak — the shape that broke a naive overfetch
+    (500-way replicated vectors at the cut boundary)."""
     base = [([float(i % 5), float((i * 3) % 7)], i) for i in range(50)]
     rows = base + [(None, 1000 + i) for i in range(5)]
     df = spark.createDataFrame(rows, "vec: array<float>, id: long")
-    for method in ("jvm", "fast", "kernel"):
-        got = topk(df, "vec", [1.0, 3.0], 12, "l2sq", tiebreak="id", method=method).collect()
-        if method == "jvm":
-            ref = got
-        assert got == ref, method
-        assert all(r["score"] is not None for r in got)
+    got = topk(df, "vec", [1.0, 3.0], 12, "l2sq", tiebreak="id").collect()
+    want = sorted((math.sqrt((v[0] - 1.0) ** 2 + (v[1] - 3.0) ** 2), i) for v, i in base)[:12]
+    assert [(r["score"], r["id"]) for r in got] == want
+    assert all(r["score"] is not None for r in got)
 
 
 def test_topk_kernel_all_null_partition(spark):
+    """A partition holding only NULL vectors yields no rows, not NULL scores."""
     df = spark.createDataFrame([(None, 1), (None, 2)], "vec: array<float>, id: long")
-    assert topk(df, "vec", [1.0, 2.0], 3, "l2sq", method="kernel").collect() == []
+    assert topk(df, "vec", [1.0, 2.0], 3, "l2sq").collect() == []
 
 
 def test_topk_plan_is_take_ordered(spark, emb):

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -93,14 +92,13 @@ def test_blocklist_filter(spark):
     assert sorted(r["id"] for r in only) == [1, 3]
 
 
-@pytest.mark.parametrize("method", ["window", "partial"])
-def test_grouped_topk_matches_reference_window(spark, method):
+def test_grouped_topk_matches_reference_window(spark):
     import random
 
     rng = random.Random(7)
     rows = [(i, f"g{rng.randrange(5)}", rng.random()) for i in range(2000)]
     df = spark.createDataFrame(rows, "id: long, g: string, v: double").repartition(8)
-    got = grouped_topk(df, ["g"], [F.col("v"), F.col("id")], 7, method=method)
+    got = grouped_topk(df, ["g"], [F.col("v"), F.col("id")], 7)
     w = Window.partitionBy("g").orderBy(F.col("v").asc(), F.col("id").asc())
     want = (
         df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 7).drop("rn")
@@ -109,34 +107,15 @@ def test_grouped_topk_matches_reference_window(spark, method):
     assert got.count() == 35
 
 
-def test_grouped_topk_bad_method(spark):
-    df = spark.range(3).select(F.col("id"), F.lit("g").alias("g"))
-    with pytest.raises(ValueError, match="unknown grouped_topk method"):
-        grouped_topk(df, ["g"], ["id"], 1, method="nope").collect()
-
-
-def test_grouped_topk_buffer_prune_path(spark):
-    # buffer smaller than the data forces the incremental prune branch
-    df = spark.range(0, 5000).select(
-        F.col("id"), (F.col("id") % 3).alias("g"), (F.col("id") * 37 % 101).alias("v")
-    ).repartition(4)
-    got = grouped_topk(df, ["g"], [F.col("v"), F.col("id")], 5, buffer_rows=256, method="partial")
-    w = Window.partitionBy("g").orderBy(F.col("v").asc(), F.col("id").asc())
-    want = df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5).drop("rn")
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
 def test_per_domain_cap(spark, ddb):
     rows = [(i, f"d{i % 3}.com") for i in range(60)]
     df = spark.createDataFrame(rows, "doc_id: long, domain: string").repartition(6)
     kept = per_domain_cap(df, "domain", "doc_id", cap=4)
     out = kept.groupBy("domain").count().collect()
     assert all(r["count"] == 4 for r in out) and len(out) == 3
-    # deterministic across runs / partitionings / methods
+    # deterministic across runs / partitionings
     again = per_domain_cap(df.repartition(2), "domain", "doc_id", cap=4)
     assert sorted(map(tuple, kept.collect())) == sorted(map(tuple, again.collect()))
-    part = per_domain_cap(df, "domain", "doc_id", cap=4, method="partial")
-    assert sorted(map(tuple, kept.collect())) == sorted(map(tuple, part.collect()))
     # matches the duckdb spelling of the same rule
     ddb.execute(
         "CREATE OR REPLACE TEMP TABLE pd AS "
